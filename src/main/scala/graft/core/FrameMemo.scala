@@ -45,7 +45,7 @@ object FrameMemo {
         val built = build
         memo.putIfAbsent(key, built) match {
           case Some(winner) =>
-            hardUnpersist(built)
+            Lineage.release(built)
             touch(key); winner
           case None =>
             touch(key); evictOverflow(); built
@@ -58,25 +58,8 @@ object FrameMemo {
   /** Drop every entry and unpersist its blocks — probe/test isolation. */
   def clear(): Unit = synchronized {
     order.clear()
-    memo.keys.foreach { k => memo.remove(k).foreach(hardUnpersist) }
+    memo.keys.foreach { k => memo.remove(k).foreach(Lineage.release) }
   }
-
-  /** Free a localCheckpointed frame's blocks NOW. `Dataset.unpersist()`
-    * routes through the CacheManager and is a NO-OP for checkpointed
-    * frames (their persistence is RDD-level, verified empirically:
-    * getPersistentRDDs keeps the entry) — blocks would otherwise linger
-    * until the ContextCleaner GCs the unreachable RDD. Unpersisting the
-    * LogicalRDD leaves directly removes them; the CacheManager call
-    * stays as the fallback for plain cached frames.
-    */
-  def hardUnpersist(df: DataFrame): Unit =
-    try {
-      val leaves = df.queryExecution.analyzed.collectLeaves().collect {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }
-      if (leaves.nonEmpty) leaves.foreach(_.unpersist(false))
-      else df.unpersist()
-    } catch { case _: Throwable => () }
 
   private def touch(key: String): Unit = synchronized {
     order.remove(key); order.add(key)
@@ -93,7 +76,7 @@ object FrameMemo {
         log.warn(s"FrameMemo capacity eviction ($MaxEntries entries): " +
           s"dropping '$evict'; an in-flight consumer of this frame " +
           "would fail loudly on unrecomputable checkpoint blocks")
-        hardUnpersist(df)
+        Lineage.release(df)
       }
     }
   }

@@ -143,13 +143,14 @@ object Dedup {
     // (Await alone has no failure coupling back to the detached job).
     // The reap Await is BOUNDED: if the background job itself hangs,
     // the timeout abandons the cleanup (at worst leaking its blocks)
-    // rather than masking the primary failure behind an infinite wait.
+    // rather than masking the primary failure behind an infinite wait;
+    // a cleanup failure rides along as a suppressed exception.
     def reapingOrphanOnFailure[T](body: => T): T =
       try body catch { case t: Throwable =>
-        try graft.core.FrameMemo.hardUnpersist(scala.concurrent.Await.result(
+        try graft.core.Lineage.release(scala.concurrent.Await.result(
           shOldF, scala.concurrent.duration.Duration(5,
             scala.concurrent.duration.MINUTES)))
-        catch { case _: Throwable => () }
+        catch { case c: Throwable => t.addSuppressed(c) }
         throw t
       }
     // three consumers (exact verdicts, the shingle phase via surv, the

@@ -43,15 +43,14 @@ object ConnectedComponents {
     * quadratic bound.
     */
   def labels(edges: DataFrame, maxIter: Int = 64): DataFrame = {
-    // Reset (localCheckpoint) + checksum in ONE pass via
-    // Dataset.observe: the convergence checksum used to be its own
-    // aggregate job over the just-checkpointed edges — a full re-read
-    // of the edge set per round at scale, and one extra sequential
-    // driver action per round at the small end (the q142/q208 job-
-    // latency profile: CC rounds are inherently sequential, so every
-    // saved job is saved wall-clock). CollectMetrics computes the
-    // (count, xor) pair DURING the materializing checkpoint job;
-    // `obs.get` then just reads the finished metric.
+    // Reset (localCheckpoint) + checksum in ONE pass: the convergence
+    // checksum used to be its own aggregate job over the just-
+    // checkpointed edges — a full re-read of the edge set per round at
+    // scale, and one extra sequential driver action per round at the
+    // small end (the q142/q208 job-latency profile: CC rounds are
+    // inherently sequential, so every saved job is saved wall-clock).
+    // Lineage.iterate observes the (count, xor) pair DURING each
+    // materializing checkpoint job.
     //
     // bit_xor, not sum: ANSI mode makes a Long sum of 2⁶³-range hashes
     // an overflow error; xor is closed over Long and order-independent
@@ -59,28 +58,20 @@ object ConnectedComponents {
     // collision — the same 2⁻⁶⁴ regime as a sum collision). This gates
     // a fixpoint with a safety-net min() below, not result reuse, so
     // the Fingerprint xor∥sum form is not required.
-    def resetWithChecksum(d: DataFrame): (DataFrame, (Long, Long)) = {
-      val obs = org.apache.spark.sql.Observation()
-      val out = graft.core.Lineage.reset(d.observe(obs,
-        count(lit(1)).as("n"),
-        coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L)).as("x")))
-      val m = obs.get
-      (out, (m("n").asInstanceOf[Long], m("x").asInstanceOf[Long]))
-    }
+    //
     // The canonicalized input is referenced three times by round 1
     // (both unionAll branches of the neighborhood + the converged
-    // min-label pass when the input is already a star forest); without
-    // materialization its distinct shuffle — the heaviest step on a
-    // large edge list — would re-execute for each.
-    var (e, cur) = resetWithChecksum(edges
+    // min-label pass when the input is already a star forest); the
+    // loop's reset of it keeps its distinct shuffle — the heaviest step
+    // on a large edge list — from re-executing for each.
+    val canonical = edges
       .select(col("src").cast("long").as("a"), col("dst").cast("long").as("b"))
       .filter(col("a") =!= col("b"))
       .select(greatest(col("a"), col("b")).as("u"), least(col("a"), col("b")).as("v"))
-      .distinct())
-
-    var prev = (-1L, 0L)
-    var it = 0
-    while (cur != prev && it < maxIter) {
+      .distinct()
+    val (e, converged) = graft.core.Lineage.iterate(canonical, maxIter,
+        count(lit(1)).as("n"),
+        coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L)).as("x")) { (e, _) =>
       // large-star: m = min(N(u) ∪ {u}) over the FULL neighborhood;
       // every neighbor larger than u re-points at m.
       val nbrs = e.select("u", "v")
@@ -96,21 +87,16 @@ object ConnectedComponents {
       // smaller neighbor except m re-point at m.
       val smallMin = afterLarge.groupBy("u").agg(min(col("v")).as("m"))
       val withMin = afterLarge.join(smallMin, "u")
-      val afterSmall = withMin.select(col("u"), col("m").as("v"))
+      withMin.select(col("u"), col("m").as("v"))
         .unionAll(withMin.filter(col("v") =!= col("m"))
           .select(col("v").as("u"), col("m").as("v")))
         .distinct()
-      val (e2, cur2) = resetWithChecksum(afterSmall)
-      e = e2
-      prev = cur
-      cur = cur2
-      it += 1
-    }
-    if (cur != prev)
+    } { (prev, cur) => prev == cur }
+    if (!converged)
       throw new IllegalStateException(
         s"connected components did not converge in $maxIter large/small-star " +
-          s"rounds (edge checksum still moving: $prev -> $cur); labeling now " +
-          "would return inconsistent components — retry with a higher maxIter")
+          "rounds (edge checksum still moving); labeling now would return " +
+          "inconsistent components — retry with a higher maxIter")
     // Converged edge set is a star forest: (u, center). Centers label
     // themselves; min() stays as a safety net against checksum collision.
     val members = e.groupBy("u").agg(min(col("v")).as("component"))

@@ -23,18 +23,6 @@ import graft.core.Lineage
   */
 object DistributedLouvain {
 
-  // stage timing to stderr when GRAFT_TIMING=1 — slope-probe
-  // attribution only, never on in the oracle/bench paths
-  private def timed[T](label: String)(f: => T): T = {
-    if (sys.env.get("GRAFT_TIMING").contains("1")) {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(
-        f"DLOUVAIN $label%-18s ${(System.nanoTime() - t0) / 1e9}%8.1f s")
-      r
-    } else f
-  }
-
   def cluster(edges: DataFrame, rounds: Int = 8): DataFrame = {
     val sym = edges.select(col("src"), col("dst"), col("weight"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst"), col("weight")))
@@ -63,21 +51,21 @@ object DistributedLouvain {
     val m2Row = deg.agg(sum(col("deg")).as("m2"))
     val degCk = Lineage.reset(deg.crossJoin(broadcast(m2Row)))
 
-    // community = own node initially; carries a _moved flag so the
-    // early-exit check reads the already-materialized frame instead of
-    // recomputing the round
-    var comm = degCk.select(col("src").as("node"), col("src").as("comm"),
-      lit(false).as("_moved"))
+    // community = own node initially; each state carries a _moved flag
+    // whose count is observed on the state's own materializing pass.
     // EXACT early exit: moves alternate by direction parity, so the state
     // can only be stable once BOTH parities pass without a move — after a
     // zero-move even round AND a zero-move odd round, every later round
     // recomputes an identical scored table and moves nothing. The
     // remaining fixed rounds were pure re-scans of the full edge table
     // (guide §1.2: don't compute things you throw away); on converged
-    // graphs this cuts the 8-round schedule to convergence + 2.
-    var staticRounds = 0
-    var round = 0
-    while (round < rounds && staticRounds < 2) {
+    // graphs this cuts the 8-round schedule to convergence + 2. The
+    // initial state marks every node moved so it never counts as a
+    // zero-move round.
+    val init = degCk.select(col("src").as("node"), col("src").as("comm"),
+      lit(true).as("_moved"))
+    val (comm, _) = Lineage.iterate(init, rounds,
+        count_if(col("_moved")).as("moved")) { (comm, round) =>
       // community volumes (sum of member degrees)
       val vol = comm.join(degCk.withColumnRenamed("src", "node"), Seq("node"))
         .groupBy("comm").agg(sum(col("deg")).as("vol"))
@@ -125,27 +113,11 @@ object DistributedLouvain {
         .agg(min(struct(negate(col("gain")).as("ng"), col("cand").as("cand")))
           .as("_b"))
         .select(col("node"), col("_b.cand").as("cand"), col("comm"))
-      val prev = comm
-      comm = timed(s"round$round") {
-        Lineage.reset(
-          prev.select("node", "comm").join(best.select("node", "cand"), Seq("node"), "left")
-            .select(col("node"),
-              coalesce(col("cand"), col("comm")).as("comm"),
-              (col("cand").isNotNull && col("cand") =!= col("comm")).as("_moved")))
-      }
-      // the early-exit probe reads the checkpointed frame — one tiny
-      // job, no recompute of the round
-      val moved = comm.filter(col("_moved")).count()
-      if (sys.env.get("GRAFT_TIMING").contains("1"))
-        System.err.println(s"DLOUVAIN round$round moved=$moved")
-      staticRounds = if (moved == 0) staticRounds + 1 else 0
-      // superseded checkpoint: free its blocks now instead of letting
-      // 8 rounds × levels of n-row frames pile up in the block manager
-      // (in-pipeline, alongside the e2e caches, that pile-up is memory
-      // pressure every later stage pays for — guide §5)
-      graft.core.FrameMemo.hardUnpersist(prev)
-      round += 1
-    }
+      comm.select("node", "comm").join(best.select("node", "cand"), Seq("node"), "left")
+        .select(col("node"),
+          coalesce(col("cand"), col("comm")).as("comm"),
+          (col("cand").isNotNull && col("cand") =!= col("comm")).as("_moved"))
+    } { (prev, cur) => prev.getLong(0) == 0 && cur.getLong(0) == 0 }
     // relabel to dense 1..C by size desc
     val sizes = comm.groupBy("comm").agg(count(lit(1)).as("sz"))
     val relabel = graft.ops.Windows.globalOrdinal(
@@ -155,7 +127,7 @@ object DistributedLouvain {
       comm.join(broadcast(relabel), Seq("comm"))
         .select(col("node").as("cell_id"), col("cluster")))
     // everything internal is materialized into `out` — release it all
-    Seq(comm, symCk, degCk).foreach(graft.core.FrameMemo.hardUnpersist)
+    Seq(comm, symCk, degCk).foreach(Lineage.release)
     out
   }
 
@@ -190,15 +162,12 @@ object DistributedLouvain {
     var done = false
     while (!done && level < maxLevels) {
       level += 1
-      val lab = timed(s"level$level moves") {
-        Lineage.reset(cluster(cur, rounds)
-          .select(col("cell_id").as("node"), col("cluster")))
-      }
+      // cluster() returns a reset frame: releasing this projection of it
+      // frees its blocks
+      val lab = cluster(cur, rounds)
+        .select(col("cell_id").as("node"), col("cluster"))
       val counts = lab.agg(count(lit(1)).as("n"),
         countDistinct(col("cluster")).as("c")).head
-      if (sys.env.get("GRAFT_TIMING").contains("1"))
-        System.err.println(s"DLOUVAIN level$level nodes=${counts.getLong(0)}" +
-          s" comms=${counts.getLong(1)}")
       if (counts.getLong(1) == counts.getLong(0)) done = true
       else {
         // LEFT join: a node absent from lab keeps a label instead of
@@ -229,10 +198,11 @@ object DistributedLouvain {
           .groupBy("src", "dst").agg(sum(col("weight")).as("weight")))
         // superseded level state: free the blocks now (guide §5 — the
         // per-level frames otherwise accumulate for the whole run)
-        Seq(prevMapping, prevCur, lab)
-          .foreach(graft.core.FrameMemo.hardUnpersist)
+        Seq(prevMapping, prevCur).foreach(Lineage.release)
       }
+      Lineage.release(lab)
     }
+    Lineage.release(cur)
     val sizes = mapping.groupBy("node").agg(count(lit(1)).as("sz"))
     val relabel = graft.ops.Windows.globalOrdinal(
         sizes, Seq(col("sz").desc, col("node")), "cluster")
@@ -253,7 +223,7 @@ object DistributedLouvain {
     * component. All-DataFrame, no driver graph. Schema:
     * `(cell_id, cluster)`.
     */
-  def refine(edges: DataFrame, labels: DataFrame, maxRounds: Int = 64): DataFrame = timed("refine") {
+  def refine(edges: DataFrame, labels: DataFrame, maxRounds: Int = 64): DataFrame = {
     val sym = edges.select(col("src"), col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
       .filter(col("src") =!= col("dst")).distinct()

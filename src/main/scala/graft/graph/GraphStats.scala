@@ -134,20 +134,12 @@ object GraphStats {
     // an equal count proves an identical set — exactly the guarantee
     // the old post-unroll verification pass re-derived with two extra
     // full passes.
-    def peelCount(d: DataFrame): (DataFrame, Long) = {
-      val obs = org.apache.spark.sql.Observation()
-      val out = graft.core.Lineage.reset(d.observe(obs, count(lit(1)).as("n")))
-      (out, obs.get("n").asInstanceOf[Long])
-    }
-    var (nodes, cur) = peelCount(degOf(e).filter(col("deg") >= k).select("node"))
-    var prev = -1L
-    var it = 0
-    while (cur != prev && it < rounds) {
-      val (n2, c2) = peelCount(
-        degOf(induce(nodes)).filter(col("deg") >= k).select("node"))
-      nodes = n2; prev = cur; cur = c2; it += 1
-    }
-    require(cur == prev,
+    val (nodes, converged) = graft.core.Lineage.iterate(
+        degOf(e).filter(col("deg") >= k).select("node"), rounds,
+        count(lit(1)).as("n")) { (nodes, _) =>
+      degOf(induce(nodes)).filter(col("deg") >= k).select("node")
+    } { (prev, cur) => prev == cur }
+    require(converged,
       s"kCore(k=$k) not converged after $rounds rounds")
     degOf(induce(nodes)).select(col("node"), col("deg").as("core_deg"))
   }
@@ -196,19 +188,17 @@ object GraphStats {
     val e = edges0.select(col("ida").cast("long").as("ida"),
       col("idb").cast("long").as("idb"))
     val dir = dirColsOf(e).localCheckpoint()
-    var lbl = dir.select("node").distinct()
-      .select(col("node"), col("node").as("lbl"))
-    for (_ <- 1 to rounds) {
+    val (lbl, _) = graft.core.Lineage.iterate(dir.select("node").distinct()
+        .select(col("node"), col("node").as("lbl")), rounds) { (lbl, _) =>
       val votes = dir
         .join(lbl.select(col("node").as("nbr"), col("lbl")), Seq("nbr"))
         .select("node", "lbl")
         .unionByName(lbl)
-      lbl = graft.core.Lineage.reset(
-        votes.groupBy("node", "lbl").agg(count(lit(1)).as("cnt"))
-          .groupBy("node")
-          .agg(max(struct(col("cnt"), (-col("lbl")).as("nl"))).as("w"))
-          .select(col("node"), (-col("w.nl")).as("lbl")))
-    }
+      votes.groupBy("node", "lbl").agg(count(lit(1)).as("cnt"))
+        .groupBy("node")
+        .agg(max(struct(col("cnt"), (-col("lbl")).as("nl"))).as("w"))
+        .select(col("node"), (-col("w.nl")).as("lbl"))
+    } { (_, _) => false }
     lbl.select(col("node"), col("lbl").as("community"))
   }
 
@@ -293,14 +283,13 @@ object GraphStats {
       // normalization is ONE barrier job, not checkpoint + a separate
       // scalar-broadcast job. The scalar enters the projection as a
       // decimal literal; values are identical to a broadcast-join form.
-      val obs = org.apache.spark.sql.Observation()
-      val raw = graft.core.Lineage.reset(raw0.observe(obs,
-        sum(col("raw").cast("decimal(38,0)")).as("s")))
+      val (raw, m) = graft.core.Lineage.reset(raw0,
+        sum(col("raw").cast("decimal(38,0)")).as("s"))
       // an empty frame observes a NULL sum and an all-zero one observes
       // 0 — either would make the div expression NPE/div-by-zero. No
       // mass to distribute means zero scores (and an empty input frame
       // stays empty); `div` is LongType, so the guard branch matches.
-      val sBig = Option(obs.get("s").asInstanceOf[java.math.BigDecimal])
+      val sBig = Option(m.getDecimal(0))
         .map(_.toBigInteger).getOrElse(java.math.BigInteger.ZERO)
       if (sBig.signum == 0)
         raw.select(col(idCol), lit(0L).as("score"))
@@ -309,10 +298,13 @@ object GraphStats {
           expr(s"(CAST(raw AS DECIMAL(38,0)) * 1000000000000)" +
             s" div CAST('$sBig' AS DECIMAL(38,0))").as("score"))
     }
+    // h and a move together, so this loop keeps both states itself and
+    // releases each superseded one (both are projections of reset frames
+    // from the second iteration on; the first h is a projection of e)
     var h = e.select(col("src")).distinct()
       .select(col("src"), lit(1000000000000L).as("score"))
     var a: DataFrame = null
-    for (_ <- 1 to iters) {
+    for (i <- 1 to iters) {
       // decimal sums: a hot node's raw score is Σ over its edges of
       // ≤10¹² values — a long would overflow past ~10⁷ in-edges.
       // The node-score side is broadcast EXPLICITLY: the checkpointed
@@ -321,14 +313,18 @@ object GraphStats {
       // (measured 2× the whole query's wall). Node scores are
       // |nodes|·16 B; past executor memory the swap-in is a
       // pre-partitioned shuffle join, not a different algorithm.
-      a = normalized(
+      val a2 = normalized(
         e.join(broadcast(h), Seq("src"))
           .groupBy("dst")
           .agg(sum(col("score").cast("decimal(38,0)")).as("raw")), "dst")
-      h = normalized(
+      if (i > 1) graft.core.Lineage.release(a)
+      a = a2
+      val h2 = normalized(
         e.join(broadcast(a), Seq("dst"))
           .groupBy("src")
           .agg(sum(col("score").cast("decimal(38,0)")).as("raw")), "src")
+      if (i > 1) graft.core.Lineage.release(h)
+      h = h2
     }
     h.select(lit("hub").as("side"), col("src").as("id"), col("score"))
       .unionByName(a.select(lit("authority").as("side"),
@@ -341,16 +337,14 @@ object GraphStats {
     val dir = dirColsOf(e)
     val deg = dir.groupBy("node").agg(count(lit(1)).as("deg"))
     val adj = dir.join(deg, Seq("node")).localCheckpoint()
-    var r = adj.select("node").distinct()
-      .select(col("node"), lit(1000000000000L).as("r"))
-    for (_ <- 1 to iters) {
-      r = adj.join(r, Seq("node"))
+    val (r, _) = graft.core.Lineage.iterate(adj.select("node").distinct()
+        .select(col("node"), lit(1000000000000L).as("r")), iters) { (r, _) =>
+      adj.join(r, Seq("node"))
         .groupBy(col("nbr"))
         .agg(sum(expr("r div deg")).as("s"))
         .select(col("nbr").as("node"),
           (lit(150000000000L) + expr("(85 * s) div 100")).as("r"))
-      r = graft.core.Lineage.reset(r)
-    }
+    } { (_, _) => false }
     r.join(deg, Seq("node"))
       .select(col("node"), col("deg"), col("r").as("rank_scaled"))
   }

@@ -38,14 +38,13 @@ object Sketch {
     val sym = edges.select(col("src"), col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
-    var dens = sym.groupBy("src").agg(count(lit(1)).cast("double").as("density"))
-      .withColumnRenamed("src", "cell_id")
-    for (_ <- 1 to depth) {
-      dens = graft.core.Lineage.reset(
-        sym.join(dens.withColumnRenamed("cell_id", "dst"), Seq("dst"))
-          .groupBy(col("src").as("cell_id"))
-          .agg(sum(col("density")).as("density")))
-    }
+    val (dens, _) = graft.core.Lineage.iterate(
+        sym.groupBy("src").agg(count(lit(1)).cast("double").as("density"))
+          .withColumnRenamed("src", "cell_id"), depth) { (dens, _) =>
+      sym.join(dens.withColumnRenamed("cell_id", "dst"), Seq("dst"))
+        .groupBy(col("src").as("cell_id"))
+        .agg(sum(col("density")).as("density"))
+    } { (_, _) => false }
     dens
   }
 

@@ -30,13 +30,13 @@ object Harmony {
   def correct(latent: DataFrame, batches: DataFrame, k: Int,
               iters: Int = 3, sigma: Double = 0.3, seed: Long = 4466L,
               theta: Double = 0.0): DataFrame = {
-    var cur = graft.core.Lineage.reset(latent.join(batches, Seq("cell_id")))
     // batch priors Pr_b for the diversity penalty (harmony.py:185-276)
     val nAll = batches.count()
     val prB = batches.groupBy("batch")
       .agg((count(lit(1)) / nAll.toDouble).as("pr_b"))
 
-    for (_ <- 1 to iters) {
+    val (out, _) = graft.core.Lineage.iterate(
+        latent.join(batches, Seq("cell_id")), iters) { (cur, _) =>
       // hard kmeans seed -> centroid arrays (k rows, broadcastable)
       val labels = Cluster.kmeans(cur.select("cell_id", "latent"), k, seed)
       val centLong = labels.join(cur, Seq("cell_id"))
@@ -97,9 +97,8 @@ object Harmony {
           sum(col("r") * coalesce(col("off"), lit(0.0))).as("shift"))
         .select(col("cell_id"), col("batch"), col("pos"),
           (col("x0") - col("shift")).as("latent"))
-      cur = graft.core.Lineage.reset(
-        toArray(correctedLong, Seq("cell_id", "batch"), "latent"))
-    }
-    cur.select("cell_id", "latent")
+      toArray(correctedLong, Seq("cell_id", "batch"), "latent")
+    } { (_, _) => false }
+    out.select("cell_id", "latent")
   }
 }

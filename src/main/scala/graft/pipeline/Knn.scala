@@ -242,18 +242,8 @@ object Knn {
                   candFilter: DataFrame => DataFrame = identity,
                   hotCap: Int = 512, chunkW: Int = 128,
                   preStats: Option[org.apache.spark.sql.Row] = None): DataFrame = {
-    val (cand0, release) = lshCandidates(queries, corpus, nPlanes, rounds,
+    val (cand, release) = lshCandidates(queries, corpus, nPlanes, rounds,
       excludeSelf, hotCap, chunkW, preStats = preStats)
-    // GRAFT_TIMING=1 structural probe: total candidate rows, observed on
-    // the SAME job the top-k aggregation runs (Dataset.observe — no
-    // second pass), attributing slope anomalies to candidate growth vs
-    // aggregation regime. Off everywhere but probe runs.
-    val candObs =
-      if (sys.env.get("GRAFT_TIMING").contains("1"))
-        Some(org.apache.spark.sql.Observation())
-      else None
-    val cand = candObs.map(o =>
-      cand0.observe(o, count(lit(1)).as("cand_rows"))).getOrElse(cand0)
     // checkpoint AFTER the k-bound, not before: the (src, dst) candidate
     // aggregate is occupancy-sized (hundreds of millions of rows under
     // adversarial replica skew), and an eager localCheckpoint would pin
@@ -278,8 +268,6 @@ object Knn {
         (col("_p") + 1).as("rn"))
       .localCheckpoint()
     release()
-    candObs.foreach(o => System.err.println(
-      s"KNNPROBE cand_rows=${o.get("cand_rows")}"))
     topk
   }
 
@@ -370,9 +358,6 @@ object Knn {
         .agg(max(col("_bn"))).head.getLong(0)
     })
     val anyHot = maxOcc > hotCap
-    if (sys.env.get("GRAFT_TIMING").contains("1"))
-      System.err.println(s"KNNPROBE n=${stats.getLong(0)} planes=$planes" +
-        s" maxOcc=$maxOcc hot=$anyHot")
     // Rounds build as CONCURRENT futures: on the hot path each round's
     // chunk rank runs 2 eager jobs (the ordinal's range sample + counts),
     // which executed back-to-back would serialize ~2·rounds small jobs

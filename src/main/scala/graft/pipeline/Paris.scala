@@ -281,9 +281,9 @@ object Paris {
       .groupBy("src", "dst").agg(max("weight").as("weight"))
     val symCk = graft.core.Lineage.reset(sym)
     // nearest-anchor assignment by iterated weighted vote
-    var anchored = graft.core.Lineage.reset(
-      sk.select(col("cell_id"), col("cell_id").as("anchor")))
-    for (_ <- 1 to assignRounds) {
+    val (anchored, _) = graft.core.Lineage.iterate(
+        sk.select(col("cell_id"), col("cell_id").as("anchor")),
+        assignRounds) { (anchored, _) =>
       val votes = symCk
         .join(anchored.select(col("cell_id").as("dst"), col("anchor")), Seq("dst"))
         .join(anchored.select(col("cell_id").as("src")), Seq("src"), "left_anti")
@@ -293,8 +293,8 @@ object Paris {
         .partitionBy(col("cell_id")).orderBy(col("w").desc, col("anchor"))
       val pick = votes.withColumn("rn", row_number().over(byVote))
         .filter(col("rn") === 1).select("cell_id", "anchor")
-      anchored = graft.core.Lineage.reset(anchored.unionByName(pick))
-    }
+      anchored.unionByName(pick)
+    } { (_, _) => false }
     // contract onto anchors; each undirected cross-group edge lands in
     // both ordered buckets with equal weight, so keep src < dst once
     val superE = symCk

@@ -33,21 +33,20 @@ object Pseudotime {
     // lazy personalized-PageRank x ← (1−α)·s + α·(x + Pᵀx)/2: the lazy
     // walk (half the mass stays put) makes scores decay monotonically
     // with graph distance from the sources regardless of degree skew
-    var x = s.withColumnRenamed("s", "x")
-    for (i <- 1 to iters) {
+    // x is referenced twice per round (push + carry): the loop resets
+    // both the lineage AND the carried size estimate (see core.Lineage)
+    val (x, _) = graft.core.Lineage.iterate(
+        s.withColumnRenamed("s", "x"), iters) { (x, _) =>
       val push = norm.join(x.withColumnRenamed("cell_id", "src")
           .withColumnRenamed("x", "xs"), Seq("src"))
         .groupBy(col("dst").as("cell_id"))
         .agg(sum(col("p") * col("xs")).as("pushed"))
-      x = s.join(push, Seq("cell_id"), "left")
+      s.join(push, Seq("cell_id"), "left")
         .join(x.withColumnRenamed("x", "x_prev"), Seq("cell_id"), "left")
         .select(col("cell_id"),
           (lit(1 - alpha) * col("s") + lit(alpha) *
             (coalesce(col("x_prev"), lit(0.0)) + coalesce(col("pushed"), lit(0.0))) / 2).as("x"))
-      // x is referenced twice per round (push + carry): reset both the
-      // lineage AND the carried size estimate (see core.Lineage)
-      x = graft.core.Lineage.reset(x)
-    }
+    } { (_, _) => false }
     // potential → pseudotime: far from source = high; min-max normalize
     val pot = x.select(col("cell_id"), (-log1p(col("x"))).as("pot"))
     val mm = pot.agg(min("pot").as("lo"), max("pot").as("hi"))

@@ -220,8 +220,8 @@ object UmapLayout {
             col("mu_sum"))))
     } else None
 
-    var coords = graft.core.Lineage.reset(init.select("cell_id", "x", "y"))
-    for (epoch <- 0 until nEpochs) {
+    val (coords, _) = graft.core.Lineage.iterate(
+        init.select("cell_id", "x", "y"), nEpochs) { (coords, epoch) =>
       val alpha = learningRate * (1.0 - epoch.toDouble / nEpochs)
       val cs = coords.select(col("cell_id").as("src"), col("x").as("sx"), col("y").as("sy"))
       val cd = coords.select(col("cell_id").as("dst"), col("x").as("dx"), col("y").as("dy"))
@@ -307,12 +307,11 @@ object UmapLayout {
           clip(col("g") * (col("sy") - col("oy"))).as("fy"))
       val force = att.unionByName(rep)
         .groupBy("cell_id").agg(sum("fx").as("fx"), sum("fy").as("fy"))
-      coords = graft.core.Lineage.reset(
-        coords.join(force, Seq("cell_id"), "left")
-          .select(col("cell_id"),
-            (col("x") + lit(alpha) * coalesce(col("fx"), lit(0.0))).as("x"),
-            (col("y") + lit(alpha) * coalesce(col("fy"), lit(0.0))).as("y")))
-    }
+      coords.join(force, Seq("cell_id"), "left")
+        .select(col("cell_id"),
+          (col("x") + lit(alpha) * coalesce(col("fx"), lit(0.0))).as("x"),
+          (col("y") + lit(alpha) * coalesce(col("fy"), lit(0.0))).as("y"))
+    } { (_, _) => false }
     coords.select(col("cell_id"), col("x").as("umap1"), col("y").as("umap2"))
   }
 

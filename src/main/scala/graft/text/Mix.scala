@@ -629,12 +629,7 @@ object Mix {
   def ipfRake(df: DataFrame, rowKey: Column, colKey: Column,
               rounds: Int = 4): DataFrame = {
     val d38 = "decimal(38,0)"
-    var cells = graft.core.Lineage.reset(
-      df.groupBy(rowKey.as("grp_r"), colKey.as("grp_c"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("grp_r"), col("grp_c"), col("n"),
-          lit(1000000L).as("w")))
-    def step(key: String): DataFrame = {
+    def step(cells: DataFrame, key: String): DataFrame = {
       val m = cells.groupBy(key)
         .agg(sum(col("n").cast(d38) * col("w").cast(d38)).cast(d38).as("m"))
       val grand = m.agg(sum(col("m")).cast(d38).as("grand"),
@@ -648,10 +643,14 @@ object Mix {
         .select(col("grp_r"), col("grp_c"), col("n"),
           expr(s"(CAST(w AS $d38) * factor) div 1000000").as("w"))
     }
-    for (_ <- 1 to rounds) {
-      cells = graft.core.Lineage.reset(step("grp_r"))
-      cells = graft.core.Lineage.reset(step("grp_c"))
-    }
+    // each round is a row half-round then a column half-round
+    val (cells, _) = graft.core.Lineage.iterate(
+        df.groupBy(rowKey.as("grp_r"), colKey.as("grp_c"))
+          .agg(count(lit(1)).as("n"))
+          .select(col("grp_r"), col("grp_c"), col("n"),
+            lit(1000000L).as("w")), 2 * rounds) { (cells, i) =>
+      step(cells, if (i % 2 == 0) "grp_r" else "grp_c")
+    } { (_, _) => false }
     // achieved marginal shares after the final round
     val mr = cells.groupBy("grp_r")
       .agg(sum(col("n").cast(d38) * col("w").cast(d38)).cast(d38).as("mr"))

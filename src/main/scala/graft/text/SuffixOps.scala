@@ -68,8 +68,8 @@ object SuffixOps {
       val dead = levelMemo.keys.filter(_._1 == evict).toSeq
       dead.foreach { k =>
         // RDD-level free (Dataset.unpersist is a CacheManager no-op for
-        // localCheckpointed frames — see FrameMemo.hardUnpersist)
-        levelMemo.remove(k).foreach(graft.core.FrameMemo.hardUnpersist)
+        // localCheckpointed frames — see Lineage.release)
+        levelMemo.remove(k).foreach(Lineage.release)
       }
     }
   }
@@ -122,7 +122,7 @@ object SuffixOps {
       val built = r.localCheckpoint()
       levelMemo.putIfAbsent((fp, i), built) match {
         case Some(winner) =>
-          graft.core.FrameMemo.hardUnpersist(built)
+          Lineage.release(built)
           winner
         case None => built
       }
