@@ -51,10 +51,12 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpusEnv = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = cpusEnv.toIntOption.filter(_ > 0).getOrElse(throw
+      new IllegalArgumentException(s"SPARK_GRAFT_CPUS must be a positive integer, got '$cpusEnv'"))
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.files.maxPartitionBytes", "64m")
@@ -73,7 +75,7 @@ object Bench {
       }
     spark.read.parquet(s"$sfDir/lineitem.parquet").groupBy("l_returnflag").count().count()
 
-    // a failed rep records (elapsed, ok = false) — it is EXCLUDED from
+    // a failed rep records (elapsed, Some(error)) — it is EXCLUDED from
     // the median (a planning-time crash would otherwise record near-zero
     // seconds and silently improve the gate number) and surfaces in the
     // JSON "errors" map instead; a query with no successful rep reports
@@ -98,14 +100,16 @@ object Bench {
       while (it.hasNext) { val v = it.next().getCollectionTime; if (v > 0) t += v }
       t
     }
-    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Boolean, Long, Long) = {
+    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+        : (Double, Option[String], Long, Long) = {
       val h0 = memoHits()
       val g0 = gcMs()
       val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-        catch { case _: Throwable => false }
-      ((System.nanoTime() - t0) / 1e9, ok, memoHits() - h0, gcMs() - g0)
+      val err =
+        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None }
+        catch { case e: Throwable => Some(e.getClass.getName + ": " +
+          Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("")) }
+      ((System.nanoTime() - t0) / 1e9, err, memoHits() - h0, gcMs() - g0)
     }
     // SPARK_GRAFT_BENCH_ONLY=q69,q60 restricts to the named qNN prefixes
     // (local iteration on one query's reps; the driver never sets it)
@@ -121,18 +125,18 @@ object Bench {
       // trigger is ANY base rep (or the base median) over the cutoff —
       // the round-10 record had a 38 s rep 3 (q202) that got no extra
       // reps because only rep 1 used to arm the extension.
-      val baseGood = base.filter(_._2).map(_._1).sorted
+      val baseGood = base.filter(_._2.isEmpty).map(_._1).sorted
       val baseMedian = if (baseGood.nonEmpty) baseGood(baseGood.length / 2) else 0.0
       val reps =
         if (base.exists(_._1 > SLOW_CUTOFF) || baseMedian > SLOW_CUTOFF)
           base ++ (1 to (SLOW_REPS - REPS)).map(_ => once(fn))
         else base
-      val good = reps.filter(_._2).map(_._1).sorted
+      val good = reps.filter(_._2.isEmpty).map(_._1).sorted
       val median = if (good.nonEmpty) Some(good(good.length / 2)) else None
       // cold = rep 1 (the rep that pays any memo/cache build this query
       // triggers first) when it succeeded — reported alongside the
       // median so build-cost regressions stay visible under the memos
-      val cold = if (reps.head._2) Some(reps.head._1) else None
+      val cold = if (reps.head._2.isEmpty) Some(reps.head._1) else None
       // contended = the reps DISAGREE in a way a stable plan cannot:
       // >3× spread across successful WARM reps (rep 1 is excluded — it
       // legitimately pays codegen/JIT/memo-build and is already
@@ -140,12 +144,12 @@ object Bench {
       // time in stop-the-world GC. The flag turns "this query breached
       // its anchor" into "this RUN was starved while measuring it" —
       // attributable from the record alone, no rerun needed.
-      val warm = reps.drop(1).filter(_._2)
+      val warm = reps.drop(1).filter(_._2.isEmpty)
       val warmTimes = warm.map(_._1).sorted
       val contended = warmTimes.nonEmpty && (
         warmTimes.last / math.max(warmTimes.head, 1e-9) > 3.0 ||
           warm.exists { case (el, _, _, gc) => gc >= 0.5 * el * 1000 })
-      (name, median, reps.map(_._1), reps.count(!_._2), cold,
+      (name, median, reps.map(_._1), reps.flatMap(_._2), cold,
         reps.map(_._3), reps.map(_._4), contended, good.headOption)
     }
     def fmt(v: Double) = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP)
@@ -184,14 +188,17 @@ object Bench {
         System.gc()
         Thread.sleep(2000)
         candidates.map { case (k, _, _, _, _, _, _, _, _) =>
-          val rr = (1 to REPS).map(_ => once(qFns(k))).filter(_._2).map(_._1).sorted
+          val rr = (1 to REPS).map(_ => once(qFns(k))).filter(_._2.isEmpty).map(_._1).sorted
           short(k) -> (if (rr.nonEmpty) rr(rr.length / 2) else Double.NaN)
         }.filter(!_._2.isNaN).toMap
       }
     }
-    val errs = results.filter(_._4 > 0)
-      .map { case (k, _, _, n, _, _, _, _, _) => "\"" + short(k) + "\":" + n }
-      .mkString("{", ",", "}")
+    // printed line: failure counts; full record: count plus the first
+    // failing rep's exception
+    val failed = results.filter(_._4.nonEmpty).map(r => short(r._1) -> r._4)
+    val errs = failed.map { case (q, es) => s""""$q":${es.size}""" }.mkString("{", ",", "}")
+    val errsFull = failed.map { case (q, es) =>
+      s""""$q":{"n":${es.size},"first":${Verify.jsonString(es.head)}}""" }.mkString("{", ",", "}")
     val total = results.flatMap(_._2).sum
     // contention-floor total: sum of each query's FASTEST successful rep.
     // On an idle box total ≈ totalMin; a gap between them is the amount
@@ -247,7 +254,7 @@ object Bench {
     val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", s"BENCH_full_c$cpus.json")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(fullPath).toAbsolutePath,
-      s"""{"metric":"total","value":${fmt(total)},"value_min":${fmt(totalMin)},"unit":"sec","n":${results.size},"cpus":$cpus,"base_reps":$REPS,"slow_reps":$SLOW_REPS,"slow_cutoff":$SLOW_CUTOFF,"contended":$contendedKeys,$envJson,"queries":$fullQs,"errors":$errs,"sf":"$sfDir"}""")
+      s"""{"metric":"total","value":${fmt(total)},"value_min":${fmt(totalMin)},"unit":"sec","n":${results.size},"cpus":$cpus,"base_reps":$REPS,"slow_reps":$SLOW_REPS,"slow_cutoff":$SLOW_CUTOFF,"contended":$contendedKeys,$envJson,"queries":$fullQs,"errors":$errsFull,"sf":"$sfDir"}""")
     // printed line: summary only, guaranteed < 1.5 kB so the driver's
     // 2000-byte tail window parses it — slowest 10 with medians AND
     // per-rep arrays (contention vs plan is attributable from spread)

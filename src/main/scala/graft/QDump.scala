@@ -17,17 +17,8 @@ object QDump {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val df = SparkEntry.queries(name)(spark, sfDir)
-    if (sys.env.contains("SPARK_GRAFT_EXPLAIN")) {
-      val plan = df.queryExecution.executedPlan.toString
-      println(s"PLAN_CARTESIAN=${plan.contains("CartesianProduct")}")
-      println(s"PLAN_BNLJ=${plan.contains("BroadcastNestedLoopJoin")}")
-      // unpartitioned windows surface as the runtime WARN
-      // "No Partition Defined for Window operation" — run without
-      // SPARK_GRAFT_EXPLAIN and grep stderr for the authoritative check
-    } else {
-      df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-    }
+    SparkEntry.queries(name)(spark, sfDir)
+      .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
     spark.stop()
   }
 }

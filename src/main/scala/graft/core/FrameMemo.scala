@@ -20,8 +20,8 @@ import org.apache.spark.sql.DataFrame
   * unrecomputable and fails loudly — never wrong; Verify/Bench run
   * queries sequentially, and LRU admission makes the victim the
   * least-recently-touched of `MaxEntries` keys. Callers that MEASURE
-  * build cost (ScaleProbe) call [[clear]] between measured sections so
-  * a hit cannot fake a probe row.
+  * build cost (perfbench, per iteration) call [[clear]] between
+  * measured sections so a hit cannot fake a build time.
   */
 object FrameMemo {
   private val memo =

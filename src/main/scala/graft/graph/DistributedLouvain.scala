@@ -49,7 +49,11 @@ object DistributedLouvain {
       .select(col("src"),
         (coalesce(col("deg0"), lit(0.0)) + coalesce(col("sdeg"), lit(0.0))).as("deg"))
     val m2Row = deg.agg(sum(col("deg")).as("m2"))
-    val degCk = Lineage.reset(deg.crossJoin(broadcast(m2Row)))
+    // total weight observed on degCk's own pass (no extra job): with
+    // m2 = 0 every gain is 0/0 = NaN, so a zero-weight graph skips the
+    // rounds and each node stays its own cluster (dense by node id)
+    val (degCk, m2Obs) = Lineage.reset(deg.crossJoin(broadcast(m2Row)),
+      coalesce(max(col("m2")), lit(0.0)).as("m2"))
 
     // community = own node initially; each state carries a _moved flag
     // whose count is observed on the state's own materializing pass.
@@ -64,7 +68,8 @@ object DistributedLouvain {
     // zero-move round.
     val init = degCk.select(col("src").as("node"), col("src").as("comm"),
       lit(true).as("_moved"))
-    val (comm, _) = Lineage.iterate(init, rounds,
+    val (comm, _) = Lineage.iterate(init,
+        if (m2Obs.getDouble(0) == 0.0) 0 else rounds,
         count_if(col("_moved")).as("moved")) { (comm, round) =>
       // community volumes (sum of member degrees)
       val vol = comm.join(degCk.withColumnRenamed("src", "node"), Seq("node"))

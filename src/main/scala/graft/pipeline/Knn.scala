@@ -16,13 +16,6 @@ import org.apache.spark.sql.functions._
   */
 object Knn {
 
-  /** Session-lifetime memo of the LSH occupancy probe's measured max
-    * bucket occupancy, keyed by (session, corpus CONTENT fingerprint,
-    * planes, rounds) — see [[lshCandidates]].
-    */
-  private val hotMemo =
-    scala.collection.concurrent.TrieMap.empty[(Int, String, Int, Int), Long]
-
   // Trained IVF centroid matrices memo (graft.core.DriverMemo), keyed by
   // (session, corpus content fingerprint, seed, nLists, trainN, iters):
   // the deterministic seeded-Lloyd rounds re-derive the SAME tiny
@@ -84,8 +77,7 @@ object Knn {
     // The fingerprint rides the SAME (count, dim, xxhash) stats row
     // lshCandidates needs anyway, computed here over the cached corpus
     // and threaded through on a miss — a hit costs one narrow scan, a
-    // miss computes the stats once, not twice. ScaleProbe clears the
-    // memo between measured sections.
+    // miss computes the stats once, not twice.
     val c0 = latent.cache()
     val stats = c0
       .select(col("latent"),
@@ -248,8 +240,9 @@ object Knn {
     // aggregate is occupancy-sized (hundreds of millions of rows under
     // adversarial replica skew), and an eager localCheckpoint would pin
     // all of it in the block manager until RDD GC — successive ANN calls
-    // in one session then accumulate to OOM (found by the 40× ScaleProbe:
-    // silhouette's graph survived, LISI's follow-up build blew the heap).
+    // in one session then accumulate to OOM (the 40× scale-up probe in
+    // PERF.md: silhouette's graph survived, LISI's follow-up build blew
+    // the heap).
     // The un-checkpointed aggregate streams through the shuffle instead;
     // only the n·k result is ever materialized.
     // Bounded top-k aggregation (graft.functions.TopKMin) replaces the
@@ -339,16 +332,15 @@ object Knn {
     // of pure action latency on sub-second queries): when no bucket of
     // any round exceeds hotCap — every oracled corpus, and most real
     // ones — every round emits EXACTLY the pre-refinement plan. The
-    // measured MAX OCCUPANCY is memoized per (session, corpus CONTENT
-    // fingerprint, planes, rounds) so re-built identical queries (bench
-    // reps, repeated facade calls) skip even the single job; it both
-    // gates the refinement (> hotCap) and picks the chunk-rank regime
-    // (> stragglerCap, below).
+    // measured MAX OCCUPANCY is memoized in DriverMemo per (session,
+    // corpus CONTENT fingerprint, planes, rounds) so re-built identical
+    // queries (bench reps, repeated facade calls) skip even the single
+    // job; it both gates the refinement (> hotCap) and picks the
+    // chunk-rank regime (> stragglerCap, below).
     val fp = if (stats.getString(2).isEmpty) "empty"
       else s"${stats.getString(2)}_${stats.getLong(0)}"
-    val memoKey = (System.identityHashCode(c0.sparkSession),
-      fp, planes, rounds)
-    val maxOcc = hotMemo.getOrElseUpdate(memoKey, {
+    val maxOcc = graft.core.DriverMemo.cached[Long](
+        s"lshocc:${System.identityHashCode(c0.sparkSession)}:$fp:$planes:$rounds") {
       (0 until rounds).map { r =>
         val signs = graft.sim.Similarity.signMatrix(planes, dim, r)
         c0.select(lit(r).as("_r"), graft.sim.Similarity.bucketCol(
@@ -356,7 +348,7 @@ object Knn {
       }.reduce(_ unionByName _)
         .groupBy("_r", "bucket").agg(count(lit(1)).as("_bn"))
         .agg(max(col("_bn"))).head.getLong(0)
-    })
+    }
     val anyHot = maxOcc > hotCap
     // Rounds build as CONCURRENT futures: on the hot path each round's
     // chunk rank runs 2 eager jobs (the ordinal's range sample + counts),
@@ -696,7 +688,7 @@ object Knn {
     // k-bound, THEN localCheckpoint (eager) so the input cache can be
     // released NOW instead of leaking until session end. Checkpointing
     // before the k-bound would pin the full occupancy-sized candidate
-    // set in the block manager (the 40× ScaleProbe OOM — see
+    // set in the block manager (the 40× probe OOM in PERF.md — see
     // bucketedKnn); the n·k result is all that ever materializes.
     // Same bounded top-k aggregation as bucketedKnn (see there): the
     // multi-round/probe duplicates are bit-identical, so the ordering-

@@ -274,7 +274,7 @@ object TrainingQueries {
         .orderBy("hour_bucket", "event_type")),
 
     // embedding-cosine near-duplicate pairs: LSH bucket candidates only
-    // (never all-pairs), planes sized from n by the ScaleProbe rule +
+    // (never all-pairs), planes sized from n by the PERF.md sizing rule +
     // hot-bucket cap (Similarity.cosineNearDupPairs — the oracle
     // computes the identical plane count from COUNT(*)); planted scaled
     // copies guarantee expected rows

@@ -237,7 +237,7 @@ object Similarity {
   private def embeddingDim(corpus: DataFrame): Int =
     corpus.select(size(toDouble(col("embedding"))).as("d")).head.getInt(0)
 
-  /** ANN/LSH sizing rule (ScaleProbe-measured, PERF.md): enough
+  /** ANN/LSH sizing rule (measured by PERF.md's scale-up probe): enough
     * hyperplanes that the expected bucket occupancy n / 2^planes lands
     * at `targetBucketSize` — in-bucket pair work is Σ_b |b|², so holding
     * occupancy constant keeps the candidate join linear in n instead of

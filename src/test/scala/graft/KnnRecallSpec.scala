@@ -139,6 +139,26 @@ class KnnRecallSpec extends SparkSpec {
     assert(cross == 0L, s"$cross cross-cluster edges in top-3")
   }
 
+  test("LSH occupancy probe is memoized per session in DriverMemo") {
+    // bucketedKnn (not bucketedSelfKnn, which FrameMemo would answer
+    // first): a repeat on the same corpus in the same session is exactly
+    // one DriverMemo hit (the occupancy probe); the identical corpus in
+    // another session shares nothing
+    val pts = (0 until 40).map(i =>
+      (i.toLong, Array.tabulate(4)(j => math.sin(i * 1.7 + j) * 3.0)))
+    def run(s: org.apache.spark.sql.SparkSession): Unit = {
+      import s.implicits._
+      val v = pts.toDF("cell_id", "latent")
+      Knn.bucketedKnn(v, v, 3, nPlanes = 3, rounds = 2).count()
+    }
+    run(spark)
+    val h0 = graft.core.DriverMemo.stats._1
+    run(spark)
+    assert(graft.core.DriverMemo.stats._1 == h0 + 1)
+    run(spark.newSession())
+    assert(graft.core.DriverMemo.stats._1 == h0 + 1)
+  }
+
   test("bucketedEpsNeighborsBetween: asymmetric probe finds planted copies only") {
     import spark.implicits._
     // corpus: 3 well-separated cluster centers; queries: a near-copy of

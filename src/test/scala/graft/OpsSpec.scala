@@ -111,4 +111,14 @@ class OpsSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(c === c2)
   }
+
+  test("distributed louvain on an all-zero-weight graph keeps every node apart") {
+    // m2 = 0 would make every gain NaN; the defined output is one
+    // cluster per node, dense by node id
+    val edges = Seq((3L, 1L, 0.0), (1L, 2L, 0.0), (5L, 4L, 0.0), (2L, 3L, 0.0))
+      .toDF("src", "dst", "weight")
+    val c = graft.graph.DistributedLouvain.cluster(edges, rounds = 4)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(c === (1L to 5L).map(n => n -> n).toMap)
+  }
 }
