@@ -239,13 +239,11 @@ object Bench {
     // identical code + query order — a mismatch here means the runs
     // were not actually identical).
     val heapMb = Runtime.getRuntime.maxMemory() / (1024 * 1024)
-    val fmStats = graft.core.FrameMemo.stats
-    val dmStats = graft.core.DriverMemo.stats
-    val soStats = graft.text.SuffixOps.memoStats
+    def memoJson(st: (Long, Long, Long)) = s"[${st._1},${st._2},${st._3}]"
     val envJson = s""""heap_mb":$heapMb,"gc_total_ms":${gcMs()},""" +
-      s""""frame_memo":[${fmStats._1},${fmStats._2},${fmStats._3}],""" +
-      s""""driver_memo":[${dmStats._1},${dmStats._2}],""" +
-      s""""suffix_memo":[${soStats._1},${soStats._2}]"""
+      s""""frame_memo":${memoJson(graft.core.FrameMemo.stats)},""" +
+      s""""driver_memo":${memoJson(graft.core.DriverMemo.stats)},""" +
+      s""""suffix_memo":${memoJson(graft.text.SuffixOps.memoStats)}"""
     // resolved against the working directory (or an explicit override),
     // not a hardcoded checkout path
     // cpu-suffixed default: the r13 driver's 8-cpu run overwrote the 32-cpu

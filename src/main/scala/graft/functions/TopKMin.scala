@@ -56,6 +56,10 @@ case class TopKMin(
     TypeUtils.getInterpretedOrdering(structType)
       .asInstanceOf[Ordering[InternalRow]]
 
+  // one projection per deserialized instance (a task's copy), not per
+  // serialize call
+  @transient private lazy val toUnsafe = UnsafeProjection.create(fieldTypes)
+
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case st: StructType if TypeUtils.typeWithProperEquals(st) || st.fields.nonEmpty =>
       TypeCheckResult.TypeCheckSuccess
@@ -111,13 +115,12 @@ case class TopKMin(
   }
 
   override def serialize(buffer: java.util.TreeSet[InternalRow]): Array[Byte] = {
-    val proj = UnsafeProjection.create(fieldTypes)
     val out = new ByteArrayOutputStream()
     val dos = new DataOutputStream(out)
     dos.writeInt(buffer.size)
     val it = buffer.iterator()
     while (it.hasNext) {
-      val ur = proj(it.next()).copy()
+      val ur = toUnsafe(it.next()).copy()
       val bytes = ur.getBytes
       dos.writeInt(bytes.length)
       dos.write(bytes)

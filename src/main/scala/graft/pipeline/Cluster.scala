@@ -53,10 +53,7 @@ object Cluster {
     */
   def lloydWithCenters(latent0: DataFrame, k: Int, iters: Int = 25,
                        seed: Long = 4466L): (DataFrame, Array[Array[Double]]) = {
-    val (cached, latent, fp) = cacheCompact(latent0)
-    val centers = graft.core.DriverMemo.cached(s"lloyd:$fp:$k:$iters:$seed") {
-      lloydTrain(latent, k, iters, seed)
-    }
+    val (cached, latent, centers) = trained(latent0, k, iters, seed)
     // materialize the final assignment (eager localCheckpoint) so the
     // input cache can be released NOW — repeated lloyd calls in one
     // session (ivfSelfKnn trains one per round) no longer accumulate
@@ -77,10 +74,7 @@ object Cluster {
     */
   def lloydCenters(latent0: DataFrame, k: Int, iters: Int = 25,
                    seed: Long = 4466L): Array[Array[Double]] = {
-    val (cached, latent, fp) = cacheCompact(latent0)
-    val centers = graft.core.DriverMemo.cached(s"lloyd:$fp:$k:$iters:$seed") {
-      lloydTrain(latent, k, iters, seed)
-    }
+    val (cached, _, centers) = trained(latent0, k, iters, seed)
     cached.unpersist()
     centers
   }
@@ -94,24 +88,22 @@ object Cluster {
     * per input partition. Partitioning only — every value and the 9 dp
     * center fence are untouched (group-sum order shifts are exactly the
     * noise the fence already absorbs across engines). The one
-    * materializing action also computes the content fingerprint keying
-    * the trained-center memo (DriverMemo — reps and repeated facade
-    * calls on the same vectors skip all `iters` training jobs; the
-    * memoized matrix is bit-identical by construction, so the q60/q68
-    * oracle replay is untouched). Returns `(cached handle to unpersist,
-    * compacted frame to compute on, session-scoped fingerprint)`.
+    * materializing action also computes the content key of the
+    * trained-center memo (DriverMemo — reps and repeated facade calls on
+    * the same vectors skip all `iters` training jobs; the memoized matrix
+    * is bit-identical by construction, so the q60/q68 oracle replay is
+    * untouched). Returns `(cached handle to unpersist, compacted frame to
+    * compute on, centers)`.
     */
-  private def cacheCompact(latent0: DataFrame): (DataFrame, DataFrame, String) = {
+  private def trained(latent0: DataFrame, k: Int, iters: Int, seed: Long)
+      : (DataFrame, DataFrame, Array[Array[Double]]) = {
     val cached = latent0.cache()
-    val r = cached
-      .select(expr(graft.core.Fingerprint.hashExpr("cell_id, latent")).as("_fph"))
-      .agg(count(lit(1)).as("n"),
-        expr(graft.core.Fingerprint.aggOfHash("_fph")).as("x")).head()
-    val n = r.getLong(0)
-    val fp = s"${System.identityHashCode(latent0.sparkSession)}:" +
-      (if (r.getString(1).isEmpty) "empty" else s"${r.getString(1)}_$n")
-    val parts = math.max(1, math.min(((n - 1) / 200000L).toInt + 1, 1024))
-    (cached, cached.coalesce(parts), fp)
+    val (fp, r) = graft.core.Fingerprint.key(cached, "cell_id, latent")
+    val parts = math.max(1, math.min(((r.getLong(0) - 1) / 200000L).toInt + 1, 1024))
+    val latent = cached.coalesce(parts)
+    (cached, latent, graft.core.DriverMemo.cached(s"lloyd:$fp:$k:$iters:$seed") {
+      lloydTrain(latent, k, iters, seed)
+    })
   }
 
   private def assignUdf(cs: Array[Array[Double]]) = udf { (v: Seq[Double]) =>

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -15,13 +15,6 @@ import org.apache.spark.sql.functions._
   * — both produce the same edge schema.
   */
 object Knn {
-
-  // Trained IVF centroid matrices memo (graft.core.DriverMemo), keyed by
-  // (session, corpus content fingerprint, seed, nLists, trainN, iters):
-  // the deterministic seeded-Lloyd rounds re-derive the SAME tiny
-  // nLists×dims matrix on every bench rep / repeated call — keying on
-  // the FULL corpus fingerprint (already computed for free by the cache
-  // materialization) lets a hit skip even building the training sample.
 
   /** Euclidean distance between two latent arrays (sequential fold) —
     * the fold runs as the native codegen'd SqDiffSum expression, whose
@@ -46,6 +39,12 @@ object Knn {
         Window.partitionBy("src").orderBy(col("dist"), col("dst"))))
       .filter(col("rn") <= k)
   }
+
+  /** [[graft.core.Fingerprint.key]] of a `(cell_id, latent)` corpus; its
+    * row is `(n, d)` — the latent dimension rides the key's one pass. */
+  private def corpusKey(c: DataFrame): (String, Row) =
+    graft.core.Fingerprint.key(c, "cell_id, latent",
+      max(size(col("latent").cast("array<double>"))))
 
   /** Engine-reproducible euclidean distance — the shared kernel. */
   private def l2dot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
@@ -74,23 +73,14 @@ object Knn {
     // bucketedKnn, and three oracled queries (q57/q61/q125) plus every
     // bench rep and repeated facade call rebuild the identical frame —
     // memoize it in FrameMemo keyed by the corpus CONTENT fingerprint.
-    // The fingerprint rides the SAME (count, dim, xxhash) stats row
-    // lshCandidates needs anyway, computed here over the cached corpus
-    // and threaded through on a miss — a hit costs one narrow scan, a
-    // miss computes the stats once, not twice.
+    // The key pass also yields the (count, dim) lshCandidates needs,
+    // computed here over the cached corpus and threaded through on a
+    // miss — a hit costs one narrow scan, a miss scans once, not twice.
     val c0 = latent.cache()
-    val stats = c0
-      .select(col("latent"),
-        expr(graft.core.Fingerprint.hashExpr("cell_id, latent")).as("_fph"))
-      .agg(count(lit(1)).as("n"),
-        max(size(col("latent").cast("array<double>"))).as("d"),
-        expr(graft.core.Fingerprint.aggOfHash("_fph")).as("x")).head
-    val fp = s"${System.identityHashCode(latent.sparkSession)}:" +
-      (if (stats.getString(2).isEmpty) "empty"
-       else s"${stats.getString(2)}_${stats.getLong(0)}")
-    val res = graft.core.FrameMemo.cached(s"selfknn:$fp:$k:$nPlanes:$rounds") {
+    val key = corpusKey(c0)
+    val res = graft.core.FrameMemo.cached(s"selfknn:${key._1}:$k:$nPlanes:$rounds") {
       bucketedKnn(latent, latent, k, nPlanes, rounds, excludeSelf = true,
-        preStats = Some(stats))
+        preKey = Some(key))
     }
     c0.unpersist()
     res
@@ -233,9 +223,9 @@ object Knn {
                   excludeSelf: Boolean = false,
                   candFilter: DataFrame => DataFrame = identity,
                   hotCap: Int = 512, chunkW: Int = 128,
-                  preStats: Option[org.apache.spark.sql.Row] = None): DataFrame = {
+                  preKey: Option[(String, Row)] = None): DataFrame = {
     val (cand, release) = lshCandidates(queries, corpus, nPlanes, rounds,
-      excludeSelf, hotCap, chunkW, preStats = preStats)
+      excludeSelf, hotCap, chunkW, preKey = preKey)
     // checkpoint AFTER the k-bound, not before: the (src, dst) candidate
     // aggregate is occupancy-sized (hundreds of millions of rows under
     // adversarial replica skew), and an eager localCheckpoint would pin
@@ -268,7 +258,9 @@ object Knn {
     * [[bucketedEpsNeighbors]]: per round, precomputed-sign-matrix
     * buckets + Hamming-1 multi-probe + exact in-bucket distances, all
     * rounds unioned (PRE-dedup — callers aggregate). Returns the frame
-    * plus a release handle for the cached inputs.
+    * plus a release handle for the cached inputs. A (src, dst) pair
+    * repeated across rounds/probes carries ONE bit-identical `dist`
+    * (same vectors, same kernel): bucketedKnn's TopKMin dedup depends on it.
     *
     * Hot-bucket refinement: sign-LSH planes pass through
     * the ORIGIN, so a tight cluster sitting away from the origin lands
@@ -303,7 +295,7 @@ object Knn {
                             hotCap: Int = 512,
                             chunkW: Int = 128,
                             stragglerCap: Long = 1L << 20,
-                            preStats: Option[org.apache.spark.sql.Row] = None)
+                            preKey: Option[(String, Row)] = None)
       : (DataFrame, () => Unit) = {
     // both sides are re-bucketed every round — cache them once; released
     // by the caller after it materializes its bounded result
@@ -311,18 +303,12 @@ object Knn {
     val q0 = queries.cache()
     val c0 = if (self) q0 else corpus.cache()
     // one pass resolves row count (planesFor), dim (sign matrices) AND
-    // the corpus content fingerprint keying the hot-bucket memo — a
-    // plan-identity key (semanticHash) would go stale if the data under
-    // the same path changed within a session and silently keep the
-    // unsplit in-bucket join. Callers that already computed the same
-    // (n, d, x) row for their own memo key (bucketedSelfKnn) thread it
-    // through instead of paying the scan twice.
-    val stats = preStats.getOrElse(c0
-      .select(col("latent"),
-        expr(graft.core.Fingerprint.hashExpr("cell_id, latent")).as("_fph"))
-      .agg(count(lit(1)).as("n"),
-        max(size(col("latent").cast("array<double>"))).as("d"),
-        expr(graft.core.Fingerprint.aggOfHash("_fph")).as("x")).head)
+    // the corpus content key of the occupancy memo — a plan-identity key
+    // (semanticHash) would go stale if the data under the same path
+    // changed within a session and silently keep the unsplit in-bucket
+    // join. Callers that already computed it for their own memo key
+    // (bucketedSelfKnn) thread it through instead of paying the scan twice.
+    val (fp, stats) = preKey.getOrElse(corpusKey(c0))
     val planes =
       if (nPlanes > 0) nPlanes
       else graft.sim.Similarity.planesFor(stats.getLong(0))
@@ -337,10 +323,7 @@ object Knn {
     // queries (bench reps, repeated facade calls) skip even the single
     // job; it both gates the refinement (> hotCap) and picks the
     // chunk-rank regime (> stragglerCap, below).
-    val fp = if (stats.getString(2).isEmpty) "empty"
-      else s"${stats.getString(2)}_${stats.getLong(0)}"
-    val maxOcc = graft.core.DriverMemo.cached[Long](
-        s"lshocc:${System.identityHashCode(c0.sparkSession)}:$fp:$planes:$rounds") {
+    val maxOcc = graft.core.DriverMemo.cached[Long](s"lshocc:$fp:$planes:$rounds") {
       (0 until rounds).map { r =>
         val signs = graft.sim.Similarity.signMatrix(planes, dim, r)
         c0.select(lit(r).as("_r"), graft.sim.Similarity.bucketCol(
@@ -618,25 +601,12 @@ object Knn {
   def ivfSelfKnn(latent0: DataFrame, k: Int, nLists: Int = 16,
                  nProbe: Int = 3, rounds: Int = 3, trainN: Int = 10000,
                  seed: Long = 4466L): DataFrame = {
-    val spark = latent0.sparkSession
-    import spark.implicits._
     // The vector frame feeds every round twice (lists + probes) plus the
     // training sample — cache it once instead of re-scanning the source
     // 3·rounds times. The cache is released before returning (see the
     // localCheckpoint below); repeated ivfSelfKnn calls in one session
     // no longer accumulate cached partitions.
     val latent = latent0.cache()
-    // one action materializes the cache AND computes the content
-    // fingerprint that keys the trained-centroid memo (order-independent
-    // xxhash64 combined as xor ∥ sum — Fingerprint.sqlExpr's hardened
-    // form — plus the row count appended below)
-    val fpRow = latent
-      .select(expr(graft.core.Fingerprint.hashExpr("cell_id, latent")).as("_fph"))
-      .agg(expr(graft.core.Fingerprint.aggOfHash("_fph")).as("x"),
-        count(lit(1)).as("n")).head()
-    val fp = s"${System.identityHashCode(spark)}:" +
-      (if (fpRow.getString(0).isEmpty) "empty"
-       else s"${fpRow.getString(0)}_${fpRow.getLong(1)}")
     // The rounds are fully independent (separate seeds, separate centroid
     // sets) and each spends its wall-clock in DRIVER-blocking Lloyd's
     // collect-loops over a tiny sample — run them as concurrent Spark
@@ -652,19 +622,15 @@ object Knn {
       // Use Lloyd's final 9 dp-rounded centers directly: recomputing means
       // from the assignment would add an 11th un-rounded update outside
       // the cross-engine determinism fence (boundary vectors would then
-      // land in different lists than the oracle's). Training is the
-      // round's fixed overhead (~12 driver-blocking jobs over the sample)
-      // and fully deterministic, so repeated calls on the same corpus
-      // (bench reps) fetch the memoized matrix instead of retraining;
-      // lloydCenters skips the sample's own assignment job (unused here).
-      val bc = graft.core.DriverMemo.cached(
-          s"ivf:$fp:$rSeed:$nLists:$trainN:10") {
-        val sample = latent
-          .withColumn("h", md5(concat(lit(s"$rSeed:"), col("cell_id"))))
-          .orderBy(col("h"), col("cell_id")).limit(trainN)
-          .select("cell_id", "latent")
-        Cluster.lloydCenters(sample, nLists, iters = 10, seed = rSeed)
-      }
+      // land in different lists than the oracle's). lloydCenters memoizes
+      // the matrix by the sample's content key, so repeated calls on the
+      // same corpus (bench reps) skip training, and it skips the sample's
+      // own assignment job (unused here).
+      val sample = latent
+        .withColumn("h", md5(concat(lit(s"$rSeed:"), col("cell_id"))))
+        .orderBy(col("h"), col("cell_id")).limit(trainN)
+        .select("cell_id", "latent")
+      val bc = Cluster.lloydCenters(sample, nLists, iters = 10, seed = rSeed)
       def nearestLists(n: Int) = udf { (v: Seq[Double]) =>
         bc.zipWithIndex.map { case (c, i) =>
           var d = 0.0; var j = 0

@@ -37,13 +37,7 @@ object StatQueries {
     * every rep and its rep array was a 12.9→2.8 s warm-up curve).
     */
   private def sweepPairs(s: SparkSession, d: String): DataFrame = {
-    val base = docs(s, d)
-    val r = base
-      .select(expr(graft.core.Fingerprint.hashExpr("doc_id, text")).as("_fph"))
-      .agg(count(lit(1)).as("n"),
-        expr(graft.core.Fingerprint.aggOfHash("_fph")).as("x")).head
-    val fp = s"${System.identityHashCode(s)}:" +
-      (if (r.getString(1).isEmpty) "empty" else s"${r.getString(1)}_${r.getLong(0)}")
+    val (fp, _) = graft.core.Fingerprint.key(docs(s, d), "doc_id, text")
     graft.core.FrameMemo.cached(s"sweepPairs:$fp") {
       Dedup.sharedShinglePairs(TrainingQueries.sweepShingles(s, d), dfCap = 500)
         .localCheckpoint()

@@ -24,79 +24,31 @@ import graft.ops.Windows
 object SuffixOps {
 
   /** Session-lifetime memo of materialized rank levels, keyed by
-    * (session, corpus fingerprint, level): q219/q220/q231 — and every
-    * bench rep — share ONE doubling chain per corpus instead of each
-    * re-deriving ~7 rounds of self-join + re-rank (the CacheStore
-    * pattern, held in the block manager via localCheckpoint rather than
-    * parquet because the tables are intermediate, not user artifacts).
-    * The fingerprint (order-independent xxhash64 xor ∥ sum + count,
-    * exactly graft.core.Fingerprint's form) guards against false
-    * sharing between different corpora or SF dirs within one session.
+    * `"<corpus key>:<level>"` ([[graft.core.Fingerprint.key]] of the
+    * docs): q219/q220/q231 — and every bench rep — share ONE doubling
+    * chain per corpus instead of each re-deriving ~7 rounds of self-join
+    * + re-rank (the CacheStore pattern, held in the block manager via
+    * localCheckpoint rather than parquet because the tables are
+    * intermediate, not user artifacts). 32 levels hold the last few
+    * corpora (each ≤ ~8 levels of O(total tokens) rows); one call touches
+    * all its levels, so LRU never evicts a level the call still holds.
     */
-  private val levelMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, Int), DataFrame]
-  // FIFO of corpus fingerprints backing levelMemo; a long-lived session
-  // touching many distinct corpora would otherwise accumulate
-  // localCheckpoint blocks without bound — keep the most recent few
-  // (each corpus holds ≤ ~8 levels of O(total tokens) rows)
-  private val memoCorpora =
-    new java.util.concurrent.ConcurrentLinkedQueue[String]()
-  private val MaxCorpora = 4
-  private val hitN = new java.util.concurrent.atomic.AtomicLong
-  private val missN = new java.util.concurrent.atomic.AtomicLong
+  private val levels =
+    new graft.core.Memo[DataFrame]("SuffixOps levels", 32, Lineage.release)
 
-  /** (level hits, level builds) since JVM start — Bench's warm-rep
-    * tagging, same contract as FrameMemo.stats/DriverMemo.stats.
+  /** (level hits, level builds, evictions) since JVM start — Bench's
+    * warm-rep tagging, same contract as FrameMemo.stats/DriverMemo.stats.
     */
-  def memoStats: (Long, Long) = (hitN.get, missN.get)
-
-  // Eviction unpersists localCheckpointed frames, which truncates
-  // lineage — an evicted level still referenced by an IN-FLIGHT action
-  // would be unrecomputable. Two mitigations: (a) admission is LRU, not
-  // FIFO — re-touching a corpus moves it to the tail, so the evicted
-  // corpus is always the least-recently-STARTED one, ≥ MaxCorpora-1
-  // whole corpus workloads old; (b) the remaining window (a caller
-  // holding level frames across MaxCorpora other corpora, or truly
-  // concurrent suffix queries on > MaxCorpora distinct corpora in one
-  // session) is accepted and documented: the driver's Verify/Bench run
-  // queries sequentially, and a failure here fails loudly, not wrong.
-  private def admitCorpus(fp: String): Unit = synchronized {
-    memoCorpora.remove(fp)
-    memoCorpora.add(fp)
-    while (memoCorpora.size > MaxCorpora) {
-      val evict = memoCorpora.poll()
-      val dead = levelMemo.keys.filter(_._1 == evict).toSeq
-      dead.foreach { k =>
-        // RDD-level free (Dataset.unpersist is a CacheManager no-op for
-        // localCheckpointed frames — see Lineage.release)
-        levelMemo.remove(k).foreach(Lineage.release)
-      }
-    }
-  }
-
-  private def corpusFingerprint(docs: DataFrame): String = {
-    val r = docs
-      .select(expr(graft.core.Fingerprint.hashExpr("doc_id, text")).as("_fph"))
-      .agg(expr(graft.core.Fingerprint.aggOfHash("_fph")).as("x"),
-        count(lit(1)).as("n")).head()
-    s"${System.identityHashCode(docs.sparkSession)}:${r.getString(0)}_${r.getLong(1)}"
-  }
+  def memoStats: (Long, Long, Long) = levels.stats
 
   /** Rank tables `(doc_id, gp, is_sep, r)` for doubling levels
     * 0..maxRound, built incrementally on top of whatever levels the memo
     * already holds for this corpus; each level is localCheckpointed once.
     */
   private def sharedLevels(docs: DataFrame, maxRound: Int): Map[Int, DataFrame] = {
-    val fp = corpusFingerprint(docs)
-    admitCorpus(fp)
+    val (fp, _) = graft.core.Fingerprint.key(docs, "doc_id, text")
     lazy val st = Lineage.reset(stream(docs))
-    // explicit get/putIfAbsent instead of getOrElseUpdate: TrieMap may
-    // evaluate the thunk twice under a race, and the loser's
-    // localCheckpoint would leak a block-manager copy — unpersist it
-    def lvl(i: Int): DataFrame = levelMemo.get((fp, i)) match {
-      case Some(hit) => hitN.incrementAndGet(); hit
-      case None =>
-      missN.incrementAndGet()
+    def lvl(i: Int): DataFrame = levels.cached(s"$fp:$i") {
       val r =
         if (i == 0) {
           val toks = st.select("tok").distinct()
@@ -119,13 +71,7 @@ object SuffixOps {
             .select(col("doc_id"), col("gp"), col("is_sep"),
               col("nr").as("r"))
         }
-      val built = r.localCheckpoint()
-      levelMemo.putIfAbsent((fp, i), built) match {
-        case Some(winner) =>
-          Lineage.release(built)
-          winner
-        case None => built
-      }
+      r.localCheckpoint()
     }
     (0 to maxRound).map(i => i -> lvl(i)).toMap
   }

@@ -618,12 +618,7 @@ object TextOps {
     * plant from the same corpus; every bench rep) pay only the former.
     */
   def maxCharPairCount(docs: DataFrame): Long = {
-    val fr = docs
-      .select(expr(graft.core.Fingerprint.hashExpr("struct(*)")).as("_fph"))
-      .agg(count(lit(1)).as("n"),
-        expr(graft.core.Fingerprint.aggOfHash("_fph")).as("x")).head
-    val fp = s"${System.identityHashCode(docs.sparkSession)}:" +
-      (if (fr.getString(1).isEmpty) "empty" else s"${fr.getString(1)}_${fr.getLong(0)}")
+    val (fp, _) = graft.core.Fingerprint.key(docs, "struct(*)")
     graft.core.DriverMemo.cached(s"maxpair:$fp") {
       docs.select(explode(tokensCol).as("w"))
         .groupBy("w").agg(count(lit(1)).as("c"))
@@ -674,12 +669,7 @@ object TextOps {
       .select(col("w"), col("c"),
         trim(regexp_replace(col("w"), lit("(.)"), lit("$1 "))).as("repr"))
       .localCheckpoint(false)
-    val fr = words0
-      .select(expr(graft.core.Fingerprint.hashExpr("w, c")).as("_fph"))
-      .agg(count(lit(1)).as("n"),
-        expr(graft.core.Fingerprint.aggOfHash("_fph")).as("x")).head
-    val fp = s"${System.identityHashCode(docs.sparkSession)}:" +
-      (if (fr.getString(1).isEmpty) "empty" else s"${fr.getString(1)}_${fr.getLong(0)}")
+    val (fp, _) = graft.core.Fingerprint.key(words0, "w, c")
     val learned = graft.core.DriverMemo.cached(s"bpe:$fp:$merges") {
       var words = words0
       val acc = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()

@@ -159,6 +159,27 @@ class KnnRecallSpec extends SparkSpec {
     assert(graft.core.DriverMemo.stats._1 == h0 + 1)
   }
 
+  test("lshCandidates: a (src, dst) pair repeated across rounds carries one distance") {
+    import spark.implicits._
+    // bucketedKnn's TopKMin dedups repeated pairs by ordering equality,
+    // which holds only if every repeat has the bit-identical dist; check
+    // it on the cold path and on the hot-bucket chunk path
+    val pts = (0 until 120).map(i =>
+      (i.toLong, Array.tabulate(5)(j => (i % 6) * 4.0 + math.sin(i * 0.9 + j))))
+    val v = pts.toDF("cell_id", "latent")
+    for (hotCap <- Seq(512, 8)) {
+      val (cand, release) = Knn.lshCandidates(v, v, nPlanes = 3, rounds = 4,
+        excludeSelf = true, hotCap = hotCap, chunkW = 4)
+      val perPair = cand.groupBy("src", "dst")
+        .agg(count(lit(1)).as("n"), countDistinct(col("dist")).as("nd"))
+        .cache()
+      assert(perPair.filter(col("n") > 1).count() > 0, "no repeated pairs to check")
+      assert(perPair.filter(col("nd") =!= 1).count() == 0L, s"hotCap $hotCap")
+      perPair.unpersist()
+      release()
+    }
+  }
+
   test("bucketedEpsNeighborsBetween: asymmetric probe finds planted copies only") {
     import spark.implicits._
     // corpus: 3 well-separated cluster centers; queries: a near-copy of
