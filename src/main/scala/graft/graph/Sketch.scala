@@ -13,22 +13,33 @@ import org.apache.spark.sql.functions._
   * min-cells floor; seeded deterministic draws; plus connector cells
   * picked by a real prize-collecting Steiner tree pass ([[Pcst]], the
   * Goemans–Williamson scheme behind the pcst_fast library topacedo
-  * uses) with the reference's documented knobs — seed_reward,
-  * non_seed_reward, edge_cost_multiplier, edge_cost_bandwidth
+  * uses) at the reference's documented defaults for seed_reward,
+  * non_seed_reward, edge_cost_multiplier and edge_cost_bandwidth
   * (graph_datastore.py:1599-1602). Edge costs: a KNN edge of weight w
-  * costs `edgeCostMultiplier · edgeCostBandwidth^(1 − w/w_max)` —
+  * costs `EdgeCostMultiplier · EdgeCostBandwidth^(1 − w/w_max)` —
   * strong edges are cheap to traverse, weak ones exponentially dear,
   * matching the docstring's "bandwidth raised to edge cost" shaping.
   *
   * The PCST pass collects the (deduped) edge list on the driver — the
   * same boundary as the reference, whose pcst_fast is single-node C++
-  * over the full CSR. Above `pcstMaxDriverEdges` it falls back to the
-  * relational connector heuristic (a non-seed adjacent to ≥ 2 seeds of
-  * its own cluster joins the sketch), which never collects; at that
+  * over the full CSR. Above [[graft.pipeline.Scale.pcstMaxDriverEdges]]
+  * edges it falls back to the relational connector heuristic (a
+  * non-seed adjacent to ≥ 2 seeds of its own cluster joins the sketch),
+  * which never collects; at that
   * scale [[graft.pipeline.Paris.sketchedCut]]'s anchor contraction is
   * the intended host for an exact PCST.
   */
 object Sketch {
+
+  // density / SNN rate shaping and the PCST prize and cost knobs, fixed
+  // at the reference's defaults (no caller tunes them)
+  private val DensityDepth = 2
+  private val DensityBandwidth = 5.0
+  private val SnnBandwidth = 5.0
+  private val SeedReward = 3.0
+  private val NonSeedReward = 0.0
+  private val EdgeCostMultiplier = 1.0
+  private val EdgeCostBandwidth = 10.0
 
   /** Neighbourhood density (calc_neighbourhood_density): node degree,
     * then `depth` rounds of summing neighbours' values — depth 0 = own
@@ -50,16 +61,14 @@ object Sketch {
 
   /** Sketch the dataset: returns `(cell_id, is_seed, sketched)`.
     * `clusters(cell_id, cluster)`; `edges` = the KNN graph.
+    * `usePcst = false` keeps the connector pass relational at any size
+    * (never collects — [[graft.pipeline.Paris.sketchedCut]]'s contract).
     */
   def topacedo(edges: DataFrame, clusters: DataFrame,
                maxRate: Double = 0.05, minRate: Double = 0.01,
-               minCellsPerGroup: Int = 3, densityDepth: Int = 2,
-               densityBandwidth: Double = 5.0, snnBandwidth: Double = 5.0,
-               seed: Long = 4466L, usePcst: Boolean = true,
-               seedReward: Double = 3.0, nonSeedReward: Double = 0.0,
-               edgeCostMultiplier: Double = 1.0, edgeCostBandwidth: Double = 10.0,
-               pcstMaxDriverEdges: Long = 5000000L): DataFrame = {
-    val dens = neighbourhoodDensity(edges, densityDepth)
+               minCellsPerGroup: Int = 3, seed: Long = 4466L,
+               usePcst: Boolean = true): DataFrame = {
+    val dens = neighbourhoodDensity(edges, DensityDepth)
     // per-cluster mean density, min-max normalized across clusters
     val cdens = clusters.join(dens, Seq("cell_id"), "left")
       .na.fill(0.0, Seq("density"))
@@ -86,8 +95,8 @@ object Sketch {
       // dense neighbourhoods → fewer samples; high-SNN (tightly knit)
       // clusters → fewer samples (their structure is redundant)
       .withColumn("rate", greatest(lit(minRate), least(lit(maxRate),
-        lit(maxRate) * pow(lit(densityBandwidth), -col("dnorm"))
-          * pow(lit(snnBandwidth), -col("snorm")))))
+        lit(maxRate) * pow(lit(DensityBandwidth), -col("dnorm"))
+          * pow(lit(SnnBandwidth), -col("snorm")))))
       .withColumn("n_take", greatest(lit(minCellsPerGroup),
         ceil(col("rate") * col("sz"))).cast("int"))
       .select("cluster", "rate", "n_take")
@@ -101,11 +110,9 @@ object Sketch {
     // the seeds (driver-side at the reference's own pcst_fast boundary),
     // falling back to the relational >= 2-seed-neighbours heuristic when
     // the edge list is too large to collect
-    val nEdges = if (usePcst) edges.count() else Long.MaxValue
     val connectors =
-      if (usePcst && nEdges <= pcstMaxDriverEdges)
-        pcstConnectors(edges, clusters, seeds, seedReward, nonSeedReward,
-          edgeCostMultiplier, edgeCostBandwidth)
+      if (usePcst && graft.pipeline.Scale.pcstOnDriver(edges.count()))
+        pcstConnectors(edges, clusters, seeds)
       else relationalConnectors(edges, clusters, seeds)
     clusters.select("cell_id")
       .join(seeds.select(col("cell_id"), lit(true).as("is_seed")), Seq("cell_id"), "left")
@@ -116,15 +123,15 @@ object Sketch {
           .as("sketched"))
   }
 
-  /** GW-PCST connectors: seeds carry `seedReward` prizes, every other
-    * cell `nonSeedReward`; an edge of weight w costs
-    * `mult · bw^(1 − w/w_max)`. Kept Steiner nodes that are not seeds
-    * become connectors. Seeds are never dropped from the sketch even if
-    * pruning forfeits them (the caller unions seeds back in).
+  /** GW-PCST connectors: seeds carry `SeedReward` prizes, every other
+    * cell `NonSeedReward`; an edge of weight w costs
+    * `EdgeCostMultiplier · EdgeCostBandwidth^(1 − w/w_max)`. Kept
+    * Steiner nodes that are not seeds become connectors. Seeds are never
+    * dropped from the sketch even if pruning forfeits them (the caller
+    * unions seeds back in).
     */
-  private def pcstConnectors(edges: DataFrame, clusters: DataFrame, seeds: DataFrame,
-                             seedReward: Double, nonSeedReward: Double,
-                             mult: Double, bw: Double): DataFrame = {
+  private def pcstConnectors(edges: DataFrame, clusters: DataFrame,
+                             seeds: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val hasW = edges.columns.contains("weight")
@@ -141,7 +148,7 @@ object Sketch {
       .filter(t => idx.contains(t._1) && idx.contains(t._2))
       .sortBy(t => (t._1, t._2)) // collect order is not deterministic; event ids are
     val seedIds = seeds.select(col("cell_id").cast("long")).as[Long].collect().toSet
-    val prize = cells.map(c => if (seedIds(c)) seedReward else nonSeedReward)
+    val prize = cells.map(c => if (seedIds(c)) SeedReward else NonSeedReward)
     val wMax = if (collected.isEmpty) 1.0 else math.max(collected.map(_._3).max, 1e-300)
     val src = new Array[Int](collected.length)
     val dst = new Array[Int](collected.length)
@@ -150,7 +157,7 @@ object Sketch {
     while (i < collected.length) {
       val (a, b, w) = collected(i)
       src(i) = idx(a); dst(i) = idx(b)
-      cost(i) = mult * math.pow(bw, 1.0 - w / wMax)
+      cost(i) = EdgeCostMultiplier * math.pow(EdgeCostBandwidth, 1.0 - w / wMax)
       i += 1
     }
     val (kept, _) = Pcst.gw(cells.length, src, dst, cost, prize)

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.linalg.Vectors
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Clustering (SURVEY.md §2.10-2.11): distributed KMeans seeding (MLlib,
@@ -153,11 +153,6 @@ object Cluster {
     centers
   }
 
-  /** Driver-side greedy modularity (Louvain-style, deterministic node
-    * order) over a collected weighted edge list — the stand-in for the
-    * reference's Leiden call (external C library). Returns
-    * `(cell_id, cluster)` with clusters relabeled 1..C by size desc.
-    */
   /** DBSCAN over a precomputed ε-neighborhood pair set (from
     * [[Knn.bucketedEpsNeighbors]] at scale, or an exact radius join):
     * the classic density clustering a curation pipeline uses for
@@ -199,6 +194,36 @@ object Cluster {
       .join(assigned, Seq("id"), "left")
       .select(col("id"), coalesce(col("role"), lit("noise")).as("role"),
         col("cluster"))
+  }
+
+  /** Collect `edges(src, dst, weight)` to the driver as an undirected
+    * adjacency: self-loops dropped, both directions of every edge added,
+    * parallel edges' weights summed.
+    */
+  private def symmetricAdjacency(edges: DataFrame): Map[Long, Map[Long, Double]] = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val adj = scala.collection.mutable.Map[Long, scala.collection.mutable.Map[Long, Double]]()
+    def add(a: Long, b: Long, w: Double): Unit = {
+      val m = adj.getOrElseUpdate(a, scala.collection.mutable.Map())
+      m(b) = m.getOrElse(b, 0.0) + w
+    }
+    edges.select("src", "dst", "weight").as[(Long, Long, Double)].collect()
+      .foreach { case (s, d, w) => if (s != d) { add(s, d, w); add(d, s, w) } }
+    adj.map { case (n, m) => n -> m.toMap }.toMap
+  }
+
+  /** Dense relabel of a node → part map to `(cell_id, cluster)` with
+    * clusters 1..C by part size desc (size in nodes, ties to the smaller
+    * part id).
+    */
+  private def bySizeDesc(spark: SparkSession, part: Map[Long, Long]): DataFrame = {
+    import spark.implicits._
+    val rank = part.groupBy(_._2).toSeq
+      .map { case (c, ms) => (c, ms.size) }
+      .sortBy { case (c, sz) => (-sz, c) }
+      .zipWithIndex.map { case ((c, _), i) => c -> (i + 1L) }.toMap
+    part.toSeq.map { case (n, c) => (n, rank(c)) }.toDF("cell_id", "cluster")
   }
 
   /** One sweep-until-stable greedy local-move phase over an adjacency
@@ -286,24 +311,12 @@ object Cluster {
     * into hundreds of k-hop-sized communities (measured NMI 0.31 vs a
     * 5-block plant in E2eScaleSpec; multi-level recovers the blocks).
     * Driver-side over the n·k edge list like the reference's igraph
-    * call; deterministic (sorted sweeps, smallest-id tie-breaks).
+    * call (the stand-in for the reference's Leiden C library);
+    * deterministic (sorted sweeps, smallest-id tie-breaks). Returns
+    * `(cell_id, cluster)` with clusters relabeled 1..C by size desc.
     */
   def louvain(edges: DataFrame, maxPasses: Int = 10): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val es = edges.select("src", "dst", "weight")
-      .as[(Long, Long, Double)].collect()
-
-    // undirected adjacency with combined weights
-    val adj0 = scala.collection.mutable.Map[Long, scala.collection.mutable.Map[Long, Double]]()
-    def add(a: Long, b: Long, w: Double): Unit = {
-      val m = adj0.getOrElseUpdate(a, scala.collection.mutable.Map())
-      m(b) = m.getOrElse(b, 0.0) + w
-    }
-    es.foreach { case (s, d, w) => if (s != d) { add(s, d, w); add(d, s, w) } }
-
-    var curAdj: Map[Long, Map[Long, Double]] =
-      adj0.map { case (n, m) => n -> m.toMap }.toMap
+    var curAdj = symmetricAdjacency(edges)
     var curSelf: Map[Long, Double] = Map.empty
     // original node -> current super-node
     var mapping: Map[Long, Long] = curAdj.keys.map(n => n -> n).toMap
@@ -320,13 +333,8 @@ object Cluster {
         curSelf = s
       }
     }
-    // relabel by community size desc (size in ORIGINAL nodes, stable)
-    val bySize = mapping.groupBy(_._2).toSeq
-      .map { case (c, ms) => (c, ms.size) }
-      .sortBy { case (c, sz) => (-sz, c) }
-      .zipWithIndex.map { case ((c, _), i) => c -> (i + 1L) }.toMap
-    mapping.toSeq.map { case (n, c) => (n, bySize(c)) }
-      .toDF("cell_id", "cluster")
+    // relabel by community size in ORIGINAL nodes
+    bySizeDesc(edges.sparkSession, mapping)
   }
 
   /** Leiden refinement phase (Traag, Waltman & van Eck 2019, §A/B — the
@@ -342,24 +350,11 @@ object Cluster {
   def refine(edges: DataFrame, labels: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val es = edges.select("src", "dst", "weight").as[(Long, Long, Double)].collect()
+    val adj = symmetricAdjacency(edges)
     val lab = labels.select("cell_id", "cluster").as[(Long, Long)].collect().toMap
-
-    val adj = scala.collection.mutable.Map[Long, scala.collection.mutable.Map[Long, Double]]()
-    def add(a: Long, b: Long, w: Double): Unit = {
-      val m = adj.getOrElseUpdate(a, scala.collection.mutable.Map())
-      m(b) = m.getOrElse(b, 0.0) + w
-    }
-    es.foreach { case (s, d, w) => if (s != d) { add(s, d, w); add(d, s, w) } }
-    val sub = refineParts(
-      adj.map { case (n, m) => n -> m.toMap }.toMap, Map.empty, lab)
-    // dense relabel of the sub-partition by size desc (a sub never spans
-    // two communities, so sub ids alone carry the (comm, sub) identity)
-    val bySize = sub.groupBy(_._2).toSeq
-      .map { case (s, ms) => (s, ms.size) }
-      .sortBy { case (s, sz) => (-sz, s) }
-      .zipWithIndex.map { case ((s, _), i) => s -> (i + 1L) }.toMap
-    sub.toSeq.map { case (n, s) => (n, bySize(s)) }.toDF("cell_id", "cluster")
+    // a sub never spans two communities, so sub ids alone carry the
+    // (comm, sub) identity
+    bySizeDesc(spark, refineParts(adj, Map.empty, lab))
   }
 
   /** The refinement core over an adjacency (self-loops allowed — they
@@ -430,19 +425,7 @@ object Cluster {
     * call (scarf/datastore/graph_datastore.py:1379-1459); deterministic.
     */
   def leiden(edges: DataFrame, maxPasses: Int = 10): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val es = edges.select("src", "dst", "weight")
-      .as[(Long, Long, Double)].collect()
-    val adj0 = scala.collection.mutable.Map[Long, scala.collection.mutable.Map[Long, Double]]()
-    def add(a: Long, b: Long, w: Double): Unit = {
-      val m = adj0.getOrElseUpdate(a, scala.collection.mutable.Map())
-      m(b) = m.getOrElse(b, 0.0) + w
-    }
-    es.foreach { case (s, d, w) => if (s != d) { add(s, d, w); add(d, s, w) } }
-
-    var adj: Map[Long, Map[Long, Double]] =
-      adj0.map { case (n, m) => n -> m.toMap }.toMap
+    var adj = symmetricAdjacency(edges)
     var selfW: Map[Long, Double] = Map.empty
     var mapping: Map[Long, Long] = adj.keys.map(n => n -> n).toMap
     var labels: Map[Long, Long] = mapping // current nodes -> community
@@ -465,12 +448,7 @@ object Cluster {
         labels = superComm
       }
     }
-    val finalLab = mapping.map { case (o, cur) => o -> labels(cur) }
-    val bySize = finalLab.groupBy(_._2).toSeq
-      .map { case (c, ms) => (c, ms.size) }
-      .sortBy { case (c, sz) => (-sz, c) }
-      .zipWithIndex.map { case ((c, _), i) => c -> (i + 1L) }.toMap
-    finalLab.toSeq.map { case (n, c) => (n, bySize(c)) }
-      .toDF("cell_id", "cluster")
+    bySizeDesc(edges.sparkSession,
+      mapping.map { case (o, cur) => o -> labels(cur) })
   }
 }

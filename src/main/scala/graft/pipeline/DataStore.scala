@@ -28,6 +28,11 @@ case class DataStore(
   private def nActiveCells: DataFrame =
     cells.filter(col("I")).agg(count(lit(1)).as("n_total_cells"))
 
+  /** The graph-solver gate shared by [[runClustering]], [[runUmap]] and
+    * [[runParis]]: one count of the active cells against [[Scale]]. */
+  private[graft] def graphOnDriver: Boolean =
+    Scale.driverGraph(cells.filter(col("I")).count())
+
   /** Cache lookup with an actionable error: a missing key otherwise
     * surfaces as a bare NoSuchElementException deep inside a facade.
     * `latent`/`knn` are additionally dropped by [[integrateAssays]]
@@ -82,14 +87,12 @@ case class DataStore(
     * assemble vectors over the HVG slice → z-scale+PCA → self-KNN → UMAP-
     * style smoothing. Caches `latent`, `knn`, `edges`.
     *
-    * KNN strategy: `ann = None` (the default) auto-selects — the scale-safe
-    * LSH-bucketed ANN (`Knn.bucketedSelfKnn`, the analogue of the
-    * reference's default HNSW index, scarf/ann.py:290-326) whenever the
-    * active cell count exceeds `annThreshold`, exact blocked top-k below it
-    * (where O(n²) is trivially cheap and recall is 1.0). `Some(true)` /
-    * `Some(false)` force a strategy; exact remains the explicit
-    * correctness mode. The default orchestration therefore never runs an
-    * O(n²) join at cluster scale.
+    * KNN strategy comes from [[Scale.ann]] over the active cell count:
+    * the scale-safe LSH-bucketed ANN (`Knn.bucketedSelfKnn`, the analogue
+    * of the reference's default HNSW index, scarf/ann.py:290-326) above
+    * its 10k-row bound, exact blocked top-k at or below it (where O(n²)
+    * is trivially cheap and recall is 1.0). The orchestration therefore
+    * never runs an O(n²) join at cluster scale.
     *
     * With `cacheRoot` set, each stage persists at a param-encoded path
     * guarded by the input fingerprint (CacheStore) and the `latest_*`
@@ -97,14 +100,13 @@ case class DataStore(
     * (graph_datastore.py:738-780). A repeat call with unchanged mask and
     * params is a metadata read, exactly like the reference's Zarr reuse.
     */
-  def makeGraph(dims: Int = 11, k: Int = 11, ann: Option[Boolean] = None,
-                annThreshold: Long = 10000,
+  def makeGraph(dims: Int = 11, k: Int = 11,
                 cacheRoot: Option[String] = None): DataStore = {
     val sel = feats.filter(col("hvg")).select("feat_id")
     val normed = Normalize.libSizeLog(activeCoo)
       .join(broadcast(sel), Seq("feat_id"))
       .select("cell_id", "feat_id", "normed")
-    val useAnn = ann.getOrElse(cells.filter(col("I")).count() > annThreshold)
+    val useAnn = Scale.ann(cells.filter(col("I")).count())
     def knnOf(latent: DataFrame) =
       if (useAnn) Knn.bucketedSelfKnn(latent, k) else Knn.exactSelfKnn(latent, k)
     cacheRoot match {
@@ -135,29 +137,26 @@ case class DataStore(
     * kmeans seed + graph clustering collapsed to the deterministic part;
     * `louvain = true` switches to modularity clustering over the graph).
     *
-    * Like [[runParis]]'s sketch gate, the graph path auto-switches
-    * implementations by active-cell count: below `distributedThreshold`
-    * the driver-side solver runs (collects the n·k edge list — the
-    * documented SURVEY §4 driver boundary; measured 2.38× wall per
+    * The graph path takes its implementation from [[Scale.driverGraph]]
+    * over the active-cell count, like [[runUmap]] and [[runParis]]: below
+    * 100k cells the driver-side solver runs (collects the n·k edge list —
+    * the documented SURVEY §4 driver boundary; measured 2.38× wall per
     * doubling at 50k→100k cells in E2eScaleSpec), at or above it the
     * all-DataFrame [[graft.graph.DistributedLouvain.clusterMultiLevel]]
     * + Leiden-style connectivity [[graft.graph.DistributedLouvain.refine]]
     * take over (the distributed graph stage measured 1.45×/doubling in
-    * the same run) — no driver graph at any size. `distributed =
-    * Some(...)` overrides the gate either way.
+    * the same run) — no driver graph at any size.
     */
-  def runClustering(n: Int, louvain: Boolean = false, seed: Long = 4466L,
-                    distributed: Option[Boolean] = None,
-                    distributedThreshold: Long = 100000): DataStore = {
+  def runClustering(n: Int, louvain: Boolean = false,
+                    seed: Long = 4466L): DataStore = {
     val labels =
       if (louvain) {
         val edges = cache("edges")
-        val useDist = distributed.getOrElse(
-          cells.filter(col("I")).count() >= distributedThreshold)
-        if (useDist) {
+        if (graphOnDriver) Cluster.louvain(edges)
+        else {
           val lv = graft.graph.DistributedLouvain.clusterMultiLevel(edges)
           graft.graph.DistributedLouvain.refine(edges, lv)
-        } else Cluster.louvain(edges)
+        }
       } else Cluster.kmeans(cache("latent"), n, seed)
     copy(cells = cells.drop("cluster").join(labels, Seq("cell_id"), "left"))
   }
@@ -166,18 +165,15 @@ case class DataStore(
     * enables the densMAP local-radius terms (scarf/umap.py:15-38); the
     * original-space distances come from the cached KNN frame.
     *
-    * Auto-switches by active-cell count like [[runClustering]]: below
-    * `distributedThreshold` the driver SGD runs (sequential per-edge
+    * Takes its path from [[Scale.driverGraph]] like [[runClustering]]:
+    * below 100k active cells the driver SGD runs (sequential per-edge
     * updates over the collected n·k edge list — measured 2.32× wall per
     * doubling at 50k→100k cells in E2eScaleSpec), at or above it the
     * batch-synchronous [[UmapLayout.distributedLayout]] takes over
     * (joins + aggregations only, no driver state at any graph size).
-    * `distributed = Some(...)` overrides the gate either way.
     */
   def runUmap(nEpochs: Int = 50, seed: Long = 4444L,
-              densLambda: Double = 0.0,
-              distributed: Option[Boolean] = None,
-              distributedThreshold: Long = 100000): DataStore = {
+              densLambda: Double = 0.0): DataStore = {
     val dists =
       if (densLambda > 0) Some(cache("knn").select("src", "dst", "dist"))
       else None
@@ -190,13 +186,11 @@ case class DataStore(
         edges.select(col("src").as("cell_id"))
           .unionByName(edges.select(col("dst").as("cell_id"))).distinct(),
         seed))
-    val useDist = distributed.getOrElse(
-      cells.filter(col("I")).count() >= distributedThreshold)
     val um =
-      if (useDist)
-        UmapLayout.distributedLayout(edges, init, nEpochs = nEpochs,
+      if (graphOnDriver)
+        UmapLayout.layout(edges, init, nEpochs = nEpochs,
           seed = seed, densLambda = densLambda, dists = dists)
-      else UmapLayout.layout(edges, init, nEpochs = nEpochs,
+      else UmapLayout.distributedLayout(edges, init, nEpochs = nEpochs,
         seed = seed, densLambda = densLambda, dists = dists)
     copy(cells = cells.drop("umap1", "umap2").join(um, Seq("cell_id"), "left"))
   }
@@ -235,26 +229,25 @@ case class DataStore(
     copy(cells = cells.drop("pseudotime").join(pt, Seq("cell_id"), "left"))
   }
 
-  /** Paris hierarchical clustering cut to n clusters. Like [[makeGraph]]'s
-    * ANN auto-switch, the default (`sketch = None`) collects the full
-    * n·k edge list only below `sketchThreshold` active cells; above it
-    * the TopACeDo-sketched contraction ([[Paris.sketchedCut]]) runs, so
-    * the driver never holds more than the s-node supergraph. Requires a
-    * prior clustering (the `cluster` column) for the sketch rates when
-    * the sketched path is taken — falls back to a single pseudo-cluster
-    * when absent.
+  /** Paris hierarchical clustering cut to n clusters. Takes its path from
+    * [[Scale.driverGraph]] like [[runClustering]]: below 100k active
+    * cells it collects the full n·k edge list; at or above it the
+    * TopACeDo-sketched contraction ([[Paris.sketchedCut]]) runs, so the
+    * driver never holds more than the s-node supergraph. Requires a prior
+    * clustering (the `cluster` column) for the sketch rates when the
+    * sketched path is taken — falls back to a single pseudo-cluster when
+    * absent.
     */
-  def runParis(n: Int, sketch: Option[Boolean] = None,
-               sketchThreshold: Long = 100000): DataStore = {
-    val useSketch = sketch.getOrElse(cells.filter(col("I")).count() > sketchThreshold)
+  def runParis(n: Int): DataStore = {
     val labels =
-      if (useSketch) {
+      if (graphOnDriver) Paris.cut(cache("edges"), n)
+      else {
         val prelim =
           if (cells.columns.contains("cluster"))
             cells.select(col("cell_id"), col("cluster"))
           else cells.select(col("cell_id"), lit(1L).as("cluster"))
         Paris.sketchedCut(cache("edges"), prelim, n)
-      } else Paris.cut(cache("edges"), n)
+      }
     copy(cells = cells.drop("cluster").join(labels, Seq("cell_id"), "left"))
   }
 
@@ -273,8 +266,8 @@ case class DataStore(
     *     reference, feature std-scaling is disabled under CORAL;
     *  4. project BOTH sides through the reducer fitted on the REFERENCE
     *     (ref_mu/ref_sigma = True: target moments never enter);
-    *  5. ANN top-k ([[Mapping.project]] — exact cosine below the
-    *     threshold, bucketed-LSH cross-KNN above, so the step has no
+    *  5. top-k ([[Mapping.project]] — exact l2 up to [[Scale.ann]]'s
+    *     bound, bucketed-LSH cross-KNN above, so the step has no
     *     O(|target|·|ref|) plan at scale).
     *
     * Hits land in `caches("projection:<name>")` exactly like the
@@ -284,8 +277,6 @@ case class DataStore(
     */
   def runMapping(target: DataStore, targetName: String, saveK: Int = 3,
                  runCoral: Boolean = false, dims: Int = 11,
-                 ann: Option[Boolean] = None,
-                 annThreshold: Long = 10000,
                  cacheRoot: Option[String] = None): DataStore = {
     val sel = feats.filter(col("hvg")).select("feat_id")
     val shared = sel.join(target.coo.select("feat_id").distinct(),
@@ -362,8 +353,7 @@ case class DataStore(
       case None =>
         caches.getOrElse(s"maplatent:$refKey", reducer(srcVecs).cache())
     }
-    val hits = Mapping.project(reducer(tgtIn), srcLatent, saveK,
-      ann, annThreshold)
+    val hits = Mapping.project(reducer(tgtIn), srcLatent, saveK)
     copy(caches = caches +
       (s"mapvecs:$refKey" -> srcVecs) +
       (s"maplatent:$refKey" -> srcLatent) +

@@ -9,76 +9,50 @@ import org.apache.spark.sql.functions._
   * the step the reference runs through its saved ANN index and stores
   * under `projections/<target_name>`. [[DataStore.runMapping]] composes
   * the full chain (align → normalize → optional CORAL → reduce →
-  * project); q37/q38/q44 consume this kernel directly.
+  * project).
   */
 object Mapping {
 
   /** Project `target(cell_id, latent)` against `ref(cell_id, latent)`.
     *
-    * Strategy mirrors [[DataStore.makeGraph]]'s auto-ANN switch: below
-    * `annThreshold` target cells, exact cosine top-k (the query side
-    * broadcasts — the reference's `transform_ann` over a small batch,
-    * recall 1.0); above it, the bucketed-LSH cross-KNN
-    * ([[Knn.bucketedKnn]]) — no O(|target|·|ref|) stage, euclidean
-    * distance like the reference's 'l2'-space HNSW index.
-    *
-    * `metric`: "l2" (default) matches the reference's 'l2'-space index
-    * and is what both the exact and bucketed paths share — crucially it
-    * is not magnitude-blind, so a target identical to a reference cell
-    * strictly beats every merely-collinear one; "cosine" (exact path
-    * only) is the raw-embedding similarity q37/q38/q44 oracle and adds
-    * a `cos` column (dist = 1 − cos there).
+    * Strategy comes from [[Scale.ann]] over the target count, the same
+    * gate as [[DataStore.makeGraph]]: exact l2 top-k up to its 10k-row
+    * bound (the query side broadcasts — the reference's `transform_ann`
+    * over a small batch, recall 1.0); above it, the bucketed-LSH
+    * cross-KNN ([[Knn.bucketedKnn]]) — no O(|target|·|ref|) stage. Both
+    * paths rank by euclidean distance like the reference's 'l2'-space
+    * HNSW index — crucially not magnitude-blind, so a target identical to
+    * a reference cell strictly beats every merely-collinear one.
     *
     * Output `(target_id, ref_id, dist, rank)`. By default id-equal
     * pairs are KEPT — a target cell identical to a reference cell
     * legitimately hits it, exactly as the reference's index returns it;
     * pass `excludeSelf = true` when the queries are drawn FROM the
-    * reference itself (q37's sampled-query form).
+    * reference itself.
     */
   def project(target0: DataFrame, ref: DataFrame, saveK: Int,
-              ann: Option[Boolean] = None,
-              annThreshold: Long = 10000,
-              excludeSelf: Boolean = false,
-              metric: String = "l2"): DataFrame = {
-    // auto path selection needs a count — cache the target latent FIRST
-    // so the count doesn't execute the whole target-side
-    // normalize/assemble/transform plan once and the chosen path a
-    // second time (runMapping hits this on its default path every call).
-    // bucketedKnn re-caches the same plan (CacheManager no-op) and
-    // unpersists it; the exact path releases after an eager checkpoint
-    // of its k-bounded output.
-    val (target, cached) = ann match {
-      case Some(_) => (target0, false)
-      case None => (target0.cache(), true)
-    }
-    val useAnn = ann.getOrElse(target.count() > annThreshold)
-    require(!useAnn || metric == "l2",
-      "the bucketed ANN path is l2-only (the reference's index space)")
-    val out =
-      if (useAnn)
-        Knn.bucketedKnn(target, ref, saveK, excludeSelf = excludeSelf)
-          .select(col("src").as("target_id"), col("dst").as("ref_id"),
-            col("dist"), col("rn").as("rank"))
-      else if (metric == "cosine")
-        graft.sim.Similarity.cosineTopK(
-            target.select(col("cell_id").as("qid"), col("latent").as("qvec")),
-            ref.select(col("cell_id").as("vec_id"), col("latent").as("embedding")),
-            saveK, excludeSelf = excludeSelf)
-          .select(col("qid").as("target_id"), col("vec_id").as("ref_id"),
-            col("cos"), (lit(1.0) - col("cos")).as("dist"), col("rn").as("rank"))
-      else
-        graft.sim.Similarity.l2TopK(
-            target.select(col("cell_id").as("qid"), col("latent").as("qvec")),
-            ref.select(col("cell_id").as("vec_id"), col("latent").as("embedding")),
-            saveK, excludeSelf = excludeSelf)
-          .select(col("qid").as("target_id"), col("vec_id").as("ref_id"),
-            col("dist"), col("rn").as("rank"))
-    if (!cached) out
-    else if (useAnn) out // bucketedKnn already checkpointed and unpersisted
+              excludeSelf: Boolean = false): DataFrame = {
+    // the gate needs a count — cache the target latent FIRST so the
+    // count doesn't execute the whole target-side normalize/assemble/
+    // transform plan once and the chosen path a second time.
+    // bucketedKnn re-caches the same plan (CacheManager no-op),
+    // checkpoints its k-bounded output and unpersists it; the exact path
+    // releases after an eager checkpoint of its k-bounded output.
+    val target = target0.cache()
+    if (Scale.ann(target.count()))
+      Knn.bucketedKnn(target, ref, saveK, excludeSelf = excludeSelf)
+        .select(col("src").as("target_id"), col("dst").as("ref_id"),
+          col("dist"), col("rn").as("rank"))
     else {
-      val o = out.localCheckpoint()
+      val out = graft.sim.Similarity.l2TopK(
+          target.select(col("cell_id").as("qid"), col("latent").as("qvec")),
+          ref.select(col("cell_id").as("vec_id"), col("latent").as("embedding")),
+          saveK, excludeSelf = excludeSelf)
+        .select(col("qid").as("target_id"), col("vec_id").as("ref_id"),
+          col("dist"), col("rn").as("rank"))
+        .localCheckpoint()
       target.unpersist()
-      o
+      out
     }
   }
 }

@@ -10,11 +10,12 @@ import org.apache.spark.sql.functions._
   * cut_straight → cluster ids reordered by the median argmax-bin position,
   * so module 1 peaks earliest in pseudotime and module C latest.
   *
-  * The relational bin stage is the oracled q56 core; the KNN stage reuses
-  * the engine's strategy selection (exact below `annThreshold` features,
-  * LSH-bucketed ANN above — the reference's HNSW boundary); Paris runs on
-  * the driver over the |features|·k edge list, the same in-process
-  * boundary as the reference's sknetwork call.
+  * The relational bin stage is the oracled q56 core; the KNN stage takes
+  * its strategy from the engine's one gate ([[Scale.ann]] over the
+  * feature count: exact up to 10k features, LSH-bucketed ANN above — the
+  * reference's HNSW boundary); Paris runs on the driver over the
+  * |features|·k edge list, the same in-process boundary as the
+  * reference's sknetwork call.
   */
 object PtimeAgg {
 
@@ -55,9 +56,9 @@ object PtimeAgg {
     * `(feat_id, bin, z_mean)`:
     *
     *  1. assemble each feature's bin-ordered profile vector;
-    *  2. self-KNN in l2 space (`ann = None` auto-selects the bucketed ANN
-    *     above `annThreshold` features — the reference's HNSW default —
-    *     and exact blocked top-k below);
+    *  2. self-KNN in l2 space ([[Scale.ann]] picks the bucketed ANN
+    *     above 10k features — the reference's HNSW default — and exact
+    *     blocked top-k at or below);
     *  3. binary (weight 1) KNN adjacency → Paris dendrogram →
     *     cut_straight to `nClusters` (Paris.cut; mutual edges carry
     *     weight 2 after symmetrization, exactly A + Aᵀ of the ones-CSR);
@@ -67,17 +68,15 @@ object PtimeAgg {
     *
     * Returns `(feat_id, cluster)` with clusters 1..nClusters.
     */
-  def knnClustering(profiles: DataFrame, k: Int = 11, nClusters: Int = 10,
-                    ann: Option[Boolean] = None,
-                    annThreshold: Long = 10000): DataFrame = {
+  def knnClustering(profiles: DataFrame, k: Int = 11,
+                    nClusters: Int = 10): DataFrame = {
     val vecs = profiles.groupBy("feat_id").agg(
       transform(array_sort(collect_list(struct(col("bin"), col("z_mean")))),
         x => x.getField("z_mean")).as("profile"))
       .cache()
     val latent = vecs.select(col("feat_id").as("cell_id"),
       col("profile").as("latent"))
-    val useAnn = ann.getOrElse(latent.count() > annThreshold)
-    val knn = if (useAnn) Knn.bucketedSelfKnn(latent, k)
+    val knn = if (Scale.ann(latent.count())) Knn.bucketedSelfKnn(latent, k)
               else Knn.exactSelfKnn(latent, k)
     val edges = knn.select(col("src"), col("dst"), lit(1.0).as("weight"))
     val labels0 = Paris.cut(edges, nClusters)
@@ -98,8 +97,6 @@ object PtimeAgg {
     */
   def runPseudotimeAggregation(coo: DataFrame, ptime: DataFrame, sel: DataFrame,
                                halfWidth: Int = 2, nBins: Int = 20,
-                               k: Int = 11, nClusters: Int = 10,
-                               ann: Option[Boolean] = None): DataFrame =
-    knnClustering(binnedProfiles(coo, ptime, sel, halfWidth, nBins),
-      k, nClusters, ann)
+                               k: Int = 11, nClusters: Int = 10): DataFrame =
+    knnClustering(binnedProfiles(coo, ptime, sel, halfWidth, nBins), k, nClusters)
 }

@@ -38,13 +38,13 @@ object ExtendedQueries {
 
     "q44_mapping_score" -> ((s, d) => {
       val e = tb(s, d, "embeddings")
-      // hits via the run_mapping facade kernel (see TrainingQueries.topKHits)
+      // hits: exact cosine top-5 of the sampled queries (see
+      // TrainingQueries.topKHits), dist = 1 − cos
       val q = Sample.capped(e, "vec_id")
-        .select(col("vec_id").as("cell_id"), col("embedding").as("latent"))
-      val ref = e.select(col("vec_id").as("cell_id"), col("embedding").as("latent"))
-      val hits = graft.pipeline.Mapping.project(q, ref, 5, ann = Some(false),
-          excludeSelf = true, metric = "cosine")
-        .select(col("ref_id"), col("target_id"), col("dist"))
+        .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+      val hits = graft.sim.Similarity.cosineTopK(q, e, 5, excludeSelf = true)
+        .select(col("vec_id").as("ref_id"), col("qid").as("target_id"),
+          (lit(1.0) - col("cos")).as("dist"))
       val groups = e.select(col("vec_id").as("target_id"),
         col("label").cast("string").as("group"))
       GraphOps.mappingScore(hits, groups)

@@ -67,22 +67,16 @@ object TrainingQueries {
     Dedup.shingles(base.unionByName(dups), 3)
   }
 
-  /** q37/q38/q44's shared hit table, produced by the run_mapping facade
-    * kernel (Mapping.project — the same step DataStore.runMapping caches
-    * as projection:<name>). excludeSelf because the queries here are
-    * drawn FROM the corpus; ann=Some(false) pins the exact path the
-    * oracle replays (the sampled query side is 1-in-50 — broadcast-
-    * small at any SF).
+  /** q37/q38/q44's shared hit table: exact cosine top-5 of the sampled
+    * queries against the whole corpus, the raw-embedding similarity the
+    * oracle replays. excludeSelf because the queries here are drawn FROM
+    * the corpus (the sampled query side is 1-in-50 — broadcast-small at
+    * any SF).
     */
   private def topKHits(s: SparkSession, d: String) = {
     val q = Sample.capped(embs(s, d), "vec_id")
-      .select(col("vec_id").as("cell_id"), col("embedding").as("latent"))
-    val ref = embs(s, d)
-      .select(col("vec_id").as("cell_id"), col("embedding").as("latent"))
-    graft.pipeline.Mapping.project(q, ref, 5, ann = Some(false),
-        excludeSelf = true, metric = "cosine")
-      .select(col("target_id").as("qid"), col("ref_id").as("vec_id"),
-        col("cos"), col("rank").as("rn"))
+      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+    Similarity.cosineTopK(q, embs(s, d), 5, excludeSelf = true)
   }
 
   // exact-truth query-sample cap — see Sample's scaladoc for the

@@ -155,8 +155,8 @@ object Sketches {
     * everything after operates on k-row sketches expanded across the
     * |G|²/2 pair table — G is the report dimension (sources, snapshot
     * versions), assumed small. Exact columns ride along to validate the
-    * estimators (a production run drops them — that is the point of the
-    * sketch). If the merged sketch holds fewer than k hashes, BOTH input
+    * estimators; they cost one extra pass over the hashes that the
+    * estimates never need. If the merged sketch holds fewer than k hashes, BOTH input
     * sketches were exhaustive and every "estimate" is exact — the same
     * lossless-below-capacity branch as [[kmvDistinct]].
     *
@@ -166,7 +166,7 @@ object Sketches {
     * exact columns.
     */
   def kmvSetOps(df: DataFrame, group: String, key: String, k: Int,
-                salts: Int = 16, withExact: Boolean = true): DataFrame = {
+                salts: Int = 16): DataFrame = {
     val hashes = df
       .select(col(group).as("grp"), md5(col(key).cast("string")).as("hhex"))
       .distinct().localCheckpoint()
@@ -211,10 +211,8 @@ object Sketches {
       round(uEst, 4).as("union_est"),
       round(rho, 6).as("jaccard_est"),
       round(rho * uEst, 4).as("inter_est"))
-    // sketch-only: the actual 100 TB plan — everything after the
-    // distinct-agg operates on |G|·k sketch rows; the corpus-sized pair
-    // fan-out below exists ONLY to validate the estimators
-    if (!withExact) return estOut
+    // the estimates above read only |G|·k sketch rows; the corpus-sized
+    // pass below exists ONLY to validate them
     // Exact truth WITHOUT the |pairs|-fold row fan-out the former
     // sides(hashes) paid (every hash row replicated across every pair
     // involving its group): per-group sizes are one count, pair

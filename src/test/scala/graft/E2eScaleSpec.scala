@@ -18,9 +18,10 @@ import graft.pipeline._
   * detectors guard against but a recall-preserving KNN must not be fed.
   *
   * Scale semantics exercised (and asserted, not assumed):
-  *  - makeGraph auto-selects the LSH-bucketed ANN (50k > annThreshold
-  *    10k) with planes auto-sized from COUNT(*) — the same decision a
-  *    1000-executor run takes; exact O(n²) KNN never runs;
+  *  - makeGraph auto-selects the LSH-bucketed ANN (50k rows is above
+  *    `Scale.ann`'s 10k-row bound) with planes auto-sized from COUNT(*)
+  *    — the same decision a 1000-executor run takes; exact O(n²) KNN
+  *    never runs;
   *  - the KNN edge list stays n·k-bounded (the driver-side Leiden
   *    collect is n·k, the documented bounded boundary);
   *  - Leiden recovers the planted blocks (NMI), UMAP lays out every
@@ -90,7 +91,7 @@ class E2eScaleSpec extends SparkSpec {
     val nEdges = edges.count()
     val tGraph = (System.nanoTime() - t0) / 1e9
 
-    // the auto-decision: 50k > annThreshold means the bucketed ANN built
+    // the auto-decision: 50k > Scale's 10k-row bound means the bucketed ANN built
     // this graph; its output is k-bounded per node by construction —
     // assert it (n·k is the bound the driver-side solvers rely on)
     assert(nEdges > 0)
@@ -104,7 +105,7 @@ class E2eScaleSpec extends SparkSpec {
     // test: < 100k active cells (mult=1) takes the driver-side solver,
     // ≥ 100k (mult≥2) switches to DistributedLouvain multi-level +
     // Leiden-style refine — both paths must recover the plant
-    val distSwitch = nCells >= 100000
+    val distSwitch = !Scale.driverGraph(nCells)
     val t1 = System.nanoTime()
     val clustered0 = graphed.runClustering(0, louvain = true)
     // cache + materialize: the stage timing stops here, and the NMI /

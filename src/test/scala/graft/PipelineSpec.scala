@@ -104,34 +104,42 @@ class PipelineSpec extends SparkSpec {
     assert(pt.cells.filter($"pseudotime".isNotNull).count() > 0)
     val pc = ds.runParis(3)
     assert(pc.cells.filter($"cluster".isNotNull).select("cluster").distinct().count() === 3)
-    // the scale path: sketchThreshold = 0 forces the same auto branch the
-    // default takes above 100k cells — sketched contraction, labels for
-    // every active cell, no full-graph collect
-    // every graph node (cells with >= 1 HVG feature) gets a label
+    // the scale path runParis takes from 100k active cells on: the
+    // sketched contraction gives every graph node (cells with >= 1 HVG
+    // feature) a label without a full-graph collect
     val graphNodes = ds.caches("latent").count()
-    val ps = ds.runParis(3, sketchThreshold = 0)
-    assert(ps.cells.filter($"cluster".isNotNull).count() === graphNodes)
+    val ps = Paris.sketchedCut(ds.caches("edges"),
+      ds.cells.select($"cell_id", lit(1L).as("cluster")), 3)
+    assert(ps.filter($"cluster".isNotNull).count() === graphNodes)
     // densMAP-flavoured layout stays finite for every graph node
     val du = ds.runUmap(nEpochs = 5, densLambda = 2.0)
     assert(du.cells.filter($"umap1".isNotNull && !isnan($"umap1")).count() ===
       graphNodes)
   }
 
-  test("default makeGraph auto-selects scale-safe ANN: no O(n²) join, recall ≥ 0.95") {
-    // annThreshold = 0 forces the auto path onto ANN at this fixture size —
-    // the same branch the default takes once active cells exceed 10k.
-    val annDs = DataStore.fromTestData(spark, "/root/testdata/sf0.001")
-      .withQcStats
-      .filterCells(Seq("n_counts"), Seq(1), Seq(1e9))
-      .markHvgs(topN = 30, minCells = 5)
-      .makeGraph(dims = 5, k = 6, annThreshold = 0)
-    val knn = annDs.caches("knn")
+  test("makeGraph's scale path (ANN self-KNN): no O(n²) join, recall ≥ 0.95") {
+    // the layer makeGraph runs once active cells exceed 10k, on the
+    // fixture's own latent
+    val knn = Knn.bucketedSelfKnn(ds.caches("latent"), 6)
     val plan = knn.queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct"))
     assert(!plan.contains("BroadcastNestedLoopJoin"))
     assert(Knn.recall(knn, ds.caches("knn")) >= 0.95)
-    // below the threshold the auto path stays exact (recall 1.0 vs ds)
+    // below the gate makeGraph stays exact (recall 1.0 vs ds)
     assert(Knn.recall(ds.caches("knn"), ds.caches("knn")) == 1.0)
+  }
+
+  test("Scale gate: exact KNN to 10k rows; driver graph solvers below 100k active cells") {
+    assert(!Scale.ann(10000L) && Scale.ann(10001L))
+    assert(Scale.pcstOnDriver(5000000L) && !Scale.pcstOnDriver(5000001L))
+    // runClustering, runUmap and runParis all take their path from this
+    // one count of the ACTIVE cells: 99 999 stays on the driver, 100 000
+    // goes distributed (sketched, for Paris)
+    def store(active: Long) = DataStore(
+      spark.range(100000L).select($"id".as("cell_id"), ($"id" < active).as("I")),
+      ds.feats, ds.coo)
+    assert(store(99999L).graphOnDriver)
+    assert(!store(100000L).graphOnDriver)
   }
 
   // Duplicate-free dense store for the mapping e2e: the TPC-H fixture
@@ -147,7 +155,7 @@ class PipelineSpec extends SparkSpec {
     val feats = (1 to m).map(j => (j.toLong, true, s"f$j")).toDF("feat_id", "I", "name")
     DataStore(cells, feats, coo)
       .markHvgs(topN = m, minCells = 1)
-      .makeGraph(dims = 3, k = 4, ann = Some(false))
+      .makeGraph(dims = 3, k = 4)
   }
 
   test("runMapping facade: target projects onto itself at rank 1, score + classes + unified flow") {
@@ -158,7 +166,7 @@ class PipelineSpec extends SparkSpec {
     val tgtCells = mapSrc.cells.filter($"cell_id" % 3 === 0)
     val tgt = mapSrc.copy(cells = tgtCells,
       coo = mapSrc.coo.join(tgtCells.select("cell_id"), Seq("cell_id")))
-    val mapped = mapSrc.runMapping(tgt, "t1", saveK = 3, dims = 3, ann = Some(false))
+    val mapped = mapSrc.runMapping(tgt, "t1", saveK = 3, dims = 3)
     val hits = mapped.caches("projection:t1")
     val r1 = hits.filter($"rank" === 1)
     assert(r1.count() === 20)
@@ -191,29 +199,32 @@ class PipelineSpec extends SparkSpec {
     // DISTRIBUTIONS — use the full store as target (a 20-cell subset's
     // empirical covariance differs and CORAL would legitimately warp it)
     val coralMapped = mapSrc.runMapping(mapSrc, "t2", saveK = 2, dims = 3,
-      runCoral = true, ann = Some(false))
+      runCoral = true)
     val cr1 = coralMapped.caches("projection:t2").filter($"rank" === 1)
     assert(cr1.filter($"target_id" =!= $"ref_id").count() === 0)
-    // the ANN path agrees at rank 1 with the same schema
-    val annMapped = mapSrc.runMapping(tgt, "t3", saveK = 2, dims = 3,
-      ann = Some(true))
-    val annHits = annMapped.caches("projection:t3")
-    assert(annHits.columns.toSet === Set("target_id", "ref_id", "dist", "rank"))
-    assert(annHits.filter($"rank" === 1)
-      .filter($"target_id" =!= $"ref_id").count() === 0)
+    // the ANN path runMapping takes above 10k target cells agrees at
+    // rank 1: the target cells carry the reference's own data, so their
+    // projected latents are the reference latent's rows
+    val refLatent = mapped.caches.collectFirst {
+      case (k, v) if k.startsWith("maplatent:") => v }.get
+    val annHits = Knn.bucketedKnn(refLatent.filter($"cell_id" % 3 === 0),
+      refLatent, 2)
+    assert(annHits.columns.toSet === Set("src", "dst", "dist", "rn"))
+    assert(annHits.filter($"rn" === 1)
+      .filter($"src" =!= $"dst").count() === 0)
   }
 
   test("runMapping reuses the reference latent across targets sharing a feature set") {
     val tgtCells = mapSrc.cells.filter($"cell_id" % 3 === 0)
     val tgt = mapSrc.copy(cells = tgtCells,
       coo = mapSrc.coo.join(tgtCells.select("cell_id"), Seq("cell_id")))
-    val once = mapSrc.runMapping(tgt, "a", saveK = 2, dims = 3, ann = Some(false))
+    val once = mapSrc.runMapping(tgt, "a", saveK = 2, dims = 3)
     val refKeys = once.caches.keys.filter(k =>
       k.startsWith("mapvecs:") || k.startsWith("maplatent:")).toSeq
     assert(refKeys.size === 2, s"expected mapvecs+maplatent keys, got $refKeys")
     // second target with the SAME feature universe: the cached frames
     // must be the IDENTICAL objects (structural reuse, not a rebuild)
-    val twice = once.runMapping(tgt, "b", saveK = 2, dims = 3, ann = Some(false))
+    val twice = once.runMapping(tgt, "b", saveK = 2, dims = 3)
     refKeys.foreach { k =>
       assert(twice.caches(k) eq once.caches(k), s"$k was rebuilt")
     }
@@ -222,7 +233,7 @@ class PipelineSpec extends SparkSpec {
     val b = twice.caches("projection:b").orderBy("target_id", "rank").collect().toSeq
     assert(a === b)
     // a DIFFERENT dims gets a different key — no false sharing
-    val other = once.runMapping(tgt, "c", saveK = 2, dims = 2, ann = Some(false))
+    val other = once.runMapping(tgt, "c", saveK = 2, dims = 2)
     assert(other.caches.keys.count(_.startsWith("maplatent:")) === 2)
   }
 
@@ -230,13 +241,12 @@ class PipelineSpec extends SparkSpec {
     val tgtCells = mapSrc.cells.filter($"cell_id" % 3 === 0)
     val tgt = mapSrc.copy(cells = tgtCells,
       coo = mapSrc.coo.join(tgtCells.select("cell_id"), Seq("cell_id")))
-    val once = mapSrc.runMapping(tgt, "a", saveK = 2, dims = 3, ann = Some(false))
+    val once = mapSrc.runMapping(tgt, "a", saveK = 2, dims = 3)
     // mutate the reference's active mask; `caches` rides along through
     // copy(), so a stale key would silently serve pre-filter vectors
     val filtered = once.copy(cells = once.cells
       .withColumn("I", $"I" && $"cell_id" % 2 === 0))
-    val again = filtered.runMapping(tgt, "b", saveK = 2, dims = 3,
-      ann = Some(false))
+    val again = filtered.runMapping(tgt, "b", saveK = 2, dims = 3)
     assert(again.caches.keys.count(_.startsWith("maplatent:")) === 2,
       "a mask change must mint a NEW reference-latent key, not reuse the old")
     // and the post-filter projection only ever hits active reference cells
@@ -251,8 +261,7 @@ class PipelineSpec extends SparkSpec {
     val tgtCells = mapSrc.cells.filter($"cell_id" % 3 === 0)
     val tgt = mapSrc.copy(cells = tgtCells,
       coo = mapSrc.coo.join(tgtCells.select("cell_id"), Seq("cell_id")))
-    val first = mapSrc.runMapping(tgt, "a", saveK = 2, dims = 3,
-      ann = Some(false), cacheRoot = Some(dir))
+    val first = mapSrc.runMapping(tgt, "a", saveK = 2, dims = 3, cacheRoot = Some(dir))
     val a = first.caches("projection:a").orderBy("target_id", "rank").collect().toSeq
     val manifests = new java.io.File(dir).listFiles()
       .filter(_.getName.endsWith(".manifest.json"))
@@ -261,8 +270,7 @@ class PipelineSpec extends SparkSpec {
     // a FRESH store (no in-session caches — a restarted mapping server)
     // must reload the reference latent from disk, not restamp it
     val fresh = mapSrc.copy(caches = Map.empty)
-    val second = fresh.runMapping(tgt, "b", saveK = 2, dims = 3,
-      ann = Some(false), cacheRoot = Some(dir))
+    val second = fresh.runMapping(tgt, "b", saveK = 2, dims = 3, cacheRoot = Some(dir))
     val b = second.caches("projection:b").orderBy("target_id", "rank").collect().toSeq
     assert(a === b)
     val manifests2 = new java.io.File(dir).listFiles()
