@@ -186,24 +186,17 @@ object Analytics {
   /** Key-skew report: the top-`k` heaviest keys with their event counts
     * and corpus share — the diagnosis a shuffle-heavy job runs BEFORE
     * picking salting factors or trusting AQE's skew split. Per-key
-    * counts are one map-side-combinable aggregation; the top-k runs as
-    * the salted two-phase pattern (local top-k per salt partition, then
-    * a ≤ k·salts-row global pass) so no single task ever sees the whole
-    * key table.
+    * counts are one map-side-combinable aggregation; the top-k is one
+    * global [[graft.ops.Windows.topKPerGroup]] cut, planned as a
+    * per-partition top-k and a merge of ≤ k rows per partition, so no
+    * single task ever sees the whole key table.
     */
-  def keySkew(ev: DataFrame, keyCol: String, k: Int,
-              salts: Int = 16): DataFrame = {
+  def keySkew(ev: DataFrame, keyCol: String, k: Int): DataFrame = {
     val c = ev.groupBy(keyCol).agg(count(lit(1)).as("n"))
     val tot = c.agg(sum(col("n")).as("total"), count(lit(1)).as("n_keys"))
-    // salt by key HASH so non-numeric keys work too; after the count
-    // agg each key is one row, so the hot key costs nothing here
-    val local = Window.partitionBy(pmod(xxhash64(col(keyCol)), lit(salts)))
-      .orderBy(col("n").desc, col(keyCol))
-    val global = Window.orderBy(col("n").desc, col(keyCol))
-    c.withColumn("_r", row_number().over(local)).filter(col("_r") <= k)
-      .withColumn("rank", row_number().over(global)).filter(col("rank") <= k)
+    graft.ops.Windows.topKPerGroup(c, Nil, k, Seq(col("n").desc, col(keyCol)))
       .crossJoin(broadcast(tot))
-      .select(col("rank"), col(keyCol), col("n"),
+      .select(col("rn").as("rank"), col(keyCol), col("n"),
         round(col("n").cast("double") / col("total").cast("double"), 6)
           .as("share"),
         col("n_keys"))

@@ -982,7 +982,7 @@ object Dedup {
     val multi = nearDupGroups(uni, pairs)
       .filter(col("n_docs") > 1).select("doc_id", "group_id")
       .localCheckpoint()
-    val capped = graft.ops.Windows.topKPerGroup(multi, "group_id", groupCap,
+    val capped = graft.ops.Windows.topKPerGroup(multi, Seq("group_id"), groupCap,
         Seq(md5(concat(lit("chain:"), col("doc_id"))), col("doc_id")))
       .select("doc_id", "group_id")
     val gp = capped.toDF("ida", "group_id")

@@ -62,7 +62,7 @@ object GraphOps {
     val truncated =
       if (useK > 0)
         graft.ops.Windows.topKPerGroup(edges.select("src", "dst", "weight"),
-          "src", useK, Seq(col("weight").desc, col("dst"))).drop("rn")
+          Seq("src"), useK, Seq(col("weight").desc, col("dst"))).drop("rn")
       else edges.select("src", "dst", "weight")
     val sym = if (symmetric) symmetrize(truncated) else truncated
     if (upperOnly) sym.filter(col("src") < col("dst")) else sym

@@ -9,14 +9,25 @@ import org.apache.spark.sql.functions._
   */
 object Windows {
 
-  /** Top-k rows per group by a sort column (scarf/knn_utils.py:213-235,
-    * scarf/assay.py:1049-1053). `tieBreak` must make the ordering total so
-    * results are deterministic across engines.
+  /** The one per-group top-k (scarf/knn_utils.py:213-235,
+    * scarf/assay.py:1049-1053): the first `k` rows of each `groups`
+    * group in `order`, with their 1-based position appended as the int
+    * column `rn`. An empty `groups` is one global top-k. `order` must be
+    * total (end it with an id column) so the cut is deterministic across
+    * engines.
+    *
+    * No salting is needed to bound a hot group's task: for a literal
+    * `k` up to `spark.sql.optimizer.windowGroupLimitThreshold` (1000)
+    * Spark plans a Partial `WindowGroupLimit` below the Exchange, so each
+    * map partition ships at most `k` rows per group, and it plans the
+    * global case as `TakeOrderedAndProject`. Above 1000 no pre-cut is
+    * planned and every row of a group reaches one task.
+    * KernelEquivalenceSpec asserts both plan shapes.
     */
-  def topKPerGroup(df: DataFrame, groupCol: String, k: Int,
+  def topKPerGroup(df: DataFrame, groups: Seq[String], k: Int,
                    order: Seq[Column]): DataFrame =
     df.withColumn("rn", row_number().over(
-        Window.partitionBy(groupCol).orderBy(order: _*)))
+        Window.partitionBy(groups.map(col): _*).orderBy(order: _*)))
       .filter(col("rn") <= k)
 
   /** Dense + average rank of `valueCol` within each group

@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Multi-assay graph integration (SURVEY.md §2.11; integrate_assays).
@@ -25,13 +24,12 @@ object Integrate {
       .filter(col("i") =!= col("j"))
       .groupBy("i", "j").agg((count(lit(1)) / (k - 1).toDouble).as("snn"))
       .withColumnRenamed("i", "src").withColumnRenamed("j", "dst")
-    all
+    val scored = all
       .groupBy("src", "dst").agg(max(col("weight")).as("weight"))
       .join(snn, Seq("src", "dst"), "left")
       .withColumn("score", col("weight") + coalesce(col("snn"), lit(0.0)))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("src").orderBy(col("score").desc, col("dst"))))
-      .filter(col("rn") <= k)
+    graft.ops.Windows.topKPerGroup(scored, Seq("src"), k,
+        Seq(col("score").desc, col("dst")))
       .select(col("src"), col("dst"), col("score").as("weight"), col("rn"))
   }
 
@@ -50,13 +48,12 @@ object Integrate {
       .withColumn("w2", lit(1.0) - col("w1"))
     val e1 = g1.select(col("src"), col("dst"), col("weight").as("e1"))
     val e2 = g2.select(col("src"), col("dst"), col("weight").as("e2"))
-    e1.join(e2, Seq("src", "dst"), "outer")
+    val weighted = e1.join(e2, Seq("src", "dst"), "outer")
       .na.fill(0.0, Seq("e1", "e2"))
       .join(aff.select("src", "w1", "w2"), Seq("src"))
       .withColumn("weight", col("w1") * col("e1") + col("w2") * col("e2"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("src").orderBy(col("weight").desc, col("dst"))))
-      .filter(col("rn") <= k)
+    graft.ops.Windows.topKPerGroup(weighted, Seq("src"), k,
+        Seq(col("weight").desc, col("dst")))
       .select("src", "dst", "weight", "rn")
   }
 }

@@ -33,11 +33,10 @@ object Knn {
   def exactSelfKnn(latent: DataFrame, k: Int): DataFrame = {
     val a = latent.select(col("cell_id").as("src"), col("latent").as("va"))
     val b = latent.select(col("cell_id").as("dst"), col("latent").as("vb"))
-    a.join(b, col("src") =!= col("dst"))
-      .select(col("src"), col("dst"), l2(col("va"), col("vb")).as("dist"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("src").orderBy(col("dist"), col("dst"))))
-      .filter(col("rn") <= k)
+    graft.ops.Windows.topKPerGroup(
+      a.join(b, col("src") =!= col("dst"))
+        .select(col("src"), col("dst"), l2(col("va"), col("vb")).as("dist")),
+      Seq("src"), k, Seq(col("dist"), col("dst")))
   }
 
   /** [[graft.core.Fingerprint.key]] of a `(cell_id, latent)` corpus; its

@@ -90,7 +90,7 @@ object Metrics {
     // seeded 2k sample per cluster, split into sample 1 and sample 2
     val sampled = graft.ops.Windows.topKPerGroup(
         clusters.join(latent, Seq("cell_id")),
-        "cluster", 2 * k,
+        Seq("cluster"), 2 * k,
         Seq(md5(concat(lit(s"$seed:"), col("cell_id"))), col("cell_id")))
     val s1 = sampled.filter(col("rn") <= k)
       .select(col("cluster"), col("cell_id").as("a_id"), col("latent").as("va"))
@@ -101,10 +101,8 @@ object Metrics {
     def l2 = graft.sim.Similarity.l2 _
 
     def meanTopK(pairs: DataFrame): DataFrame =
-      pairs.withColumn("prn", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy("cluster", "a_id")
-            .orderBy(col("d"), col("b_id"))))
-        .filter(col("prn") <= k - 1)
+      graft.ops.Windows.topKPerGroup(pairs, Seq("cluster", "a_id"), k - 1,
+          Seq(col("d"), col("b_id")))
         .groupBy("cluster").agg(avg("d").as("md"))
 
     val selfD = meanTopK(s1.join(s2, Seq("cluster"))

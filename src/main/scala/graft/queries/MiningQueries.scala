@@ -219,20 +219,19 @@ object MiningQueries {
     // 16× compressed index on data it can't represent (MiningSpec's
     // grouped-data test shows the same chain at recall 1.0)
     "q144_pq_recall" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val vecs = Tables.t(s, d, "embeddings").select(col("vec_id"),
         col("embedding").cast("array<double>").as("v"))
       val pq = graft.sim.Pq.pqSelfTopK(vecs)
         .select(col("qid").as("src"), col("dst"))
       val q = Sample.capped(vecs, "vec_id")
         .select(col("vec_id").as("src"), col("v").as("va"))
-      val ex = vecs.select(col("vec_id").as("dst"), col("v").as("vb"))
-        .crossJoin(broadcast(q)).filter(col("src") =!= col("dst"))
-        .select(col("src"), col("dst"),
-          round(graft.sim.Similarity.l2(col("va"), col("vb")), 6).as("dist"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("src").orderBy(col("dist"), col("dst"))))
-        .filter(col("rn") <= 5).select("src", "dst")
+      val ex = graft.ops.Windows.topKPerGroup(
+          vecs.select(col("vec_id").as("dst"), col("v").as("vb"))
+            .crossJoin(broadcast(q)).filter(col("src") =!= col("dst"))
+            .select(col("src"), col("dst"),
+              round(graft.sim.Similarity.l2(col("va"), col("vb")), 6).as("dist")),
+          Seq("src"), 5, Seq(col("dist"), col("dst")))
+        .select("src", "dst")
       val hits = ex.groupBy("src").agg(count(lit(1)).as("k"))
         .join(ex.join(pq, Seq("src", "dst"), "left_semi")
           .groupBy("src").agg(count(lit(1)).as("h")), Seq("src"), "left")
@@ -564,7 +563,6 @@ object MiningQueries {
     // loss isolated from the quantization loss (the report that answers
     // "is the 2-of-8 probe or the 16x compression costing me recall")
     "q174_ivfpq_recall" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val vecs = Tables.t(s, d, "embeddings").select(col("vec_id"),
         col("embedding").cast("array<double>").as("v"))
       val ipq = graft.sim.Pq.ivfPqTopK(vecs)
@@ -573,13 +571,13 @@ object MiningQueries {
         .select(col("qid").as("src"), col("dst"))
       val q = Sample.capped(vecs, "vec_id")
         .select(col("vec_id").as("src"), col("v").as("va"))
-      val ex = vecs.select(col("vec_id").as("dst"), col("v").as("vb"))
-        .crossJoin(broadcast(q)).filter(col("src") =!= col("dst"))
-        .select(col("src"), col("dst"),
-          round(graft.sim.Similarity.l2(col("va"), col("vb")), 6).as("dist"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("src").orderBy(col("dist"), col("dst"))))
-        .filter(col("rn") <= 5).select("src", "dst")
+      val ex = graft.ops.Windows.topKPerGroup(
+          vecs.select(col("vec_id").as("dst"), col("v").as("vb"))
+            .crossJoin(broadcast(q)).filter(col("src") =!= col("dst"))
+            .select(col("src"), col("dst"),
+              round(graft.sim.Similarity.l2(col("va"), col("vb")), 6).as("dist")),
+          Seq("src"), 5, Seq(col("dist"), col("dst")))
+        .select("src", "dst")
       val hx = ex.join(ipq, Seq("src", "dst"), "left_semi")
         .groupBy("src").agg(count(lit(1)).as("h_ex"))
       val hp = pq.join(ipq, Seq("src", "dst"), "left_semi")
@@ -599,13 +597,12 @@ object MiningQueries {
     // exact search over the first 8/16/32 dims vs the full 64-dim truth
     // — how many dims the index actually needs, answered with data
     "q175_dim_truncation" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val vecs = Tables.t(s, d, "embeddings").select(col("vec_id"),
         col("embedding").cast("array<double>").as("v"))
       val q = Sample.capped(vecs, "vec_id")
         .select(col("vec_id").as("src"), col("v").as("va"))
       val dts = Seq(8, 16, 32, 64)
-      val tk = vecs.select(col("vec_id").as("dst"), col("v").as("vb"))
+      val dists = vecs.select(col("vec_id").as("dst"), col("v").as("vb"))
         .crossJoin(broadcast(q)).filter(col("src") =!= col("dst"))
         .select(col("src"), col("dst"), explode(array(dts.map(dt =>
           struct(lit(dt).as("dims"),
@@ -614,9 +611,9 @@ object MiningQueries {
               .as("dist"))): _*)).as("e"))
         .select(col("src"), col("dst"), col("e.dims").as("dims"),
           col("e.dist").as("dist"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("dims", "src").orderBy(col("dist"), col("dst"))))
-        .filter(col("rn") <= 5).select("dims", "src", "dst")
+      val tk = graft.ops.Windows.topKPerGroup(dists, Seq("dims", "src"), 5,
+          Seq(col("dist"), col("dst")))
+        .select("dims", "src", "dst")
         .localCheckpoint()
       val truth = tk.filter(col("dims") === 64).select("src", "dst")
       val hits = tk.filter(col("dims") =!= 64)
@@ -690,20 +687,19 @@ object MiningQueries {
     // query — top-weighted agreement in exact rational arithmetic
     // (p = 9/10, integer suffix coefficients, ONE final division)
     "q182_rank_overlap" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val vecs = Tables.t(s, d, "embeddings").select(col("vec_id"),
         col("embedding").cast("array<double>").as("v"))
       val pq = graft.sim.Pq.pqSelfTopK(vecs, topK = 10)
         .select(col("qid"), col("dst"), col("rn"))
       val q = Sample.capped(vecs, "vec_id")
         .select(col("vec_id").as("src"), col("v").as("va"))
-      val ex = vecs.select(col("vec_id").as("dst"), col("v").as("vb"))
-        .crossJoin(broadcast(q)).filter(col("src") =!= col("dst"))
-        .select(col("src"), col("dst"),
-          round(graft.sim.Similarity.l2(col("va"), col("vb")), 6).as("dist"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("src").orderBy(col("dist"), col("dst"))))
-        .filter(col("rn") <= 10).select("src", "dst", "rn")
+      val ex = graft.ops.Windows.topKPerGroup(
+          vecs.select(col("vec_id").as("dst"), col("v").as("vb"))
+            .crossJoin(broadcast(q)).filter(col("src") =!= col("dst"))
+            .select(col("src"), col("dst"),
+              round(graft.sim.Similarity.l2(col("va"), col("vb")), 6).as("dist")),
+          Seq("src"), 10, Seq(col("dist"), col("dst")))
+        .select("src", "dst", "rn")
       graft.sim.Similarity.rankBiasedOverlap(ex, pq).orderBy("qid")
     }),
 
@@ -712,20 +708,19 @@ object MiningQueries {
     // order exactly (q182's rational-arithmetic stance), top-5 cut per
     // query — the standard multi-retriever ensembling primitive
     "q192_rrf_fusion" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val vecs = Tables.t(s, d, "embeddings").select(col("vec_id"),
         col("embedding").cast("array<double>").as("v"))
       val pq = graft.sim.Pq.pqSelfTopK(vecs, topK = 10)
         .select(col("qid"), col("dst"), col("rn"))
       val q = Sample.capped(vecs, "vec_id")
         .select(col("vec_id").as("src"), col("v").as("va"))
-      val ex = vecs.select(col("vec_id").as("dst"), col("v").as("vb"))
-        .crossJoin(broadcast(q)).filter(col("src") =!= col("dst"))
-        .select(col("src"), col("dst"),
-          round(graft.sim.Similarity.l2(col("va"), col("vb")), 6).as("dist"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("src").orderBy(col("dist"), col("dst"))))
-        .filter(col("rn") <= 10).select("src", "dst", "rn")
+      val ex = graft.ops.Windows.topKPerGroup(
+          vecs.select(col("vec_id").as("dst"), col("v").as("vb"))
+            .crossJoin(broadcast(q)).filter(col("src") =!= col("dst"))
+            .select(col("src"), col("dst"),
+              round(graft.sim.Similarity.l2(col("va"), col("vb")), 6).as("dist")),
+          Seq("src"), 10, Seq(col("dist"), col("dst")))
+        .select("src", "dst", "rn")
       // rrfFuse unions BOTH lists' qids into the output — restrict the
       // PQ side to the capped query sample so the fused qid set matches
       // the exact side (and the oracle) at any scale

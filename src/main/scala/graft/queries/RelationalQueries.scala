@@ -68,7 +68,7 @@ object RelationalQueries {
     }),
 
     "q19_topk_window" -> ((s, d) =>
-      Windows.topKPerGroup(tb(s, d, "lineitem"), "l_orderkey", 3,
+      Windows.topKPerGroup(tb(s, d, "lineitem"), Seq("l_orderkey"), 3,
           Seq(col("l_extendedprice").desc, col("l_linenumber")))
         .select("l_orderkey", "l_linenumber", "l_extendedprice", "rn")
         .orderBy("l_orderkey", "rn")),

@@ -373,19 +373,12 @@ object StatQueries {
     // HITS hubs & authorities on the order→part bipartite graph —
     // mutual-reinforcement ranking (a big order of popular parts is a
     // hub; a part bought by big orders is an authority), 3 exact
-    // pico-integer iterations, top-25 per side via salted two-phase
-    // top-n (phase 1 per (side, id%32) salt, phase 2 over survivors)
+    // pico-integer iterations, top-25 per side
     "q248_hits" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val e = Tables.t(s, d, "lineitem").select(
         col("l_orderkey").as("src"), col("l_partkey").as("dst"))
       val hx = GraphStats.hits(e, iters = 3)
-      val phase1 = graft.ops.Windows.topKPerGroup(
-          hx.withColumn("_salt", col("id") % 32)
-            .withColumn("_g", concat(col("side"), lit(":"), col("_salt"))),
-          "_g", 25, Seq(col("score").desc, col("id")))
-        .drop("rn", "_g", "_salt")
-      graft.ops.Windows.topKPerGroup(phase1, "side", 25,
+      graft.ops.Windows.topKPerGroup(hx, Seq("side"), 25,
           Seq(col("score").desc, col("id")))
         .select(col("side"), col("rn"), col("id"), col("score"))
         .orderBy("side", "rn")
@@ -605,8 +598,7 @@ object StatQueries {
     * authority pull (h summed over in-edges), pico-integer sum
     * normalization (raw·10¹² // Σraw, HUGEINT — positive, so // and
     * Spark's truncating div agree), then the hub pull on the fresh
-    * authorities; global top-25 per side (the engine's salted
-    * two-phase top-n selects the identical set).
+    * authorities; top-25 per side.
     */
   private def q248OracleSql: String = {
     val iters = (1 to 3).map { i =>

@@ -251,8 +251,8 @@ object TemporalQueries {
       graft.analytics.Analytics.latestState(ev(s, d))
         .orderBy("user_id", "event_type")),
 
-    // key-skew report: top-10 heaviest users + corpus share via the
-    // salted two-phase top-k — the pre-salting shuffle diagnosis
+    // key-skew report: top-10 heaviest users + corpus share via one
+    // global top-k cut — the pre-salting shuffle diagnosis
     "q129_key_skew" -> ((s, d) =>
       graft.analytics.Analytics.keySkew(ev(s, d), "user_id", 10)
         .orderBy("rank")),
@@ -493,9 +493,7 @@ object TemporalQueries {
                 OR (b.ts_us = a.ts_us AND b.event_id > a.event_id))
          GROUP BY a.user_id ORDER BY a.user_id""",
 
-    // the salted two-phase min-k provably equals the global min-k
-    // (every global top-k hash survives its salt's local top-k), so the
-    // oracle replays the simple single-window form
+    // the engine's min-k is the same single-window form
     "q96_kmv_distinct" ->
       """WITH h AS (
            SELECT DISTINCT event_type, MD5(CAST(user_id AS VARCHAR)) AS hhex

@@ -360,8 +360,8 @@ object TrainingQueries {
         .orderBy("doc_id")
     }),
 
-    // deterministic per-language exact-count sampling (salted two-phase
-    // top-n — no single-stratum window at scale)
+    // deterministic per-language exact-count sampling (one per-stratum
+    // top-n cut, pre-cut map-side — no single-stratum window at scale)
     "q85_stratified_topn" -> ((s, d) =>
       graft.text.Mix.stratifiedTopN(docs(s, d), col("lang"), n = 10, seed = 7)
         .select(col("stratum").as("lang"), col("doc_id"), col("rank"))
@@ -425,7 +425,6 @@ object TrainingQueries {
     // exact ground truth on the 1-in-50 query sample — the index-quality
     // gate, as an oracled query rather than only a spec assertion
     "q125_ann_recall" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val latent = embs(s, d).select(col("vec_id").as("cell_id"),
         col("embedding").cast("array<double>").as("latent"))
       val q = cappedQuerySample(latent, "cell_id")
@@ -436,13 +435,13 @@ object TrainingQueries {
       // results the capped aggregation discards
       val ann = graft.pipeline.Knn.bucketedSelfKnn(latent, 5, rounds = 6)
         .join(q.select("src"), Seq("src"), "left_semi").select("src", "dst")
-      val ex = latent.select(col("cell_id").as("dst"), col("latent").as("vb"))
-        .crossJoin(broadcast(q)).filter(col("src") =!= col("dst"))
-        .select(col("src"), col("dst"),
-          round(graft.sim.Similarity.l2(col("va"), col("vb")), 6).as("dist"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("src").orderBy(col("dist"), col("dst"))))
-        .filter(col("rn") <= 5).select("src", "dst")
+      val ex = graft.ops.Windows.topKPerGroup(
+          latent.select(col("cell_id").as("dst"), col("latent").as("vb"))
+            .crossJoin(broadcast(q)).filter(col("src") =!= col("dst"))
+            .select(col("src"), col("dst"),
+              round(graft.sim.Similarity.l2(col("va"), col("vb")), 6).as("dist")),
+          Seq("src"), 5, Seq(col("dist"), col("dst")))
+        .select("src", "dst")
       val hits = ex.groupBy("src").agg(count(lit(1)).as("k"))
         .join(ex.join(ann, Seq("src", "dst"), "left_semi")
           .groupBy("src").agg(count(lit(1)).as("h")), Seq("src"), "left")
@@ -464,7 +463,6 @@ object TrainingQueries {
     // LITERALS identical in both engines (no cross-engine log2), and
     // each metric does ONE final IEEE division before the 6dp round
     "q241_retrieval_metrics" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val latent = embs(s, d).select(col("vec_id").as("cell_id"),
         col("embedding").cast("array<double>").as("latent"))
       val q = cappedQuerySample(latent, "cell_id")
@@ -474,13 +472,13 @@ object TrainingQueries {
       val ann = graft.pipeline.Knn.bucketedSelfKnn(latent, 5, rounds = 6)
         .join(q.select("src"), Seq("src"), "left_semi")
         .select("src", "dst", "rn")
-      val ex = latent.select(col("cell_id").as("dst"), col("latent").as("vb"))
-        .crossJoin(broadcast(q)).filter(col("src") =!= col("dst"))
-        .select(col("src"), col("dst"),
-          round(graft.sim.Similarity.l2(col("va"), col("vb")), 6).as("dist"))
-        .withColumn("ern", row_number().over(
-          Window.partitionBy("src").orderBy(col("dist"), col("dst"))))
-        .filter(col("ern") <= 5).select("src", "dst")
+      val ex = graft.ops.Windows.topKPerGroup(
+          latent.select(col("cell_id").as("dst"), col("latent").as("vb"))
+            .crossJoin(broadcast(q)).filter(col("src") =!= col("dst"))
+            .select(col("src"), col("dst"),
+              round(graft.sim.Similarity.l2(col("va"), col("vb")), 6).as("dist")),
+          Seq("src"), 5, Seq(col("dist"), col("dst")))
+        .select("src", "dst")
       // ANN hits that are true top-5 neighbors, keeping the ANN rank
       val rel = ann.join(ex, Seq("src", "dst"), "left_semi")
       val rrOf = array(Seq(60L, 30L, 20L, 15L, 12L).map(lit): _*)
@@ -511,19 +509,17 @@ object TrainingQueries {
     // pick order replays engine-exactly through 5 unrolled oracle
     // stages (the q154 BPE discipline)
     "q245_mmr_rerank" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val vecs = embs(s, d).select(col("vec_id"),
         col("embedding").cast("array<double>").as("v"))
       val q = Sample.capped(vecs, "vec_id")
         .select(col("vec_id").as("qid"), col("v").as("qv"))
-      val cand = vecs.select(col("vec_id").as("dst"), col("v").as("cv"))
-        .crossJoin(broadcast(q)).filter(col("qid") =!= col("dst"))
-        .select(col("qid"), col("dst"), col("cv"),
-          round(graft.sim.Similarity.cosine(col("qv"), col("cv")), 6)
-            .as("cos"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("qid").orderBy(col("cos").desc, col("dst"))))
-        .filter(col("rn") <= 10)
+      val cand = graft.ops.Windows.topKPerGroup(
+          vecs.select(col("vec_id").as("dst"), col("v").as("cv"))
+            .crossJoin(broadcast(q)).filter(col("qid") =!= col("dst"))
+            .select(col("qid"), col("dst"), col("cv"),
+              round(graft.sim.Similarity.cosine(col("qv"), col("cv")), 6)
+                .as("cos")),
+          Seq("qid"), 10, Seq(col("cos").desc, col("dst")))
         .select(col("qid"), col("dst"),
           round(col("cos") * 1e6, 0).cast("long").as("rel"), col("cv"))
         .localCheckpoint()
@@ -565,7 +561,6 @@ object TrainingQueries {
     // discipline). All exact arithmetic, both sides of the comparison
     // replay engine-identically (no ANN randomness in this one)
     "q242_dim_ablation" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val vecs = embs(s, d).select(col("vec_id"),
         col("embedding").cast("array<double>").as("v"))
       def topk(dims: Int): DataFrame = {
@@ -573,13 +568,13 @@ object TrainingQueries {
         val side = vecs.select(col("vec_id"), proj.as("p"))
         val q = cappedQuerySample(side, "vec_id")
           .select(col("vec_id").as("src"), col("p").as("pa"))
-        side.select(col("vec_id").as("dst"), col("p").as("pb"))
-          .crossJoin(broadcast(q)).filter(col("src") =!= col("dst"))
-          .select(col("src"), col("dst"),
-            round(graft.sim.Similarity.l2(col("pa"), col("pb")), 6).as("dist"))
-          .withColumn("rn", row_number().over(
-            Window.partitionBy("src").orderBy(col("dist"), col("dst"))))
-          .filter(col("rn") <= 5).select("src", "dst")
+        graft.ops.Windows.topKPerGroup(
+            side.select(col("vec_id").as("dst"), col("p").as("pb"))
+              .crossJoin(broadcast(q)).filter(col("src") =!= col("dst"))
+              .select(col("src"), col("dst"),
+                round(graft.sim.Similarity.l2(col("pa"), col("pb")), 6).as("dist")),
+            Seq("src"), 5, Seq(col("dist"), col("dst")))
+          .select("src", "dst")
       }
       val full = topk(0).localCheckpoint()
       Seq(8, 16, 32).map { dims =>
@@ -624,7 +619,7 @@ object TrainingQueries {
           docs(s, d).filter(col("doc_id") % 10 === 0), width = 20, stride = 10)
         .orderBy("doc_id", "chunk_id")),
 
-    // per-language TF-IDF top terms (salted two-phase top-n)
+    // per-language TF-IDF top terms (one per-language top-n cut)
     "q93_tfidf_terms" -> ((s, d) =>
       TextOps.tfidfTopTerms(docs(s, d), col("lang"), n = 5)
         .select(col("grp").as("lang"), col("term"), col("tf"), col("df"),

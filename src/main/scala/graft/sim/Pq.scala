@@ -37,6 +37,17 @@ object Pq {
   private def sampleQueries(df: DataFrame, queryMod: Int): DataFrame =
     graft.queries.Sample.capped(df, "vec_id", queryMod)
 
+  /** Each query's `n` nearest IVF lists by squared centroid distance,
+    * list id breaking ties: `(qid, list, d2, rn)`.
+    */
+  private def nearestLists(qs: DataFrame, centDf: DataFrame, n: Int): DataFrame =
+    graft.ops.Windows.topKPerGroup(
+      qs.crossJoin(broadcast(centDf))
+        .select(col("qid"), col("list"),
+          // codegen'd fold, IEEE-identical to aggregate(zip_with(...))
+          graft.functions.SqDiffSum.column(col("v"), col("lc")).as("d2")),
+      Seq("qid"), n, Seq(col("d2"), col("list")))
+
   /** Top-k ADC neighbors of every `queryMod`-sampled vector.
     * `vecs (vec_id, v: array<double>)` → `(qid, dst, adc_dist, rn)`.
     */
@@ -96,13 +107,7 @@ object Pq {
       .toSeq.toDF("list", "lc")
     val qs = sampleQueries(cached, queryMod)
       .select(col("vec_id").as("qid"), col("v"))
-    val probes = qs.crossJoin(broadcast(centDf))
-      .select(col("qid"), col("list"),
-        // codegen'd fold, IEEE-identical to aggregate(zip_with(...))
-        graft.functions.SqDiffSum.column(col("v"), col("lc")).as("d2"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("qid").orderBy(col("d2"), col("list"))))
-      .filter(col("rn") <= nProbe).select("qid", "list")
+    val probes = nearestLists(qs, centDf, nProbe).select("qid", "list")
     val (codes, cents) = trainCodebooks(cached, dim, m, k, iters, seedPq)
     val tab = adcTable(cached, dim, m, queryMod, cents)
     // id-only candidate set: probed lists' members, before any scoring
@@ -142,13 +147,8 @@ object Pq {
       .toSeq.toDF("list", "lc")
     val qs = sampleQueries(cached, queryMod)
       .select(col("vec_id").as("qid"), col("v"))
-    val probes = qs.crossJoin(broadcast(centDf))
-      .select(col("qid"), col("list"),
-        // codegen'd fold, IEEE-identical to aggregate(zip_with(...))
-        graft.functions.SqDiffSum.column(col("v"), col("lc")).as("d2"))
-      .withColumn("prank", row_number().over(
-        Window.partitionBy("qid").orderBy(col("d2"), col("list"))))
-      .filter(col("prank") <= maxProbe).select("qid", "list", "prank")
+    val probes = nearestLists(qs, centDf, maxProbe)
+      .select(col("qid"), col("list"), col("rn").as("prank"))
     val (codes, cents) = trainCodebooks(cached, dim, m, k, iters, seedPq)
     val tab = adcTable(cached, dim, m, queryMod, cents)
     val cand = probes.join(lists, Seq("list"))
@@ -160,23 +160,22 @@ object Pq {
       .join(broadcast(tab), Seq("qid", "s", "cid"))
       .groupBy("qid", "dst")
       .agg(sum(col("d2m")).as("adc_micro"), min(col("prank")).as("prank"))
-    val swept = adc.select(col("qid"), col("dst"), col("adc_micro"),
-        col("prank"), explode(sequence(lit(1), lit(maxProbe))).as("nprobe"))
-      .filter(col("prank") <= col("nprobe"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("nprobe", "qid")
-          .orderBy(col("adc_micro"), col("dst"))))
-      .filter(col("rn") <= topK).select("nprobe", "qid", "dst")
+    val swept = graft.ops.Windows.topKPerGroup(
+        adc.select(col("qid"), col("dst"), col("adc_micro"), col("prank"),
+            explode(sequence(lit(1), lit(maxProbe))).as("nprobe"))
+          .filter(col("prank") <= col("nprobe")),
+        Seq("nprobe", "qid"), topK, Seq(col("adc_micro"), col("dst")))
+      .select("nprobe", "qid", "dst")
     // exact ground truth over the same query sample
     val q2 = sampleQueries(cached, queryMod)
       .select(col("vec_id").as("src"), col("v").as("va"))
-    val ex = cached.select(col("vec_id").as("dst"), col("v").as("vb"))
-      .crossJoin(broadcast(q2)).filter(col("src") =!= col("dst"))
-      .select(col("src"), col("dst"),
-        round(Similarity.l2(col("va"), col("vb")), 6).as("dist"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("src").orderBy(col("dist"), col("dst"))))
-      .filter(col("rn") <= topK).select("src", "dst")
+    val ex = graft.ops.Windows.topKPerGroup(
+        cached.select(col("vec_id").as("dst"), col("v").as("vb"))
+          .crossJoin(broadcast(q2)).filter(col("src") =!= col("dst"))
+          .select(col("src"), col("dst"),
+            round(Similarity.l2(col("va"), col("vb")), 6).as("dist")),
+        Seq("src"), topK, Seq(col("dist"), col("dst")))
+      .select("src", "dst")
     val hits = ex.toDF("qid", "dst")
       .join(swept, Seq("qid", "dst"), "inner")
       .groupBy("nprobe", "qid").agg(count(lit(1)).as("h"))
@@ -312,9 +311,8 @@ object Pq {
   }
 
   private def rankAdc(adc: DataFrame, topK: Int): DataFrame =
-    adc.withColumn("rn", row_number().over(
-        Window.partitionBy("qid").orderBy(col("adc_micro"), col("dst"))))
-      .filter(col("rn") <= topK)
+    graft.ops.Windows.topKPerGroup(adc, Seq("qid"), topK,
+        Seq(col("adc_micro"), col("dst")))
       .select(col("qid"), col("dst"),
         round(sqrt(col("adc_micro") / lit(1e12)), 6).as("adc_dist"),
         col("rn").cast("int").as("rn"))

@@ -150,9 +150,8 @@ object Similarity {
     val pairs = (if (excludeSelf) crossed.filter(col("qid") =!= col("vec_id")) else crossed)
       .select(col("qid"), col("vec_id"),
         cosine(col("qvec"), col("cvec")).as("cos"))
-    pairs.withColumn("rn", row_number().over(
-        Window.partitionBy("qid").orderBy(round(col("cos"), 6).desc, col("vec_id"))))
-      .filter(col("rn") <= k)
+    graft.ops.Windows.topKPerGroup(pairs, Seq("qid"), k,
+        Seq(round(col("cos"), 6).desc, col("vec_id")))
       .select(col("qid"), col("vec_id"), round(col("cos"), 6).as("cos"), col("rn"))
   }
 
@@ -170,9 +169,8 @@ object Similarity {
     val crossed = c.crossJoin(broadcast(q))
     val pairs = (if (excludeSelf) crossed.filter(col("qid") =!= col("vec_id")) else crossed)
       .select(col("qid"), col("vec_id"), l2(col("qvec"), col("cvec")).as("dist"))
-    pairs.withColumn("rn", row_number().over(
-        Window.partitionBy("qid").orderBy(round(col("dist"), 6), col("vec_id"))))
-      .filter(col("rn") <= k)
+    graft.ops.Windows.topKPerGroup(pairs, Seq("qid"), k,
+        Seq(round(col("dist"), 6), col("vec_id")))
       .select(col("qid"), col("vec_id"), round(col("dist"), 6).as("dist"), col("rn"))
   }
 
@@ -356,16 +354,15 @@ object Similarity {
     val cand = lshCandidates(corpus, rounds, targetBucketSize, bucketCap,
       "src", "dst", undirected = false)
     val codes = int8Codes(corpus)
-    val out = cand
+    val scored = cand
       .join(codes.select(col("vec_id").as("src"), col("code").as("ca")), Seq("src"))
       .join(codes.select(col("vec_id").as("dst"), col("code").as("cb")), Seq("dst"))
       .select(col("src"), col("dst"),
         round(dot(col("ca"), col("cb")) /
           (sqrt(dot(col("ca"), col("ca"))) * sqrt(dot(col("cb"), col("cb")))), 6)
           .as("qcos"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("src").orderBy(col("qcos").desc, col("dst"))))
-      .filter(col("rn") <= k)
+    val out = graft.ops.Windows.topKPerGroup(scored, Seq("src"), k,
+        Seq(col("qcos").desc, col("dst")))
       .localCheckpoint()
     corpus.unpersist()
     out
@@ -469,7 +466,7 @@ object Similarity {
         element_at(cArr, col("rn").cast("int")).as("w"))
       .groupBy("qid", "dst")
       .agg(sum(col("w")).as("score_num"), count(lit(1)).as("n_lists"))
-    graft.ops.Windows.topKPerGroup(scored, "qid", topN,
+    graft.ops.Windows.topKPerGroup(scored, Seq("qid"), topN,
         Seq(col("score_num").desc, col("dst")))
       .select(col("qid"), col("rn"), col("dst"), col("n_lists"),
         round(col("score_num").cast("double") / lit(den.toDouble), 6)

@@ -72,7 +72,7 @@ object Pseudobulk {
     val setCuts = cuts.join(featureSet, Seq("feat_id")).select("cut").distinct()
     graft.ops.Windows.topKPerGroup(
         cuts.join(broadcast(setCuts), Seq("cut")),
-        "cut", ctrlSize,
+        Seq("cut"), ctrlSize,
         Seq(md5(concat(lit(s"$seed:"), col("feat_id"))), col("feat_id")))
       .join(featureSet, Seq("feat_id"), "left_anti")
       .select("feat_id")

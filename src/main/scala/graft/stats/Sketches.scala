@@ -17,6 +17,12 @@ import org.apache.spark.sql.functions._
   */
 object Sketches {
 
+  /** The k smallest hashes of each group: the KMV sketch itself. Hashes
+    * are distinct within a group, so `hhex` alone orders totally.
+    */
+  private def minK(hashes: DataFrame, groups: Seq[String], k: Int): DataFrame =
+    graft.ops.Windows.topKPerGroup(hashes, groups, k, Seq(col("hhex")))
+
   /** Mergeable fixed-bin histogram quantiles: nearest-rank percentile
     * ESTIMATES from `nBins` equal-width counters per group — the sketch
     * counterpart of `Analytics.groupQuantiles`' exact global-ordinal
@@ -52,31 +58,23 @@ object Sketches {
   /** Per-`group` distinct count of `key`, exact and KMV-estimated.
     *
     * Shape: one distinct-aggregation on (group, hash) — the same shuffle
-    * an exact distinct needs, but the k-minimum selection then runs as a
-    * salted two-phase top-k (never one window task per group; the global
-    * pass sees ≤ k·salts rows per group). In a real 100 TB deployment the
+    * an exact distinct needs — then the k-minimum selection as one
+    * [[graft.ops.Windows.topKPerGroup]] (each map partition ships at most
+    * k hashes per group to the window). In a real 100 TB deployment the
     * exact column is dropped and the distinct-agg is replaced by a
     * partial min-k per partition (the sketch's whole point); it is kept
     * here so the oracle validates the estimator against the truth it
     * approximates. Groups with fewer than k distinct keys report the
     * exact count (the sketch is lossless below its capacity).
     */
-  def kmvDistinct(df: DataFrame, group: String, key: String, k: Int,
-                  salts: Int = 16): DataFrame = {
+  def kmvDistinct(df: DataFrame, group: String, key: String, k: Int): DataFrame = {
     // 60-bit uniform hash: first 15 md5 hex chars; lexicographic order on
     // the fixed-width hex string == numeric order, so ranking stays on
     // strings and only the k-th minimum is ever parsed to a number
     val hashes = df
       .select(col(group), md5(col(key).cast("string")).as("hhex"))
       .distinct()
-    val local = Window.partitionBy(group, "_salt").orderBy("hhex")
-    val global = Window.partitionBy(group).orderBy("hhex")
-    val survivors = hashes
-      .withColumn("_salt", pmod(conv(substring(col("hhex"), 16, 2), 16, 10)
-        .cast("int"), lit(salts)))
-      .withColumn("_r", row_number().over(local)).filter(col("_r") <= k)
-      .drop("_r", "_salt")
-      .withColumn("_r", row_number().over(global)).filter(col("_r") <= k)
+    val survivors = minK(hashes, Seq(group), k)
     val sketch = survivors.groupBy(group).agg(
       max(conv(substring(col("hhex"), 1, 15), 16, 10).cast("long")).as("mk"),
       count(lit(1)).as("n_in_sketch"))
@@ -151,13 +149,12 @@ object Sketches {
     * sketches (ρ = |S ∩ skA ∩ skB| / |S|), and |A∩B| = ρ · |A∪B|.
     *
     * Shape: ONE distinct-aggregation on (group, hash) builds all
-    * sketches (salted two-phase min-k, never a per-group window task);
-    * everything after operates on k-row sketches expanded across the
-    * |G|²/2 pair table — G is the report dimension (sources, snapshot
-    * versions), assumed small. Exact columns ride along to validate the
-    * estimators; they cost one extra pass over the hashes that the
-    * estimates never need. If the merged sketch holds fewer than k hashes, BOTH input
-    * sketches were exhaustive and every "estimate" is exact — the same
+    * sketches (one per-group min-k cut); everything after operates on
+    * k-row sketches expanded across the |G|²/2 pair table — G is the
+    * report dimension (sources, snapshot versions), assumed small. Exact
+    * columns ride along to validate the estimators; they cost one extra
+    * pass over the hashes that the estimates never need. If the merged
+    * sketch holds fewer than k hashes, BOTH input sketches were exhaustive and every "estimate" is exact — the same
     * lossless-below-capacity branch as [[kmvDistinct]].
     *
     * Determinism: md5 hashes, integer memberships, and two IEEE ops
@@ -165,20 +162,11 @@ object Sketches {
     * the oracle — the ESTIMATES hash-match cross-engine, not just the
     * exact columns.
     */
-  def kmvSetOps(df: DataFrame, group: String, key: String, k: Int,
-                salts: Int = 16): DataFrame = {
+  def kmvSetOps(df: DataFrame, group: String, key: String, k: Int): DataFrame = {
     val hashes = df
       .select(col(group).as("grp"), md5(col(key).cast("string")).as("hhex"))
       .distinct().localCheckpoint()
-    val local = Window.partitionBy("grp", "_salt").orderBy("hhex")
-    val global = Window.partitionBy("grp").orderBy("hhex")
-    val sk = hashes
-      .withColumn("_salt", pmod(conv(substring(col("hhex"), 16, 2), 16, 10)
-        .cast("int"), lit(salts)))
-      .withColumn("_r", row_number().over(local)).filter(col("_r") <= k)
-      .drop("_r", "_salt")
-      .withColumn("_r", row_number().over(global)).filter(col("_r") <= k)
-      .drop("_r").localCheckpoint()
+    val sk = minK(hashes, Seq("grp"), k).drop("rn").localCheckpoint()
     val groups = hashes.select("grp").distinct()
     val pairTab = broadcast(groups.select(col("grp").as("ga"))
       .join(groups.select(col("grp").as("gb")), col("ga") < col("gb")))
@@ -195,10 +183,7 @@ object Sketches {
       a.unionByName(b).groupBy("ga", "gb", "hhex")
         .agg(max(col("in_a")).as("in_a"), max(col("in_b")).as("in_b"))
     }
-    val merged = sides(sk)   // union of the two sketches, per pair
-      .withColumn("_r", row_number()
-        .over(Window.partitionBy("ga", "gb").orderBy("hhex")))
-      .filter(col("_r") <= k)
+    val merged = minK(sides(sk), Seq("ga", "gb"), k) // union sketch, per pair
     val est = merged.groupBy("ga", "gb").agg(
       count(lit(1)).as("s_n"),
       max(conv(substring(col("hhex"), 1, 15), 16, 10).cast("long")).as("mk"),
@@ -260,23 +245,8 @@ object Sketches {
     val hashes = df
       .select(col(group).as("grp"), md5(col(key).cast("string")).as("hhex"))
       .distinct().localCheckpoint()
-    val salt = pmod(conv(substring(col("hhex"), 16, 2), 16, 10).cast("int"),
-      lit(16))
-    val sk = hashes.withColumn("_salt", salt)
-      .withColumn("_r", row_number().over(
-        Window.partitionBy("grp", "_salt").orderBy("hhex")))
-      .filter(col("_r") <= k).drop("_r", "_salt")
-      .withColumn("_r", row_number().over(
-        Window.partitionBy("grp").orderBy("hhex")))
-      .filter(col("_r") <= k).drop("_r")
-    def estimate(rows: DataFrame) = rows
-      .select(col("hhex")).distinct()
-      .withColumn("_salt", salt)
-      .withColumn("_r", row_number().over(
-        Window.partitionBy("_salt").orderBy("hhex")))
-      .filter(col("_r") <= k).drop("_salt", "_r")
-      .withColumn("_r", row_number().over(Window.orderBy("hhex")))
-      .filter(col("_r") <= k)
+    val sk = minK(hashes, Seq("grp"), k)
+    def estimate(rows: DataFrame) = minK(rows.select(col("hhex")).distinct(), Nil, k)
       .agg(count(lit(1)).as("n_in"),
         max(conv(substring(col("hhex"), 1, 15), 16, 10).cast("long")).as("mk"))
       .select(when(col("n_in") < k, col("n_in").cast("double"))

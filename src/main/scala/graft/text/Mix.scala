@@ -14,6 +14,9 @@ import org.apache.spark.sql.functions._
   */
 object Mix {
 
+  /** Sub-partitions per source in [[sourceCapSpillover]]'s election. */
+  private val capSalts = 16
+
   /** Lexicographic md5-hex cutoff for keep-fraction `p`: a document keeps
     * iff the first 8 hex chars of its seeded md5 sort below the cutoff.
     * Lowercase hex compares identically in any engine (ASCII '0'-'9' <
@@ -164,30 +167,24 @@ object Mix {
     * (the q102 rounded-score-cut technique): identical ranking in any
     * engine unless a key sits exactly on a 0.5e-9 boundary.
     *
-    * Scale: salted two-phase top-n — phase 1 bounds every task, phase 2
-    * ranks ≤ `salts`·n survivors (a bounded single window, same as
-    * [[stratifiedTopN]]'s global phase).
+    * Scale: one global [[graft.ops.Windows.topKPerGroup]] cut, planned
+    * as a per-partition top-n and a merge of ≤ n rows per partition.
     */
-  def weightedSample(docs: DataFrame, weight: Column, n: Int, seed: Int,
-                     salts: Int = 16): DataFrame = {
+  def weightedSample(docs: DataFrame, weight: Column, n: Int,
+                     seed: Int): DataFrame = {
     val u60 = conv(substring(
       md5(concat(lit(s"$seed:"), col("doc_id").cast("string"))), 1, 15),
       16, 10).cast("long")
     val key = round(
       log((u60.cast("double") + 1.0) / lit(math.pow(2.0, 60)))
         / weight.cast("double"), 9)
-    val salted = docs.select(col("doc_id"), weight.cast("long").as("w"),
-      key.as("key"), pmod(col("doc_id"), lit(salts)).as("_salt"))
-    val local = org.apache.spark.sql.expressions.Window
-      .partitionBy("_salt").orderBy(col("key").desc, col("doc_id"))
-    val survivors = salted.withColumn("_r", row_number().over(local))
-      .filter(col("_r") <= n).drop("_r", "_salt")
-    val global = org.apache.spark.sql.expressions.Window
-      .orderBy(col("key").desc, col("doc_id"))
+    val keyed = docs.select(col("doc_id"), weight.cast("long").as("w"),
+      key.as("key"))
     // long, not int: DuckDB's ROW_NUMBER is BIGINT and the dtype-strict
     // local gate (tools/compare.py) treats an int32/int64 split as FAIL
-    survivors.withColumn("rank", row_number().over(global).cast("long"))
-      .filter(col("rank") <= n)
+    graft.ops.Windows.topKPerGroup(keyed, Nil, n,
+        Seq(col("key").desc, col("doc_id")))
+      .withColumn("rank", col("rn").cast("long")).drop("rn")
   }
 
   /** Mixture feasibility plan: given target mixture weights per stratum
@@ -338,27 +335,16 @@ object Mix {
     * practice, so no secondary tie-break is needed (row_number over the
     * rank key alone is still total because keys are distinct).
     *
-    * Scale: a naive `Window.partitionBy(stratum)` puts an entire
-    * stratum — possibly most of the corpus — in ONE task. Instead a
-    * salted two-phase top-n: phase 1 takes the local top-n within each
-    * of `salts` deterministic sub-partitions (bounded tasks), phase 2
-    * re-ranks the ≤ `salts`·n survivors per stratum (tiny). Identical
-    * result to the single-window form — the global top-n is contained
-    * in the union of sub-partition top-ns.
+    * Scale: one [[graft.ops.Windows.topKPerGroup]]; its map-side
+    * pre-cut ships at most n rows per stratum from each partition, so a
+    * stratum holding most of the corpus never lands whole in one task.
     */
-  def stratifiedTopN(docs: DataFrame, stratum: Column, n: Int, seed: Int,
-                     salts: Int = 16): DataFrame = {
-    val salted = docs.select(stratum.as("stratum"), col("doc_id"),
-      md5(concat(lit(s"$seed:"), col("doc_id").cast("string"))).as("rk"),
-      pmod(col("doc_id"), lit(salts)).as("_salt"))
-    val local = org.apache.spark.sql.expressions.Window
-      .partitionBy("stratum", "_salt").orderBy("rk")
-    val survivors = salted.withColumn("_r", row_number().over(local))
-      .filter(col("_r") <= n).drop("_r", "_salt")
-    val global = org.apache.spark.sql.expressions.Window
-      .partitionBy("stratum").orderBy("rk")
-    survivors.withColumn("rank", row_number().over(global))
-      .filter(col("rank") <= n).drop("rk")
+  def stratifiedTopN(docs: DataFrame, stratum: Column, n: Int,
+                     seed: Int): DataFrame = {
+    val keyed = docs.select(stratum.as("stratum"), col("doc_id"),
+      md5(concat(lit(s"$seed:"), col("doc_id").cast("string"))).as("rk"))
+    graft.ops.Windows.topKPerGroup(keyed, Seq("stratum"), n, Seq(col("rk")))
+      .withColumnRenamed("rn", "rank").drop("rk")
   }
 
   /** Consistent-sampling stability audit across two corpus snapshots:
@@ -732,31 +718,6 @@ object Mix {
       (col("_pos") <= m).as("selected"))
   }
 
-  /** Per-source cap-and-spillover selection (RefinedWeb/CCNet-style
-    * per-domain quotas — the curation step a pipeline runs on every
-    * crawl snapshot so no domain dominates the mixture): cap every
-    * source at `cap` docs, elected by a deterministic md5 rank within
-    * the source (the q85 election), then reallocate the budget freed by
-    * under-quota sources to the evicted docs with the smallest GLOBAL
-    * md5 rank. Total kept = min(n_total, n_sources·cap) exactly, and no
-    * source exceeds its cap except through the explicit, reported
-    * spillover. Per source the report carries doc and weight mass kept/
-    * evicted and how much freed budget reallocated INTO it (`kept_spill`).
-    *
-    * `cap` = (n_total·capNum) div (n_sources·capDen) — a capNum/capDen
-    * fraction of the fair share, from one count aggregation (two driver
-    * scalars; the corpus never collects).
-    *
-    * Scale: round 1 is the salted two-phase per-source election
-    * ([[stratifiedTopN]]'s bound — no task ever holds a whole source,
-    * only ≤ cap rows per (source, salt) then ≤ salts·cap survivors);
-    * round 2 ranks the evicted docs with
-    * [[graft.ops.Windows.globalOrdinal]] (range-partitioned two-pass,
-    * no single-partition sort) and keeps rank ≤ freed. Only (id,
-    * source, weight, 32-hex rank) tuples shuffle; text never moves.
-    * Output: one row per source, `(source, cap, n_docs, kept_quota,
-    * kept_spill, kept_total, n_evicted, total_w, kept_w, kept_w_frac)`.
-    */
   /** Per-source TOKEN-budget quota with spillover — [[sourceCapSpillover]]
     * measured in mass instead of doc count (what RefinedWeb-style
     * curation actually budgets: a domain's share of the TRAINING TOKENS,
@@ -828,9 +789,36 @@ object Mix {
       .orderBy("source")
   }
 
+  /** Per-source cap-and-spillover selection (RefinedWeb/CCNet-style
+    * per-domain quotas — the curation step a pipeline runs on every
+    * crawl snapshot so no domain dominates the mixture): cap every
+    * source at `cap` docs, elected by a deterministic md5 rank within
+    * the source (the q85 election), then reallocate the budget freed by
+    * under-quota sources to the evicted docs with the smallest GLOBAL
+    * md5 rank. Total kept = min(n_total, n_sources·cap) exactly, and no
+    * source exceeds its cap except through the explicit, reported
+    * spillover. Per source the report carries doc and weight mass kept/
+    * evicted and how much freed budget reallocated INTO it (`kept_spill`).
+    *
+    * `cap` = (n_total·capNum) div (n_sources·capDen) — a capNum/capDen
+    * fraction of the fair share, from one count aggregation (two driver
+    * scalars; the corpus never collects).
+    *
+    * Scale: round 1 is a salted two-phase per-source election: ≤ cap
+    * rows per (source, salt), then ≤ `capSalts`·cap survivors per source.
+    * It stays hand-rolled, unlike [[stratifiedTopN]], because `cap` comes
+    * from the data and may exceed 1000, where Spark plans no map-side
+    * pre-cut for a `row_number() <= k` filter (see
+    * [[graft.ops.Windows.topKPerGroup]]). Round 2 ranks the evicted
+    * docs with [[graft.ops.Windows.globalOrdinal]] (range-partitioned
+    * two-pass, no single-partition sort) and keeps rank ≤ freed. Only (id,
+    * source, weight, 32-hex rank) tuples shuffle; text never moves.
+    * Output: one row per source, `(source, cap, n_docs, kept_quota,
+    * kept_spill, kept_total, n_evicted, total_w, kept_w, kept_w_frac)`.
+    */
   def sourceCapSpillover(docs: DataFrame, source: Column, id: Column,
-                         weight: Column, capNum: Int = 4, capDen: Int = 5,
-                         salts: Int = 16): DataFrame = {
+                         weight: Column, capNum: Int = 4,
+                         capDen: Int = 5): DataFrame = {
     val u = graft.core.Lineage.reset(docs.select(source.as("source"),
       id.as("doc_id"), weight.cast("long").as("w"),
       md5(concat(lit("cap:"), id.cast("string"))).as("rk")))
@@ -844,7 +832,7 @@ object Mix {
     val bySrc = org.apache.spark.sql.expressions.Window
       .partitionBy("source").orderBy("rk", "doc_id")
     val kept1 = graft.core.Lineage.reset(u
-      .withColumn("_salt", pmod(col("doc_id"), lit(salts)))
+      .withColumn("_salt", pmod(col("doc_id"), lit(capSalts)))
       .withColumn("_r", row_number().over(local))
       .filter(col("_r") <= cap).drop("_r", "_salt")
       .withColumn("_g", row_number().over(bySrc))

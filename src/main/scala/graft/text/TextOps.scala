@@ -1484,12 +1484,11 @@ object TextOps {
     * (score desc, term). The integral tf/df make the score double
     * bit-identical across engines, so the ordering replays exactly.
     *
-    * Scale: the ranked table is (group × vocab); the top-n uses the same
-    * salted two-phase pattern as [[graft.text.Mix.stratifiedTopN]] — a
-    * million-type vocabulary never lands in one window task.
+    * Scale: the ranked table is (group × vocab); the top-n is one
+    * [[graft.ops.Windows.topKPerGroup]], whose map-side pre-cut keeps a
+    * million-type vocabulary from landing in one window task.
     */
-  def tfidfTopTerms(docs: DataFrame, groupCol: Column, n: Int,
-                    salts: Int = 16): DataFrame = {
+  def tfidfTopTerms(docs: DataFrame, groupCol: Column, n: Int): DataFrame = {
     val tf = docs.select(groupCol.as("grp"), explode(tokensCol).as("term"))
       .groupBy("grp", "term").agg(count(lit(1)).as("tf"))
     val nGroups = docs.select(groupCol.as("grp")).distinct().count()
@@ -1497,17 +1496,10 @@ object TextOps {
     val scored = tf.join(df, Seq("term"))
       .withColumn("score",
         col("tf") * log((lit(1.0) + nGroups) / (lit(1.0) + col("df"))))
-      .withColumn("_salt", pmod(abs(hash(col("term"))), lit(salts)))
-    val local = org.apache.spark.sql.expressions.Window
-      .partitionBy("grp", "_salt").orderBy(col("score").desc, col("term"))
-    val survivors = scored.withColumn("_r", row_number().over(local))
-      .filter(col("_r") <= n).drop("_r", "_salt")
-    val global = org.apache.spark.sql.expressions.Window
-      .partitionBy("grp").orderBy(col("score").desc, col("term"))
-    survivors.withColumn("rank", row_number().over(global))
-      .filter(col("rank") <= n)
+    graft.ops.Windows.topKPerGroup(scored, Seq("grp"), n,
+        Seq(col("score").desc, col("term")))
       .select(col("grp"), col("term"), col("tf"), col("df"),
-        round(col("score"), 6).as("score"), col("rank"))
+        round(col("score"), 6).as("score"), col("rn").as("rank"))
   }
 
   /** Zipf's-law fit over the rank–frequency curve: OLS of ln(count) on
@@ -1939,14 +1931,15 @@ object TextOps {
     * Shape: the postings (doc, term, tf) join against the BROADCAST
     * query-term set first, so only matching postings ever shuffle; df
     * joins on the (query-bounded) term set; doc length joins on doc_id.
-    * Top-k per query runs as the salted two-phase selection — a hot
-    * query matching the whole corpus never lands in one window task.
+    * Top-k per query is one [[graft.ops.Windows.topKPerGroup]], whose
+    * map-side pre-cut keeps a hot query matching the whole corpus from
+    * landing in one window task.
     * tf/df/dl are integral so every score replays engine-exact up to
     * the final 6 dp rounding, and ranking orders by the ROUNDED score
     * (doc_id tie-break) so selection is deterministic cross-engine.
     */
   def bm25TopK(docs: DataFrame, queries: Seq[(Int, String)], topK: Int,
-               k1: Double = 1.2, b: Double = 0.75, salts: Int = 16): DataFrame = {
+               k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val tf = docs.select(col("doc_id"), explode(tokensCol).as("term"))
@@ -1970,15 +1963,9 @@ object TextOps {
         / (col("tf").cast("double") + lit(k1)
           * (lit(1.0 - b) + lit(b) * col("dl").cast("double") / col("avgdl"))))
       .groupBy("q_id", "doc_id").agg(round(sum(col("s")), 6).as("score"))
-    val local = org.apache.spark.sql.expressions.Window
-      .partitionBy("q_id", "_salt").orderBy(col("score").desc, col("doc_id"))
-    val global = org.apache.spark.sql.expressions.Window
-      .partitionBy("q_id").orderBy(col("score").desc, col("doc_id"))
-    scored.withColumn("_salt", pmod(col("doc_id"), lit(salts)))
-      .withColumn("_r", row_number().over(local)).filter(col("_r") <= topK)
-      .drop("_r", "_salt")
-      .withColumn("rank", row_number().over(global).cast("long"))
-      .filter(col("rank") <= topK)
+    graft.ops.Windows.topKPerGroup(scored, Seq("q_id"), topK,
+        Seq(col("score").desc, col("doc_id")))
+      .withColumn("rank", col("rn").cast("long")).drop("rn")
   }
 
   /** Unigram-LM tokenizer TRAINING via hard (Viterbi) EM — the
@@ -2108,7 +2095,7 @@ object TextOps {
       .join(rel, Seq("q_id", "doc_id"), "left").na.fill(0L, Seq("rel"))
       .withColumn("c", element_at(cArr, col("rank").cast("int")))
       .groupBy("q_id").agg(sum(col("rel") * col("c")).as("dcg_num"))
-    val ideal = graft.ops.Windows.topKPerGroup(rel, "q_id", topK,
+    val ideal = graft.ops.Windows.topKPerGroup(rel, Seq("q_id"), topK,
         Seq(col("rel").desc, col("doc_id")))
       .withColumn("c", element_at(cArr, col("rn").cast("int")))
       .groupBy("q_id").agg(sum(col("rel") * col("c")).as("idcg_num"))

@@ -37,8 +37,9 @@ class CurationSpec extends SparkSpec {
   }
 
   test("stratifiedTopN == naive single-window top-n at every salt count") {
+    // four input partitions, so the map-side pre-cut runs on each
     val docs = (0L until 300L).map(i => (i, s"lang${i % 3}"))
-      .toDF("doc_id", "lang")
+      .toDF("doc_id", "lang").repartition(4)
     val naive = docs
       .withColumn("rk", md5(concat(lit("7:"), col("doc_id").cast("string"))))
       .withColumn("rank", row_number().over(
@@ -46,13 +47,10 @@ class CurationSpec extends SparkSpec {
       .filter(col("rank") <= 10)
       .select(col("lang"), col("doc_id"), col("rank"))
       .collect().map(_.toSeq).toSet
-    for (salts <- Seq(1, 4, 16)) {
-      val two = Mix.stratifiedTopN(docs, col("lang"), n = 10, seed = 7,
-          salts = salts)
-        .select(col("stratum").as("lang"), col("doc_id"), col("rank"))
-        .collect().map(_.toSeq).toSet
-      assert(two == naive, s"salts=$salts")
-    }
+    val got = Mix.stratifiedTopN(docs, col("lang"), n = 10, seed = 7)
+      .select(col("stratum").as("lang"), col("doc_id"), col("rank"))
+      .collect().map(_.toSeq).toSet
+    assert(got == naive && got.size == 30)
   }
 
   test("canonicalDocs elects max weight, tie-broken by min id, per group") {

@@ -10,7 +10,10 @@ import org.apache.spark.sql.functions._
   *    .5 rounding knife edges, where HALF_UP vs HALF_EVEN would diverge);
   *  - TopKMin vs the `groupBy(src, dst).min(dist)` dedup + per-src
   *    row_number window chain, on candidate streams WITH cross-round
-  *    duplicates and rounded-distance ties.
+  *    duplicates and rounded-distance ties;
+  *  - Windows.topKPerGroup vs a driver-side sort, plus the plan shape it
+  *    relies on to bound a hot group (a map-side pre-cut before the
+  *    shuffle).
   */
 class KernelEquivalenceSpec extends SparkSpec {
   import spark.implicits._
@@ -94,5 +97,72 @@ class KernelEquivalenceSpec extends SparkSpec {
         (col("_p") + 1).as("rn"))
     assert(got.count() === 7L * k)
     assert(ref.unionByName(got).distinct().count() === ref.count())
+  }
+
+  // 4 partitions of (g1, g2, score, id): scores on a coarse grid, so
+  // many rows tie on score and only the id decides the cut
+  private def scored = spark.range(600).repartition(4)
+    .select(concat(lit("g"), (col("id") % 3).cast("string")).as("g1"),
+      (col("id") % 4).cast("int").as("g2"),
+      (pmod(col("id") * 37, lit(11)) / 2).cast("int").as("score"),
+      col("id"))
+    .union(Seq(("solo", 9, 5, 9999L)).toDF("g1", "g2", "score", "id"))
+
+  private val byScore = Seq(col("score").desc, col("id"))
+
+  /** (g1, g2, id, rn) of the reference cut: sort each group on the driver. */
+  private def driverTopK(groups: Seq[String], k: Int): Set[(String, Int, Long, Int)] =
+    scored.collect().toSeq
+      .groupBy(r => groups.map(g => r.getAs[Any](g)))
+      .values.flatMap(_.sortBy(r => (-r.getInt(2), r.getLong(3))).take(k)
+        .zipWithIndex.map { case (r, i) =>
+          (r.getString(0), r.getInt(1), r.getLong(3), i + 1) })
+      .toSet
+
+  test("topKPerGroup equals a driver-side sort: ties at k, 0-2 groups, k past a group, k = 0") {
+    def got(groups: Seq[String], k: Int) =
+      graft.ops.Windows.topKPerGroup(scored, groups, k, byScore)
+        .select("g1", "g2", "id", "rn").as[(String, Int, Long, Int)]
+        .collect().toSet
+    // (groups, k, expected row count): 3 g1 groups + "solo";
+    // 12 (g1, g2) groups + "solo"; one global cut
+    for ((groups, k, n) <- Seq((Seq("g1"), 7, 22), (Seq("g1", "g2"), 4, 49),
+                               (Nil, 9, 9), (Seq("g1", "g2"), 60, 601),
+                               (Seq("g1"), 0, 0))) {
+      val want = driverTopK(groups, k)
+      assert(want.size == n, s"reference size for $groups, k=$k")
+      assert(got(groups, k) == want, s"groups=$groups k=$k")
+    }
+    // the boundary really is a tie: rows 7 and 8 of some g1 group share
+    // their score, so the id tie-break decides which one is kept
+    val ranked = scored.collect().toSeq.groupBy(_.getString(0)).values
+      .map(_.map(_.getInt(2)).sorted(Ordering[Int].reverse))
+    assert(ranked.exists(s => s.size > 7 && s(6) == s(7)))
+  }
+
+  test("topKPerGroup plans a map-side WindowGroupLimit, and TakeOrderedAndProject without groups") {
+    import org.apache.spark.sql.execution.{SparkPlan, TakeOrderedAndProjectExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.{Partial, WindowGroupLimitExec}
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    def executed(groups: Seq[String], k: Int): Seq[SparkPlan] = {
+      val df = graft.ops.Windows.topKPerGroup(scored, groups, k, byScore)
+      df.collect()
+      nodes(df.queryExecution.executedPlan)
+    }
+    // partitioned: a Partial pre-cut at k sits on the exchange's map side
+    val partitioned = executed(Seq("g1", "g2"), 4)
+    val preCut = partitioned.collect { case x: ShuffleExchangeExec => nodes(x) }
+      .flatten.collect { case w: WindowGroupLimitExec if w.mode == Partial => w.limit }
+    assert(preCut == Seq(4), partitioned.map(_.nodeName).mkString(" > "))
+    // global: a per-partition take-ordered merge, no full shuffle of the rows
+    val global = executed(Nil, 9)
+    assert(global.collect { case t: TakeOrderedAndProjectExec => t.limit } == Seq(9),
+      global.map(_.nodeName).mkString(" > "))
   }
 }

@@ -17,36 +17,9 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class OverrideLintSpec extends AnyFunSuite {
 
-  private val root = new java.io.File("src/main/scala/graft/pipeline")
+  import SourceScan.code
 
-  /** Blank comments and string literals, keeping offsets and newlines. */
-  private def code(src: String): String = {
-    val out = new StringBuilder(src.length)
-    var i = 0
-    def blank(until: Int): Unit = {
-      while (i < until) { out += (if (src(i) == '\n') '\n' else ' '); i += 1 }
-    }
-    while (i < src.length) {
-      if (src.startsWith("//", i)) {
-        val e = src.indexOf('\n', i)
-        blank(if (e < 0) src.length else e)
-      } else if (src.startsWith("/*", i)) {
-        val e = src.indexOf("*/", i + 2)
-        blank(if (e < 0) src.length else e + 2)
-      } else if (src.startsWith("\"\"\"", i)) {
-        val e = src.indexOf("\"\"\"", i + 3)
-        blank(if (e < 0) src.length else e + 3)
-      } else if (src(i) == '"') {
-        var j = i + 1
-        while (j < src.length && src(j) != '"' && src(j) != '\n') {
-          if (src(j) == '\\') j += 1
-          j += 1
-        }
-        blank(math.min(j + 1, src.length))
-      } else { out += src(i); i += 1 }
-    }
-    out.toString
-  }
+  private val root = new java.io.File("src/main/scala/graft/pipeline")
 
   /** `name -> parameter-list text` for every `def` in `c`. */
   private def defs(c: String): Seq[(String, String)] =
@@ -86,12 +59,10 @@ class OverrideLintSpec extends AnyFunSuite {
   }
 
   test("no method under graft.pipeline takes an Option[Boolean] parameter") {
-    val files = Option(root.listFiles()).toSeq.flatten.filter(_.getName.endsWith(".scala"))
+    val files = SourceScan.scalaFiles(root)
     assert(files.nonEmpty, s"no sources under ${root.getAbsolutePath}")
-    val hits = files.sortBy(_.getName).flatMap { f =>
-      val s = scala.io.Source.fromFile(f, "UTF-8")
-      val src = try s.mkString finally s.close()
-      defs(code(src)).collect {
+    val hits = files.flatMap { f =>
+      defs(code(SourceScan.read(f))).collect {
         case (n, ps) if optBool.findFirstIn(ps).isDefined => s"${f.getName}:$n"
       }
     }

@@ -15,7 +15,7 @@ class SelectionSpec extends SparkSpec {
     (1 to n).map(i => (i.toLong, 1L + (i * 7919) % 500)).toDF("doc_id", "w")
 
   test("weightedSample: salted two-phase equals the naive single window") {
-    val docs = corpus(300)
+    val docs = corpus(300).repartition(4) // pre-cut runs per partition
     val naive = {
       val u60 = conv(substring(
         md5(concat(lit("7:"), col("doc_id").cast("string"))), 1, 15),
@@ -28,11 +28,9 @@ class SelectionSpec extends SparkSpec {
         .filter(col("rank") <= 40)
         .select("doc_id", "rank").as[(Long, Long)].collect().toSet
     }
-    for (salts <- Seq(1, 4, 16)) {
-      val got = Mix.weightedSample(docs, col("w"), n = 40, seed = 7, salts = salts)
-        .select("doc_id", "rank").as[(Long, Long)].collect().toSet
-      assert(got == naive, s"salts=$salts")
-    }
+    val got = Mix.weightedSample(docs, col("w"), n = 40, seed = 7)
+      .select("doc_id", "rank").as[(Long, Long)].collect().toSet
+    assert(got == naive && got.size == 40)
   }
 
   test("weightedSample: raising a doc's weight never worsens its rank") {

@@ -156,7 +156,7 @@ class TemporalSpec extends SparkSpec {
 
   test("kmvDistinct: salted two-phase top-k equals the global min-k") {
     val df = (0 until 2000).map(i => ("g", i * 31)).toDF("grp", "k")
-    val viaOp = Sketches.kmvDistinct(df, "grp", "k", k = 32, salts = 8)
+    val viaOp = Sketches.kmvDistinct(df, "grp", "k", k = 32)
       .collect().head.getDouble(2)
     // single-window replay of the definition
     val h = df.select(col("grp"), md5(col("k").cast("string")).as("hhex")).distinct()
@@ -263,10 +263,18 @@ class TemporalSpec extends SparkSpec {
     val docs = (0L until 200L).map(i =>
       (i, Seq.fill(1 + (i % 7).toInt)("term").mkString(" ") + s" pad$i"))
       .toDF("doc_id", "text")
-    val got = TextOps.bm25TopK(docs, Seq((1, "term")), topK = 5, salts = 4)
+    val got = TextOps.bm25TopK(docs.repartition(4), Seq((1, "term")), topK = 5)
       .select("doc_id", "rank").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val naive = TextOps.bm25TopK(docs, Seq((1, "term")), topK = 5, salts = 1)
-      .select("doc_id", "rank").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    // driver-side replay: one query term, present in every doc
+    val rows = docs.collect().map(r => (r.getLong(0), r.getString(1).split("\\s+")))
+    val avgdl = rows.map(_._2.length).sum.toDouble / rows.length
+    val idf = math.log(1.0 + 0.5 / (rows.length + 0.5))
+    val naive = rows.map { case (id, toks) =>
+        val tf = toks.count(_ == "term").toDouble
+        val s = idf * tf * 2.2 / (tf + 1.2 * (0.25 + 0.75 * toks.length / avgdl))
+        (id, math.rint(s * 1e6))
+      }.sortBy { case (id, s) => (-s, id) }.take(5)
+      .zipWithIndex.map { case ((id, _), i) => (id, i + 1L) }.toSet
     assert(got == naive && got.size == 5)
   }
 

@@ -2,9 +2,10 @@ package graft
 
 /** Bounded-window invariant, asserted instead of documented: an
   * unpartitioned `Window.orderBy` funnels the whole frame through ONE
-  * task — fine on a bounded domain (a distinct-lifetime table, a ≤k·salt
-  * survivor set), a scale-killer on a corpus-sized one. The repo's rule
-  * (VERDICT r11) is that every such site must be bounded-by-argument;
+  * task — fine on a bounded domain (a distinct-lifetime table, the ≤ k
+  * rows of a global top-k cut), a scale-killer on a corpus-sized one.
+  * The repo's rule (VERDICT r11) is that every such site must be
+  * bounded-by-argument;
   * this spec turns the comment into a gate: it builds every
   * `SparkEntry.queries` plan against the smallest SF and fails if a
   * logical Window with an empty partitionSpec appears in an OPTIMIZED
@@ -23,12 +24,12 @@ class WindowLintSpec extends SparkSpec {
 
   // query -> max allowed unpartitioned Window nodes, each traced to a
   // documented bounded-by-argument site (VERDICT r11's audit list):
-  //  - q110: Mix.weightedSample's phase-2 re-rank over the ≤ salts·n
-  //    sub-partition survivors;
-  //  - q129: Analytics.keySkew's global pass over ≤ k·salts candidate
-  //    rows;
-  //  - q184: Sketches KMV merge — two passes over fixed-size sketch
-  //    state (≤ 2·k hashes);
+  //  - q110: Mix.weightedSample's global top-n, a topKPerGroup cut with
+  //    no groups: Spark plans it as TakeOrderedAndProject, so the window
+  //    sees ≤ n rows;
+  //  - q129: Analytics.keySkew's global top-k, the same cut: ≤ k rows;
+  //  - q184: Sketches KMV merge — two global min-k cuts, the same plan,
+  //    each window seeing ≤ k hashes;
   //  - q246: Analytics.kaplanMeier's running sums on the distinct-
   //    lifetime domain (bounded by the corpus day span).
   // A NEW query appearing here means an unbounded global sort unless
