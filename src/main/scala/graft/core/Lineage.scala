@@ -1,6 +1,9 @@
 package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Observation, Row}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.types.StructType
 
 /** The one owner of iteration state for loop-shaped jobs (clustering,
   * diffusion, PageRank-style scores, layouts):
@@ -10,26 +13,32 @@ import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Observation, Row}
   * previous state twice (carry + push) therefore doubles that BigInt's
   * bit-length every round — after ~20 rounds Catalyst's stats visitor
   * spends minutes multiplying million-bit integers even though the data
-  * is tiny. [[reset]] rewraps the checkpoint's own RDD without those
-  * stats, making per-iteration planning O(1), and [[release]] frees its
-  * blocks. [[iterate]] is the loop built from the two.
+  * is tiny. [[reset]] rewraps the checkpoint's own RDD with its MEASURED
+  * size instead — the row count observed on the materializing pass, so
+  * per-iteration planning is O(1) and a small state is planned as the
+  * broadcast side of its joins (Pregelix: pick each iteration's join
+  * from the state's actual size) — and [[release]] frees its blocks.
+  * [[iterate]] is the loop built from the two.
   */
 object Lineage {
-  /** Materialize `df` and drop its size estimate. */
-  def reset(df: DataFrame): DataFrame =
-    GraftBridge.withoutOriginStats(df.localCheckpoint())
+  /** Materialize `df` as a frame that carries its measured size. */
+  def reset(df: DataFrame): DataFrame = reset(df, Nil: _*)._1
 
-  /** [[reset]] plus the aggregate `metrics` observed on the materializing
-    * pass itself (`Dataset.observe`), so reading them costs no second
-    * job. With no metrics the row is empty.
+  /** Materialize `df` and observe, on that one pass (`Dataset.observe`,
+    * no second job), its row count plus the aggregate `metrics`. The new
+    * frame's statistics are the measured ones: `rowCount` and Spark's
+    * size formula for it (rows × per-row width, 1 byte when empty). The
+    * returned row holds `metrics` only, in order; with none it is empty.
     */
-  def reset(df: DataFrame, metrics: Column*): (DataFrame, Row) =
-    if (metrics.isEmpty) (reset(df), Row.empty)
-    else {
-      val obs = Observation()
-      val out = reset(df.observe(obs, metrics.head, metrics.tail: _*))
-      (out, GraftBridge.observedRow(obs))
-    }
+  def reset(df: DataFrame, metrics: Column*): (DataFrame, Row) = {
+    val obs = Observation()
+    val cp = df.observe(obs, count(lit(1)).as("__lineage_rows"), metrics: _*)
+      .localCheckpoint()
+    val all = GraftBridge.observedRow(obs)
+    val mine = new GenericRowWithSchema(all.toSeq.tail.toArray,
+      StructType(all.schema.fields.tail))
+    (GraftBridge.withMeasuredRows(cp, all.getLong(0)), mine)
+  }
 
   /** Free a checkpointed frame's blocks NOW. `Dataset.unpersist()` routes
     * through the CacheManager and is a no-op for checkpointed frames

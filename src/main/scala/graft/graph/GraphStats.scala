@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Lineage
 
 /** Whole-graph structural statistics over undirected edge lists —
   * the diagnostics a pipeline runs on its near-duplicate candidate
@@ -38,8 +39,8 @@ object GraphStats {
     * n_triangles, global_cc.
     */
   def triangleStats(edges0: DataFrame): DataFrame = {
-    val e = edges0.select(col("ida").cast("long").as("ida"),
-      col("idb").cast("long").as("idb")).localCheckpoint()
+    val e = Lineage.reset(edges0.select(col("ida").cast("long").as("ida"),
+      col("idb").cast("long").as("idb")))
     val deg = dirColsOf(e).groupBy("node").agg(count(lit(1)).as("deg"))
     val degAgg = deg.agg(
       count(lit(1)).as("n_nodes"),
@@ -68,10 +69,10 @@ object GraphStats {
     * (NULL when the degree distribution is constant).
     */
   def degreeAssortativity(edges0: DataFrame): DataFrame = {
-    val e = edges0.select(col("ida").cast("long").as("ida"),
-      col("idb").cast("long").as("idb")).localCheckpoint()
-    val deg = dirColsOf(e).groupBy("node").agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
+    val e = Lineage.reset(edges0.select(col("ida").cast("long").as("ida"),
+      col("idb").cast("long").as("idb")))
+    val deg = Lineage.reset(
+      dirColsOf(e).groupBy("node").agg(count(lit(1)).as("deg")))
     def dec(c: Column) = c.cast("decimal(38,0)")
     val dp = dirColsOf(e)
       .join(deg, Seq("node"))
@@ -119,8 +120,8 @@ object GraphStats {
     * (node, core_deg) over the k-core members.
     */
   def kCore(edges0: DataFrame, k: Int, rounds: Int = 8): DataFrame = {
-    val e = edges0.select(col("ida").cast("long").as("ida"),
-      col("idb").cast("long").as("idb")).localCheckpoint()
+    val e = Lineage.reset(edges0.select(col("ida").cast("long").as("ida"),
+      col("idb").cast("long").as("idb")))
     def degOf(sub: DataFrame): DataFrame =
       dirColsOf(sub).groupBy("node").agg(count(lit(1)).as("deg"))
     def induce(nodes: DataFrame): DataFrame =
@@ -134,7 +135,7 @@ object GraphStats {
     // an equal count proves an identical set — exactly the guarantee
     // the old post-unroll verification pass re-derived with two extra
     // full passes.
-    val (nodes, converged) = graft.core.Lineage.iterate(
+    val (nodes, converged) = Lineage.iterate(
         degOf(e).filter(col("deg") >= k).select("node"), rounds,
         count(lit(1)).as("n")) { (nodes, _) =>
       degOf(induce(nodes)).filter(col("deg") >= k).select("node")
@@ -153,8 +154,8 @@ object GraphStats {
     * n_tri, n_wedges, local_cc (NULL for degree-1 nodes).
     */
   def localClustering(edges0: DataFrame): DataFrame = {
-    val e = edges0.select(col("ida").cast("long").as("ida"),
-      col("idb").cast("long").as("idb")).localCheckpoint()
+    val e = Lineage.reset(edges0.select(col("ida").cast("long").as("ida"),
+      col("idb").cast("long").as("idb")))
     val deg = dirColsOf(e).groupBy("node").agg(count(lit(1)).as("deg"))
     val corners = e.select(col("ida").as("a"), col("idb").as("b"))
       .join(e.select(col("ida").as("b"), col("idb").as("c")), Seq("b"))
@@ -187,8 +188,8 @@ object GraphStats {
   def labelPropagation(edges0: DataFrame, rounds: Int = 4): DataFrame = {
     val e = edges0.select(col("ida").cast("long").as("ida"),
       col("idb").cast("long").as("idb"))
-    val dir = dirColsOf(e).localCheckpoint()
-    val (lbl, _) = graft.core.Lineage.iterate(dir.select("node").distinct()
+    val dir = Lineage.reset(dirColsOf(e))
+    val (lbl, _) = Lineage.iterate(dir.select("node").distinct()
         .select(col("node"), col("node").as("lbl")), rounds) { (lbl, _) =>
       val votes = dir
         .join(lbl.select(col("node").as("nbr"), col("lbl")), Seq("nbr"))
@@ -230,8 +231,8 @@ object GraphStats {
     */
   def modularity(edges0: DataFrame, membership: DataFrame): DataFrame = {
     val d38 = "decimal(38,0)"
-    val e = edges0.select(col("ida").cast("long").as("ida"),
-      col("idb").cast("long").as("idb")).localCheckpoint()
+    val e = Lineage.reset(edges0.select(col("ida").cast("long").as("ida"),
+      col("idb").cast("long").as("idb")))
     val mAgg = e.agg(count(lit(1)).as("m"))
     val deg = dirColsOf(e).groupBy("node").agg(count(lit(1)).as("deg"))
     val lc = e
@@ -272,8 +273,8 @@ object GraphStats {
     * nodes; callers cut top-n.
     */
   def hits(edges0: DataFrame, iters: Int = 3): DataFrame = {
-    val e = edges0.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst")).distinct().localCheckpoint()
+    val e = Lineage.reset(edges0.select(col("src").cast("long").as("src"),
+      col("dst").cast("long").as("dst")).distinct())
     def normalized(raw0: DataFrame, idCol: String): DataFrame = {
       // raw feeds BOTH the Σ and the projection: checkpoint it (or the
       // upstream subtree executes twice per normalization, compounding
@@ -283,7 +284,7 @@ object GraphStats {
       // normalization is ONE barrier job, not checkpoint + a separate
       // scalar-broadcast job. The scalar enters the projection as a
       // decimal literal; values are identical to a broadcast-join form.
-      val (raw, m) = graft.core.Lineage.reset(raw0,
+      val (raw, m) = Lineage.reset(raw0,
         sum(col("raw").cast("decimal(38,0)")).as("s"))
       // an empty frame observes a NULL sum and an all-zero one observes
       // 0 — either would make the div expression NPE/div-by-zero. No
@@ -317,13 +318,13 @@ object GraphStats {
         e.join(broadcast(h), Seq("src"))
           .groupBy("dst")
           .agg(sum(col("score").cast("decimal(38,0)")).as("raw")), "dst")
-      if (i > 1) graft.core.Lineage.release(a)
+      if (i > 1) Lineage.release(a)
       a = a2
       val h2 = normalized(
         e.join(broadcast(a), Seq("dst"))
           .groupBy("src")
           .agg(sum(col("score").cast("decimal(38,0)")).as("raw")), "src")
-      if (i > 1) graft.core.Lineage.release(h)
+      if (i > 1) Lineage.release(h)
       h = h2
     }
     h.select(lit("hub").as("side"), col("src").as("id"), col("score"))
@@ -336,8 +337,8 @@ object GraphStats {
       col("idb").cast("long").as("idb"))
     val dir = dirColsOf(e)
     val deg = dir.groupBy("node").agg(count(lit(1)).as("deg"))
-    val adj = dir.join(deg, Seq("node")).localCheckpoint()
-    val (r, _) = graft.core.Lineage.iterate(adj.select("node").distinct()
+    val adj = Lineage.reset(dir.join(deg, Seq("node")))
+    val (r, _) = Lineage.iterate(adj.select("node").distinct()
         .select(col("node"), lit(1000000000000L).as("r")), iters) { (r, _) =>
       adj.join(r, Seq("node"))
         .groupBy(col("nbr"))

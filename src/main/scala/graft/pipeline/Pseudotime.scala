@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Lineage
 
 /** Pseudotime scoring (SURVEY.md §2.11; run_pseudotime_scoring,
   * scarf/datastore/graph_datastore.py:1818-2003). The reference solves a
@@ -17,25 +18,25 @@ object Pseudotime {
 
   def score(edges: DataFrame, sources: DataFrame, alpha: Double = 0.85,
             iters: Int = 30): DataFrame = {
-    // materialize the loop inputs once (localCheckpoint truncates their
+    // materialize the loop inputs once (Lineage.reset truncates their
     // upstream lineage — the edge table may sit atop a deep pipeline plan,
     // and re-walking it in every iteration's analysis/stats is wasted work)
-    val norm = edges
+    val norm = Lineage.reset(edges
       .groupBy("src").agg(sum("weight").as("row_sum"))
       .join(edges, Seq("src"))
-      .select(col("src"), col("dst"), (col("weight") / col("row_sum")).as("p"))
-      .localCheckpoint()
+      .select(col("src"), col("dst"), (col("weight") / col("row_sum")).as("p")))
     val cells = edges.select(col("src").as("cell_id"))
       .union(edges.select(col("dst"))).distinct()
-    val s = cells.join(sources.withColumn("m", lit(1.0)), Seq("cell_id"), "left")
-      .select(col("cell_id"), coalesce(col("m"), lit(0.0)).as("s"))
-      .localCheckpoint()
+    val s = Lineage.reset(
+      cells.join(sources.withColumn("m", lit(1.0)), Seq("cell_id"), "left")
+        .select(col("cell_id"), coalesce(col("m"), lit(0.0)).as("s")))
     // lazy personalized-PageRank x ← (1−α)·s + α·(x + Pᵀx)/2: the lazy
     // walk (half the mass stays put) makes scores decay monotonically
     // with graph distance from the sources regardless of degree skew
     // x is referenced twice per round (push + carry): the loop resets
-    // both the lineage AND the carried size estimate (see core.Lineage)
-    val (x, _) = graft.core.Lineage.iterate(
+    // the lineage and swaps the compounding size estimate for the
+    // measured one (see core.Lineage)
+    val (x, _) = Lineage.iterate(
         s.withColumnRenamed("s", "x"), iters) { (x, _) =>
       val push = norm.join(x.withColumnRenamed("cell_id", "src")
           .withColumnRenamed("x", "xs"), Seq("src"))

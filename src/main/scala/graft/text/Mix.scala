@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Lineage
 
 /** Data-mixing operators for assembling a training corpus at 100 TB:
   * deterministic per-stratum sampling (the "data mixture" step — X% of
@@ -288,7 +289,7 @@ object Mix {
     val w = broadcast(weights.toSeq.toDF("grp", "w"))
     // |strata| rows feeding two consumers (the min and the report) —
     // materialize once so the corpus token-count scan runs once
-    val j = avail.join(w, Seq("grp")).localCheckpoint()
+    val j = Lineage.reset(avail.join(w, Seq("grp")))
     val nMax = j.agg(min(col("avail").cast("double") / col("w")).as("nmax"))
     j.crossJoin(broadcast(nMax))
       .select(col("grp"), col("avail"), col("w").as("target_frac"),
@@ -363,10 +364,9 @@ object Mix {
                             mod: Int = 4): DataFrame = {
     val n1 = v1.count()
     val n2 = v2.count()
-    val j = v1.select(col("doc_id"), lit(1).as("in1"))
+    val j = Lineage.reset(v1.select(col("doc_id"), lit(1).as("in1"))
       .join(v2.select(col("doc_id"), lit(1).as("in2")), Seq("doc_id"),
-        "full_outer")
-      .localCheckpoint()
+        "full_outer"))
     def sel(salt: String) = {
       val h = conv(substring(md5(concat(lit("smp:" + salt),
         col("doc_id").cast("string"))), 1, 15), 16, 10).cast("long")
@@ -407,9 +407,8 @@ object Mix {
     * stratum aggregation; the weight table is |strata| rows.
     */
   def temperatureMix(docs: DataFrame, stratum: Column): DataFrame = {
-    val toks = docs.groupBy(stratum.as("grp"))
-      .agg(sum(size(split(col("text"), "\\s+")).cast("long")).as("nt"))
-      .localCheckpoint()
+    val toks = Lineage.reset(docs.groupBy(stratum.as("grp"))
+      .agg(sum(size(split(col("text"), "\\s+")).cast("long")).as("nt")))
     val c = col("nt").cast("double")
     val p25 = sqrt(sqrt(c))
     val p50 = sqrt(c)
@@ -451,12 +450,12 @@ object Mix {
     // fingerprints live mod 2^60: fixed-width, exact in int64 on any
     // engine, and the root still folds from shard lines (sum mod)
     val m60 = "1152921504606846976"
-    val per = docs.select(shard.as("shard"), h.as("h"))
+    // two consumers: shard rows + the root fold
+    val per = Lineage.reset(docs.select(shard.as("shard"), h.as("h"))
       .groupBy("shard")
       .agg(count(lit(1)).as("n_docs"),
         expr(s"CAST(sum(CAST(h AS decimal(38,0))) % $m60 AS BIGINT)")
-          .as("fingerprint"))
-      .localCheckpoint() // two consumers: shard rows + the root fold
+          .as("fingerprint")))
     per.unionByName(per.agg(lit(-1L).as("shard"),
       sum(col("n_docs")).as("n_docs"),
       expr(s"CAST(sum(CAST(fingerprint AS decimal(38,0))) % $m60 AS BIGINT)")
@@ -577,14 +576,14 @@ object Mix {
       .agg(count(lit(1)).as("n_pop"),
         sum(value.cast(d38)).cast(d38).as("sx"),
         sum(value.cast(d38) * value.cast(d38)).cast(d38).as("sxx"))
-    val s = a.select(col("stratum"), col("n_pop"), col("sx"),
+    // two consumers: total weight + the report
+    val s = Lineage.reset(a.select(col("stratum"), col("n_pop"), col("sx"),
         round(sqrt((col("n_pop").cast(d38) * col("sxx")
           - col("sx") * col("sx")).cast("double")
           / (col("n_pop") * col("n_pop")).cast("double")) * 1000000.0)
           .cast("long").as("s_micro"))
       .select(col("stratum"), col("n_pop"), col("sx"), col("s_micro"),
-        (col("n_pop") * col("s_micro")).as("wgt"))
-      .localCheckpoint() // two consumers: total weight + the report
+        (col("n_pop") * col("s_micro")).as("wgt")))
     val t = s.agg(sum(col("wgt").cast(d38)).cast(d38).as("tw"))
     s.crossJoin(broadcast(t))
       .select(col("stratum"), col("n_pop"),
@@ -630,7 +629,7 @@ object Mix {
           expr(s"(CAST(w AS $d38) * factor) div 1000000").as("w"))
     }
     // each round is a row half-round then a column half-round
-    val (cells, _) = graft.core.Lineage.iterate(
+    val (cells, _) = Lineage.iterate(
         df.groupBy(rowKey.as("grp_r"), colKey.as("grp_c"))
           .agg(count(lit(1)).as("n"))
           .select(col("grp_r"), col("grp_c"), col("n"),
@@ -680,7 +679,8 @@ object Mix {
   def dsirWeights(docs: DataFrame, targetPred: Column,
                   topNum: Int, topDen: Int): DataFrame = {
     def uln(c: Column) = round(log(c.cast("double")) * 1000000.0).cast("long")
-    val bg = docs
+    // three consumers: raw counts, target counts, doc sum
+    val bg = Lineage.reset(docs
       .select(col("doc_id"), targetPred.as("is_t"),
         split(col("text"), "\\s+").as("w"))
       .filter(size(col("w")) >= 2)
@@ -689,8 +689,7 @@ object Mix {
           "i -> concat_ws(' ', element_at(w, i), element_at(w, i + 1)))"))
         .as("g"))
       .select(col("doc_id"), col("is_t"),
-        substring(md5(col("g")), 1, 3).as("b"))
-      .localCheckpoint() // three consumers: raw counts, target counts, doc sum
+        substring(md5(col("g")), 1, 3).as("b")))
     val raw = bg.groupBy("b").agg(count(lit(1)).as("cr"))
     val tgt = bg.filter(col("is_t")).groupBy("b").agg(count(lit(1)).as("ct"))
     val bucketScore = raw.join(tgt, Seq("b"), "left").na.fill(0L, Seq("ct"))
@@ -741,7 +740,7 @@ object Mix {
     */
   def sourceTokenBudget(docs: DataFrame, source: Column, id: Column,
                         weight: Column, num: Int = 4, den: Int = 5): DataFrame = {
-    val u = graft.core.Lineage.reset(docs.select(source.as("source"),
+    val u = Lineage.reset(docs.select(source.as("source"),
       id.as("doc_id"), weight.cast("long").as("w"),
       md5(concat(lit("tok:"), id.cast("string"))).as("rk")))
     val scal = u.agg(sum(col("w")).as("tw"),
@@ -756,7 +755,7 @@ object Mix {
       .agg(min(col("_run")).as("_off"))
     val withCum = g.join(broadcast(off), col("source") === col("_src"))
       .withColumn("_cum", col("_run") - col("_off") + col("w"))
-    val kept1 = graft.core.Lineage.reset(withCum
+    val kept1 = Lineage.reset(withCum
       .filter(col("_cum") <= budget)
       .select("source", "doc_id", "w", "rk"))
     val keptW = kept1.agg(sum(col("w"))).head()
@@ -819,7 +818,7 @@ object Mix {
   def sourceCapSpillover(docs: DataFrame, source: Column, id: Column,
                          weight: Column, capNum: Int = 4,
                          capDen: Int = 5): DataFrame = {
-    val u = graft.core.Lineage.reset(docs.select(source.as("source"),
+    val u = Lineage.reset(docs.select(source.as("source"),
       id.as("doc_id"), weight.cast("long").as("w"),
       md5(concat(lit("cap:"), id.cast("string"))).as("rk")))
     val scal = u.agg(count(lit(1)).as("n"),
@@ -831,7 +830,7 @@ object Mix {
       .partitionBy("source", "_salt").orderBy("rk", "doc_id")
     val bySrc = org.apache.spark.sql.expressions.Window
       .partitionBy("source").orderBy("rk", "doc_id")
-    val kept1 = graft.core.Lineage.reset(u
+    val kept1 = Lineage.reset(u
       .withColumn("_salt", pmod(col("doc_id"), lit(capSalts)))
       .withColumn("_r", row_number().over(local))
       .filter(col("_r") <= cap).drop("_r", "_salt")

@@ -28,7 +28,7 @@ object SuffixOps {
     * docs): q219/q220/q231 — and every bench rep — share ONE doubling
     * chain per corpus instead of each re-deriving ~7 rounds of self-join
     * + re-rank (the CacheStore pattern, held in the block manager via
-    * localCheckpoint rather than parquet because the tables are
+    * Lineage.reset rather than parquet because the tables are
     * intermediate, not user artifacts). 32 levels hold the last few
     * corpora (each ≤ ~8 levels of O(total tokens) rows); one call touches
     * all its levels, so LRU never evicts a level the call still holds.
@@ -43,7 +43,9 @@ object SuffixOps {
 
   /** Rank tables `(doc_id, gp, is_sep, r)` for doubling levels
     * 0..maxRound, built incrementally on top of whatever levels the memo
-    * already holds for this corpus; each level is localCheckpointed once.
+    * already holds for this corpus; each level is materialized once by
+    * [[Lineage.reset]], so it carries its measured size and the next
+    * level's self-join broadcasts a small side instead of shuffling both.
     */
   private def sharedLevels(docs: DataFrame, maxRound: Int): Map[Int, DataFrame] = {
     val (fp, _) = graft.core.Fingerprint.key(docs, "doc_id, text")
@@ -71,7 +73,7 @@ object SuffixOps {
             .select(col("doc_id"), col("gp"), col("is_sep"),
               col("nr").as("r"))
         }
-      r.localCheckpoint()
+      Lineage.reset(r)
     }
     (0 to maxRound).map(i => i -> lvl(i)).toMap
   }

@@ -1,6 +1,8 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** Minimal bridge into Spark's `private[sql]` API: the Column ↔
@@ -18,14 +20,19 @@ object GraftBridge {
   def observedRow(o: Observation): Row = o.getRow
 
   /** A localCheckpointed frame as a new frame over the SAME checkpointed
-    * RDD, with fresh attribute ids and the origin plan's statistics and
-    * constraints dropped (size falls back to the engine default).
+    * RDD, with fresh attribute ids, the origin plan's constraints dropped
+    * and its statistics replaced by the measured row count: `rowCount =
+    * rows` and Spark's own size formula for it (rows × the output's
+    * per-row width, 1 byte when empty).
     */
-  def withoutOriginStats(checkpointed: DataFrame): DataFrame =
+  def withMeasuredRows(checkpointed: DataFrame, rows: Long): DataFrame =
     checkpointed.queryExecution.analyzed match {
       case lr: LogicalRDD =>
         val session = checkpointed.sparkSession.asInstanceOf[classic.SparkSession]
-        classic.Dataset.ofRows(session,
-          lr.newInstance().copy()(session, None, None))
+        val fresh = lr.newInstance()
+        val stats = Statistics(
+          sizeInBytes = EstimationUtils.getOutputSize(fresh.output, BigInt(rows)),
+          rowCount = Some(BigInt(rows)))
+        classic.Dataset.ofRows(session, fresh.copy()(session, Some(stats), None))
     }
 }

@@ -80,7 +80,7 @@ class AnalyticsSpec extends SparkSpec {
       (2L, "view", 5.0, 5L)))
   }
 
-  test("keySkew: salted two-phase top-k equals the naive ranking; shares sum right") {
+  test("keySkew: the topKPerGroup top-k equals the naive ranking; shares sum right") {
     val ev = (1 to 100).flatMap(i =>
       Seq.fill(if (i == 7) 50 else if (i == 13) 20 else 1)(
         (i.toLong, "e"))).toDF("user_id", "event_type")

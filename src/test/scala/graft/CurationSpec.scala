@@ -36,7 +36,7 @@ class CurationSpec extends SparkSpec {
     assert(approx(out._3, 2.0 / 3)) // kept_frac is 6 dp-rounded
   }
 
-  test("stratifiedTopN == naive single-window top-n at every salt count") {
+  test("stratifiedTopN == naive single-window top-n over four input partitions") {
     // four input partitions, so the map-side pre-cut runs on each
     val docs = (0L until 300L).map(i => (i, s"lang${i % 3}"))
       .toDF("doc_id", "lang").repartition(4)

@@ -1,7 +1,12 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.catalyst.optimizer.BuildRight
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
 import graft.core.Lineage
 
@@ -16,6 +21,10 @@ class LineageSpec extends SparkSpec {
     df.queryExecution.analyzed.collectLeaves().collect {
       case lr: LogicalRDD => lr.rdd.id
     }.toSet
+
+  /** Spark's size formula for `rows` rows of `df`'s output. */
+  private def measured(df: DataFrame, rows: Long): BigInt =
+    EstimationUtils.getOutputSize(df.queryExecution.analyzed.output, BigInt(rows))
 
   private def nodes(n: Int): DataFrame =
     (0L until n).toDF("node").select(col("node"), (col("node") % 7).as("v"))
@@ -36,11 +45,47 @@ class LineageSpec extends SparkSpec {
     assert((cached intersect created).isEmpty)
   }
 
-  test("sizeInBytes stays at the engine default over 20 self-referencing rounds") {
+  test("sizeInBytes stays at the measured size over 20 self-referencing rounds") {
     val (x, _) = Lineage.iterate(nodes(50), 20)((x, _) => selfJoin(x))((_, _) => false)
-    assert(x.queryExecution.optimizedPlan.stats.sizeInBytes.bitLength <= 64)
+    assert(x.queryExecution.optimizedPlan.stats.sizeInBytes == measured(x, 50))
     assert(x.count() == 50)
     Lineage.release(x)
+  }
+
+  test("a reset frame carries its measured row count and size") {
+    val df = Lineage.reset(nodes(321).filter(col("v") =!= 2))
+    val stats = df.queryExecution.optimizedPlan.stats
+    val n = df.count()
+    assert(stats.rowCount.contains(BigInt(n)))
+    assert(stats.sizeInBytes == measured(df, n))
+    Lineage.release(df)
+  }
+
+  test("an empty reset frame is sized at 1 byte and still joins") {
+    val empty = Lineage.reset(nodes(10).filter(col("v") > 100))
+    val stats = empty.queryExecution.optimizedPlan.stats
+    assert(stats.rowCount.contains(BigInt(0)))
+    assert(stats.sizeInBytes == 1)
+    assert(nodes(10).join(empty, Seq("node")).count() == 0)
+    assert(nodes(10).join(empty, Seq("node"), "left").count() == 10)
+    Lineage.release(empty)
+  }
+
+  test("a small reset frame is the broadcast side of a join with a larger one") {
+    val small = Lineage.reset(nodes(20))
+    val big = nodes(200000)
+    val j = big.join(small.withColumnRenamed("v", "w"), Seq("node"))
+    val plan = j.queryExecution.executedPlan
+    def ops(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => ops(a.executedPlan)
+      case _ => p +: p.children.flatMap(ops)
+    }
+    val bhj = ops(plan).collect { case b: BroadcastHashJoinExec => b }
+    assert(bhj.size == 1, plan.toString)
+    assert(bhj.head.buildSide == BuildRight)
+    assert(ops(bhj.head.left).forall(!_.isInstanceOf[ShuffleExchangeExec]), plan.toString)
+    assert(j.count() == 20)
+    Lineage.release(small)
   }
 
   test("iterate keeps only the final state cached") {
@@ -71,5 +116,23 @@ class LineageSpec extends SparkSpec {
     assert(m.getLong(1) == df.agg(sum("v")).head().getLong(0))
     assert(out.count() == m.getLong(0))
     Lineage.release(out)
+  }
+
+  test("the metrics row holds the caller's metrics only, in order") {
+    val df = nodes(90)
+    val (out, m) = Lineage.reset(df, sum("v").as("s"), max("node").as("hi"))
+    assert(m.length == 2)
+    assert(m.schema.fieldNames.toSeq == Seq("s", "hi"))
+    assert(m.getLong(0) == df.agg(sum("v")).head().getLong(0))
+    assert(m.getLong(1) == 89L)
+    val (none, empty) = Lineage.reset(df, Nil: _*)
+    assert(empty.length == 0)
+    // a loop's stop test reads the first metric, as Louvain's and CC's do
+    var seen = Seq.empty[Long]
+    val (x, stopped) = Lineage.iterate(df, 5, sum("v").as("s")) {
+      (x, _) => x.select(col("node"), (col("v") * 0).as("v"))
+    } { (_, cur) => seen :+= cur.getLong(0); cur.getLong(0) == 0 }
+    assert(stopped && seen == Seq(0L))
+    Seq(out, none, x).foreach(Lineage.release)
   }
 }

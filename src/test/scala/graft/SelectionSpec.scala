@@ -14,7 +14,7 @@ class SelectionSpec extends SparkSpec {
   private def corpus(n: Int) =
     (1 to n).map(i => (i.toLong, 1L + (i * 7919) % 500)).toDF("doc_id", "w")
 
-  test("weightedSample: salted two-phase equals the naive single window") {
+  test("weightedSample: the topKPerGroup cut equals the naive single window") {
     val docs = corpus(300).repartition(4) // pre-cut runs per partition
     val naive = {
       val u60 = conv(substring(

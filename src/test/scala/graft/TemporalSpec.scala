@@ -154,7 +154,7 @@ class TemporalSpec extends SparkSpec {
     assert(rel < 0.5, s"KMV estimate ${bOut.getDouble(2)} off by $rel")
   }
 
-  test("kmvDistinct: salted two-phase top-k equals the global min-k") {
+  test("kmvDistinct: the topKPerGroup min-k equals the global min-k") {
     val df = (0 until 2000).map(i => ("g", i * 31)).toDF("grp", "k")
     val viaOp = Sketches.kmvDistinct(df, "grp", "k", k = 32)
       .collect().head.getDouble(2)
@@ -259,7 +259,7 @@ class TemporalSpec extends SparkSpec {
     assert(out(1).getDouble(2) > out(2).getDouble(2))
   }
 
-  test("bm25TopK: salted two-phase equals the naive single-window top-k") {
+  test("bm25TopK: the topKPerGroup cut equals the naive single-window top-k") {
     val docs = (0L until 200L).map(i =>
       (i, Seq.fill(1 + (i % 7).toInt)("term").mkString(" ") + s" pad$i"))
       .toDF("doc_id", "text")
