@@ -2,8 +2,8 @@ package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Observation, Row}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
-import org.apache.spark.sql.functions.{count, lit}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.functions.{coalesce, count, lit, size, sum, when}
+import org.apache.spark.sql.types.{ArrayType, StructType}
 
 /** The one owner of iteration state for loop-shaped jobs (clustering,
   * diffusion, PageRank-style scores, layouts):
@@ -25,19 +25,38 @@ object Lineage {
   def reset(df: DataFrame): DataFrame = reset(df, Nil: _*)._1
 
   /** Materialize `df` and observe, on that one pass (`Dataset.observe`,
-    * no second job), its row count plus the aggregate `metrics`. The new
-    * frame's statistics are the measured ones: `rowCount` and Spark's
-    * size formula for it (rows × per-row width, 1 byte when empty). The
-    * returned row holds `metrics` only, in order; with none it is empty.
+    * no second job), its row count, the element count of each top-level
+    * array column (a null array counts 0) and the aggregate `metrics`.
+    * The new frame's statistics are the measured ones: `rowCount` and
+    * Spark's size formula for it (rows × per-row width, 1 byte when
+    * empty), plus the array elements that formula leaves out — it
+    * counts one element per array value, so a 50-double embedding
+    * column would read 1/50 of its size. The returned row holds
+    * `metrics` only, in order; with none it is empty.
     */
   def reset(df: DataFrame, metrics: Column*): (DataFrame, Row) = {
+    // by attribute, not name: a frame may repeat a column name
+    val arrays = df.queryExecution.analyzed.output.flatMap(a => a.dataType match {
+      case ArrayType(elem, _) => Some((GraftBridge.column(a), elem.defaultSize))
+      case _ => None
+    })
+    val elements = arrays.zipWithIndex.map { case ((c, _), i) =>
+      coalesce(sum(when(c.isNull, 0L).otherwise(size(c))), lit(0L))
+        .as(s"__lineage_elems$i")
+    }
     val obs = Observation()
-    val cp = df.observe(obs, count(lit(1)).as("__lineage_rows"), metrics: _*)
+    val cp = df.observe(obs, count(lit(1)).as("__lineage_rows"),
+        elements ++ metrics: _*)
       .localCheckpoint()
     val all = GraftBridge.observedRow(obs)
-    val mine = new GenericRowWithSchema(all.toSeq.tail.toArray,
-      StructType(all.schema.fields.tail))
-    (GraftBridge.withMeasuredRows(cp, all.getLong(0)), mine)
+    val rows = all.getLong(0)
+    val extraBytes = arrays.zipWithIndex.map { case ((_, width), i) =>
+      BigInt(all.getLong(i + 1) - rows) * width
+    }.sum
+    val skip = 1 + arrays.size
+    val mine = new GenericRowWithSchema(all.toSeq.drop(skip).toArray,
+      StructType(all.schema.fields.drop(skip)))
+    (GraftBridge.withMeasuredRows(cp, rows, extraBytes), mine)
   }
 
   /** Free a checkpointed frame's blocks NOW. `Dataset.unpersist()` routes

@@ -45,10 +45,6 @@ object Knn {
     graft.core.Fingerprint.key(c, "cell_id, latent",
       max(size(col("latent").cast("array<double>"))))
 
-  /** Engine-reproducible euclidean distance — the shared kernel. */
-  private def l2dot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-    graft.sim.Similarity.l2(a, b)
-
   /** Scalable self-KNN (the HNSW-index replacement, scarf/ann.py:290-326):
     * multi-round seeded hyperplane LSH buckets + Hamming-1 multi-probe,
     * exact distances only WITHIN buckets, union of rounds, global top-k
@@ -360,7 +356,7 @@ object Knn {
         val joined = qside.join(cside, Seq("bucket"))
         (if (excludeSelf) joined.filter(col("src") =!= col("dst")) else joined)
           .select(col("src"), col("dst"),
-            l2dot(col("va"), col("vb")).as("dist"))
+            graft.sim.Similarity.l2(col("va"), col("vb")).as("dist"))
       } else {
       val hotB = cb.groupBy("bucket").agg(count(lit(1)).as("_bn"))
         .filter(col("_bn") > hotCap).select("bucket")
@@ -442,7 +438,7 @@ object Knn {
         .unionByName(hotJoined.select("src", "dst", "va", "vb"))
       (if (excludeSelf) joined.filter(col("src") =!= col("dst")) else joined)
         .select(col("src"), col("dst"),
-          l2dot(col("va"), col("vb")).as("dist"))
+          graft.sim.Similarity.l2(col("va"), col("vb")).as("dist"))
       }
     }(scala.concurrent.ExecutionContext.global) }
     val cand = candFuts

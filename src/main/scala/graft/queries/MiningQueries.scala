@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.dedup.Dedup
+import graft.sim.Similarity
 import graft.text.TextOps
 
 /** Round-6 mining surface: the operators between "dedup the corpus" and
@@ -31,6 +32,13 @@ object MiningQueries {
     val light = Seq((9900000L, "123")).toDF("doc_id", "text")
     base.unionByName(heavy).unionByName(light)
   }
+
+  /** Exact L2 top-k of the capped query sample of `vecs(vec_id, v)`
+    * over all of `vecs`, `(qid, vec_id, dist, rn)` — the ground truth
+    * the PQ and IVF recall queries score against. */
+  private def exactTopK(vecs: DataFrame, k: Int): DataFrame =
+    Similarity.l2TopK(Sample.capped(vecs, "vec_id").toDF("qid", "qvec"),
+      vecs.toDF("vec_id", "embedding"), k)
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -221,25 +229,8 @@ object MiningQueries {
     "q144_pq_recall" -> ((s, d) => {
       val vecs = Tables.t(s, d, "embeddings").select(col("vec_id"),
         col("embedding").cast("array<double>").as("v"))
-      val pq = graft.sim.Pq.pqSelfTopK(vecs)
-        .select(col("qid").as("src"), col("dst"))
-      val q = Sample.capped(vecs, "vec_id")
-        .select(col("vec_id").as("src"), col("v").as("va"))
-      val ex = graft.ops.Windows.topKPerGroup(
-          vecs.select(col("vec_id").as("dst"), col("v").as("vb"))
-            .crossJoin(broadcast(q)).filter(col("src") =!= col("dst"))
-            .select(col("src"), col("dst"),
-              round(graft.sim.Similarity.l2(col("va"), col("vb")), 6).as("dist")),
-          Seq("src"), 5, Seq(col("dist"), col("dst")))
-        .select("src", "dst")
-      val hits = ex.groupBy("src").agg(count(lit(1)).as("k"))
-        .join(ex.join(pq, Seq("src", "dst"), "left_semi")
-          .groupBy("src").agg(count(lit(1)).as("h")), Seq("src"), "left")
-        .na.fill(0, Seq("h"))
-      hits.agg(count(lit(1)).as("n_queries"),
-        round(sum(col("h")).cast("double")
-          / (lit(5.0) * count(lit(1)).cast("double")), 6).as("recall_mean"),
-        sum(when(col("h") === 5, 1).otherwise(0)).as("n_perfect"))
+      val pq = graft.sim.Pq.pqSelfTopK(vecs).select("qid", "dst")
+      Similarity.recallAtK(exactTopK(vecs, 5).select("qid", "vec_id"), pq, 5)
     }),
 
     // per-label embedding diversity via the closed-form pair identity
@@ -569,15 +560,8 @@ object MiningQueries {
         .select(col("qid").as("src"), col("dst"))
       val pq = graft.sim.Pq.pqSelfTopK(vecs)
         .select(col("qid").as("src"), col("dst"))
-      val q = Sample.capped(vecs, "vec_id")
-        .select(col("vec_id").as("src"), col("v").as("va"))
-      val ex = graft.ops.Windows.topKPerGroup(
-          vecs.select(col("vec_id").as("dst"), col("v").as("vb"))
-            .crossJoin(broadcast(q)).filter(col("src") =!= col("dst"))
-            .select(col("src"), col("dst"),
-              round(graft.sim.Similarity.l2(col("va"), col("vb")), 6).as("dist")),
-          Seq("src"), 5, Seq(col("dist"), col("dst")))
-        .select("src", "dst")
+      val ex = exactTopK(vecs, 5)
+        .select(col("qid").as("src"), col("vec_id").as("dst"))
       val hx = ex.join(ipq, Seq("src", "dst"), "left_semi")
         .groupBy("src").agg(count(lit(1)).as("h_ex"))
       val hp = pq.join(ipq, Seq("src", "dst"), "left_semi")
@@ -691,16 +675,8 @@ object MiningQueries {
         col("embedding").cast("array<double>").as("v"))
       val pq = graft.sim.Pq.pqSelfTopK(vecs, topK = 10)
         .select(col("qid"), col("dst"), col("rn"))
-      val q = Sample.capped(vecs, "vec_id")
-        .select(col("vec_id").as("src"), col("v").as("va"))
-      val ex = graft.ops.Windows.topKPerGroup(
-          vecs.select(col("vec_id").as("dst"), col("v").as("vb"))
-            .crossJoin(broadcast(q)).filter(col("src") =!= col("dst"))
-            .select(col("src"), col("dst"),
-              round(graft.sim.Similarity.l2(col("va"), col("vb")), 6).as("dist")),
-          Seq("src"), 10, Seq(col("dist"), col("dst")))
-        .select("src", "dst", "rn")
-      graft.sim.Similarity.rankBiasedOverlap(ex, pq).orderBy("qid")
+      val ex = exactTopK(vecs, 10).select("qid", "vec_id", "rn")
+      Similarity.rankBiasedOverlap(ex, pq).orderBy("qid")
     }),
 
     // reciprocal-rank fusion of the exact and PQ top-10 rankings per
@@ -712,21 +688,13 @@ object MiningQueries {
         col("embedding").cast("array<double>").as("v"))
       val pq = graft.sim.Pq.pqSelfTopK(vecs, topK = 10)
         .select(col("qid"), col("dst"), col("rn"))
-      val q = Sample.capped(vecs, "vec_id")
-        .select(col("vec_id").as("src"), col("v").as("va"))
-      val ex = graft.ops.Windows.topKPerGroup(
-          vecs.select(col("vec_id").as("dst"), col("v").as("vb"))
-            .crossJoin(broadcast(q)).filter(col("src") =!= col("dst"))
-            .select(col("src"), col("dst"),
-              round(graft.sim.Similarity.l2(col("va"), col("vb")), 6).as("dist")),
-          Seq("src"), 10, Seq(col("dist"), col("dst")))
-        .select("src", "dst", "rn")
+      val ex = exactTopK(vecs, 10).select("qid", "vec_id", "rn")
       // rrfFuse unions BOTH lists' qids into the output — restrict the
       // PQ side to the capped query sample so the fused qid set matches
       // the exact side (and the oracle) at any scale
-      val pqc = pq.join(broadcast(q.select(col("src").as("qid"))),
-        Seq("qid"), "left_semi")
-      graft.sim.Similarity.rrfFuse(ex, pqc).orderBy("qid", "rn")
+      val pqc = pq.join(broadcast(Sample.capped(vecs, "vec_id")
+        .select(col("vec_id").as("qid"))), Seq("qid"), "left_semi")
+      Similarity.rrfFuse(ex, pqc).orderBy("qid", "rn")
     }),
 
     // incremental IVF maintenance: a planted refresh snapshot (every

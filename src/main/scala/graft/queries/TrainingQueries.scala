@@ -79,10 +79,6 @@ object TrainingQueries {
     Similarity.cosineTopK(q, embs(s, d), 5, excludeSelf = true)
   }
 
-  // exact-truth query-sample cap — see Sample's scaladoc for the
-  // min(n/50, QCAP) contract and the cross-engine md5 pick
-  private def cappedQuerySample(df: DataFrame, idCol: String): DataFrame =
-    Sample.capped(df, idCol)
   private def qsIn(idExpr: String): String = Sample.inSql("v", "vec_id", idExpr)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -427,29 +423,16 @@ object TrainingQueries {
     "q125_ann_recall" -> ((s, d) => {
       val latent = embs(s, d).select(col("vec_id").as("cell_id"),
         col("embedding").cast("array<double>").as("latent"))
-      val q = cappedQuerySample(latent, "cell_id")
-        .select(col("cell_id").as("src"), col("latent").as("va"))
+      val q = Sample.capped(latent, "cell_id").toDF("qid", "qvec")
       // the ANN side shares the SAME capped query set as the exact side
       // (semi-join, the q242 discipline) — past the QCAP the 1-in-50
       // filter alone would still evaluate ~n/50 ANN queries whose
       // results the capped aggregation discards
       val ann = graft.pipeline.Knn.bucketedSelfKnn(latent, 5, rounds = 6)
-        .join(q.select("src"), Seq("src"), "left_semi").select("src", "dst")
-      val ex = graft.ops.Windows.topKPerGroup(
-          latent.select(col("cell_id").as("dst"), col("latent").as("vb"))
-            .crossJoin(broadcast(q)).filter(col("src") =!= col("dst"))
-            .select(col("src"), col("dst"),
-              round(graft.sim.Similarity.l2(col("va"), col("vb")), 6).as("dist")),
-          Seq("src"), 5, Seq(col("dist"), col("dst")))
+        .join(q.select(col("qid").as("src")), Seq("src"), "left_semi")
         .select("src", "dst")
-      val hits = ex.groupBy("src").agg(count(lit(1)).as("k"))
-        .join(ex.join(ann, Seq("src", "dst"), "left_semi")
-          .groupBy("src").agg(count(lit(1)).as("h")), Seq("src"), "left")
-        .na.fill(0, Seq("h"))
-      hits.agg(count(lit(1)).as("n_queries"),
-        round(sum(col("h")).cast("double")
-          / (lit(5.0) * count(lit(1)).cast("double")), 6).as("recall_mean"),
-        sum(when(col("h") === 5, 1).otherwise(0)).as("n_perfect"))
+      Similarity.recallAtK(
+        Similarity.l2TopK(q, embs(s, d), 5).select("qid", "vec_id"), ann, 5)
     }),
 
     // Retrieval-quality metrics over the same oracled ANN chain as
@@ -465,20 +448,14 @@ object TrainingQueries {
     "q241_retrieval_metrics" -> ((s, d) => {
       val latent = embs(s, d).select(col("vec_id").as("cell_id"),
         col("embedding").cast("array<double>").as("latent"))
-      val q = cappedQuerySample(latent, "cell_id")
-        .select(col("cell_id").as("src"), col("latent").as("va"))
+      val q = Sample.capped(latent, "cell_id").toDF("src", "va")
       // ANN side bounded by the same capped query sample as the exact
       // side (see q125) — O(QCAP·k), not O(n/50·k), at any scale
       val ann = graft.pipeline.Knn.bucketedSelfKnn(latent, 5, rounds = 6)
         .join(q.select("src"), Seq("src"), "left_semi")
         .select("src", "dst", "rn")
-      val ex = graft.ops.Windows.topKPerGroup(
-          latent.select(col("cell_id").as("dst"), col("latent").as("vb"))
-            .crossJoin(broadcast(q)).filter(col("src") =!= col("dst"))
-            .select(col("src"), col("dst"),
-              round(graft.sim.Similarity.l2(col("va"), col("vb")), 6).as("dist")),
-          Seq("src"), 5, Seq(col("dist"), col("dst")))
-        .select("src", "dst")
+      val ex = Similarity.l2TopK(q.toDF("qid", "qvec"), embs(s, d), 5)
+        .select(col("qid").as("src"), col("vec_id").as("dst"))
       // ANN hits that are true top-5 neighbors, keeping the ANN rank
       val rel = ann.join(ex, Seq("src", "dst"), "left_semi")
       val rrOf = array(Seq(60L, 30L, 20L, 15L, 12L).map(lit): _*)
@@ -565,29 +542,15 @@ object TrainingQueries {
         col("embedding").cast("array<double>").as("v"))
       def topk(dims: Int): DataFrame = {
         val proj = if (dims == 0) col("v") else slice(col("v"), 1, dims)
-        val side = vecs.select(col("vec_id"), proj.as("p"))
-        val q = cappedQuerySample(side, "vec_id")
-          .select(col("vec_id").as("src"), col("p").as("pa"))
-        graft.ops.Windows.topKPerGroup(
-            side.select(col("vec_id").as("dst"), col("p").as("pb"))
-              .crossJoin(broadcast(q)).filter(col("src") =!= col("dst"))
-              .select(col("src"), col("dst"),
-                round(graft.sim.Similarity.l2(col("pa"), col("pb")), 6).as("dist")),
-            Seq("src"), 5, Seq(col("dist"), col("dst")))
-          .select("src", "dst")
+        val side = vecs.select(col("vec_id"), proj.as("embedding"))
+        Similarity.l2TopK(Sample.capped(side, "vec_id").toDF("qid", "qvec"),
+            side, 5)
+          .select("qid", "vec_id")
       }
       val full = topk(0).localCheckpoint()
       Seq(8, 16, 32).map { dims =>
-        val hits = full.groupBy("src").agg(count(lit(1)).as("k"))
-          .join(full.join(topk(dims), Seq("src", "dst"), "left_semi")
-            .groupBy("src").agg(count(lit(1)).as("h")), Seq("src"), "left")
-          .na.fill(0, Seq("h"))
-        hits.agg(count(lit(1)).as("n_queries"),
-          round(sum(col("h")).cast("double")
-            / (lit(5.0) * count(lit(1)).cast("double")), 6).as("recall_mean"),
-          sum(when(col("h") === 5, 1L).otherwise(0L)).as("n_perfect"))
-          .select(lit(dims).as("dims"), col("n_queries"),
-            col("recall_mean"), col("n_perfect"))
+        Similarity.recallAtK(full, topk(dims), 5)
+          .select(lit(dims).as("dims"), col("*"))
       }.reduce(_.unionByName(_)).orderBy("dims")
     }),
 

@@ -3,6 +3,7 @@ package graft.sim
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.queries.Sample
 
 /** Product quantization (Jégou et al. 2011, "Product Quantization for
   * Nearest Neighbor Search") — the codebook compression path between
@@ -27,15 +28,6 @@ import org.apache.spark.sql.functions._
   * included — replays engine-exact in the DuckDB oracle.
   */
 object Pq {
-
-  /** The query-sample pick shared with the oracle gates: 1-in-queryMod
-    * ids, capped at [[graft.queries.Sample.QCAP]] by the md5-ordered
-    * LIMIT — min(n/mod, cap) queries, so the per-query broadcast ADC
-    * tables and the exact ground-truth crossJoins are O(n·cap) at ANY
-    * scale (the cap is vacuous at every test SF; Spark plans this as
-    * TakeOrderedAndProject, a distributed partial top-K). */
-  private def sampleQueries(df: DataFrame, queryMod: Int): DataFrame =
-    graft.queries.Sample.capped(df, "vec_id", queryMod)
 
   /** Each query's `n` nearest IVF lists by squared centroid distance,
     * list id breaking ties: `(qid, list, d2, rn)`.
@@ -105,7 +97,7 @@ object Pq {
       col("cluster").cast("int").as("list"))
     val centDf = centers.zipWithIndex.map { case (c, i) => (i + 1, c.toSeq) }
       .toSeq.toDF("list", "lc")
-    val qs = sampleQueries(cached, queryMod)
+    val qs = Sample.capped(cached, "vec_id", queryMod)
       .select(col("vec_id").as("qid"), col("v"))
     val probes = nearestLists(qs, centDf, nProbe).select("qid", "list")
     val (codes, cents) = trainCodebooks(cached, dim, m, k, iters, seedPq)
@@ -145,7 +137,7 @@ object Pq {
       col("cluster").cast("int").as("list"))
     val centDf = centers.zipWithIndex.map { case (c, i) => (i + 1, c.toSeq) }
       .toSeq.toDF("list", "lc")
-    val qs = sampleQueries(cached, queryMod)
+    val qs = Sample.capped(cached, "vec_id", queryMod)
       .select(col("vec_id").as("qid"), col("v"))
     val probes = nearestLists(qs, centDf, maxProbe)
       .select(col("qid"), col("list"), col("rn").as("prank"))
@@ -167,19 +159,12 @@ object Pq {
         Seq("nprobe", "qid"), topK, Seq(col("adc_micro"), col("dst")))
       .select("nprobe", "qid", "dst")
     // exact ground truth over the same query sample
-    val q2 = sampleQueries(cached, queryMod)
-      .select(col("vec_id").as("src"), col("v").as("va"))
-    val ex = graft.ops.Windows.topKPerGroup(
-        cached.select(col("vec_id").as("dst"), col("v").as("vb"))
-          .crossJoin(broadcast(q2)).filter(col("src") =!= col("dst"))
-          .select(col("src"), col("dst"),
-            round(Similarity.l2(col("va"), col("vb")), 6).as("dist")),
-        Seq("src"), topK, Seq(col("dist"), col("dst")))
-      .select("src", "dst")
-    val hits = ex.toDF("qid", "dst")
-      .join(swept, Seq("qid", "dst"), "inner")
+    val ex = Similarity.l2TopK(qs.toDF("qid", "qvec"),
+        cached.toDF("vec_id", "embedding"), topK)
+      .select(col("qid"), col("vec_id").as("dst"))
+    val hits = ex.join(swept, Seq("qid", "dst"), "inner")
       .groupBy("nprobe", "qid").agg(count(lit(1)).as("h"))
-    val base = ex.select(col("src").as("qid")).distinct()
+    val base = ex.select("qid").distinct()
       .select(col("qid"), explode(sequence(lit(1), lit(maxProbe))).as("nprobe"))
     base.join(hits, Seq("nprobe", "qid"), "left").na.fill(0, Seq("h"))
       .groupBy("nprobe").agg(count(lit(1)).as("n_queries"),
@@ -292,7 +277,7 @@ object Pq {
   private def adcTable(cached: DataFrame, dim: Int, m: Int, queryMod: Int,
                        cents: DataFrame): DataFrame = {
     val w = dim / m
-    val qsub = sampleQueries(cached, queryMod)
+    val qsub = Sample.capped(cached, "vec_id", queryMod)
       .select(col("vec_id").as("qid"), explode(expr(
         s"""transform(sequence(0, ${m - 1}),
               s -> named_struct('s', s, 'qv', slice(v, s * $w + 1, $w)))"""))

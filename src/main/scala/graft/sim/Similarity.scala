@@ -160,7 +160,10 @@ object Similarity {
     * shape and tie-break discipline as [[cosineTopK]] (6 dp-rounded
     * dist asc, then id). Unlike cosine it is not magnitude-blind, so a
     * query identical to a corpus vector beats every merely-collinear
-    * one — the property mapping projections rely on.
+    * one — the property mapping projections rely on. It is also the
+    * exact ground truth every retrieval-quality query (q125, q144,
+    * q174, q179, q182, q192, q241, q242) scores its ANN, PQ or IVF
+    * index against.
     */
   def l2TopK(queries: DataFrame, corpus: DataFrame, k: Int,
              excludeSelf: Boolean = true): DataFrame = {
@@ -430,6 +433,24 @@ object Similarity {
       .na.fill(0L, Seq("_num", "n_common"))
       .select(col("qid"), col("n_common"),
         round(col("_num").cast("double") / lit(rboDen), 6).as("rbo"))
+  }
+
+  /** Recall@k of an approximate top-k against the exact one. Both
+    * sides are `(query, neighbour)` pairs, read by position; the query
+    * set is `truth`'s. Per query, h counts the true neighbours `approx`
+    * also lists (0 when it lists none). Returns one row `(n_queries,
+    * recall_mean = Σh / (k·n_queries) at 6 dp, n_perfect = #[h = k])`.
+    */
+  def recallAtK(truth: DataFrame, approx: DataFrame, k: Int): DataFrame = {
+    val t = truth.toDF("src", "dst")
+    val hits = t.select("src").distinct()
+      .join(t.join(approx.toDF("src", "dst"), Seq("src", "dst"), "left_semi")
+        .groupBy("src").agg(count(lit(1)).as("h")), Seq("src"), "left")
+      .na.fill(0, Seq("h"))
+    hits.agg(count(lit(1)).as("n_queries"),
+      round(sum(col("h")).cast("double")
+        / (lit(k.toDouble) * count(lit(1)).cast("double")), 6).as("recall_mean"),
+      sum(when(col("h") === k, 1L).otherwise(0L)).as("n_perfect"))
   }
 
   /** RRF denominator D = lcm(k0+1 .. k0+depth) and the integer

@@ -23,15 +23,17 @@ object GraftBridge {
     * RDD, with fresh attribute ids, the origin plan's constraints dropped
     * and its statistics replaced by the measured row count: `rowCount =
     * rows` and Spark's own size formula for it (rows × the output's
-    * per-row width, 1 byte when empty).
+    * per-row width, 1 byte when empty) plus `extraBytes`.
     */
-  def withMeasuredRows(checkpointed: DataFrame, rows: Long): DataFrame =
+  def withMeasuredRows(checkpointed: DataFrame, rows: Long,
+                       extraBytes: BigInt): DataFrame =
     checkpointed.queryExecution.analyzed match {
       case lr: LogicalRDD =>
         val session = checkpointed.sparkSession.asInstanceOf[classic.SparkSession]
         val fresh = lr.newInstance()
         val stats = Statistics(
-          sizeInBytes = EstimationUtils.getOutputSize(fresh.output, BigInt(rows)),
+          sizeInBytes = EstimationUtils.getOutputSize(fresh.output, BigInt(rows))
+            + extraBytes,
           rowCount = Some(BigInt(rows)))
         classic.Dataset.ofRows(session, fresh.copy()(session, Some(stats), None))
     }

@@ -113,6 +113,31 @@ class DedupSimSpec extends SparkSpec {
     assert(r === Seq(Seq(1L, 1), Seq(2L, 2), Seq(3L, 3)))
   }
 
+  test("l2TopK: 6 dp ties break by vec_id; self excluded unless asked; k past the corpus") {
+    val corpus = Seq(
+      (10L, Array(1.0, 1.0)), (11L, Array(1.0, 1.0)),
+      (12L, Array(2.0000001, 1.0)), (13L, Array(1.0, 2.0)),
+      (14L, Array(4.0, 5.0))).toDF("vec_id", "embedding")
+    val q = corpus.filter($"vec_id" === 10).toDF("qid", "qvec")
+    // 12 is farther than 13 unrounded and level with it at 6 dp
+    val raw = corpus.join(q).select($"vec_id",
+        Similarity.l2($"qvec", $"embedding")).as[(Long, Double)].collect().toMap
+    assert(raw(12L) > raw(13L))
+    def top(excludeSelf: Boolean) = rows(Similarity.l2TopK(q, corpus, 10, excludeSelf)
+      .orderBy("rn").select("vec_id", "dist", "rn"))
+    assert(top(excludeSelf = true) === Seq(Seq(11L, 0.0, 1), Seq(12L, 1.0, 2),
+      Seq(13L, 1.0, 3), Seq(14L, 5.0, 4)))
+    assert(top(excludeSelf = false).take(2) === Seq(Seq(10L, 0.0, 1), Seq(11L, 0.0, 2)))
+  }
+
+  test("recallAtK: a query with no approximate hits counts with h = 0") {
+    val truth = Seq((1L, 10L), (1L, 11L), (2L, 20L), (2L, 21L)).toDF("q", "n")
+    val approx = Seq((1L, 11L), (1L, 10L), (2L, 99L), (3L, 30L)).toDF("q", "n")
+    assert(rows(Similarity.recallAtK(truth, approx, 2)) === Seq(Seq(2L, 0.5, 1L)))
+    assert(rows(Similarity.recallAtK(truth, approx.limit(0), 2)) ===
+      Seq(Seq(2L, 0.0, 0L)))
+  }
+
   test("cosine of identical vectors is 1, orthogonal 0, opposite -1") {
     val df = Seq((Array(1.0, 2.0), Array(1.0, 2.0))).toDF("a", "b")
     val c = df.select(Similarity.cosine(col("a"), col("b"))).as[Double].head()

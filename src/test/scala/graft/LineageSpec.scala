@@ -26,6 +26,12 @@ class LineageSpec extends SparkSpec {
   private def measured(df: DataFrame, rows: Long): BigInt =
     EstimationUtils.getOutputSize(df.queryExecution.analyzed.output, BigInt(rows))
 
+  /** Every operator of a physical plan, through adaptive wrappers. */
+  private def ops(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => ops(a.executedPlan)
+    case _ => p +: p.children.flatMap(ops)
+  }
+
   private def nodes(n: Int): DataFrame =
     (0L until n).toDF("node").select(col("node"), (col("node") % 7).as("v"))
 
@@ -76,16 +82,40 @@ class LineageSpec extends SparkSpec {
     val big = nodes(200000)
     val j = big.join(small.withColumnRenamed("v", "w"), Seq("node"))
     val plan = j.queryExecution.executedPlan
-    def ops(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => ops(a.executedPlan)
-      case _ => p +: p.children.flatMap(ops)
-    }
     val bhj = ops(plan).collect { case b: BroadcastHashJoinExec => b }
     assert(bhj.size == 1, plan.toString)
     assert(bhj.head.buildSide == BuildRight)
     assert(ops(bhj.head.left).forall(!_.isInstanceOf[ShuffleExchangeExec]), plan.toString)
     assert(j.count() == 20)
     Lineage.release(small)
+  }
+
+  test("a reset frame's size counts every array element") {
+    // 40k × 50 doubles: about 16 MB of elements, 960 kB by Spark's formula
+    val vecs = Lineage.reset(spark.range(40000).select(col("id").as("node"),
+      array_repeat(col("id").cast("double"), 50).as("vec")))
+    assert(vecs.queryExecution.optimizedPlan.stats.sizeInBytes >= 16000000)
+    val big = spark.range(200000).select(col("id").as("node"), (col("id") % 7).as("v"))
+    val j = big.join(vecs, Seq("node"))
+    val plan = j.queryExecution.executedPlan
+    val bhj = ops(plan).collect { case b: BroadcastHashJoinExec => b }
+    assert(bhj.forall(_.buildSide != BuildRight), plan.toString)
+    assert(j.count() == 40000)
+    Lineage.release(vecs)
+  }
+
+  test("a null array, or no row, adds no array elements to a reset frame's size") {
+    val df = nodes(100).select(col("node"),
+      when(col("v") === 0, lit(null)).otherwise(array_repeat(col("v"), 3)).as("a"))
+    val out = Lineage.reset(df)
+    val nulls = df.filter(col("a").isNull).count()
+    assert(nulls > 0)
+    val elems = 3 * (100 - nulls)
+    assert(out.queryExecution.optimizedPlan.stats.sizeInBytes ==
+      measured(out, 100) + (elems - 100) * 8)
+    val empty = Lineage.reset(df.filter(col("node") < 0))
+    assert(empty.queryExecution.optimizedPlan.stats.sizeInBytes == 1)
+    Seq(out, empty).foreach(Lineage.release)
   }
 
   test("iterate keeps only the final state cached") {
