@@ -52,6 +52,99 @@ class SuffixSpec extends SparkSpec {
       out.getLong(3)) == ((3L, 8L, 4L, 2L)))
   }
 
+  // Repeats across documents (1 = 8, the 'b c d … m' run of 5 and 6),
+  // a one-token doc, an empty-text doc (one empty token) and a doc
+  // shorter than most windows.
+  private val corpus = Seq(
+    1L -> "a b c a b c d",
+    2L -> "a b c a b",
+    3L -> "x",
+    4L -> "",
+    5L -> "b c d e f g h i j k l m",
+    6L -> "c d e f g h i j k l m n",
+    7L -> "a b",
+    8L -> "a b c a b c d")
+
+  /** The token stream in plain Scala, one (doc, token) per position:
+    * each doc's whitespace split (limit -1 keeps empty tokens, as Spark's
+    * `split` does) closed by its unique separator (doc None), docs in id
+    * order. */
+  private val stream: Vector[(Option[Long], String)] =
+    corpus.sortBy(_._1).flatMap { case (id, t) =>
+      t.split("\\s+", -1).toSeq.map(Some(id) -> _) :+ (None -> s"\u0001$id")
+    }.toVector
+
+  /** The length-`len` token window at every position, cut at the
+    * stream's end. */
+  private def windows(len: Int): Vector[Vector[String]] = {
+    val toks = stream.map(_._2)
+    toks.indices.map(g => toks.slice(g, g + len)).toVector
+  }
+
+  private def bruteReport(len: Int): (Long, Long, Long, Long) = {
+    val sizes = windows(len).groupBy(identity).values.map(_.size.toLong).toSeq
+    (len.toLong, sizes.size.toLong, sizes.filter(_ >= 2).sum, sizes.max)
+  }
+
+  private def reportRows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().toSeq.map(r =>
+      (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+
+  test("repeatAtLengths / repeatSpectrum / repeatCoverage match a brute-force window count") {
+    val docs = corpus.toDF("doc_id", "text")
+    assert(reportRows(SuffixOps.repeatAtLengths(docs, (1 to 12).reverse))
+      == (1 to 12).map(bruteReport))
+    assert(reportRows(SuffixOps.repeatSpectrum(docs, rounds = 3))
+      == Seq(1, 2, 4, 8).map(bruteReport))
+    // a repeated length keeps its own row: neither merged nor doubled
+    assert(reportRows(SuffixOps.repeatAtLengths(docs, Seq(3, 5, 3)))
+      == Seq(3, 3, 5).map(bruteReport))
+    val w = windows(4)
+    val size = w.groupBy(identity).map { case (k, v) => k -> v.size }
+    val want = stream.map(_._1).zip(w.map(size))
+      .collect { case (Some(id), c) => id -> c }
+      .groupBy(_._1).map { case (id, cs) =>
+        val rep = cs.count(_._2 >= 2).toLong
+        id -> ((cs.size.toLong, rep,
+          math.round(rep.toDouble / cs.size * 1e6) / 1e6))
+      }
+    val got = SuffixOps.repeatCoverage(docs, rounds = 2).collect()
+      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3))))
+      .toMap
+    assert(got == want)
+  }
+
+  test("repeatSpectrum: job budget with AQE off in a fresh session") {
+    // 12 jobs: the corpus key (1), the token stream's ordinal (sample +
+    // counts, 2) and reset (1), one reset per level 0..3 (4; the level's
+    // window is its only shuffle), the broadcasts of levels 1..3's
+    // shifted self-joins (3) and the one report (1). A global dense
+    // re-rank per level costs its own sampling, counting and re-join
+    // jobs on top (27 jobs).
+    val fresh = spark.newSession()
+    fresh.conf.set("spark.sql.adaptive.enabled", "false")
+    val docs = fresh.createDataFrame(corpus).toDF("doc_id", "text")
+    val sc = fresh.sparkContext
+    val group = "suffix-job-budget"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(counter)
+    sc.setJobGroup(group, "SuffixOps job budget")
+    try SuffixOps.repeatSpectrum(docs, rounds = 3).collect()
+    finally {
+      sc.clearJobGroup()
+      org.apache.spark.ListenerDrain.drain(sc)
+      sc.removeSparkListener(counter)
+    }
+    assert(jobs.get == 12)
+  }
+
   test("mutualTopPairs: isolated matches found, crowd asymmetry rejected, dup pair NULL margin") {
     // (1,2) isolated mutual pair at distance 1; (3,4) mutual at 1.5;
     // (5,6) exact duplicates → mutual with NULL margin.
