@@ -135,6 +135,7 @@ object Sketch {
     val spark = edges.sparkSession
     import spark.implicits._
     val hasW = edges.columns.contains("weight")
+    // driver-bound: caller Scale.pcstOnDriver gate: the cells of a ≤ 5M-edge graph
     val cells = clusters.select(col("cell_id").cast("long")).as[Long].collect().sorted
     val idx = cells.zipWithIndex.toMap
     val collected = (if (hasW) edges.select(col("src").cast("long"), col("dst").cast("long"),
@@ -144,9 +145,11 @@ object Sketch {
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"), col("weight"))
       .groupBy("a", "b").agg(max("weight").as("w"))
+      // driver-bound: caller Scale.pcstOnDriver gate (≤ 5M edges)
       .as[(Long, Long, Double)].collect()
       .filter(t => idx.contains(t._1) && idx.contains(t._2))
       .sortBy(t => (t._1, t._2)) // collect order is not deterministic; event ids are
+    // driver-bound: the seeds are a subset of the gated cells above
     val seedIds = seeds.select(col("cell_id").cast("long")).as[Long].collect().toSet
     val prize = cells.map(c => if (seedIds(c)) SeedReward else NonSeedReward)
     val wMax = if (collected.isEmpty) 1.0 else math.max(collected.map(_._3).max, 1e-300)

@@ -1,7 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Join-shaped kernels of the reference (SURVEY.md §2.5). */
@@ -33,23 +32,28 @@ object Joins {
     a.join(broadcast(b), a("lo") < b("b_hi") && a("hi") > b("b_lo"))
 
   /** Skew-salted equi-join: the big (skewed) side gets a deterministic
-    * row-derived salt in [0, salts); the small side is replicated once
-    * per salt; the join key becomes (key, salt) — a single hot key's
-    * rows now spread across `salts` reducer partitions instead of one.
-    * Result set is IDENTICAL to `big.join(small, key)` (every big row
-    * still meets every matching small row, exactly once, because the
-    * small side carries all salts). The manual form of what AQE's
-    * skew-join split does at runtime — for when the skew is known ahead
-    * of time (a boilerplate digest, a null-ish default key) or the join
-    * feeds an operator AQE cannot split.
+    * position salt in [0, salts); the small side is replicated once per
+    * salt; the join key becomes (key, salt) — a single hot key's rows now
+    * spread across `salts` reducer partitions instead of one. Result set
+    * is IDENTICAL to `big.join(small, key)` (every big row still meets
+    * every matching small row, exactly once, because the small side
+    * carries all salts). The manual form of what AQE's skew-join split
+    * does at runtime — for when the skew is known ahead of time (a
+    * boilerplate digest, a null-ish default key) or the join feeds an
+    * operator AQE cannot split.
     *
-    * The salt hashes the big side's WHOLE row (xxhash64), not the key —
-    * salting by key would put the hot key's rows back in one partition.
+    * The salt is the row's position — its partition-local index, phase-
+    * offset by the partition id — not a content hash: fully identical
+    * duplicate rows of a hot key then spread across all salts instead of
+    * collapsing onto one, and unlike an aggregation a join has no
+    * map-side pre-combine to absorb them. A position depends only on
+    * (partition, row order), so the salt is stable under task retry
+    * whenever the big side's per-partition order is (any file scan).
     */
   def saltedJoin(big: DataFrame, small: DataFrame, key: String,
                  salts: Int = 16): DataFrame = {
     val saltedBig = big.withColumn("_salt",
-      pmod(xxhash64(struct(big.columns.map(col): _*)), lit(salts)))
+      pmod(monotonically_increasing_id() + spark_partition_id(), lit(salts)))
     val rep = small.crossJoin(
       broadcast(big.sparkSession.range(salts).select(col("id").as("_salt"))))
     saltedBig.join(rep, Seq(key, "_salt")).drop("_salt")

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Skew-mitigation utilities (SURVEY.md §4, "salting for skew"). A
@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
   * mean/variance via moments).
   *
   * AQE's skew-join splitting covers joins at runtime; salting is the
-  * static pattern for aggregations and for engines without AQE.
+  * static pattern for aggregations and for engines without AQE. The
+  * salted join is [[Joins.saltedJoin]].
   */
 object Skew {
 
@@ -32,37 +33,4 @@ object Skew {
       .agg(sum(col(valueCol)).as("_s"), count(lit(1)).as("_n"))
       .groupBy(col(key))
       .agg(sum(col("_s")).as("sum_value"), sum(col("_n")).as("n"))
-
-  /** Broadcast-salt the small side of a skewed join: replicate each small-
-    * side row `nSalts` times and salt the big side, so a hot key's rows
-    * split across `nSalts` tasks. Returns (saltedBig, explodedSmall) ready
-    * to equi-join on (key, _salt).
-    *
-    * The big-side salt is a per-partition ROUND-ROBIN (partition id +
-    * partition-local row index, mod nSalts), not a content hash: fully
-    * identical duplicate rows of a hot key then spread across all salts
-    * instead of collapsing onto one — the exact duplicate-heavy case the
-    * mitigation targets (and, unlike aggregation, a join has no map-side
-    * pre-combine to absorb them). The salt stays deterministic under task
-    * retry whenever the big side's per-partition row order is
-    * deterministic (any file scan; avoid feeding a post-shuffle frame with
-    * nondeterministic order); unlike monotonically_increasing_id the value
-    * depends only on (partition, position), never on scheduling.
-    */
-  def saltJoinSides(big: DataFrame, small: DataFrame, key: String,
-                    nSalts: Int): (DataFrame, DataFrame) = {
-    val schema = org.apache.spark.sql.types.StructType(big.schema.fields :+
-      org.apache.spark.sql.types.StructField("_salt",
-        org.apache.spark.sql.types.IntegerType, nullable = false))
-    val rdd = big.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var i = pid // phase-offset partitions so salts don't align
-      it.map { r => i += 1
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ math.floorMod(i, nSalts))
-      }
-    }
-    val saltedBig = big.sparkSession.createDataFrame(rdd, schema)
-    val explodedSmall = small.withColumn("_salt",
-      explode(sequence(lit(0), lit(nSalts - 1))))
-    (saltedBig, explodedSmall)
-  }
 }

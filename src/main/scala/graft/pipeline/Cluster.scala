@@ -137,11 +137,13 @@ object Cluster {
       .withColumn("h", md5(concat(lit(s"$seed:"), col("cell_id"))))
       .withColumn("rv", row_number().over(byVec)).filter(col("rv") === 1)
       .orderBy(col("h"), col("cell_id")).limit(k)
+      // driver-bound: k rows (the initial centers)
       .select("latent").as[Seq[Double]].collect().map(_.toArray)
     for (_ <- 1 to iters) {
       val means = latent.withColumn("c0", assignUdf(centers)(col("latent")))
         .select(col("c0"), posexplode(col("latent")).as(Seq("pos", "x")))
         .groupBy("c0", "pos").agg(round(avg(col("x")), 9).as("m"))
+        // driver-bound: k × dims center coordinates
         .as[(Int, Int, Double)].collect()
         .groupBy(_._1).map { case (c, rs) =>
           c -> rs.sortBy(_._2).map(_._3).toArray
@@ -208,6 +210,7 @@ object Cluster {
       val m = adj.getOrElseUpdate(a, scala.collection.mutable.Map())
       m(b) = m.getOrElse(b, 0.0) + w
     }
+    // driver-bound: facade Scale.driverGraph gate (runClustering → louvain)
     edges.select("src", "dst", "weight").as[(Long, Long, Double)].collect()
       .foreach { case (s, d, w) => if (s != d) { add(s, d, w); add(d, s, w) } }
     adj.map { case (n, m) => n -> m.toMap }.toMap
@@ -351,6 +354,7 @@ object Cluster {
     val spark = edges.sparkSession
     import spark.implicits._
     val adj = symmetricAdjacency(edges)
+    // driver-bound: facade Scale.driverGraph gate (runClustering → louvain → refine)
     val lab = labels.select("cell_id", "cluster").as[(Long, Long)].collect().toMap
     // a sub never spans two communities, so sub ids alone carry the
     // (comm, sub) identity

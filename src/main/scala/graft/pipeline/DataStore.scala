@@ -178,14 +178,7 @@ case class DataStore(
       if (densLambda > 0) Some(cache("knn").select("src", "dst", "dist"))
       else None
     val edges = cache("edges")
-    // after integrateAssays the single-assay latent is gone — init from
-    // deterministic hash-random coords and let the SGD over the MERGED
-    // edges do the layout (UMAP's standard random-init mode)
-    val init = caches.get("latent").map(UmapLayout.initFromLatent)
-      .getOrElse(UmapLayout.randomInit(
-        edges.select(col("src").as("cell_id"))
-          .unionByName(edges.select(col("dst").as("cell_id"))).distinct(),
-        seed))
+    val init = layoutInit(edges, seed)
     val um =
       if (graphOnDriver)
         UmapLayout.layout(edges, init, nEpochs = nEpochs,
@@ -194,6 +187,19 @@ case class DataStore(
         seed = seed, densLambda = densLambda, dists = dists)
     copy(cells = cells.drop("umap1", "umap2").join(um, Seq("cell_id"), "left"))
   }
+
+  /** The init [[runUmap]] and [[runTsne]] lay out from: the first two
+    * latent components, or — after integrateAssays drops the
+    * single-assay latent — deterministic hash-random coords over the
+    * edges' nodes, so the layout of the MERGED edges does the work
+    * (UMAP's standard random-init mode).
+    */
+  private def layoutInit(edges: DataFrame, seed: Long): DataFrame =
+    caches.get("latent").map(UmapLayout.initFromLatent)
+      .getOrElse(UmapLayout.randomInit(
+        edges.select(col("src").as("cell_id"))
+          .unionByName(edges.select(col("dst").as("cell_id"))).distinct(),
+        seed))
 
   /** auto_filter_cells (scarf/datastore/datastore.py:140-197): bounds at
     * Normal(median, std).ppf(0.01/0.99) of the given attribute.
@@ -383,25 +389,33 @@ case class DataStore(
   /** run_unified_umap over a saved projection (mapping_datastore.py:
     * 366-668): reference graph + projection edges, targets initialized
     * at their rank-1 neighbor. Requires a prior [[makeGraph]] (edges +
-    * latent caches).
+    * latent caches). Takes its path from [[unifiedOnDriver]] like
+    * [[runUmap]]: the driver SGD below 100k unified nodes, the
+    * distributed layout at or above.
     */
   def getUnifiedUmap(targetName: String, useK: Int = 3,
                      targetWeight: Double = 0.1, nEpochs: Int = 50,
                      seed: Long = 4444L): DataFrame =
-    Unified.unifiedUmap(cache("edges"),
-      caches(s"projection:$targetName").select("target_id", "ref_id", "rank"),
+    Unified.unifiedUmap(cache("edges"), projectionHits(targetName),
       UmapLayout.initFromLatent(cache("latent")),
-      useK, targetWeight, nEpochs, seed)
+      useK, targetWeight, nEpochs, seed, unifiedOnDriver(targetName))
 
   /** run_unified_tsne over a saved projection (mapping_datastore.py:
-    * 573-668) — same unified graph + init, t-SNE kernel. */
+    * 573-668) — same unified graph + init, t-SNE kernel, which refuses
+    * 100k or more unified nodes. */
   def getUnifiedTsne(targetName: String, useK: Int = 3,
-                     targetWeight: Double = 0.5, nIter: Int = 300,
-                     learningRate: Double = 200.0): DataFrame =
-    Unified.unifiedTsne(cache("edges"),
-      caches(s"projection:$targetName").select("target_id", "ref_id", "rank"),
-      UmapLayout.initFromLatent(cache("latent")),
-      useK, targetWeight, nIter, learningRate)
+                     targetWeight: Double = 0.5, nIter: Int = 300): DataFrame =
+    Unified.unifiedTsne(cache("edges"), projectionHits(targetName),
+      UmapLayout.initFromLatent(cache("latent")), useK, targetWeight, nIter)
+
+  private def projectionHits(targetName: String): DataFrame =
+    caches(s"projection:$targetName").select("target_id", "ref_id", "rank")
+
+  /** The unified-graph gate: [[Scale.driverGraph]] over the active
+    * reference cells plus the projected target cells. */
+  private[graft] def unifiedOnDriver(targetName: String): Boolean =
+    Scale.driverGraph(cells.filter(col("I")).count() +
+      projectionHits(targetName).select("target_id").distinct().count())
 
   /** SubsetZarr equivalent (scarf/writers.py:938-1110): extract the
     * active cells into a new store with dense re-indexed cell ids
@@ -437,14 +451,16 @@ case class DataStore(
   // onto an already-verified kernel, closing the call-surface gaps a
   // scarf user would hit when switching (VERDICT r6 "What's missing" #1).
 
-  /** run_tsne (scarf/datastore/graph_datastore.py:1088-1150): exact
-    * t-SNE layout from the cached latent; writes tsne1/tsne2 columns.
-    * Requires a prior [[makeGraph]].
+  /** run_tsne (scarf/datastore/graph_datastore.py:1088-1150): the
+    * graph-affinity t-SNE of the smoothed graph from [[runUmap]]'s init
+    * — the reference likewise hands SG-tSNE-Π the KNN graph plus an
+    * init embedding; writes tsne1/tsne2 columns. Requires a prior
+    * [[makeGraph]]; the kernel refuses 100k or more graph nodes, where
+    * [[runUmap]] is the layout path.
     */
-  def runTsne(perplexity: Double = 30.0, nIter: Int = 300,
-              learningRate: Double = 200.0, seed: Long = 4444L): DataStore = {
-    val ts = TsneLayout.layout(cache("latent"), perplexity, nIter,
-      learningRate, seed)
+  def runTsne(nIter: Int = 300, seed: Long = 4444L): DataStore = {
+    val edges = cache("edges")
+    val ts = TsneLayout.layout(edges, layoutInit(edges, seed), nIter)
     copy(cells = cells.drop("tsne1", "tsne2").join(ts, Seq("cell_id"), "left"))
   }
 
@@ -557,15 +573,15 @@ case class DataStore(
   /** integrate_assays (scarf/datastore/graph_datastore.py:2005-2095):
     * SNN- or WNN-merge this store's cached graph with the other stores'
     * graphs (same cells, same k); the merged edges replace the `edges`
-    * cache so downstream runClustering(louvain)/runUmap consume them,
-    * the analogue of the reference's saved integrated graph.
+    * cache so downstream runClustering(louvain)/runUmap/runTsne consume
+    * them, the analogue of the reference's saved integrated graph.
     *
     * The single-assay `latent` and `knn` caches are DROPPED: they have
     * no merged meaning, and keeping them would let latent/knn consumers
-    * (kmeans clustering, runTsne, metricLisi, metricSilhouette, densMAP
-    * dists) silently score un-integrated data. Those consumers now fail
-    * fast via [[cache]]; runUmap falls back to a deterministic random
-    * init and optimizes over the merged edges.
+    * (kmeans clustering, metricLisi, metricSilhouette, densMAP dists)
+    * silently score un-integrated data. Those consumers now fail fast
+    * via [[cache]]; runUmap and runTsne fall back to a deterministic
+    * random init and lay out the merged edges.
     */
   def integrateAssays(others: Seq[DataStore], k: Int = 11,
                       method: String = "snn"): DataStore = {

@@ -27,6 +27,7 @@ object Paris {
   def dendrogram(edges: DataFrame): (Array[Link], Map[Long, Long]) = {
     val spark = edges.sparkSession
     import spark.implicits._
+    // driver-bound: runParis's Scale.driverGraph gate; features (PtimeAgg); anchors (sketchedCut)
     val es = edges.select("src", "dst", "weight").as[(Long, Long, Double)].collect()
 
     // symmetric adjacency between current clusters

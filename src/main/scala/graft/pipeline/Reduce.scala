@@ -118,6 +118,7 @@ object Reduce {
       .groupBy("i").agg(
         round(sum(col("x")) / n, 5).as("m"),
         round(sqrt((sum(col("xx")) - sum(col("x")) * sum(col("x")) / n) / (n - 1)), 5).as("s"))
+      // driver-bound: features (one moment row per input dimension d)
       .as[(Int, Double, Double)].collect().sortBy(_._1)
     val ms = moments.map(_._2)
     val ss = moments.map(_._3)
@@ -130,6 +131,7 @@ object Reduce {
         for (i <- 0 until d; j <- i until d) yield (i, j, z(i) * z(j))
       }.toDF("i", "j", "p")
       .groupBy("i", "j").agg(round(sum(col("p")) / (n - 1), 5).as("c"))
+      // driver-bound: features (the d×d covariance)
       .as[(Int, Int, Double)].collect()
       .foreach { case (i, j, c) => cov(i)(j) = c; cov(j)(i) = c }
     // subspace iteration, classical Gram-Schmidt, fixed order

@@ -11,9 +11,12 @@ package graft.pipeline
   *    there and recall is 1.0), the LSH-bucketed ANN above — the analogue
   *    of the reference's default HNSW index (scarf/ann.py:290-326).
   *  - Graph solvers ([[DataStore.runClustering]], [[DataStore.runUmap]],
-  *    [[DataStore.runParis]]): the driver-side solvers over the collected
-  *    n·k edge list below [[driverGraphMaxCells]] active cells, the
-  *    all-DataFrame (or sketched) paths at or above it.
+  *    [[DataStore.runParis]], [[DataStore.getUnifiedUmap]]): the
+  *    driver-side solvers over the collected n·k edge list below
+  *    [[driverGraphMaxCells]] active (or unified) cells, the
+  *    all-DataFrame (or sketched) paths at or above it. The t-SNE kernel
+  *    ([[TsneLayout.layout]]) has no scale twin and refuses that many
+  *    nodes.
   *  - [[graft.graph.Sketch.topacedo]]'s PCST connector pass collects the
   *    deduped edge list only up to [[pcstMaxDriverEdges]] edges.
   */

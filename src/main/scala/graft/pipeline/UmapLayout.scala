@@ -34,8 +34,10 @@ object UmapLayout {
     val spark = edges.sparkSession
     import spark.implicits._
 
+    // driver-bound: facade Scale.driverGraph gate (runUmap, getUnifiedUmap)
     val es = edges.select("src", "dst", "weight").as[(Long, Long, Double)].collect()
     val coords = scala.collection.mutable.Map[Long, Array[Double]]()
+    // driver-bound: the same gate; one init row per graph node
     init.select("cell_id", "x", "y").as[(Long, Double, Double)].collect()
       .foreach { case (id, x, y) => coords(id) = Array(x, y) }
     es.foreach { case (s, d, _) =>
@@ -58,6 +60,7 @@ object UmapLayout {
     if (densLambda > 0) {
       val dMap = dists.getOrElse(throw new IllegalArgumentException(
           "densLambda > 0 requires original-space dists (src, dst, dist)"))
+        // driver-bound: facade Scale.driverGraph gate (runUmap); the k-NN distances of its edges
         .select("src", "dst", "dist").as[(Long, Long, Double)].collect()
         .map { case (s, d, v) => (s, d) -> v }.toMap
       val ro = new Array[Double](nV)
@@ -315,10 +318,6 @@ object UmapLayout {
     coords.select(col("cell_id"), col("x").as("umap1"), col("y").as("umap2"))
   }
 
-  /** PCA-based init (reference seeds layouts from reduced space,
-    * _get_ini_embed, scarf/datastore/graph_datastore.py:427-457): first
-    * two latent components, rescaled to ~[-10, 10].
-    */
   /** Deterministic hash-random init in [-10, 10]²: md5-derived uniforms
     * per cell (the engine's seeded-RNG-free sampling pattern), for
     * layouts with no usable latent — e.g. after integrateAssays drops
@@ -332,15 +331,21 @@ object UmapLayout {
     nodes.select(col("cell_id"), u("ux").as("x"), u("uy").as("y"))
   }
 
+  /** PCA-based init (reference seeds layouts from reduced space,
+    * _get_ini_embed, scarf/datastore/graph_datastore.py:427-457): first
+    * two latent components, rescaled to ~[-10, 10]. A component that is
+    * zero on every cell (one cell, identical cells) maps to 0 — under
+    * ANSI mode 0/0 raises instead of yielding NaN.
+    */
   def initFromLatent(latent: DataFrame): DataFrame = {
     val xy = latent.select(col("cell_id"),
       element_at(col("latent"), 1).as("x0"),
       element_at(col("latent"), 2).as("y0"))
     val stats = xy.agg(
       max(abs(col("x0"))).as("mx"), max(abs(col("y0"))).as("my"))
+    def scaled(c: String, m: String) =
+      when(col(m) === 0, lit(0.0)).otherwise(col(c) / col(m) * 10)
     xy.crossJoin(broadcast(stats))
-      .select(col("cell_id"),
-        (col("x0") / col("mx") * 10).as("x"),
-        (col("y0") / col("my") * 10).as("y"))
+      .select(col("cell_id"), scaled("x0", "mx").as("x"), scaled("y0", "my").as("y"))
   }
 }

@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
   * the reference KNN graph is augmented with each projected target cell's
   * top-`useK` reference neighbors at a constant `targetWeight`, target
   * cells are initialized at their best reference neighbor's coordinates,
-  * and the combined graph is laid out with the same UMAP machinery as
-  * run_umap.
+  * and the combined graph is laid out with the same UMAP or t-SNE
+  * machinery as run_umap and run_tsne.
   */
 object Unified {
 
@@ -54,15 +54,18 @@ object Unified {
 
   /** run_unified_umap: targets start at their rank-1 reference neighbor's
     * init coordinates (_get_uni_ini_embed), then the union graph is laid
-    * out. `refInit(cell_id, x, y)`. Output:
+    * out — by the driver SGD when `onDriver`, else by
+    * [[UmapLayout.distributedLayout]]. `refInit(cell_id, x, y)`. Output:
     * (unified_id, origin, orig_id, umap1, umap2).
     */
   def unifiedUmap(refEdges: DataFrame, hits: DataFrame, refInit: DataFrame,
                   useK: Int = 3, targetWeight: Double = 0.1,
-                  nEpochs: Int = 50, seed: Long = 4444L): DataFrame = {
+                  nEpochs: Int = 50, seed: Long = 4444L,
+                  onDriver: Boolean = true): DataFrame = {
     val (edges, mapping) = unifiedGraph(refEdges, hits, useK, targetWeight)
     val init = unifiedInit(mapping, hits, refInit)
-    UmapLayout.layout(edges, init, nEpochs = nEpochs, seed = seed)
+    (if (onDriver) UmapLayout.layout(edges, init, nEpochs = nEpochs, seed = seed)
+     else UmapLayout.distributedLayout(edges, init, nEpochs = nEpochs, seed = seed))
       .join(mapping.withColumnRenamed("unified_id", "cell_id"), Seq("cell_id"))
       .select(col("cell_id").as("unified_id"), col("origin"), col("orig_id"),
         col("umap1"), col("umap2"))
@@ -77,11 +80,10 @@ object Unified {
     */
   def unifiedTsne(refEdges: DataFrame, hits: DataFrame, refInit: DataFrame,
                   useK: Int = 3, targetWeight: Double = 0.5,
-                  nIter: Int = 300, learningRate: Double = 200.0): DataFrame = {
+                  nIter: Int = 300): DataFrame = {
     val (edges, mapping) = unifiedGraph(refEdges, hits, useK, targetWeight)
     val init = unifiedInit(mapping, hits, refInit)
-    TsneLayout.layoutFromGraph(edges, init, nIter = nIter,
-        learningRate = learningRate)
+    TsneLayout.layout(edges, init, nIter = nIter)
       .join(mapping.withColumnRenamed("unified_id", "cell_id"), Seq("cell_id"))
       .select(col("cell_id").as("unified_id"), col("origin"), col("orig_id"),
         col("tsne1"), col("tsne2"))

@@ -109,6 +109,27 @@ class AnalyticsSpec extends SparkSpec {
     assert(salted.toSeq == plain.toSeq)
   }
 
+  test("saltedJoin: identical duplicate rows of one hot key reach every salt") {
+    import graft.ops.Joins
+    // no broadcast, no AQE: the join hash-partitions on (k, _salt), so a
+    // row lands in its salt's partition and the partitions the result
+    // occupies name the salts the big side carried
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    s.conf.set("spark.sql.shuffle.partitions", "64")
+    import s.implicits._
+    val salts = 16
+    val big = Seq.fill(1000)((1L, "dup")).toDF("k", "payload")
+    val small = Seq((1L, "dim1")).toDF("k", "dim")
+    val joined = Joins.saltedJoin(big, small, "k", salts)
+    val reached = joined.select(spark_partition_id()).distinct().as[Int].collect().toSet
+    val everySalt = s.range(salts).select(pmod(hash(lit(1L), col("id")), lit(64)))
+      .as[Int].collect().toSet
+    assert(reached == everySalt, s"reached ${reached.size} of ${everySalt.size} salt partitions")
+    assert(joined.count() == 1000)
+  }
+
   test("latestStateStream: upsert view converges to the batch answer across batches") {
     import graft.streaming.Streaming
     implicit val sc = spark.sqlContext

@@ -205,14 +205,19 @@ class FacadeSpec extends SparkSpec {
     assert(!integrated.caches.contains("knn"))
     val err = intercept[IllegalStateException](integrated.runClustering(3))
     assert(err.getMessage.contains("integrateAssays"))
-    // edge-consuming downstream ops still run: louvain + random-init UMAP
+    // edge-consuming downstream ops still run: louvain + random-init
+    // UMAP and t-SNE (the one init choice both layouts share)
     val lv = integrated.runClustering(0, louvain = true)
     assert(lv.cells.filter($"cluster".isNotNull).count() > 0)
+    val nodes =
+      e.select($"src".as("c")).unionByName(e.select($"dst".as("c"))).distinct().count()
     val um = integrated.runUmap(nEpochs = 3)
     val laid = um.cells.filter($"umap1".isNotNull)
-    assert(laid.count() ===
-      e.select($"src".as("c")).unionByName(e.select($"dst".as("c"))).distinct().count())
+    assert(laid.count() === nodes)
     assert(laid.filter(isnan($"umap1") || isnan($"umap2")).count() === 0)
+    val ts = integrated.runTsne(nIter = 5).cells.filter($"tsne1".isNotNull)
+    assert(ts.count() === nodes)
+    assert(ts.filter(isnan($"tsne1") || isnan($"tsne2")).count() === 0)
   }
 
   // ── runTopacedoSampler ─────────────────────────────────────────────

@@ -42,13 +42,4 @@ class HarmonySkewSpec extends SparkSpec {
     val salted = Skew.saltedSumCount(df, "k", "v", nSalts = 4)
     assert(rows(plain.orderBy("k")) === rows(salted.orderBy("k")))
   }
-
-  test("saltJoinSides preserves join results") {
-    val big = Seq((1L, "x"), (1L, "y"), (2L, "z")).toDF("k", "payload")
-    val small = Seq((1L, "dim1"), (2L, "dim2")).toDF("k", "attr")
-    val (sb, ss) = Skew.saltJoinSides(big, small, "k", nSalts = 3)
-    val joined = sb.join(ss, Seq("k", "_salt")).select("k", "payload", "attr")
-    val plain = big.join(small, Seq("k")).select("k", "payload", "attr")
-    assert(rows(joined.orderBy("k", "payload")) === rows(plain.orderBy("k", "payload")))
-  }
 }

@@ -142,6 +142,18 @@ class PipelineSpec extends SparkSpec {
     assert(!store(100000L).graphOnDriver)
   }
 
+  test("getUnifiedUmap gate: driver SGD below 100k reference + target nodes") {
+    // getUnifiedUmap applies runUmap's rule to the unified graph: active
+    // reference cells plus projected targets — 99 999 stay on the driver,
+    // 100 000 go distributed. Only the gate's counts run here.
+    val proj = (0 until 20).map(i => (200000L + i, 0L, 1)).toDF("target_id", "ref_id", "rank")
+    def store(nodes: Long) = DataStore(
+      spark.range(100000L).select($"id".as("cell_id"), ($"id" < nodes - 20).as("I")),
+      ds.feats, ds.coo, Map("projection:t" -> proj))
+    assert(store(99999L).unifiedOnDriver("t"))
+    assert(!store(100000L).unifiedOnDriver("t"))
+  }
+
   // Duplicate-free dense store for the mapping e2e: the TPC-H fixture
   // has proportional sparse rows that lib-size-normalize to IDENTICAL
   // vectors, making "self is the unique nearest neighbor" untestable.
@@ -158,15 +170,18 @@ class PipelineSpec extends SparkSpec {
       .makeGraph(dims = 3, k = 4)
   }
 
+  private lazy val tgt = {
+    val tgtCells = mapSrc.cells.filter($"cell_id" % 3 === 0)
+    mapSrc.copy(cells = tgtCells,
+      coo = mapSrc.coo.join(tgtCells.select("cell_id"), Seq("cell_id")))
+  }
+  private lazy val mapped = mapSrc.runMapping(tgt, "t1", saveK = 3, dims = 3)
+
   test("runMapping facade: target projects onto itself at rank 1, score + classes + unified flow") {
     // target = every 3rd source cell with the same data → each target
     // cell's rank-1 reference hit must be ITSELF at dist 0 — the
     // reference tutorial's sanity check for mapping a store onto its
     // own reference
-    val tgtCells = mapSrc.cells.filter($"cell_id" % 3 === 0)
-    val tgt = mapSrc.copy(cells = tgtCells,
-      coo = mapSrc.coo.join(tgtCells.select("cell_id"), Seq("cell_id")))
-    val mapped = mapSrc.runMapping(tgt, "t1", saveK = 3, dims = 3)
     val hits = mapped.caches("projection:t1")
     val r1 = hits.filter($"rank" === 1)
     assert(r1.count() === 20)
@@ -212,6 +227,13 @@ class PipelineSpec extends SparkSpec {
     assert(annHits.columns.toSet === Set("src", "dst", "dist", "rn"))
     assert(annHits.filter($"rn" === 1)
       .filter($"src" =!= $"dst").count() === 0)
+  }
+
+  test("getUnifiedTsne facade: one finite row per reference graph node and projected target") {
+    val uni = mapped.getUnifiedTsne("t1", nIter = 20)
+    assert(uni.count() === mapSrc.caches("latent").count() + 20)
+    assert(uni.filter($"origin" === "target").count() === 20)
+    assert(uni.filter(isnan($"tsne1") || isnan($"tsne2")).count() === 0)
   }
 
   test("runMapping reuses the reference latent across targets sharing a feature set") {

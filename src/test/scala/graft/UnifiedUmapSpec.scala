@@ -86,6 +86,20 @@ class UnifiedUmapSpec extends SparkSpec {
     assert(run() == run())
   }
 
+  test("initFromLatent maps a component that is zero on every cell to 0") {
+    import spark.implicits._
+    // identical cells, and a second component that is 0 everywhere: under
+    // ANSI mode a 0/0 rescale would raise DIVIDE_BY_ZERO
+    val latent = Seq((1L, Seq(2.0, 0.0, 5.0)), (2L, Seq(-1.0, 0.0, 5.0)),
+      (3L, Seq(-1.0, 0.0, 5.0))).toDF("cell_id", "latent")
+    val got = UmapLayout.initFromLatent(latent).orderBy("cell_id").collect()
+      .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSeq
+    assert(got == Seq((1L, 10.0, 0.0), (2L, -5.0, 0.0), (3L, -5.0, 0.0)))
+    val one = UmapLayout.initFromLatent(Seq((9L, Seq(0.0, 0.0))).toDF("cell_id", "latent"))
+      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSeq
+    assert(one == Seq((9L, 0.0, 0.0)))
+  }
+
   test("distributedLayout separates two cliques from a mixed init") {
     import spark.implicits._
     val edges = refEdges
