@@ -494,16 +494,8 @@ object Dedup {
     // join-based bucketed cross-KNN (Knn.bucketedKnn) with an exact
     // fallback for uncovered vectors.
     val nearest =
-      if (bc.length <= 64) udf { (v: Seq[Double]) =>
-        var best = 0; var bd = Double.MaxValue; var c = 0
-        while (c < bc.length) {
-          var d = 0.0; var j = 0
-          while (j < bc(c).length) { val t = v(j) - bc(c)(j); d += t * t; j += 1 }
-          if (d < bd) { bd = d; best = c } // strict < keeps the lowest index
-          c += 1                          // on ties, like ORDER BY (d, cid)
-        }
-        best
-      }
+      // flat scan: strict < keeps the lowest index on ties, like ORDER BY (d, cid)
+      if (bc.length <= 64) graft.pipeline.Cluster.assignUdf(bc)
       else {
         val dim = bc(0).length
         val k2 = math.max(1, math.round(math.sqrt(bc.length.toDouble)).toInt)
@@ -1087,24 +1079,11 @@ object Dedup {
     */
   def bloomDecontaminate(train: DataFrame, evalDocs: DataFrame, n: Int,
                          mBits: Int = 1 << 16, k: Int = 3): DataFrame = {
-    require(mBits % 64 == 0 && Integer.bitCount(mBits) == 1)
     val evSh = shingles(evalDocs, n).select("shingle").distinct()
-    val posCol = (j: Int) =>
-      pmod(conv(substring(md5(concat(lit(s"$j:"), col("shingle"))), 1, 15),
-        16, 10).cast("long"), lit(mBits.toLong))
-    val positions = evSh
-      .select(explode(array((0 until k).map(posCol): _*)).as("p"))
-      .distinct().collect().map(_.getLong(0))
-    val bitmap = new Array[Long](mBits / 64)
-    positions.foreach(p => bitmap((p / 64).toInt) |= (1L << (p % 64)))
+    val bitmap = graft.stats.Sketches.bloomBitmap(evSh, mBits, k)
     val trSh = shingles(train, n)
-    val probed = (0 until k).foldLeft(
-        trSh.withColumn("_bm", typedlit(bitmap.toIndexedSeq))) { (df, j) =>
-        df.withColumn(s"_p$j", posCol(j))
-      }
-      .withColumn("_hits", expr((0 until k).map(j =>
-        s"(shiftright(element_at(_bm, cast(_p$j div 64 as int) + 1), " +
-          s"cast(_p$j % 64 as int)) & 1)").mkString("(", " + ", s") = $k")))
+    val probed = trSh
+      .withColumn("_hits", graft.stats.Sketches.bloomHit(col("shingle"), bitmap, k))
     val bloomCounts = probed.groupBy("doc_id").agg(
       count(lit(1)).as("n_shingles"),
       sum(when(col("_hits"), 1L).otherwise(0L)).as("n_bloom_hits"))

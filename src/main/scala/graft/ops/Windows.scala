@@ -110,7 +110,7 @@ object Windows {
     val rdd = sorted.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val counts = rdd.mapPartitionsWithIndex { (i, it) =>
       Iterator((i, it.size.toLong))
-    }.collect().sortBy(_._1).map(_._2)
+    }.collect().sortBy(_._1).map(_._2) // driver-bound: one row per partition
     val offsets = counts.scanLeft(0L)(_ + _)
     val withPos = rdd.mapPartitionsWithIndex { (i, it) =>
       var p = offsets(i)
@@ -136,7 +136,7 @@ object Windows {
     val rdd = sorted.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val sums = rdd.mapPartitionsWithIndex { (i, it) =>
       Iterator((i, it.map(_.getAs[Number](vIdx).doubleValue()).sum))
-    }.collect().sortBy(_._1).map(_._2)
+    }.collect().sortBy(_._1).map(_._2) // driver-bound: one row per partition
     val offsets = sums.scanLeft(0.0)(_ + _)
     val withRun = rdd.mapPartitionsWithIndex { (i, it) =>
       var acc = offsets(i)
@@ -192,7 +192,7 @@ object Windows {
       var n = 0L; var s = 0L
       it.foreach { row => n += 1; s += long(row) }
       Iterator((i, n, s))
-    }.collect().sortBy(_._1)
+    }.collect().sortBy(_._1) // driver-bound: one row per partition
     val posOffsets = parts.map(_._2).scanLeft(0L)(_ + _)
     val sumOffsets = parts.map(_._3).scanLeft(0L)(_ + _)
     val withBoth = rdd.mapPartitionsWithIndex { (i, it) =>

@@ -106,7 +106,9 @@ object Cluster {
     })
   }
 
-  private def assignUdf(cs: Array[Array[Double]]) = udf { (v: Seq[Double]) =>
+  /** Nearest center of a vector by squared L2, the lowest index on ties
+    * (strict `<`). */
+  private[graft] def assignUdf(cs: Array[Array[Double]]) = udf { (v: Seq[Double]) =>
     var best = 0; var bd = Double.MaxValue
     var c = 0
     while (c < cs.length) {

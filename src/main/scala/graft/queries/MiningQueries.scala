@@ -552,14 +552,16 @@ object MiningQueries {
 
     // IVF+PQ recall vs exact truth AND vs unrestricted PQ — the routing
     // loss isolated from the quantization loss (the report that answers
-    // "is the 2-of-8 probe or the 16x compression costing me recall")
+    // "is the 2-of-8 probe or the 16x compression costing me recall").
+    // Both rankings come from one scoring pass: probing all 8 lists is
+    // the flat PQ ranking
     "q174_ivfpq_recall" -> ((s, d) => {
       val vecs = Tables.t(s, d, "embeddings").select(col("vec_id"),
         col("embedding").cast("array<double>").as("v"))
-      val ipq = graft.sim.Pq.ivfPqTopK(vecs)
-        .select(col("qid").as("src"), col("dst"))
-      val pq = graft.sim.Pq.pqSelfTopK(vecs)
-        .select(col("qid").as("src"), col("dst"))
+      val ranked = graft.sim.Pq.ivfPqPass(vecs, Seq(2, 8))
+        .select(col("nprobe"), col("qid").as("src"), col("dst"))
+      val ipq = ranked.filter(col("nprobe") === 2)
+      val pq = ranked.filter(col("nprobe") === 8)
       val ex = exactTopK(vecs, 5)
         .select(col("qid").as("src"), col("vec_id").as("dst"))
       val hx = ex.join(ipq, Seq("src", "dst"), "left_semi")

@@ -1,7 +1,6 @@
 package graft.sim
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.queries.Sample
 
@@ -40,28 +39,56 @@ object Pq {
           graft.functions.SqDiffSum.column(col("v"), col("lc")).as("d2")),
       Seq("qid"), n, Seq(col("d2"), col("list")))
 
+  /** One PQ encoding of `vecs (vec_id, v)`: the checkpointed vectors, the
+    * capped query sample `qs (qid, v)`, the codes `(s, cell_id, cid)` and
+    * the per-query ADC tables `(s, qid, cid, d2m)`. */
+  private case class Encoded(cached: DataFrame, qs: DataFrame,
+                             codes: DataFrame, tab: DataFrame)
+
+  private def encode(vecs: DataFrame, m: Int, k: Int, iters: Int, seed: Long,
+                     queryMod: Int): Encoded = {
+    val dim = vecs.agg(max(size(col("v"))).as("d")).head.getInt(0)
+    require(dim % m == 0, s"dim $dim must split into $m subvectors")
+    // feeds every Lloyd training + the query slice — materialize once
+    val cached = vecs.select(col("vec_id"), col("v")).localCheckpoint()
+    val qs = Sample.capped(cached, "vec_id", queryMod)
+      .select(col("vec_id").as("qid"), col("v"))
+    val (codes, cents) = trainCodebooks(cached, dim, m, k, iters, seed)
+    Encoded(cached, qs, codes, adcTable(qs, dim, m, cents))
+  }
+
+  /** The coarse quantizer: `nLists`-centroid deterministic Lloyd on the
+    * full vectors of `vecs (vec_id, v)` → `(lists (dst, list), centDf
+    * (list, lc))`, lists numbered from 1. */
+  private def coarse(vecs: DataFrame, nLists: Int, iters: Int,
+                     seed: Long): (DataFrame, DataFrame) = {
+    val spark = vecs.sparkSession
+    import spark.implicits._
+    val (asgn, centers) = graft.pipeline.Cluster.lloydWithCenters(
+      vecs.select(col("vec_id").as("cell_id"), col("v").as("latent")),
+      nLists, iters, seed)
+    (asgn.select(col("cell_id").as("dst"), col("cluster").cast("int").as("list")),
+      centers.zipWithIndex.map { case (c, i) => (i + 1, c.toSeq) }
+        .toSeq.toDF("list", "lc"))
+  }
+
   /** Top-k ADC neighbors of every `queryMod`-sampled vector.
     * `vecs (vec_id, v: array<double>)` → `(qid, dst, adc_dist, rn)`.
     */
   def pqSelfTopK(vecs: DataFrame, m: Int = 4, k: Int = 16, iters: Int = 5,
                  seed: Long = 77L, queryMod: Int = 50, topK: Int = 5): DataFrame = {
-    val dim = vecs.agg(max(size(col("v"))).as("d")).head.getInt(0)
-    require(dim % m == 0, s"dim $dim must split into $m subvectors")
-    // feeds m Lloyd trainings + the query slice — materialize once
-    val cached = vecs.select(col("vec_id"), col("v")).localCheckpoint()
-    val (codes, cents) = trainCodebooks(cached, dim, m, k, iters, seed)
-    // BROADCAST the m·k-per-query ADC table (the ivfPqTopK shape): the
-    // broadcast build materializes d2m once per table row. Un-broadcast,
-    // the codegen'd join deferred the streamed side's non-key d2m
-    // expression into the per-MATCH loop — the quantized fold ran per
-    // scored row (|codes|·|queries| times) instead of per table row,
-    // measured 2.2× on q143 when the fold became codegen-able.
-    val tab = adcTable(cached, dim, m, queryMod, cents)
-    val adc = codes.join(broadcast(tab), Seq("s", "cid"))
+    val enc = encode(vecs, m, k, iters, seed, queryMod)
+    // BROADCAST the m·k-per-query ADC table: the broadcast build
+    // materializes d2m once per table row. Un-broadcast, the codegen'd
+    // join deferred the streamed side's non-key d2m expression into the
+    // per-MATCH loop — the quantized fold ran per scored row
+    // (|codes|·|queries| times) instead of per table row, measured 2.2×
+    // on q143 when the fold became codegen-able.
+    val adc = enc.codes.join(broadcast(enc.tab), Seq("s", "cid"))
       .filter(col("cell_id") =!= col("qid"))
       .groupBy(col("qid"), col("cell_id").as("dst"))
       .agg(sum(col("d2m")).as("adc_micro"))
-    rankAdc(adc, topK)
+    rankAdc(adc, Seq("qid"), topK)
   }
 
   /** IVF + PQ — the two stages composed into the production-shape index
@@ -83,84 +110,69 @@ object Pq {
   def ivfPqTopK(vecs: DataFrame, nLists: Int = 8, nProbe: Int = 2,
                 m: Int = 4, k: Int = 16, iters: Int = 5,
                 seedIvf: Long = 55L, seedPq: Long = 77L,
-                queryMod: Int = 50, topK: Int = 5): DataFrame = {
-    val spark = vecs.sparkSession
-    import spark.implicits._
-    val dim = vecs.agg(max(size(col("v"))).as("d")).head.getInt(0)
-    require(dim % m == 0, s"dim $dim must split into $m subvectors")
-    val cached = vecs.select(col("vec_id"), col("v")).localCheckpoint()
-    // coarse quantizer on the full vectors
-    val (asgn, centers) = graft.pipeline.Cluster.lloydWithCenters(
-      cached.select(col("vec_id").as("cell_id"), col("v").as("latent")),
-      nLists, iters, seedIvf)
-    val lists = asgn.select(col("cell_id").as("dst"),
-      col("cluster").cast("int").as("list"))
-    val centDf = centers.zipWithIndex.map { case (c, i) => (i + 1, c.toSeq) }
-      .toSeq.toDF("list", "lc")
-    val qs = Sample.capped(cached, "vec_id", queryMod)
-      .select(col("vec_id").as("qid"), col("v"))
-    val probes = nearestLists(qs, centDf, nProbe).select("qid", "list")
-    val (codes, cents) = trainCodebooks(cached, dim, m, k, iters, seedPq)
-    val tab = adcTable(cached, dim, m, queryMod, cents)
+                queryMod: Int = 50, topK: Int = 5): DataFrame =
+    ivfPqPass(vecs, Seq(nProbe), nLists, m, k, iters, seedIvf, seedPq,
+      queryMod, topK).drop("nprobe")
+
+  /** The one IVF-PQ scoring pass: encode once, train the coarse lists
+    * once, ADC-score every candidate of the widest budget once, then rank
+    * the top `topK` per query for each probe budget in `budgets` →
+    * `(nprobe, qid, dst, adc_dist, rn)`. Each candidate carries the probe
+    * rank of its list in its query's centroid order, so "nprobe = t" is
+    * a filter, not a re-run. Every vector sits in exactly one list, so
+    * the budget `nLists` is the flat [[pqSelfTopK]] ranking (same
+    * codebooks, queries, candidates and exact integer sums).
+    */
+  private[graft] def ivfPqPass(vecs: DataFrame, budgets: Seq[Int],
+                               nLists: Int = 8, m: Int = 4, k: Int = 16,
+                               iters: Int = 5, seedIvf: Long = 55L,
+                               seedPq: Long = 77L, queryMod: Int = 50,
+                               topK: Int = 5): DataFrame =
+    score(encode(vecs, m, k, iters, seedPq, queryMod), budgets, nLists,
+      iters, seedIvf, topK)
+
+  private def score(enc: Encoded, budgets: Seq[Int], nLists: Int, iters: Int,
+                    seedIvf: Long, topK: Int): DataFrame = {
+    val (lists, centDf) = coarse(enc.cached, nLists, iters, seedIvf)
     // id-only candidate set: probed lists' members, before any scoring
-    val cand = probes.join(lists, Seq("list"))
-      .select(col("qid"), col("dst")).filter(col("qid") =!= col("dst"))
+    val cand = nearestLists(enc.qs, centDf, budgets.max)
+      .select(col("qid"), col("list"), col("rn").as("prank"))
+      .join(lists, Seq("list"))
+      .select(col("qid"), col("dst"), col("prank"))
+      .filter(col("qid") =!= col("dst"))
     val adc = cand
-      .join(codes.select(col("cell_id").as("dst"), col("s"), col("cid")),
+      .join(enc.codes.select(col("cell_id").as("dst"), col("s"), col("cid")),
         Seq("dst"))
-      .join(broadcast(tab), Seq("qid", "s", "cid"))
-      .groupBy("qid", "dst").agg(sum(col("d2m")).as("adc_micro"))
-    rankAdc(adc, topK)
+      .join(broadcast(enc.tab), Seq("qid", "s", "cid"))
+      .groupBy("qid", "dst")
+      .agg(sum(col("d2m")).as("adc_micro"), min(col("prank")).as("prank"))
+    budgets match {
+      // one budget is the probe cut itself: no per-budget copies, and the
+      // unused probe rank is pruned from the plan
+      case Seq(b) => rankAdc(adc, Seq("qid"), topK).withColumn("nprobe", lit(b))
+      case _ => rankAdc(
+        adc.withColumn("nprobe", explode(array(budgets.map(lit): _*)))
+          .filter(col("prank") <= col("nprobe")),
+        Seq("nprobe", "qid"), topK)
+    }
   }
 
   /** IVF probe-count sweep: recall@`topK` vs exact ground truth for
-    * every probe budget `1..maxProbe`, from ONE scoring pass — each
-    * candidate carries the probe rank of its list in its query's
-    * centroid order, so "nprobe = t" is a filter, not a re-run. This is
-    * the latency/recall knob report: at 100 TB the scan cost is
-    * ~nprobe/nLists of the corpus, and this curve says what each
-    * increment buys.
+    * every probe budget `1..maxProbe`, from ONE scoring pass
+    * ([[ivfPqPass]]). This is the latency/recall knob report: at 100 TB
+    * the scan cost is ~nprobe/nLists of the corpus, and this curve says
+    * what each increment buys.
     */
   def ivfPqProbeSweep(vecs: DataFrame, nLists: Int = 8, maxProbe: Int = 4,
                       m: Int = 4, k: Int = 16, iters: Int = 5,
                       seedIvf: Long = 55L, seedPq: Long = 77L,
                       queryMod: Int = 50, topK: Int = 5): DataFrame = {
-    val spark = vecs.sparkSession
-    import spark.implicits._
-    val dim = vecs.agg(max(size(col("v"))).as("d")).head.getInt(0)
-    require(dim % m == 0, s"dim $dim must split into $m subvectors")
-    val cached = vecs.select(col("vec_id"), col("v")).localCheckpoint()
-    val (asgn, centers) = graft.pipeline.Cluster.lloydWithCenters(
-      cached.select(col("vec_id").as("cell_id"), col("v").as("latent")),
-      nLists, iters, seedIvf)
-    val lists = asgn.select(col("cell_id").as("dst"),
-      col("cluster").cast("int").as("list"))
-    val centDf = centers.zipWithIndex.map { case (c, i) => (i + 1, c.toSeq) }
-      .toSeq.toDF("list", "lc")
-    val qs = Sample.capped(cached, "vec_id", queryMod)
-      .select(col("vec_id").as("qid"), col("v"))
-    val probes = nearestLists(qs, centDf, maxProbe)
-      .select(col("qid"), col("list"), col("rn").as("prank"))
-    val (codes, cents) = trainCodebooks(cached, dim, m, k, iters, seedPq)
-    val tab = adcTable(cached, dim, m, queryMod, cents)
-    val cand = probes.join(lists, Seq("list"))
-      .select(col("qid"), col("dst"), col("prank"))
-      .filter(col("qid") =!= col("dst"))
-    val adc = cand
-      .join(codes.select(col("cell_id").as("dst"), col("s"), col("cid")),
-        Seq("dst"))
-      .join(broadcast(tab), Seq("qid", "s", "cid"))
-      .groupBy("qid", "dst")
-      .agg(sum(col("d2m")).as("adc_micro"), min(col("prank")).as("prank"))
-    val swept = graft.ops.Windows.topKPerGroup(
-        adc.select(col("qid"), col("dst"), col("adc_micro"), col("prank"),
-            explode(sequence(lit(1), lit(maxProbe))).as("nprobe"))
-          .filter(col("prank") <= col("nprobe")),
-        Seq("nprobe", "qid"), topK, Seq(col("adc_micro"), col("dst")))
+    val enc = encode(vecs, m, k, iters, seedPq, queryMod)
+    val swept = score(enc, 1 to maxProbe, nLists, iters, seedIvf, topK)
       .select("nprobe", "qid", "dst")
     // exact ground truth over the same query sample
-    val ex = Similarity.l2TopK(qs.toDF("qid", "qvec"),
-        cached.toDF("vec_id", "embedding"), topK)
+    val ex = Similarity.l2TopK(enc.qs.toDF("qid", "qvec"),
+        enc.cached.toDF("vec_id", "embedding"), topK)
       .select(col("qid"), col("vec_id").as("dst"))
     val hits = ex.join(swept, Seq("qid", "dst"), "inner")
       .groupBy("nprobe", "qid").agg(count(lit(1)).as("h"))
@@ -184,10 +196,7 @@ object Pq {
     */
   def ivfBalance(vecs: DataFrame, nLists: Int = 8, iters: Int = 5,
                  seedIvf: Long = 55L): DataFrame = {
-    val (asgn, _) = graft.pipeline.Cluster.lloydWithCenters(
-      vecs.select(col("vec_id").as("cell_id"), col("v").as("latent")),
-      nLists, iters, seedIvf)
-    val counts = asgn.groupBy(col("cluster").cast("int").as("list"))
+    val counts = coarse(vecs, nLists, iters, seedIvf)._1.groupBy("list")
       .agg(count(lit(1)).as("n_vecs")).localCheckpoint()
     val tot = counts.agg(sum(col("n_vecs")).as("_t"),
       max(col("n_vecs")).as("_mx"), min(col("n_vecs")).as("_mn"),
@@ -215,23 +224,11 @@ object Pq {
   def ivfAssignDelta(oldVecs: DataFrame, newVecs: DataFrame,
                      nLists: Int = 8, iters: Int = 5,
                      seedIvf: Long = 55L): DataFrame = {
-    val spark = oldVecs.sparkSession
-    import spark.implicits._
-    val (asgn, centers) = graft.pipeline.Cluster.lloydWithCenters(
-      oldVecs.select(col("vec_id").as("cell_id"), col("v").as("latent")),
-      nLists, iters, seedIvf)
-    val centDf = centers.zipWithIndex.map { case (c, i) => (i + 1, c.toSeq) }
-      .toSeq.toDF("list", "lc")
-    val oldCounts = asgn.groupBy(col("cluster").cast("int").as("list"))
-      .agg(count(lit(1)).as("n_old"))
-    val newAsg = newVecs.crossJoin(broadcast(centDf))
-      .select(col("vec_id"), col("list"),
-        // codegen'd fold, IEEE-identical to aggregate(zip_with(...))
-        graft.functions.SqDiffSum.column(col("v"), col("lc")).as("d2"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("vec_id").orderBy(col("d2"), col("list"))))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("list"),
+    val (lists, centDf) = coarse(oldVecs, nLists, iters, seedIvf)
+    val oldCounts = lists.groupBy("list").agg(count(lit(1)).as("n_old"))
+    val newAsg = nearestLists(
+        newVecs.select(col("vec_id").as("qid"), col("v")), centDf, 1)
+      .select(col("list"),
         round(sqrt(col("d2")) * lit(1000000.0)).cast("long").as("dist_micro"))
     val newCounts = newAsg.groupBy("list")
       .agg(count(lit(1)).as("n_new"), sum(col("dist_micro")).as("_sd"))
@@ -274,11 +271,10 @@ object Pq {
     * integer arithmetic — a float fold would differ from another
     * engine's at the ULP, and the ranking quantization captures every
     * ULP. */
-  private def adcTable(cached: DataFrame, dim: Int, m: Int, queryMod: Int,
+  private def adcTable(qs: DataFrame, dim: Int, m: Int,
                        cents: DataFrame): DataFrame = {
     val w = dim / m
-    val qsub = Sample.capped(cached, "vec_id", queryMod)
-      .select(col("vec_id").as("qid"), explode(expr(
+    val qsub = qs.select(col("qid"), explode(expr(
         s"""transform(sequence(0, ${m - 1}),
               s -> named_struct('s', s, 'qv', slice(v, s * $w + 1, $w)))"""))
         .as("e"))
@@ -295,10 +291,12 @@ object Pq {
           .as("d2m"))
   }
 
-  private def rankAdc(adc: DataFrame, topK: Int): DataFrame =
-    graft.ops.Windows.topKPerGroup(adc, Seq("qid"), topK,
+  /** The top `topK` of `adc (…, dst, adc_micro)` per `groups` value →
+    * `(groups…, dst, adc_dist, rn)`. */
+  private def rankAdc(adc: DataFrame, groups: Seq[String], topK: Int): DataFrame =
+    graft.ops.Windows.topKPerGroup(adc, groups, topK,
         Seq(col("adc_micro"), col("dst")))
-      .select(col("qid"), col("dst"),
+      .select(groups.map(col) ++ Seq(col("dst"),
         round(sqrt(col("adc_micro") / lit(1e12)), 6).as("adc_dist"),
-        col("rn").cast("int").as("rn"))
+        col("rn").cast("int").as("rn")): _*)
 }

@@ -317,6 +317,7 @@ object H5Sources {
       : Map[String, (DataFrame, DataFrame)] = {
     val spark = coo.sparkSession
     import spark.implicits._
+    // driver-bound: one row per feature type
     val types = feats.select("feature_type").distinct().as[String].collect().sorted
     types.map { t =>
       val sub = feats.filter(col("feature_type") === t)

@@ -103,6 +103,7 @@ object HtoDemux {
   def demux(counts: DataFrame, seed: Long = 4466L, quantile: Double = 0.99): DataFrame = {
     val spark = counts.sparkSession
     import spark.implicits._
+    // driver-bound: one row per hashtag oligo
     val htos = counts.select("hto").distinct().as[String].collect().sorted
     val k = htos.length + 1
     // densify: sparse inputs (COO-derived) may omit zero (cell, hto)
@@ -152,6 +153,7 @@ object HtoDemux {
       .filter(col("cluster") === col("bg_cluster"))
       .groupBy(col("hto"), col("count").cast("double").as("v"))
       .agg(count(lit(1)).as("m"))
+      // driver-bound: one row per (hashtag, distinct count value)
       .as[(String, Double, Long)].collect().groupBy(_._1)
     val cutoffs = htos.map(h =>
       h -> nbCutoffWeighted(

@@ -115,6 +115,7 @@ object Lowess {
     val reps = binned.groupBy("bin")
       .agg(min_by(struct(col("lb"), col("la")), struct(col("lb"), col("feat_id"))).as("r"))
       .select(col("bin"), col("r.la").as("ra"), col("r.lb").as("rb"))
+      // driver-bound: at most nBins rows
       .collect().map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2)))
       .sortBy(_._1)
     val bcf = fit(reps.map(_._2), reps.map(_._3), frac, iters = 100)

@@ -94,6 +94,7 @@ object Pseudobulk {
   def smartLabelNames(df: DataFrame, a: String, b: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
+    // driver-bound: |A| × |B| label pairs
     val ct = df.groupBy(a, b).agg(count(lit(1)).as("n")).collect()
       .map(r => (r.get(0).toString, r.get(1).toString, r.getLong(2)))
     val aVals = ct.map(_._1).distinct.sorted

@@ -1,6 +1,6 @@
 package graft.stats
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -22,6 +22,38 @@ object Sketches {
     */
   private def minK(hashes: DataFrame, groups: Seq[String], k: Int): DataFrame =
     graft.ops.Windows.topKPerGroup(hashes, groups, k, Seq(col("hhex")))
+
+  /** Bloom probe `j` of string `gram` in an `mBits`-bit filter. The
+    * probes are md5-derived, so the filter and its false positives are
+    * deterministic and replay in any engine. */
+  private def bloomPos(gram: Column, j: Int, mBits: Int): Column =
+    pmod(conv(substring(md5(concat(lit(s"$j:"), gram)), 1, 15), 16, 10)
+      .cast("long"), lit(mBits.toLong))
+
+  /** The `mBits`-bit bloom bitmap of the `shingle` column of `grams`, `k`
+    * probes per gram: the distinct set positions are aggregated on the
+    * executors, only they reach the driver. */
+  private[graft] def bloomBitmap(grams: DataFrame, mBits: Int, k: Int): Array[Long] = {
+    require(mBits % 64 == 0 && Integer.bitCount(mBits) == 1)
+    val bitmap = new Array[Long](mBits / 64)
+    grams.select(explode(array(
+        (0 until k).map(bloomPos(col("shingle"), _, mBits)): _*)).as("p"))
+      .distinct()
+      .collect() // driver-bound: at most mBits positions
+      .foreach { r => val p = r.getLong(0); bitmap((p / 64).toInt) |= 1L << (p % 64) }
+    bitmap
+  }
+
+  /** True when all `k` probes of `gram` hit set bits of `bitmap` (one
+    * literal array, so the probe is map-only). */
+  private[graft] def bloomHit(gram: Column, bitmap: Array[Long], k: Int): Column = {
+    val bm = typedlit(bitmap.toIndexedSeq)
+    (0 until k).map { j =>
+      val p = bloomPos(gram, j, bitmap.length * 64)
+      call_function("shiftright", element_at(bm, shiftright(p, 6).cast("int") + 1),
+        (p % 64).cast("int")).bitwiseAND(lit(1L))
+    }.reduce(_ + _) === k
+  }
 
   /** Mergeable fixed-bin histogram quantiles: nearest-rank percentile
     * ESTIMATES from `nBins` equal-width counters per group — the sketch

@@ -546,22 +546,9 @@ object Streaming {
   def noveltyStream(docs: Dataset[Doc], corpus: DataFrame, n: Int = 5,
                     mBits: Int = 1 << 16, k: Int = 3,
                     watermark: String = "1 hour"): DataFrame = {
-    require(mBits % 64 == 0 && Integer.bitCount(mBits) == 1)
-    val posCol = (j: Int) =>
-      pmod(conv(substring(md5(concat(lit(s"$j:"), col("shingle"))), 1, 15),
-        16, 10).cast("long"), lit(mBits.toLong))
-    val positions = graft.dedup.Dedup.shingles(corpus, n)
-      .select(col("shingle")).distinct()
-      .select(explode(array((0 until k).map(posCol): _*)).as("p"))
-      .distinct().collect().map(_.getLong(0))
-    val bitmap = new Array[Long](mBits / 64)
-    positions.foreach(p => bitmap((p / 64).toInt) |= (1L << (p % 64)))
-    def posSql(j: Int) =
-      s"pmod(cast(conv(substring(md5(concat('$j:', g)), 1, 15), 16, 10)" +
-        s" as bigint), ${mBits}L)"
-    val hitSql = (0 until k).map(j =>
-      s"(shiftright(element_at(_bm, cast(${posSql(j)} div 64 as int) + 1), " +
-        s"cast(${posSql(j)} % 64 as int)) & 1)").mkString("(", " + ", s") = $k")
+    val bitmap = graft.stats.Sketches.bloomBitmap(
+      graft.dedup.Dedup.shingles(corpus, n).select(col("shingle")).distinct(),
+      mBits, k)
     docs.toDF().withWatermark("ts", watermark)
       .withColumn("_w", split(col("text"), "\\s+"))
       .withColumn("_g", array_distinct(expr(
@@ -570,10 +557,10 @@ object Streaming {
                 ${(0 until n).map(o => s"element_at(_w, i + ${o + 1})")
                   .mkString("concat_ws(' ', ", ", ", ")")})
             ELSE CAST(array() AS ARRAY<STRING>) END""")))
-      .withColumn("_bm", typedlit(bitmap.toIndexedSeq))
       .select(col("doc_id"), col("ts"),
         size(col("_g")).cast("long").as("n_grams"),
-        expr(s"size(filter(_g, g -> $hitSql))").cast("long").as("n_hits"))
+        size(filter(col("_g"), g => graft.stats.Sketches.bloomHit(g, bitmap, k)))
+          .cast("long").as("n_hits"))
       .withColumn("novelty_est",
         when(col("n_grams") > 0,
           round(lit(1.0) - col("n_hits").cast("double")

@@ -798,28 +798,15 @@ object TextOps {
     */
   def incrementalNovelty(oldDocs: DataFrame, newDocs: DataFrame, n: Int,
                          mBits: Int = 1 << 16, k: Int = 3): DataFrame = {
-    require(mBits % 64 == 0 && Integer.bitCount(mBits) == 1)
     val oldG = graft.dedup.Dedup.shingles(
         oldDocs.select("doc_id", "text"), n)
       .select("shingle").distinct().localCheckpoint()
-    val posCol = (j: Int) =>
-      pmod(conv(substring(md5(concat(lit(s"$j:"), col("shingle"))), 1, 15),
-        16, 10).cast("long"), lit(mBits.toLong))
-    val positions = oldG
-      .select(explode(array((0 until k).map(posCol): _*)).as("p"))
-      .distinct().collect().map(_.getLong(0))
-    val bitmap = new Array[Long](mBits / 64)
-    positions.foreach(p => bitmap((p / 64).toInt) |= (1L << (p % 64)))
+    val bitmap = graft.stats.Sketches.bloomBitmap(oldG, mBits, k)
     val newG = graft.dedup.Dedup.shingles(
         newDocs.select("doc_id", "text"), n)
       .join(newDocs.select("doc_id", "source"), Seq("doc_id"))
-    val probed = (0 until k).foldLeft(
-        newG.withColumn("_bm", typedlit(bitmap.toIndexedSeq))) { (df, j) =>
-        df.withColumn(s"_p$j", posCol(j))
-      }
-      .withColumn("_bhit", expr((0 until k).map(j =>
-        s"(shiftright(element_at(_bm, cast(_p$j div 64 as int) + 1), " +
-          s"cast(_p$j % 64 as int)) & 1)").mkString("(", " + ", s") = $k")))
+    val probed = newG
+      .withColumn("_bhit", graft.stats.Sketches.bloomHit(col("shingle"), bitmap, k))
       .join(oldG.withColumn("_seen", lit(1L)), Seq("shingle"), "left")
       .na.fill(0L, Seq("_seen"))
     probed.groupBy("source").agg(

@@ -2,20 +2,19 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Driver memory is bounded on every graph and pipeline path, asserted
-  * instead of documented: every `.collect()` under `graft/pipeline` and
-  * `graft/graph` either sits in a method that consults `Scale` (the
-  * method itself decides whether the driver path is safe) or carries a
-  * `// driver-bound: <what bounds it>` tag on its line or the line
-  * before (k rows, the feature dimension, the facade's
-  * `Scale.driverGraph` gate). Comments and strings are blanked before
+/** Driver memory is bounded on every path, asserted instead of
+  * documented: every `.collect()` under `graft` either sits in a method
+  * that consults `Scale` (the method itself decides whether the driver
+  * path is safe) or carries a `// driver-bound: <what bounds it>` tag on
+  * its line or the line before (k rows, the feature dimension, one row
+  * per partition, the facade's `Scale.driverGraph` gate). Comments and strings are blanked before
   * the scan; the tags are read from the raw source.
   */
 class DriverCollectLintSpec extends AnyFunSuite {
 
   import SourceScan.code
 
-  private val roots = Seq("pipeline", "graph").map(d => new java.io.File(s"src/main/scala/graft/$d"))
+  private val root = new java.io.File("src/main/scala/graft")
 
   private val collectCall = """\.collect\s*\(\s*\)""".r
   private val defKw = """\bdef\s""".r
@@ -91,9 +90,9 @@ class DriverCollectLintSpec extends AnyFunSuite {
     assert(methods(code(src)).take(2) === Seq((2, 4), (5, 6)))
   }
 
-  test("every driver collect under graft/pipeline and graft/graph is Scale-gated or tagged") {
-    val files = roots.flatMap(SourceScan.scalaFiles)
-    assert(files.size > 10, s"only ${files.size} sources found under ${roots.mkString(", ")}")
+  test("every driver collect under graft is Scale-gated or tagged") {
+    val files = SourceScan.scalaFiles(root)
+    assert(files.size > 10, s"only ${files.size} sources found under $root")
     val srcs = files.map(f => f.getPath -> SourceScan.read(f))
     // the scan sees real code: the driver solvers' collects are in it
     val sites = srcs.map { case (_, s) => collectCall.findAllMatchIn(code(s)).size }.sum

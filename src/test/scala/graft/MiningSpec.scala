@@ -186,6 +186,65 @@ class MiningSpec extends SparkSpec {
     assert(out.groupBy(_._1).values.forall(_.length == 5))
   }
 
+  test("ivfPqPass: each budget ranks as ivfPqTopK, all lists as pqSelfTopK") {
+    // same two-orthogonal-group universe: every vector sits in exactly
+    // one list, so budget p picks ivfPqTopK(nProbe = p)'s candidates and
+    // the full budget picks every vector but the query, as flat PQ does
+    val vecs = (0L until 40L).map { i =>
+      val base = if (i % 2 == 0) Seq(1.0, 0, 0, 0, 1.0, 0, 0, 0)
+                 else Seq(0, 0, 0, 1.0, 0, 0, 0, 1.0)
+      (i, base.map(_ + i * 0.001))
+    }.toDF("vec_id", "v")
+    def ranked(df: org.apache.spark.sql.DataFrame) =
+      df.select("qid", "dst", "adc_dist", "rn").orderBy("qid", "rn").collect().toSeq
+    val pass = graft.sim.Pq.ivfPqPass(vecs, Seq(1, 2, 4), nLists = 4, m = 2,
+      k = 4, iters = 3, seedIvf = 9L, seedPq = 5L, queryMod = 10, topK = 5)
+    Seq(1, 2).foreach { p =>
+      val want = ranked(graft.sim.Pq.ivfPqTopK(vecs, nLists = 4, nProbe = p,
+        m = 2, k = 4, iters = 3, seedIvf = 9L, seedPq = 5L, queryMod = 10,
+        topK = 5))
+      assert(want.nonEmpty)
+      assert(ranked(pass.filter(col("nprobe") === p)) == want, s"budget $p")
+    }
+    val flat = ranked(graft.sim.Pq.pqSelfTopK(vecs, m = 2, k = 4, iters = 3,
+      seed = 5L, queryMod = 10, topK = 5))
+    assert(ranked(pass.filter(col("nprobe") === 4)) == flat)
+  }
+
+  test("q174: both rankings from one pass, no DriverMemo reuse, job budget with AQE off") {
+    // 50 jobs in a fresh session: one encoding, one coarse training, one
+    // ADC scoring. Scoring each ranking on its own costs a second input
+    // checkpoint and PQ set-up, whose four Lloyd runs only DriverMemo's
+    // `lloyd:` keys stopped (4 hits, 61 jobs).
+    graft.core.DriverMemo.clear()
+    graft.core.FrameMemo.clear()
+    val fresh = spark.newSession()
+    fresh.conf.set("spark.sql.adaptive.enabled", "false")
+    val q174 = graft.SparkEntry.queries("q174_ivfpq_recall")
+    val sc = fresh.sparkContext
+    val group = "q174-job-budget"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    val h0 = graft.core.DriverMemo.stats._1
+    sc.addSparkListener(counter)
+    sc.setJobGroup(group, "q174 job budget")
+    // the sf0.001 tables the curation benchmark reads, kept in the checkout
+    try q174(fresh, "perfbench/data/sf0.001").collect()
+    finally {
+      sc.clearJobGroup()
+      org.apache.spark.ListenerDrain.drain(sc)
+      sc.removeSparkListener(counter)
+    }
+    assert(graft.core.DriverMemo.stats._1 - h0 == 0)
+    assert(jobs.get == 50)
+  }
+
   test("embeddingQc: exact moments; a dead dimension reads variance 0") {
     val embs = Seq(
       (1L, Seq(1.0, 0.5)), (2L, Seq(3.0, 0.5)), (3L, Seq(5.0, 0.5)))
