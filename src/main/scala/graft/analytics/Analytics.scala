@@ -227,19 +227,6 @@ object Analytics {
       .select(col(group), col("p"), col(valueCol).as("q_value"))
   }
 
-  /** Gap-based sessionization: consecutive events of a user belong to
-    * one session while the inter-event gap stays ≤ `gapUs`; a larger gap
-    * starts a new session. Output is one row per session with its event
-    * count, start/end and duration.
-    *
-    * Shape: ONE shuffle on `userCol` — the lag + running-sum windows and
-    * the per-session aggregation all share the user partitioning, so
-    * Catalyst plans a single exchange. Per-user windows are bounded by a
-    * user's own activity (never the whole log), which is the property
-    * that survives a 1000-executor deployment; there is no global window
-    * anywhere. The `(ts, id)` ordering is total per user (ids unique), so
-    * session numbering is deterministic including simultaneous events.
-    */
   /** SCD2 history build: the changelog → interval-table transform
     * behind slowly-changing-dimension reads — every (key, type) change
     * row becomes a validity interval `[valid_from, valid_to)` with
@@ -285,6 +272,19 @@ object Analytics {
       .drop("_vmicro")
   }
 
+  /** Gap-based sessionization: consecutive events of a user belong to
+    * one session while the inter-event gap stays ≤ `gapUs`; a larger gap
+    * starts a new session. Output is one row per session with its event
+    * count, start/end and duration.
+    *
+    * Shape: ONE shuffle on `userCol` — the lag + running-sum windows and
+    * the per-session aggregation all share the user partitioning, so
+    * Catalyst plans a single exchange. Per-user windows are bounded by a
+    * user's own activity (never the whole log), which is the property
+    * that survives a 1000-executor deployment; there is no global window
+    * anywhere. The `(ts, id)` ordering is total per user (ids unique), so
+    * session numbering is deterministic including simultaneous events.
+    */
   def sessionize(ev: DataFrame, gapUs: Long, tsCol: String = "ts_us",
                  userCol: String = "user_id", idCol: String = "event_id"): DataFrame = {
     val w = Window.partitionBy(userCol).orderBy(col(tsCol), col(idCol))
@@ -301,13 +301,6 @@ object Analytics {
       .withColumn("duration_us", col("end_us") - col("start_us"))
   }
 
-  /** First-order (Markov) event-type transition matrix: for each ordered
-    * per-user consecutive event pair, the count and conditional
-    * probability P(to | from). The per-user `lead` shares the same single
-    * user_id shuffle as [[sessionize]]; the matrix itself is
-    * |types|² rows regardless of log size. The probability is ONE
-    * integer-over-integer IEEE division, so it replays engine-exact.
-    */
   /** Top user journeys: sliding `n`-event event-type sequences per user
     * under the (ts, id) total order, counted corpus-wide with their
     * share — the order-(n−1) extension of [[transitions]] (the common
@@ -332,6 +325,13 @@ object Analytics {
           .as("share"))
   }
 
+  /** First-order (Markov) event-type transition matrix: for each ordered
+    * per-user consecutive event pair, the count and conditional
+    * probability P(to | from). The per-user `lead` shares the same single
+    * user_id shuffle as [[sessionize]]; the matrix itself is
+    * |types|² rows regardless of log size. The probability is ONE
+    * integer-over-integer IEEE division, so it replays engine-exact.
+    */
   def transitions(ev: DataFrame, typeCol: String = "event_type",
                   tsCol: String = "ts_us", userCol: String = "user_id",
                   idCol: String = "event_id"): DataFrame = {
@@ -567,14 +567,6 @@ object Analytics {
           .as("rows_at_risk"))
   }
 
-  /** Hour-of-day seasonality profile per event type: count and share of
-    * each type's events by UTC hour, plus the peak-hour flag — the
-    * calendar baseline behind rate-anomaly thresholds (q109's weekly
-    * z-scores alarm on volume; this is the intra-day shape they must
-    * not alarm on). One (type, hour) aggregation, a |types|-row max
-    * join-back for the peak (never a window over the log), integer
-    * counts with one final division.
-    */
   /** Minimum detectable effect per event type for a two-sample test at
     * α = 0.05 / power 0.8 on the per-USER value total (the experiment
     * unit): MDE = (z_{0.975} + z_{0.8})·σ·√(2/n) with the z-sum pinned
@@ -745,6 +737,14 @@ object Analytics {
         round(col("chi2_micro").cast("double") / 1000000.0, 6).as("chi2"))
   }
 
+  /** Hour-of-day seasonality profile per event type: count and share of
+    * each type's events by UTC hour, plus the peak-hour flag — the
+    * calendar baseline behind rate-anomaly thresholds (q109's weekly
+    * z-scores alarm on volume; this is the intra-day shape they must
+    * not alarm on). One (type, hour) aggregation, a |types|-row max
+    * join-back for the peak (never a window over the log), integer
+    * counts with one final division.
+    */
   def hourProfile(events: DataFrame): DataFrame = {
     val byHour = events
       .groupBy(col("event_type"),

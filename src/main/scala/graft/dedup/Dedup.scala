@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.text.TextOps
 
 /** Deduplication operators for training-data pipelines, sparse-native and
   * shuffle-conscious:
@@ -20,19 +21,10 @@ import org.apache.spark.sql.functions._
 object Dedup {
 
   /** Word n-gram shingles, distinct per document: `(doc_id, shingle)`. */
-  def shingles(docs: DataFrame, n: Int): DataFrame = {
-    val toks = split(col("text"), "\\s+")
-    // Docs shorter than n tokens yield no shingles: an unguarded
-    // sequence(0, size-n) descends (ANSI error) for them.
-    val starts = when(size(col("w")) >= n, sequence(lit(0), size(col("w")) - n))
-      .otherwise(array().cast("array<int>"))
-    docs.select(col("doc_id"), toks.as("w"))
-      .select(col("doc_id"),
-        explode(transform(starts,
-          i => concat_ws(" ", (0 until n).map(o => element_at(col("w"), i + o + 1)): _*)))
-          .as("shingle"))
+  def shingles(docs: DataFrame, n: Int): DataFrame =
+    docs.select(col("doc_id"), TextOps.tokensCol.as("w"))
+      .select(col("doc_id"), explode(TextOps.stringGrams(col("w"), n)).as("shingle"))
       .distinct()
-  }
 
   /** Candidate-pair Jaccard sweep: histogram of exact Jaccard over a set
     * of candidate pairs, binned to `bands` equal bands — the
@@ -65,26 +57,6 @@ object Dedup {
         col("n_pairs"))
   }
 
-  /** Incremental (snapshot-delta) dedup: every NEW document is labeled
-    * `exact_dup` / `near_dup` / `kept` against the OLD corpus — the
-    * crawl-refresh shape where each snapshot dedupes against what is
-    * already in the training set, not against itself (within-snapshot
-    * dedup is `exactDupGroups` / `nearDupGroups`).
-    *
-    * Phases: (1) exact — md5(text) anti-join against old digests (only
-    * 16-byte digests shuffle); (2) near — MinHash bands on both sides,
-    * candidates from the ASYMMETRIC new×old band join (a delta-sized
-    * probe against the corpus index, never old×old), verified by exact
-    * shingle Jaccard. The threshold is a rational `jacNum/jacDen` tested
-    * as `inter * jacDen >= union * jacNum` — exact integers, no float
-    * knife edge at the cut. Best match = highest 6dp-rounded Jaccard,
-    * min old id on ties (a per-new-doc keyed window, never global).
-    *
-    * At scale the old side's signatures/bands are what you'd persist as
-    * the dedup index; old band buckets above `bucketCap` are dropped
-    * before the join (boilerplate mass, same guard as
-    * `lshCandidatePairs`).
-    */
   /** Normalization-sensitivity report: how many extra duplicate
     * documents exact dedup would find after canonicalizing text
     * (lowercase + whitespace collapse) vs on the raw bytes — the
@@ -123,6 +95,26 @@ object Dedup {
       .groupBy("change").agg(count(lit(1)).as("n_docs"))
   }
 
+  /** Incremental (snapshot-delta) dedup: every NEW document is labeled
+    * `exact_dup` / `near_dup` / `kept` against the OLD corpus — the
+    * crawl-refresh shape where each snapshot dedupes against what is
+    * already in the training set, not against itself (within-snapshot
+    * dedup is `exactDupGroups` / `nearDupGroups`).
+    *
+    * Phases: (1) exact — md5(text) anti-join against old digests (only
+    * 16-byte digests shuffle); (2) near — MinHash bands on both sides,
+    * candidates from the ASYMMETRIC new×old band join (a delta-sized
+    * probe against the corpus index, never old×old), verified by exact
+    * shingle Jaccard. The threshold is a rational `jacNum/jacDen` tested
+    * as `inter * jacDen >= union * jacNum` — exact integers, no float
+    * knife edge at the cut. Best match = highest 6dp-rounded Jaccard,
+    * min old id on ties (a per-new-doc keyed window, never global).
+    *
+    * At scale the old side's signatures/bands are what you'd persist as
+    * the dedup index; old band buckets above `bucketCap` are dropped
+    * before the join (boilerplate mass, same guard as
+    * `lshCandidatePairs`).
+    */
   def incrementalDedup(oldDocs: DataFrame, newDocs: DataFrame,
                        numHashes: Int, rowsPerBand: Int,
                        jacNum: Int, jacDen: Int, n: Int = 3,
@@ -232,14 +224,9 @@ object Dedup {
     */
   def overlapMatrix(docs: DataFrame, sliceCol: Column, n: Int,
                     sliceCap: Int = 64): DataFrame = {
-    val toks = split(col("text"), "\\s+")
-    val starts = when(size(col("w")) >= n, sequence(lit(0), size(col("w")) - n))
-      .otherwise(array().cast("array<int>"))
-    val sd = docs.select(sliceCol.as("slice"), toks.as("w"))
-      .select(col("slice"), explode(transform(starts,
-        i => md5(concat_ws(" ",
-          (0 until n).map(o => element_at(col("w"), i + o + 1)): _*))))
-        .as("digest"))
+    val sd = docs.select(sliceCol.as("slice"), TextOps.tokensCol.as("w"))
+      .select(col("slice"), explode(TextOps.stringGrams(col("w"), n)).as("g"))
+      .select(col("slice"), md5(col("g")).as("digest"))
       .distinct()
       // three consumers (sizes, cap filter, both join sides) — compact
       // (slice, 16-byte digest) rows, materialized once
@@ -422,6 +409,15 @@ object Dedup {
         (col("doc_id") === col("canonical_id")).as("is_canonical"))
   }
 
+  /** SemDeDup cluster-count rule, mirroring
+    * [[graft.sim.Similarity.planesFor]]: enough centroids that the
+    * expected cluster occupancy n / k lands at `targetClusterSize` — the
+    * in-cluster pair join is Σ_c |c|², so holding occupancy flat keeps it
+    * linear in n instead of quadratic at fixed k.
+    */
+  def clustersFor(n: Long, targetClusterSize: Int = 1024, minK: Int = 8): Int =
+    math.max(minK, ((n + targetClusterSize - 1) / targetClusterSize).toInt)
+
   /** SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning at
     * web-scale through semantic deduplication"): embedding-space dedup
     * via cluster-then-dedup. The k-means clusters ARE the buckets — the
@@ -436,15 +432,6 @@ object Dedup {
     * transitive closure + keep-one via distributed connected components.
     * `corpus(vec_id, embedding)` → `(vec_id, group_id, n_docs, keep)`.
     */
-  /** SemDeDup cluster-count rule, mirroring
-    * [[graft.sim.Similarity.planesFor]]: enough centroids that the
-    * expected cluster occupancy n / k lands at `targetClusterSize` — the
-    * in-cluster pair join is Σ_c |c|², so holding occupancy flat keeps it
-    * linear in n instead of quadratic at fixed k.
-    */
-  def clustersFor(n: Long, targetClusterSize: Int = 1024, minK: Int = 8): Int =
-    math.max(minK, ((n + targetClusterSize - 1) / targetClusterSize).toInt)
-
   def semDeDup(corpus: DataFrame, k: Int, iters: Int, seed: Long,
                minCos: Double, trainN: Int = 10000,
                clusterCap: Int = 10000,
@@ -813,15 +800,12 @@ object Dedup {
     * 6 dp rounding at the end.
     */
   def dupWindowStats(docs0: DataFrame, n: Int): DataFrame = {
-    val docs = docs0.select(col("doc_id"), split(col("text"), "\\s+").as("w"))
+    val docs = docs0.select(col("doc_id"), TextOps.tokensCol.as("w"))
     val toks = docs.select(col("doc_id"), size(col("w")).as("n_tokens"))
-    // 1-based starts (matches SQL array slicing); a doc shorter than n
-    // tokens yields no windows (unguarded sequence would descend).
-    val starts = when(size(col("w")) >= n, sequence(lit(1), size(col("w")) - n + 1))
-      .otherwise(array().cast("array<int>"))
-    val wins = docs.select(col("doc_id"), col("w"), explode(starts).as("i"))
+    val wins = docs.select(col("doc_id"), col("w"),
+        explode(TextOps.windowStarts(col("w"), n)).as("i"))
       .select(col("doc_id"), col("i"),
-        md5(concat_ws(" ", slice(col("w"), col("i"), lit(n)))).as("h"))
+        md5(concat_ws(" ", slice(col("w"), col("i") + 1, lit(n)))).as("h"))
     val dupH = wins.groupBy("h").agg(count(lit(1)).as("_sites"))
       .filter(col("_sites") >= 2).select("h")
     val dup = wins.join(dupH, Seq("h"))
@@ -868,11 +852,6 @@ object Dedup {
       .filter(col("jaccard") >= minJaccard)
       .select("ida", "idb", "inter", "jaccard")
 
-  /** The inverted-index pair kernel behind [[ngramJaccardPairs]] and
-    * [[detectorPr]]'s ground truth: every pair sharing ≥ 1 shingle of
-    * the df-capped universe, with its intersection and both set sizes —
-    * callers apply their own (float or exact-integer) threshold.
-    */
   /** IDF-weighted exact Jaccard over candidate pairs, next to the
     * unweighted [[sharedShinglePairs]]: shingles weighted 10⁶ div df,
     * so J_w discounts boilerplate shared by many documents and
@@ -940,6 +919,11 @@ object Dedup {
         round(col("w_sx").cast("double") / col("w_n").cast("double"), 6)
           .as("mean_weighted"))
 
+  /** The inverted-index pair kernel behind [[ngramJaccardPairs]] and
+    * [[detectorPr]]'s ground truth: every pair sharing ≥ 1 shingle of
+    * the df-capped universe, with its intersection and both set sizes —
+    * callers apply their own (float or exact-integer) threshold.
+    */
   def sharedShinglePairs(sh0: DataFrame, dfCap: Int = 10000): DataFrame = {
     val hot = sh0.groupBy("shingle").agg(count(lit(1)).as("_df"))
       .filter(col("_df") > dfCap).select("shingle")
@@ -1113,7 +1097,7 @@ object Dedup {
                           blockCap: Int = 32): DataFrame = {
     val keyed = docs.select(col("doc_id"), col("text"),
       md5(concat_ws(" ",
-        slice(split(col("text"), "\\s+"), 1, prefixTokens))).as("bk"))
+        slice(TextOps.tokensCol, 1, prefixTokens))).as("bk"))
     val sizes = keyed.groupBy("bk").agg(count(lit(1)).as("bn"))
     // localCheckpoint: both sides of the pair self-join consume this
     // frame (and `keyed` feeds both it and the size agg) — without it

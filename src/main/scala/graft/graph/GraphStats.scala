@@ -93,19 +93,6 @@ object GraphStats {
           6).as("assortativity"))
   }
 
-  /** Global PageRank, integer-quantized so every engine computes the
-    * identical ranks: each node starts at 10¹² scaled units; one
-    * iteration sends each node's `rank div deg` share to every
-    * neighbor and re-seats `v' = (15·10¹²) div 100 + (85·Σshares) div
-    * 100` (damping 0.85 in exact integer arithmetic; all values
-    * positive, so Spark's `div` and DuckDB's `//` agree). The graph is
-    * undirected (edges used in both orientations), so there are no
-    * dangling nodes and every node receives mass each round.
-    *
-    * Iteration-bound, not volume-bound: `iters` join+agg rounds on the
-    * neighbor key, lineage reset per round ([[graft.core.Lineage]]).
-    * Output: (node, deg, rank_scaled) per node.
-    */
   /** k-core: the unique maximal subgraph where every node keeps degree
     * ≥ k — the dense-core detector (a boilerplate hub's neighborhood
     * survives peeling long after honest pairwise duplicates drop out).
@@ -332,6 +319,19 @@ object GraphStats {
         col("dst").as("id"), col("score")))
   }
 
+  /** Global PageRank, integer-quantized so every engine computes the
+    * identical ranks: each node starts at 10¹² scaled units; one
+    * iteration sends each node's `rank div deg` share to every
+    * neighbor and re-seats `v' = (15·10¹²) div 100 + (85·Σshares) div
+    * 100` (damping 0.85 in exact integer arithmetic; all values
+    * positive, so Spark's `div` and DuckDB's `//` agree). The graph is
+    * undirected (edges used in both orientations), so there are no
+    * dangling nodes and every node receives mass each round.
+    *
+    * Iteration-bound, not volume-bound: `iters` join+agg rounds on the
+    * neighbor key, lineage reset per round ([[graft.core.Lineage]]).
+    * Output: (node, deg, rank_scaled) per node.
+    */
   def pageRank(edges0: DataFrame, iters: Int = 8): DataFrame = {
     val e = edges0.select(col("ida").cast("long").as("ida"),
       col("idb").cast("long").as("idb"))

@@ -116,17 +116,6 @@ object Knn {
       .select("src", "dst", "dist", "rn", "src_label", "dst_label")
   }
 
-  /** Query-vs-corpus bucketed ANN — the cross-dataset form of
-    * [[bucketedSelfKnn]] (run_mapping's projection at scale,
-    * scarf/datastore/mapping_datastore.py:188-209 transform_ann): the
-    * same seeded hyperplane rounds bucket BOTH sides, queries multi-probe
-    * their own bucket plus every 1-bit flip, exact distances only within
-    * probed buckets, global top-k per query. `excludeSelf` drops id-equal
-    * pairs (self-KNN); leave false when query and corpus ids are
-    * different datasets. Both inputs `(cell_id, latent)`; output
-    * `(src, dst, dist, rn)`. `nPlanes = 0` auto-sizes from the corpus
-    * count (see [[bucketedSelfKnn]]).
-    */
   /** Mutual-nearest-neighbor pairs with a margin score — the
     * bitext-mining selection rule (Artetxe & Schwenk 2019): a pair is
     * kept only when each side is the OTHER's rank-1 neighbor, and the
@@ -213,6 +202,17 @@ object Knn {
     out
   }
 
+  /** Query-vs-corpus bucketed ANN — the cross-dataset form of
+    * [[bucketedSelfKnn]] (run_mapping's projection at scale,
+    * scarf/datastore/mapping_datastore.py:188-209 transform_ann): the
+    * same seeded hyperplane rounds bucket BOTH sides, queries multi-probe
+    * their own bucket plus every 1-bit flip, exact distances only within
+    * probed buckets, global top-k per query. `excludeSelf` drops id-equal
+    * pairs (self-KNN); leave false when query and corpus ids are
+    * different datasets. Both inputs `(cell_id, latent)`; output
+    * `(src, dst, dist, rn)`. `nPlanes = 0` auto-sizes from the corpus
+    * count (see [[bucketedSelfKnn]]).
+    */
   def bucketedKnn(queries: DataFrame, corpus: DataFrame, k: Int,
                   nPlanes: Int = 0, rounds: Int = 6,
                   excludeSelf: Boolean = false,

@@ -44,7 +44,7 @@ object AuditQueries {
     "q188_mad_outliers" -> ((s, d) =>
       Analytics.madOutliers(
           docs(s, d).select(col("source"),
-            size(split(col("text"), "\\s+")).cast("long").as("v")),
+            size(TextOps.tokensCol).cast("long").as("v")),
           "source", "v", k = 3)
         .orderBy("source")),
 
@@ -107,7 +107,7 @@ object AuditQueries {
             col("text")))
         .unionByName(v1.filter(col("doc_id") % 29 === 0)
           .select((col("doc_id") + 2000000L).as("doc_id"), col("source"),
-            concat_ws(" ", reverse(split(col("text"), "\\s+"))).as("text")))
+            concat_ws(" ", reverse(TextOps.tokensCol)).as("text")))
       TextOps.incrementalNovelty(v1, v2, n = 5, mBits = 1 << 20)
         .orderBy("source")
     }),
@@ -117,7 +117,7 @@ object AuditQueries {
     // ordinal), add-one smoothing, nano-quantized terms
     "q198_psi_drift" -> ((s, d) =>
       TextOps.psiDrift(docs(s, d).select(col("source"),
-          size(split(col("text"), "\\s+")).cast("long").as("v")),
+          size(TextOps.tokensCol).cast("long").as("v")),
         "source", "v", bins = 10).orderBy("source")),
 
     // BPE vocabulary-size sweep: fertility / chars-per-token / in-use
@@ -138,7 +138,7 @@ object AuditQueries {
     "q201_unigram_em" -> ((s, d) => {
       import s.implicits._
       val base = docs(s, d).select("doc_id", "text")
-      val tsub = base.select(explode(split(col("text"), "\\s+")).as("w"))
+      val tsub = base.select(explode(TextOps.tokensCol).as("w"))
         .select(expr("cast(least(4, length(w)) * (length(w) + 1)" +
           " - (least(4, length(w)) * (least(4, length(w)) + 1)) div 2" +
           " as bigint)").as("f"))

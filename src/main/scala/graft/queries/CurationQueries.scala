@@ -74,7 +74,7 @@ object CurationQueries {
     "q121_fertility" -> ((s, d) =>
       docs(s, d)
         .select(col("lang"),
-          size(split(col("text"), "\\s+")).cast("long").as("ws"),
+          size(TextOps.tokensCol).cast("long").as("ws"),
           size(regexp_extract_all(col("text"),
             lit("'(?:s|t|re|ve|m|ll|d)| ?[A-Za-z]+| ?[0-9]+| ?[^\\sA-Za-z0-9]+"),
             lit(0))).cast("long").as("bpe"),
@@ -114,9 +114,7 @@ object CurationQueries {
         .select((col("doc_id") + 3000000).as("doc_id"), col("text"))
       val halves = base.filter(col("doc_id") % 40 === 0)
         .select((col("doc_id") + 5000000).as("doc_id"),
-          concat(
-            concat_ws(" ", slice(split(col("text"), "\\s+"), lit(1),
-              expr("(size(split(text, '\\\\s+')) + 1) div 2").cast("int"))),
+          concat(TrainingQueries.firstHalf,
             lit(" graft synthetic tail marker words")).as("text"))
       TextOps.dedupSavings(base.unionByName(copies).unionByName(halves), 15)
         .orderBy("stage_id")

@@ -89,8 +89,7 @@ object MiningQueries {
     // near containment 0.5 against each host, so the 4/5 exact-integer
     // threshold is exercised in BOTH directions
     "q132_containment" -> ((s, d) => {
-      val half = concat_ws(" ", slice(split(col("text"), "\\s+"), lit(1),
-        expr("(size(split(text, '\\\\s+')) + 1) div 2").cast("int")))
+      val half = TrainingQueries.firstHalf
       val halves = docs(s, d).filter(col("doc_id") % 100 === 0)
         .select((col("doc_id") + 4000000).as("doc_id"), half.as("text"))
       val a = docs(s, d).filter(col("doc_id") % 100 === 50)
@@ -518,7 +517,7 @@ object MiningQueries {
     // confusion cells are populated, and kappa corrects the raw
     // agreement for the marginals
     "q171_gate_kappa" -> ((s, d) => {
-      val toks = split(col("text"), "\\s+")
+      val toks = TextOps.tokensCol
       val nt = size(toks).cast("long")
       val sh = size(filter(toks,
         t => t.isInCollection(TrainingQueries.stopwords))).cast("long")
@@ -642,7 +641,7 @@ object MiningQueries {
     // resampling shuffle and no RNG, engine-exact
     "q186_bootstrap_ci" -> ((s, d) =>
       graft.analytics.Analytics.hashBootstrapCi(docs(s, d), col("doc_id"),
-        size(split(col("text"), "\\s+")))),
+        size(TextOps.tokensCol))),
 
     // KMV mergeability CHECKED, not assumed: per-source sketches folded
     // into a corpus estimate vs the direct corpus sketch — bit-equal by
@@ -666,7 +665,7 @@ object MiningQueries {
     // distribution-shape gate next to q114's unigram KL
     "q183_ks_drift" -> ((s, d) =>
       TextOps.ksDrift(docs(s, d), col("source"),
-          size(split(col("text"), "\\s+")))
+          size(TextOps.tokensCol))
         .withColumnRenamed("grp", "source").orderBy("source")),
 
     // rank-biased overlap between the exact and PQ top-10 rankings per
@@ -720,7 +719,7 @@ object MiningQueries {
     // gate — rate monitoring that distinguishes "worse source" from
     // "small slice"; bounds are a fixed IEEE chain, engine-exact
     "q180_keep_rate_ci" -> ((s, d) => {
-      val toks = split(col("text"), "\\s+")
+      val toks = TextOps.tokensCol
       val nt = size(toks).cast("long")
       val sh = size(filter(toks,
         t => t.isInCollection(TrainingQueries.stopwords))).cast("long")
@@ -1268,12 +1267,6 @@ object MiningQueries {
          CAST(SUM(CASE WHEN h = 5 THEN 1 ELSE 0 END) AS BIGINT) AS n_perfect
   FROM hits"""
 
-  /** q154's DuckDB replay: the full BPE training loop as generated CTE
-    * stages — per step, weighted pair counts over the current
-    * distinct-word symbol table, the (cnt desc, s1, s2) argmax, and the
-    * padded literal REPLACE merge (left-to-right non-overlapping, the
-    * same greedy rule java's appendReplacement applies Spark-side).
-    */
   /** The shared BPE-training CTE chain (r_0..r_merges + m_i argmax
     * stages, word column carried through) — q154 reads the merge table,
     * q155 the final symbol table.
@@ -1305,6 +1298,12 @@ object MiningQueries {
     GROUP BY w),$stages"""
   }
 
+  /** q154's DuckDB replay: the full BPE training loop as generated CTE
+    * stages — per step, weighted pair counts over the current
+    * distinct-word symbol table, the (cnt desc, s1, s2) argmax, and the
+    * padded literal REPLACE merge (left-to-right non-overlapping, the
+    * same greedy rule java's appendReplacement applies Spark-side).
+    */
   private def q154OracleSql: String = {
     val merges = 8
     val union = (1 to merges).map(i =>
@@ -1315,13 +1314,6 @@ object MiningQueries {
   ORDER BY step"""
   }
 
-  /** WordPiece greedy walk replay: the BPE chain's vocabulary (r_0
-    * single chars + every m_i merge product), a (word, pos) longest-
-    * match jump table built as a RANGE cross product (dependent chained
-    * LATERALs crash DuckDB's binder), and 8 unrolled greedy stages —
-    * 8 = the corpus's max word length (each stage consumes ≥1 char;
-    * the Spark side sizes its walk from the data instead of pinning).
-    */
   /** The planted-universe prefix shared by q156/q160: the natural-pair
     * max sizes the heavy-plant weight K, `alldocs` = corpus + K heavy
     * docs + the light divergence doc.
@@ -1387,6 +1379,13 @@ object MiningQueries {
     s"""g_0 AS (SELECT w, wl, 1 AS pos, CAST(0 AS BIGINT) AS n, '' AS seg FROM wt),$stages"""
   }
 
+  /** WordPiece greedy walk replay: the BPE chain's vocabulary (r_0
+    * single chars + every m_i merge product), a (word, pos) longest-
+    * match jump table built as a RANGE cross product (dependent chained
+    * LATERALs crash DuckDB's binder), and 8 unrolled greedy stages —
+    * 8 = the corpus's max word length (each stage consumes ≥1 char;
+    * the Spark side sizes its walk from the data instead of pinning).
+    */
   private def q156OracleSql: String = {
     val maxWl = 8
     s"""WITH $plantSql,

@@ -23,9 +23,6 @@ object StatQueries {
 
   private def docs(s: SparkSession, d: String) = Tables.t(s, d, "documents")
 
-  /** Exact-Jaccard near-dup edges over the planted sweep universe:
-    * inter·5 ≥ union·2 in integer arithmetic (no float threshold).
-    */
   /** The sweep universe's UNFILTERED shingle-pair table (ida, idb,
     * inter, sza, szb) — the one inverted-index join behind all ten
     * graph-structure queries (q204–q208/q213/q214/q222/q226 via
@@ -325,7 +322,7 @@ object StatQueries {
         .join(docs(s, d).select(col("doc_id").as("base_id"), col("lang")),
           uni("doc_id") % 1000000 === col("base_id"))
         .select(uni("doc_id"), col("lang").as("grp"),
-          size(split(col("text"), "\\s+")).cast("long").as("x"))
+          size(TextOps.tokensCol).cast("long").as("x"))
       Dedup.dedupBiasReport(meta, groups).orderBy("grp")
     }),
 
@@ -362,8 +359,8 @@ object StatQueries {
     // score; exact integer rank selection on the global ordinal
     "q247_conformal" -> ((s, d) => {
       val base = docs(s, d).select(
-        expr("(CAST(n_chars AS BIGINT) * 1000)" +
-          " div CAST(size(split(text, '\\\\s+')) AS BIGINT)").as("sc"),
+        call_function("div", col("n_chars").cast("bigint") * 1000,
+          size(TextOps.tokensCol).cast("bigint")).as("sc"),
         (col("doc_id") % 2 === 0).as("cal"))
       graft.analytics.Analytics.conformal(base, col("sc"), col("cal"),
           Seq((1, 10), (1, 20)))
@@ -591,9 +588,6 @@ object StatQueries {
                 SELECT idb, ida FROM edges),
        deg AS MATERIALIZED (SELECT node, COUNT(*) AS deg FROM dirn GROUP BY node)"""
 
-  /** q205's replay: `iters` unrolled share-and-reseat stages, all
-    * integer (`//` and Spark's `div` agree on positive operands).
-    */
   /** q248's replay: 3 HITS iterations unrolled — per iteration, the
     * authority pull (h summed over in-edges), pico-integer sum
     * normalization (raw·10¹² // Σraw, HUGEINT — positive, so // and
@@ -629,6 +623,9 @@ object StatQueries {
   FROM rk WHERE rn <= 25 ORDER BY side, rn"""
   }
 
+  /** q205's replay: `iters` unrolled share-and-reseat stages, all
+    * integer (`//` and Spark's `div` agree on positive operands).
+    */
   private def pageRankSql(iters: Int): String = {
     val stages = (1 to iters).map { i =>
       s"""r$i AS (

@@ -124,10 +124,9 @@ object TemporalQueries {
     // collision inflation is exercised, and the md5-derived estimate
     // replays bit-for-bit in the oracle
     "q100_count_min" -> ((s, d) => {
-      val starts = when(size(col("w")) >= 2, sequence(lit(0), size(col("w")) - 2))
-        .otherwise(array().cast("array<int>"))
+      // concat, not stringGrams' concat_ws: it keeps `item` nullable
       val bigrams = docs(s, d).select(TextOps.tokensCol.as("w"))
-        .select(explode(transform(starts,
+        .select(explode(transform(TextOps.windowStarts(col("w"), 2),
           i => concat(element_at(col("w"), i + 1), lit(" "),
             element_at(col("w"), i + 2)))).as("item"))
       Sketches.countMinCompare(bigrams, "item", depth = 4, width = 256,

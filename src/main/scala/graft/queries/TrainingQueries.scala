@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables
@@ -27,6 +27,15 @@ object TrainingQueries {
     "fr" -> Seq("le", "la", "et", "les"),
     "zh" -> Seq("的", "是", "了", "我"))
 
+  /** The first half of each document's tokens (rounded up), joined by
+    * one space: the partial copy the dedup fixtures plant. The half is
+    * an integer `div`, not a /-then-cast: DuckDB's CAST(x.5 AS INT)
+    * rounds while Spark's cast truncates.
+    */
+  private[queries] val firstHalf: Column =
+    concat_ws(" ", slice(TextOps.tokensCol, lit(1),
+      call_function("div", size(TextOps.tokensCol) + 1, lit(2)).cast("int")))
+
   /** The q120/q151 planted sweep universe's word-3-gram shingles: base
     * %20 docs + full copies with a marker (j ~ 0.9) + first-half copies
     * (j ~ 0.5) — materialized once (the signature chain AND the
@@ -39,11 +48,7 @@ object TrainingQueries {
         concat(col("text"), lit(" graft dup marker")).as("text"))
     val halves = docs(s, d).filter(col("doc_id") % 20 === 0)
       .select((col("doc_id") + 2000000).as("doc_id"),
-        concat_ws(" ", slice(split(col("text"), "\\s+"), lit(1),
-          // integer DIV, not /-then-cast: DuckDB's CAST(x.5 AS INT)
-          // rounds while Spark's cast truncates
-          expr("(size(split(text, '\\\\s+')) + 1) div 2").cast("int")))
-          .as("text"))
+        firstHalf.as("text"))
     base.unionByName(dups).unionByName(halves)
   }
 
@@ -177,7 +182,7 @@ object TrainingQueries {
       val base = docs(s, d).select(col("doc_id"), col("text"))
       val planted = docs(s, d).filter(col("doc_id") % 30 === 0)
         .select((col("doc_id") + 4000000).as("doc_id"),
-          concat(concat_ws(" ", slice(split(col("text"), "\\s+"), 1, 25)),
+          concat(concat_ws(" ", slice(TextOps.tokensCol, 1, 25)),
             lit(" planted tail "), col("doc_id").cast("string")).as("text"))
       Dedup.dupWindowStats(base.unionByName(planted), 10).orderBy("doc_id")
     }),
@@ -312,7 +317,7 @@ object TrainingQueries {
     // BPE-ish regex token counting alongside whitespace tokens
     "q63_bpe_tokens" -> ((s, d) =>
       docs(s, d).select(col("doc_id"),
-          size(split(col("text"), "\\s+")).as("n_ws_tokens"),
+          size(TextOps.tokensCol).as("n_ws_tokens"),
           size(regexp_extract_all(col("text"),
             lit("'(?:s|t|re|ve|m|ll|d)| ?[A-Za-z]+| ?[0-9]+| ?[^\\sA-Za-z0-9]+"),
             lit(0))).as("n_bpe_tokens"))
@@ -387,7 +392,7 @@ object TrainingQueries {
           expr("CAST(SUBSTRING(source, 4) AS INT) >= 10") ||
             col("doc_id") % 100 < 20)
         .select(col("source"), col("doc_id"),
-          size(split(col("text"), "\\s+")).cast("long").as("toks"))
+          size(TextOps.tokensCol).cast("long").as("toks"))
       graft.text.Mix.sourceTokenBudget(u, col("source"), col("doc_id"),
         col("toks"))
     }),
@@ -614,10 +619,6 @@ object TrainingQueries {
   private val mixFractions = Map(
     "en" -> 0.8, "es" -> 0.5, "de" -> 0.5, "fr" -> 0.25, "zh" -> 0.1)
 
-  /** Shared CTE chain for the planted-near-dup LSH pipeline: planted docs →
-    * 3-gram shingles → 8-hash MinHash signature → 4 bands × 2 rows →
-    * candidate pairs. Used by q34 (pairs) and q70 (connected groups).
-    */
   /** The q120/q151 planted-sweep oracle chain ending in `pairs` (with
     * `psh` and `sig` exposed) — the full+half-copy universe whose exact
     * Jaccard spans both the ~0.9 and ~0.5 bands.
@@ -661,6 +662,10 @@ object TrainingQueries {
              ON a.band_id = b.band_id AND a.band_key = b.band_key
             AND a.doc_id < b.doc_id)"""
 
+  /** Shared CTE chain for the planted-near-dup LSH pipeline: planted docs →
+    * 3-gram shingles → 8-hash MinHash signature → 4 bands × 2 rows →
+    * candidate pairs. Used by q34 (pairs) and q70 (connected groups).
+    */
   private[queries] val lshPairsSql =
     s"""planted AS (
            SELECT doc_id, text FROM documents WHERE doc_id % 20 = 0

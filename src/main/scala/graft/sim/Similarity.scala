@@ -253,17 +253,6 @@ object Similarity {
     math.max(minPlanes, 64 - java.lang.Long.numberOfLeadingZeros(ratio - 1))
   }
 
-  /** Embedding-cosine near-duplicate pairs at corpus scale: seeded
-    * multi-round hyperplane LSH buckets (planes sized from n by
-    * [[planesFor]]), exact cosine only WITHIN buckets, pairs above
-    * `minCos`. Two skew guards mirror `Dedup.lshCandidatePairs`:
-    * buckets above `bucketCap` are dropped before the self-join (a
-    * degenerate bucket of near-identical mass contributes |b|²/2 pairs
-    * and no new information — exact dedup already covers it), and the
-    * rule-sized plane count keeps expected occupancy flat as n grows.
-    * `corpus(vec_id, embedding)` → `(ida, idb, cos)` with ida < idb,
-    * cos rounded 6 dp (the cross-engine fence).
-    */
   /** Seeded multi-round LSH candidate generation — the one shared block
     * behind [[cosineNearDupPairs]] and [[quantizedSelfTopK]]: planes
     * sized from n by [[planesFor]], per-round hot-bucket cap, within-
@@ -297,6 +286,17 @@ object Similarity {
     }.reduce(_ unionByName _).distinct()
   }
 
+  /** Embedding-cosine near-duplicate pairs at corpus scale: seeded
+    * multi-round hyperplane LSH buckets (planes sized from n by
+    * [[planesFor]]), exact cosine only WITHIN buckets, pairs above
+    * `minCos`. Two skew guards mirror `Dedup.lshCandidatePairs`:
+    * buckets above `bucketCap` are dropped before the self-join (a
+    * degenerate bucket of near-identical mass contributes |b|²/2 pairs
+    * and no new information — exact dedup already covers it), and the
+    * rule-sized plane count keeps expected occupancy flat as n grows.
+    * `corpus(vec_id, embedding)` → `(ida, idb, cos)` with ida < idb,
+    * cos rounded 6 dp (the cross-engine fence).
+    */
   def cosineNearDupPairs(corpus0: DataFrame, rounds: Int, minCos: Double,
                          targetBucketSize: Int = 128,
                          bucketCap: Int = 10000): DataFrame = {
@@ -371,37 +371,6 @@ object Similarity {
     out
   }
 
-  /** Per-label centroid similarity report: the pairwise cosine between
-    * every two labels' mean embeddings — the cluster-separation /
-    * label-drift diagnostic (near-1 pairs are candidates for merging or
-    * relabeling audits).
-    *
-    * Engine-exactness: components are quantized to `2^scaleBits` fixed
-    * point FIRST (exact in double: float mantissa × a power of two), so
-    * the per-(label, dim) sums are EXACT integers — a float mean would be
-    * partition-order-sensitive. The cosine then needs no division by
-    * counts at all: `cos(Σa/n_a, Σb/n_b) = ΣSaSb / (√ΣSa² · √ΣSb²)`
-    * (the 1/n factors cancel), three exact-integer dim-sums and a fixed
-    * IEEE tree on top — bit-identical in any engine.
-    *
-    * Shape: one narrow (label, dim) aggregation — |labels|·dim rows —
-    * then a |labels|²·dim self-join of that TINY frame. Corpus size only
-    * enters the first aggregation, which is map-side combinable.
-    */
-  /** Truncated rank-biased overlap (Webber 2010) between two top-`k`
-    * rankings per query — the top-weighted agreement metric for
-    * comparing an ANN/compressed ranking against the exact one (plain
-    * recall treats rank 1 and rank k alike; RBO's geometric weighting
-    * matches how results are consumed). p is FIXED at 9/10 so the
-    * whole statistic is exact rational arithmetic: RBO@k =
-    * (1−p)·Σ_d p^(d−1)·X_d/d with X_d = |A_1..d ∩ B_1..d| becomes, per
-    * common item with depth m = max(rank_a, rank_b), one integer
-    * suffix-coefficient s_m = Σ_{d≥m} 9^(d−1)·(2520·10⁹)/(10^(d−1)·d);
-    * the per-query sum stays integral (< 10¹⁵) and ONE final division
-    * by 10·2520·10⁹ produces the score — no float summation anywhere,
-    * so the metric replays engine-exactly. One (qid, dst) equi-join +
-    * one keyed aggregation.
-    */
   /** RBO denominator 10·D and the integer suffix coefficients s_m —
     * shared with the DuckDB oracle builder so both engines embed the
     * SAME integers. */
@@ -419,6 +388,20 @@ object Similarity {
     cs.indices.map(i => cs.drop(i).sum) // s_m = Σ_{d>=m} c_d
   }
 
+  /** Truncated rank-biased overlap (Webber 2010) between two top-`k`
+    * rankings per query — the top-weighted agreement metric for
+    * comparing an ANN/compressed ranking against the exact one (plain
+    * recall treats rank 1 and rank k alike; RBO's geometric weighting
+    * matches how results are consumed). p is FIXED at 9/10 so the
+    * whole statistic is exact rational arithmetic: RBO@k =
+    * (1−p)·Σ_d p^(d−1)·X_d/d with X_d = |A_1..d ∩ B_1..d| becomes, per
+    * common item with depth m = max(rank_a, rank_b), one integer
+    * suffix-coefficient s_m = Σ_{d≥m} 9^(d−1)·(2520·10⁹)/(10^(d−1)·d);
+    * the per-query sum stays integral (< 10¹⁵) and ONE final division
+    * by 10·2520·10⁹ produces the score — no float summation anywhere,
+    * so the metric replays engine-exactly. One (qid, dst) equi-join +
+    * one keyed aggregation.
+    */
   def rankBiasedOverlap(a: DataFrame, b: DataFrame, k: Int = 10): DataFrame = {
     val suffix = rboSuffix(k)
     val sArr = array(suffix.map(lit): _*)
@@ -576,6 +559,23 @@ object Similarity {
           / lit(1000000000000.0), 6).as("variance"))
   }
 
+  /** Per-label centroid similarity report: the pairwise cosine between
+    * every two labels' mean embeddings — the cluster-separation /
+    * label-drift diagnostic (near-1 pairs are candidates for merging or
+    * relabeling audits).
+    *
+    * Engine-exactness: components are quantized to `2^scaleBits` fixed
+    * point FIRST (exact in double: float mantissa × a power of two), so
+    * the per-(label, dim) sums are EXACT integers — a float mean would be
+    * partition-order-sensitive. The cosine then needs no division by
+    * counts at all: `cos(Σa/n_a, Σb/n_b) = ΣSaSb / (√ΣSa² · √ΣSb²)`
+    * (the 1/n factors cancel), three exact-integer dim-sums and a fixed
+    * IEEE tree on top — bit-identical in any engine.
+    *
+    * Shape: one narrow (label, dim) aggregation — |labels|·dim rows —
+    * then a |labels|²·dim self-join of that TINY frame. Corpus size only
+    * enters the first aggregation, which is map-side combinable.
+    */
   def centroidCosine(embs: DataFrame, labelCol: String = "label",
                      scaleBits: Int = 14): DataFrame = {
     val scale = (1L << scaleBits).toDouble

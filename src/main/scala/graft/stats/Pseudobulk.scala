@@ -78,11 +78,6 @@ object Pseudobulk {
       .select("feat_id")
   }
 
-  /** smart_label (scarf/datastore/datastore.py:1189-1239): relabel each
-    * value of column A by its majority-overlap value of column B.
-    * Crosstab + per-A argmax window; ties break lexicographically on B —
-    * deterministic stand-in for the reference's suffix ordering.
-    */
   /** Full smart_label naming (scarf/datastore/datastore.py:1189-1239):
     * per A-value majority B-value; A-values sharing a majority B get
     * letter suffixes ordered by their fraction of that B row ("1a", "1b",
@@ -121,6 +116,11 @@ object Pseudobulk {
     newNames.toSeq.toDF("a_value", "label")
   }
 
+  /** smart_label (scarf/datastore/datastore.py:1189-1239): relabel each
+    * value of column A by its majority-overlap value of column B.
+    * Crosstab + per-A argmax window; ties break lexicographically on B —
+    * deterministic stand-in for the reference's suffix ordering.
+    */
   def smartLabel(df: DataFrame, a: String, b: String): DataFrame =
     df.groupBy(a, b).agg(count(lit(1)).as("overlap"))
       .withColumn("rn", row_number().over(

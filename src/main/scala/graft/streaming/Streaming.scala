@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.text.TextOps
 
 /** Structured Streaming surface: the event-table operators (hourly
   * windows, sessionization) in their streaming form. The batch queries
@@ -56,13 +57,9 @@ object Streaming {
     */
   def passageDedupStream(docs: Dataset[Doc], span: Int = 15,
                          watermark: String = "1 hour"): DataFrame = {
-    val w = split(col("text"), "\\s+")
-    val nWin = ceil(size(w).cast("double") / span).cast("int")
     docs.toDF()
       .select(col("doc_id"), col("ts"),
-        posexplode(transform(sequence(lit(0), nWin - 1),
-          i => concat_ws(" ", slice(w, i * span + 1, lit(span)))))
-          .as(Seq("pos", "passage")))
+        posexplode(TextOps.passages(TextOps.tokensCol, span)).as(Seq("pos", "passage")))
       .withColumn("digest", md5(col("passage")))
       .withWatermark("ts", watermark)
       .dropDuplicates("digest")
@@ -80,11 +77,7 @@ object Streaming {
     * so it runs identically in a batch projection or a stream.
     */
   def lshBandKeys(n: Int, numHashes: Int, rowsPerBand: Int): org.apache.spark.sql.Column = {
-    val w = split(col("text"), "\\s+")
-    val starts = when(size(w) >= n, sequence(lit(0), size(w) - n))
-      .otherwise(array().cast("array<int>"))
-    val sh = array_distinct(transform(starts,
-      i => concat_ws(" ", (0 until n).map(o => element_at(w, i + o + 1)): _*)))
+    val sh = array_distinct(TextOps.stringGrams(TextOps.tokensCol, n))
     val mins = (0 until numHashes).map(s =>
       array_min(transform(sh, g => md5(concat(lit(s + ":"), g)))))
     val nBands = numHashes / rowsPerBand
@@ -550,13 +543,8 @@ object Streaming {
       graft.dedup.Dedup.shingles(corpus, n).select(col("shingle")).distinct(),
       mBits, k)
     docs.toDF().withWatermark("ts", watermark)
-      .withColumn("_w", split(col("text"), "\\s+"))
-      .withColumn("_g", array_distinct(expr(
-        s"""CASE WHEN size(_w) >= $n THEN
-              transform(sequence(0, size(_w) - $n), i ->
-                ${(0 until n).map(o => s"element_at(_w, i + ${o + 1})")
-                  .mkString("concat_ws(' ', ", ", ", ")")})
-            ELSE CAST(array() AS ARRAY<STRING>) END""")))
+      .withColumn("_w", TextOps.tokensCol)
+      .withColumn("_g", array_distinct(TextOps.stringGrams(col("_w"), n)))
       .select(col("doc_id"), col("ts"),
         size(col("_g")).cast("long").as("n_grams"),
         size(filter(col("_g"), g => graft.stats.Sketches.bloomHit(g, bitmap, k)))

@@ -188,20 +188,6 @@ object Mix {
       .withColumn("rank", col("rn").cast("long")).drop("rn")
   }
 
-  /** Mixture feasibility plan: given target mixture weights per stratum
-    * and the tokens actually available, the largest total budget N with
-    * `w_s · N ≤ avail_s` for every stratum is `N = min_s(avail_s / w_s)`
-    * — the binding stratum caps the whole mix (you cannot upsample
-    * without repeating data). Reports per stratum the available tokens,
-    * the target share, the token allocation `w_s · N`, and the sampling
-    * fraction the pipeline must apply — the arithmetic between "weights
-    * chosen" (DoReMi/DSIR output, q111) and "sample drawn" (q72/q85).
-    *
-    * Determinism: avail_s are exact integer sums; N and the per-stratum
-    * products are single IEEE divisions/multiplications off those
-    * integers — no accumulation, so every engine agrees. Shape: one
-    * token-count aggregation; everything after is |strata|-sized.
-    */
   /** Token-balanced shard assignment — the deterministic "write N
     * balanced output shards" step at the end of a corpus build: docs
     * are ordered by a seeded md5 rank (a replayable global shuffle) and
@@ -217,7 +203,7 @@ object Mix {
     */
   def shardAssign(docs: DataFrame, nShards: Int, seed: Int): DataFrame = {
     val base = docs.select(col("doc_id"),
-      size(split(col("text"), "\\s+")).cast("long").as("nt"),
+      size(TextOps.tokensCol).cast("long").as("nt"),
       md5(concat(lit(s"$seed:"), col("doc_id").cast("string"))).as("rk"))
     val run = graft.ops.Windows.runningTotal(base,
       Seq(col("rk"), col("doc_id")), "nt", "run")
@@ -242,7 +228,7 @@ object Mix {
     */
   def packCut(docs: DataFrame, windowLen: Int, seed: Int): DataFrame = {
     val base = docs.select(col("doc_id"),
-      size(split(col("text"), "\\s+")).cast("long").as("nt"),
+      size(TextOps.tokensCol).cast("long").as("nt"),
       md5(concat(lit(s"$seed:"), col("doc_id").cast("string"))).as("rk"))
     graft.ops.Windows.runningTotal(base, Seq(col("rk"), col("doc_id")),
         "nt", "run")
@@ -264,7 +250,7 @@ object Mix {
     */
   def curriculumOrder(docs: DataFrame, nStrata: Int): DataFrame = {
     val base = docs.select(col("doc_id"),
-      size(split(col("text"), "\\s+")).cast("long").as("nt"))
+      size(TextOps.tokensCol).cast("long").as("nt"))
     val (ranked, n) = graft.ops.Windows.globalOrdinalWithCount(base,
       Seq(col("nt"), col("doc_id")), "pos")
     val strat = ranked.withColumn("stratum",
@@ -279,12 +265,26 @@ object Mix {
           .as("curriculum_pos"))
   }
 
+  /** Mixture feasibility plan: given target mixture weights per stratum
+    * and the tokens actually available, the largest total budget N with
+    * `w_s · N ≤ avail_s` for every stratum is `N = min_s(avail_s / w_s)`
+    * — the binding stratum caps the whole mix (you cannot upsample
+    * without repeating data). Reports per stratum the available tokens,
+    * the target share, the token allocation `w_s · N`, and the sampling
+    * fraction the pipeline must apply — the arithmetic between "weights
+    * chosen" (DoReMi/DSIR output, q111) and "sample drawn" (q72/q85).
+    *
+    * Determinism: avail_s are exact integer sums; N and the per-stratum
+    * products are single IEEE divisions/multiplications off those
+    * integers — no accumulation, so every engine agrees. Shape: one
+    * token-count aggregation; everything after is |strata|-sized.
+    */
   def mixturePlan(docs: DataFrame, stratum: Column,
                   weights: Map[String, Double]): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val avail = docs.select(stratum.as("grp"),
-        size(split(col("text"), "\\s+")).cast("long").as("nt"))
+        size(TextOps.tokensCol).cast("long").as("nt"))
       .groupBy("grp").agg(sum(col("nt")).as("avail"))
     val w = broadcast(weights.toSeq.toDF("grp", "w"))
     // |strata| rows feeding two consumers (the min and the report) —
@@ -316,7 +316,7 @@ object Mix {
   def tokenBudgetSample(docs: DataFrame, stratum: Column, budget: Long,
                         seed: Int): DataFrame = {
     val base = docs.select(stratum.as("grp"), col("doc_id"),
-      size(split(col("text"), "\\s+")).cast("long").as("nt"),
+      size(TextOps.tokensCol).cast("long").as("nt"),
       md5(concat(lit(s"$seed:"), col("doc_id").cast("string"))).as("rk"))
     val run = graft.ops.Windows.runningTotal(base,
       Seq(col("grp"), col("rk")), "nt", "run")
@@ -408,7 +408,7 @@ object Mix {
     */
   def temperatureMix(docs: DataFrame, stratum: Column): DataFrame = {
     val toks = Lineage.reset(docs.groupBy(stratum.as("grp"))
-      .agg(sum(size(split(col("text"), "\\s+")).cast("long")).as("nt")))
+      .agg(sum(size(TextOps.tokensCol).cast("long")).as("nt")))
     val c = col("nt").cast("double")
     val p25 = sqrt(sqrt(c))
     val p50 = sqrt(c)
@@ -486,16 +486,6 @@ object Mix {
           lit(-2L))).as("equal"))
   }
 
-  /** Consistent-hash rebalancing plan: when a shard is added, how many
-    * documents move under naive modulo placement (almost all) vs a
-    * hash ring (≈ 1/(n+1)) — the migration-cost arithmetic behind the
-    * ring. Everything is md5-deterministic: doc position = 60-bit md5,
-    * ring anchors = md5 of the shard id, assignment = first anchor at
-    * or clockwise-after the doc (wrapping to the minimum anchor). One
-    * broadcast of ≤ 2(n+1) anchor rows; map-side assignment; one
-    * aggregation. Output (one row): n_docs, moved_mod, moved_ring,
-    * mod_share, ring_share.
-    */
   /** Ring anchors for [[rebalancePlan]]: (60-bit md5 position, shard
     * id) per shard — driver-side literals shared with the SQL oracle.
     */
@@ -506,6 +496,16 @@ object Mix {
     (java.lang.Long.parseLong(hex, 16), s.toLong)
   }
 
+  /** Consistent-hash rebalancing plan: when a shard is added, how many
+    * documents move under naive modulo placement (almost all) vs a
+    * hash ring (≈ 1/(n+1)) — the migration-cost arithmetic behind the
+    * ring. Everything is md5-deterministic: doc position = 60-bit md5,
+    * ring anchors = md5 of the shard id, assignment = first anchor at
+    * or clockwise-after the doc (wrapping to the minimum anchor). One
+    * broadcast of ≤ 2(n+1) anchor rows; map-side assignment; one
+    * aggregation. Output (one row): n_docs, moved_mod, moved_ring,
+    * mod_share, ring_share.
+    */
   def rebalancePlan(docs: DataFrame, nShards: Int): DataFrame = {
     def ringCol(n: Int): Column = {
       val as = ringAnchors(n).sortBy(_._1)
@@ -682,12 +682,9 @@ object Mix {
     // three consumers: raw counts, target counts, doc sum
     val bg = Lineage.reset(docs
       .select(col("doc_id"), targetPred.as("is_t"),
-        split(col("text"), "\\s+").as("w"))
-      .filter(size(col("w")) >= 2)
-      .select(col("doc_id"), col("is_t"), explode(expr(
-        "transform(sequence(1, size(w) - 1), " +
-          "i -> concat_ws(' ', element_at(w, i), element_at(w, i + 1)))"))
-        .as("g"))
+        TextOps.tokensCol.as("w"))
+      .select(col("doc_id"), col("is_t"),
+        explode(TextOps.stringGrams(col("w"), 2)).as("g"))
       .select(col("doc_id"), col("is_t"),
         substring(md5(col("g")), 1, 3).as("b")))
     val raw = bg.groupBy("b").agg(count(lit(1)).as("cr"))

@@ -83,10 +83,10 @@ object SuffixOps {
     */
   private def stream(docs: DataFrame): DataFrame = {
     val toks = docs
-      .select(col("doc_id"), posexplode(split(col("text"), "\\s+"))
+      .select(col("doc_id"), posexplode(TextOps.tokensCol)
         .as(Seq("p", "tok")))
     val sep = docs.select(col("doc_id"),
-      size(split(col("text"), "\\s+")).cast("int").as("p"),
+      size(TextOps.tokensCol).cast("int").as("p"),
       concat(lit("\u0001"), col("doc_id").cast("string")).as("tok"))
     Windows.globalOrdinal(toks.unionByName(sep),
       Seq(col("doc_id"), col("p")), "gp")

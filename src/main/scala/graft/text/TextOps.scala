@@ -74,7 +74,47 @@ object TextOps {
       .select(col("doc_id"), col("r._1").as("n_fp"), col("r._2").as("min_fp"))
   }
 
+  /** The whitespace tokenizer every text operator starts from: `text`
+    * split on runs of whitespace. Spark's split keeps empty pieces, so
+    * empty text is one token `""` and leading whitespace yields a first
+    * token `""`.
+    */
   val tokensCol: Column = split(col("text"), "\\s+")
+
+  /** The 0-based start of every contiguous `n`-token window of the token
+    * array `w`. A document shorter than `n` tokens has none: unguarded,
+    * `sequence(0, size - n)` would count down for it.
+    */
+  private[graft] def windowStarts(w: Column, n: Int): Column =
+    when(size(w) >= n, sequence(lit(0), size(w) - n))
+      .otherwise(array().cast("array<int>"))
+
+  /** Every contiguous `n`-token window of `w`, its tokens joined by one
+    * space, in document order. Pass a projected column: the lambda reads
+    * `w` once per window.
+    */
+  private[graft] def stringGrams(w: Column, n: Int): Column =
+    transform(windowStarts(w, n), i =>
+      concat_ws(" ", (0 until n).map(o => element_at(w, i + o + 1)): _*))
+
+  /** Every contiguous window of `w` as a struct with one field per token,
+    * named `fields` in order; the window length is `fields.size`.
+    */
+  private[graft] def structGrams(w: Column, fields: Seq[String]): Column =
+    transform(windowStarts(w, fields.size), i =>
+      struct(fields.zipWithIndex.map { case (f, o) =>
+        element_at(w, i + (o + 1)).as(f) }: _*))
+
+  /** The non-overlapping `span`-token passages of `w`, in order, each
+    * joined by one space; the last one holds the remainder. A token
+    * array with no tokens has no passages.
+    */
+  private[graft] def passages(w: Column, span: Int): Column =
+    transform(
+      when(size(w) > 0,
+        sequence(lit(0), ceil(size(w).cast("double") / span).cast("int") - 1))
+        .otherwise(array().cast("array<int>")),
+      i => concat_ws(" ", slice(w, i * span + 1, lit(span))))
 
   /** Per-document token/char statistics. */
   def tokenStats(docs: DataFrame): DataFrame =
@@ -165,12 +205,8 @@ object TextOps {
   def bigramCondEntropy(docs: DataFrame): DataFrame = {
     def uln(c: org.apache.spark.sql.Column) =
       round(log(c.cast("double")) * 1000000.0).cast("long")
-    val c12 = docs.select(col("source"), split(col("text"), "\\s+").as("w"))
-      .filter(size(col("w")) >= 2)
-      .select(col("source"), explode(expr(
-        "transform(sequence(1, size(w) - 1), " +
-          "i -> struct(element_at(w, i) AS w1, element_at(w, i + 1) AS w2))"))
-        .as("p"))
+    val c12 = docs.select(col("source"), tokensCol.as("w"))
+      .select(col("source"), explode(structGrams(col("w"), Seq("w1", "w2"))).as("p"))
       .groupBy(col("source"), col("p.w1").as("w1"), col("p.w2").as("w2"))
       .agg(count(lit(1)).as("c12"))
       .localCheckpoint() // two consumers: the w1 rollup and the join
@@ -201,7 +237,7 @@ object TextOps {
       .groupBy("tok").agg(count(lit(1)).as("c")).localCheckpoint()
     val base = docs.agg(
       count(lit(1)).as("n_docs"),
-      sum(size(split(col("text"), "\\s+")).cast("long")).as("n_tokens"),
+      sum(size(tokensCol).cast("long")).as("n_tokens"),
       sum(col("n_chars")).as("n_chars"),
       countDistinct(md5(col("text"))).as("n_distinct_texts"),
       countDistinct(col("lang")).as("n_langs"),
@@ -249,11 +285,8 @@ object TextOps {
     * Output per source: n_tokens, n_types, n1, n2, unseen_mass, chao1.
     */
   def goodTuring(docs: DataFrame, gramN: Int = 1): DataFrame =
-    docs.select(col("source"), split(col("text"), "\\s+").as("w"))
-      .filter(size(col("w")) >= gramN)
-      .select(col("source"), explode(expr(
-        s"transform(sequence(1, size(w) - ${gramN - 1}), " +
-          s"i -> concat_ws(' ', slice(w, i, $gramN)))")).as("tok"))
+    docs.select(col("source"), tokensCol.as("w"))
+      .select(col("source"), explode(stringGrams(col("w"), gramN)).as("tok"))
       .groupBy("source", "tok").agg(count(lit(1)).as("c"))
       .groupBy("source").agg(
         sum(col("c")).as("n_tokens"),
@@ -624,11 +657,7 @@ object TextOps {
         .groupBy("w").agg(count(lit(1)).as("c"))
         .select(col("c"),
           split(trim(regexp_replace(col("w"), lit("(.)"), lit("$1 "))), " ").as("s"))
-        .filter(size(col("s")) >= 2)
-        .select(col("c"), explode(expr(
-          """transform(sequence(0, size(s) - 2), i ->
-               named_struct('s1', element_at(s, i + 1),
-                            's2', element_at(s, i + 2)))""")).as("p"))
+        .select(col("c"), explode(structGrams(col("s"), Seq("s1", "s2"))).as("p"))
         .groupBy(col("p.s1"), col("p.s2")).agg(sum(col("c")).as("cnt"))
         .agg(max(col("cnt"))).head.getLong(0)
     }
@@ -677,11 +706,7 @@ object TextOps {
       var exhausted = false
       while (step <= merges && !exhausted) {
         val top = words.select(col("c"), split(col("repr"), " ").as("s"))
-          .filter(size(col("s")) >= 2)
-          .select(col("c"), explode(expr(
-            """transform(sequence(0, size(s) - 2), i ->
-                 named_struct('s1', element_at(s, i + 1),
-                              's2', element_at(s, i + 2)))""")).as("p"))
+          .select(col("c"), explode(structGrams(col("s"), Seq("s1", "s2"))).as("p"))
           .groupBy(col("p.s1").as("s1"), col("p.s2").as("s2"))
           .agg(sum(col("c")).as("cnt"))
           .orderBy(col("cnt").desc, col("s1"), col("s2")).take(1)
@@ -832,12 +857,8 @@ object TextOps {
     */
   def boilerplateTop(docs: DataFrame, n: Int = 5,
                      group: String = "source"): DataFrame = {
-    val starts = when(size(col("w")) >= n, sequence(lit(0), size(col("w")) - n))
-      .otherwise(array().cast("array<int>"))
     val grams = docs.select(col(group).as("grp"), tokensCol.as("w"))
-      .select(col("grp"), explode(transform(starts,
-        i => concat_ws(" ", (0 until n).map(o => element_at(col("w"), i + o + 1)): _*)))
-        .as("gram"))
+      .select(col("grp"), explode(stringGrams(col("w"), n)).as("gram"))
     val counts = grams.groupBy("grp", "gram").agg(count(lit(1)).as("c"))
     val tot = counts.groupBy("grp")
       .agg(sum(col("c")).as("total"), max(col("c")).as("maxc"))
@@ -915,15 +936,8 @@ object TextOps {
   def vocabNovelty(docs: DataFrame, bucket: Int, n: Int = 1): DataFrame = {
     val grams =
       if (n == 1) docs.select(col("doc_id"), explode(tokensCol).as("tok"))
-      else {
-        val starts = when(size(col("w")) >= n, sequence(lit(0), size(col("w")) - n))
-          .otherwise(array().cast("array<int>"))
-        docs.select(col("doc_id"), tokensCol.as("w"))
-          .select(col("doc_id"), explode(transform(starts,
-            i => concat_ws(" ",
-              (0 until n).map(o => element_at(col("w"), i + o + 1)): _*)))
-            .as("tok"))
-      }
+      else docs.select(col("doc_id"), tokensCol.as("w"))
+        .select(col("doc_id"), explode(stringGrams(col("w"), n)).as("tok"))
     val firsts = grams.groupBy("tok").agg(min(col("doc_id")).as("first_doc"))
     val perBucket = firsts
       .groupBy(expr(s"first_doc div $bucket").as("bucket"))
@@ -983,13 +997,9 @@ object TextOps {
     */
   def repetitionStats(docs: DataFrame, ns: Seq[Int] = Seq(2, 3)): DataFrame = {
     val grams = ns.map { n =>
-      val starts = when(size(col("w")) >= n, sequence(lit(0), size(col("w")) - n))
-        .otherwise(array().cast("array<int>"))
       docs.select(col("doc_id"), tokensCol.as("w"))
         .select(col("doc_id"), lit(n).as("n"),
-          explode(transform(starts,
-            i => concat_ws(" ", (0 until n).map(o => element_at(col("w"), i + o + 1)): _*)))
-            .as("gram"))
+          explode(stringGrams(col("w"), n)).as("gram"))
     }.reduce(_ unionByName _)
     val counts = grams.groupBy("doc_id", "n", "gram").agg(count(lit(1)).as("c"))
     val stats = counts.groupBy("doc_id", "n").agg(
@@ -1024,31 +1034,8 @@ object TextOps {
     * LM "training" is just counting, so the whole operator is relational
     * and runs at corpus scale with no model state on the driver.
     */
-  def lmPerplexity(docs: DataFrame, alpha: Double = 1.0): DataFrame = {
-    val w = tokensCol
-    val bigStarts = when(size(col("w")) >= 2, sequence(lit(0), size(col("w")) - 2))
-      .otherwise(array().cast("array<int>"))
-    val uni = docs.select(explode(w).as("w1"))
-      .groupBy("w1").agg(count(lit(1)).as("c1"))
-    val vocab = uni.agg(count(lit(1)).as("v"))
-    val big = docs.select(col("doc_id"), w.as("w"))
-      .select(col("doc_id"), explode(transform(bigStarts,
-        i => struct(element_at(col("w"), i + 1).as("w1"),
-          element_at(col("w"), i + 2).as("w2")))).as("b"))
-      .select(col("doc_id"), col("b.w1"), col("b.w2"))
-    val big2 = big.groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
-    big.join(big2, Seq("w1", "w2"))
-      .join(uni, Seq("w1"))
-      .crossJoin(broadcast(vocab))
-      .withColumn("nll",
-        -log((col("c2") + lit(alpha)) / (col("c1") + lit(alpha) * col("v"))))
-      .groupBy("doc_id")
-      // 6 dp is safe here (unlike q66's sums): the AVG runs over one
-      // doc's ~n_tokens bigrams of magnitude ~5, so cross-engine
-      // reassociation noise is ~1e-14 — nine orders below the rounding
-      // step, not a knife edge.
-      .agg(count(lit(1)).as("n_bigrams"), round(avg(col("nll")), 6).as("mean_nll"))
-  }
+  def lmPerplexity(docs: DataFrame, alpha: Double = 1.0): DataFrame =
+    lmAddAlpha(docs, alpha, Seq(1.0, 0.0), "n_bigrams")
 
   /** Interpolated trigram-LM perplexity — the higher-order extension of
     * [[lmPerplexity]], one step closer to the 5-gram Kneser–Ney model
@@ -1067,48 +1054,8 @@ object TextOps {
     */
   def lmPerplexityTrigram(docs: DataFrame, alpha: Double = 1.0,
                           lam3: Double = 0.6, lam2: Double = 0.3,
-                          lam1: Double = 0.1): DataFrame = {
-    val w = tokensCol
-    val bigStarts = when(size(col("w")) >= 2, sequence(lit(0), size(col("w")) - 2))
-      .otherwise(array().cast("array<int>"))
-    val triStarts = when(size(col("w")) >= 3, sequence(lit(0), size(col("w")) - 3))
-      .otherwise(array().cast("array<int>"))
-    val uni = docs.select(explode(w).as("tok"))
-      .groupBy("tok").agg(count(lit(1)).as("c1"))
-    // vocab size and total token count in one broadcastable row
-    val totals = uni.agg(count(lit(1)).as("v"), sum(col("c1")).as("n"))
-    val big2 = docs.select(w.as("w"))
-      .select(explode(transform(bigStarts,
-        i => struct(element_at(col("w"), i + 1).as("w1"),
-          element_at(col("w"), i + 2).as("w2")))).as("b"))
-      .select(col("b.w1"), col("b.w2"))
-      .groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
-    val tri = docs.select(col("doc_id"), w.as("w"))
-      .select(col("doc_id"), explode(transform(triStarts,
-        i => struct(element_at(col("w"), i + 1).as("w1"),
-          element_at(col("w"), i + 2).as("w2"),
-          element_at(col("w"), i + 3).as("w3")))).as("b"))
-      .select(col("doc_id"), col("b.w1"), col("b.w2"), col("b.w3"))
-    val tri3 = tri.groupBy("w1", "w2", "w3").agg(count(lit(1)).as("c3"))
-    val a = lit(alpha)
-    tri
-      .join(tri3, Seq("w1", "w2", "w3"))
-      .join(big2.withColumnRenamed("c2", "c12"), Seq("w1", "w2"))
-      .join(big2.select(col("w1").as("w2"), col("w2").as("w3"),
-        col("c2").as("c23")), Seq("w2", "w3"))
-      .join(uni.select(col("tok").as("w2"), col("c1").as("c_w2")), Seq("w2"))
-      .join(uni.select(col("tok").as("w3"), col("c1").as("c_w3")), Seq("w3"))
-      .crossJoin(broadcast(totals))
-      .withColumn("nll", -log(
-        lit(lam3) * ((col("c3") + a) / (col("c12") + a * col("v")))
-          + lit(lam2) * ((col("c23") + a) / (col("c_w2") + a * col("v")))
-          + lit(lam1) * ((col("c_w3") + a) / (col("n") + a * col("v")))))
-      .groupBy("doc_id")
-      // 6 dp fence: same argument as the bigram model — the AVG runs
-      // over one doc's trigrams of magnitude ~5, reassociation noise
-      // ~1e-14, nine orders below the rounding grain
-      .agg(count(lit(1)).as("n_trigrams"), round(avg(col("nll")), 6).as("mean_nll"))
-  }
+                          lam1: Double = 0.1): DataFrame =
+    lmAddAlpha(docs, alpha, Seq(lam3, lam2, lam1), "n_trigrams")
 
   /** Interpolated Kneser–Ney bigram-LM perplexity — the SMOOTHING family
     * CCNet's model actually uses, at the order where the continuation
@@ -1132,13 +1079,8 @@ object TextOps {
     * Output `(doc_id, n_bigrams, mean_nll)` over docs with ≥2 tokens.
     */
   def lmPerplexityKn(docs: DataFrame, discount: Double = 0.75): DataFrame = {
-    val w = tokensCol
-    val bigStarts = when(size(col("w")) >= 2, sequence(lit(0), size(col("w")) - 2))
-      .otherwise(array().cast("array<int>"))
-    val big = docs.select(col("doc_id"), w.as("w"))
-      .select(col("doc_id"), explode(transform(bigStarts,
-        i => struct(element_at(col("w"), i + 1).as("w1"),
-          element_at(col("w"), i + 2).as("w2")))).as("b"))
+    val big = docs.select(col("doc_id"), tokensCol.as("w"))
+      .select(col("doc_id"), explode(structGrams(col("w"), Seq("w1", "w2"))).as("b"))
       .select(col("doc_id"), col("b.w1"), col("b.w2"))
     val c2 = big.groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
     // per-context totals and continuation-type counts, all from c2
@@ -1181,48 +1123,57 @@ object TextOps {
                     lams: Seq[Double] = Seq(0.4, 0.25, 0.2, 0.1, 0.05))
       : DataFrame = {
     require(lams.length == 5)
-    val w = tokensCol
-    def starts(n: Int) =
-      when(size(col("w")) >= n, sequence(lit(0), size(col("w")) - n))
-        .otherwise(array().cast("array<int>"))
-    def gramCol(n: Int) = transform(starts(n), i =>
-      struct((1 to n).map(o =>
-        element_at(col("w"), i + o).as(s"g$o")): _*))
+    lmAddAlpha(docs, alpha, lams, "n_5grams")
+  }
+
+  /** The add-α LM of order `lams.size`, interpolated with weights `lams`
+    * (highest order first): per position of an order-gram w1..wk,
+    * `p = Σ_j λ_j·p̂_j` with p̂_j = (c(last j tokens)+α)/(c(their first
+    * j−1 tokens)+αV) for j ≥ 2 and p̂1 = (c(wk)+α)/(N+αV), summed
+    * highest order first; a term whose λ is 0 is not built. Each order's
+    * count table is joined back per position twice (numerator gram and
+    * next-lower denominator context). Output `(doc_id, <countCol>,
+    * mean_nll)` over docs with at least `lams.size` tokens.
+    */
+  private def lmAddAlpha(docs: DataFrame, alpha: Double, lams: Seq[Double],
+                         countCol: String): DataFrame = {
+    val order = lams.length
+    def fields(n: Int) = (1 to n).map(o => s"g$o")
     // order-n counts keyed g1..gn
-    def counts(n: Int) = docs.select(w.as("w"))
-      .select(explode(gramCol(n)).as("g"))
-      .select((1 to n).map(o => col(s"g.g$o")): _*)
-      .groupBy((1 to n).map(o => col(s"g$o")): _*)
+    def counts(n: Int) = docs.select(tokensCol.as("w"))
+      .select(explode(structGrams(col("w"), fields(n))).as("g"))
+      .select(fields(n).map(f => col(s"g.$f")): _*)
+      .groupBy(fields(n).map(col): _*)
       .agg(count(lit(1)).as(s"c$n"))
-    val uni = counts(1)
-    val totals = uni.agg(count(lit(1)).as("v"), sum(col("c1")).as("n"))
-    val pos = docs.select(col("doc_id"), w.as("w"))
-      .select(col("doc_id"), explode(gramCol(5)).as("g"))
-      .select(col("doc_id") +: (1 to 5).map(o => col(s"g.g$o").as(s"w$o")): _*)
+    val totals = counts(1).agg(count(lit(1)).as("v"), sum(col("c1")).as("n"))
+    val pos = docs.select(col("doc_id"), tokensCol.as("w"))
+      .select(col("doc_id"), explode(structGrams(col("w"), fields(order))).as("g"))
+      .select(col("doc_id") +: (1 to order).map(o => col(s"g.g$o").as(s"w$o")): _*)
     // join order-n counts at position offset `off` (gram = w{off+1}..w{off+n})
     def joined(df: DataFrame, n: Int, off: Int, as: String) = {
       val c = counts(n).select(
         (1 to n).map(o => col(s"g$o").as(s"w${off + o}")) :+ col(s"c$n").as(as): _*)
       df.join(c, (1 to n).map(o => s"w${off + o}"))
     }
+    // order j's term reads the last j tokens, at offset order − j
+    val terms = (order to 1 by -1).filter(j => lams(order - j) != 0.0)
+    val withCounts = terms.flatMap { j =>
+      (j, order - j, s"c${j}_num") +:
+        (if (j > 1) Seq((j - 1, order - j, s"c${j - 1}_den")) else Nil)
+    }.foldLeft(pos) { case (df, (n, off, as)) => joined(df, n, off, as) }
     val a = lit(alpha)
-    val withCounts = Seq(
-      (5, 0, "c5_num"), (4, 0, "c4_den"), (4, 1, "c4_num"), (3, 1, "c3_den"),
-      (3, 2, "c3_num"), (2, 2, "c2_den"), (2, 3, "c2_num"), (1, 3, "c1_den"),
-      (1, 4, "c1_num")
-    ).foldLeft(pos) { case (df, (n, off, as)) => joined(df, n, off, as) }
+    val p = terms.map { j =>
+      val den = if (j > 1) col(s"c${j - 1}_den") else col("n")
+      lit(lams(order - j)) * ((col(s"c${j}_num") + a) / (den + a * col("v")))
+    }.reduceOption(_ + _).getOrElse(lit(0.0))
     withCounts
       .crossJoin(broadcast(totals))
-      .withColumn("nll", -log(
-        lit(lams(0)) * ((col("c5_num") + a) / (col("c4_den") + a * col("v")))
-          + lit(lams(1)) * ((col("c4_num") + a) / (col("c3_den") + a * col("v")))
-          + lit(lams(2)) * ((col("c3_num") + a) / (col("c2_den") + a * col("v")))
-          + lit(lams(3)) * ((col("c2_num") + a) / (col("c1_den") + a * col("v")))
-          + lit(lams(4)) * ((col("c1_num") + a) / (col("n") + a * col("v")))))
+      .withColumn("nll", -log(p))
       .groupBy("doc_id")
-      // same 6 dp fence argument as the lower orders: per-doc AVG over
-      // ~n_tokens values of magnitude ~5; reassociation noise ~1e-14
-      .agg(count(lit(1)).as("n_5grams"), round(avg(col("nll")), 6).as("mean_nll"))
+      // 6 dp fence: the per-doc AVG runs over ~n_tokens values of
+      // magnitude ~5, so cross-engine reassociation noise is ~1e-14,
+      // nine orders below the rounding step — not a knife edge
+      .agg(count(lit(1)).as(countCol), round(avg(col("nll")), 6).as("mean_nll"))
   }
 
   /** PII detection + redaction (the C4-style scrub pass): count and
@@ -1314,14 +1265,9 @@ object TextOps {
     * with longer documents raise the packing base.
     */
   def passageDedup(docs: DataFrame, span: Int): DataFrame = {
-    val w = docs.select(col("doc_id"), tokensCol.as("w"))
-      .withColumn("nw", size(col("w")))
-    val wins = w.select(col("doc_id"),
-      posexplode(transform(
-        sequence(lit(0),
-          ceil(col("nw").cast("double") / span).cast("int") - 1),
-        i => concat_ws(" ", slice(col("w"), i * span + 1, lit(span)))))
-        .as(Seq("pos", "passage")))
+    val wins = docs.select(col("doc_id"), tokensCol.as("w"))
+      .select(col("doc_id"),
+        posexplode(passages(col("w"), span)).as(Seq("pos", "passage")))
     val sited = wins.select(col("doc_id"), col("pos"),
       md5(col("passage")).as("dg"),
       (col("doc_id") * 1000 + col("pos")).as("site"))
@@ -1360,12 +1306,8 @@ object TextOps {
       .select(lit(1).as("stage_id"), lit("exact_dedup").as("stage"),
         col("n_docs"), col("n_tokens"))
     val wins = surv.select(col("doc_id"), tokensCol.as("w"))
-      .withColumn("nw", size(col("w")))
       .select(col("doc_id"),
-        posexplode(transform(
-          sequence(lit(0), ceil(col("nw").cast("double") / span).cast("int") - 1),
-          i => concat_ws(" ", slice(col("w"), i * span + 1, lit(span)))))
-          .as(Seq("pos", "passage")))
+        posexplode(passages(col("w"), span)).as(Seq("pos", "passage")))
     val sited = wins.select(col("doc_id"),
       md5(col("passage")).as("pdg"),
       size(split(col("passage"), "\\s+")).cast("long").as("pt"),
@@ -1837,15 +1779,11 @@ object TextOps {
     */
   def collocations(docs: DataFrame, minCount: Int): DataFrame = {
     val w = tokensCol
-    val bigStarts = when(size(col("w")) >= 2, sequence(lit(0), size(col("w")) - 2))
-      .otherwise(array().cast("array<int>"))
     val uni = docs.select(explode(w).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("c"))
     val nUni = uni.agg(sum(col("c")).as("n_uni"))
     val big = docs.select(w.as("w"))
-      .select(explode(transform(bigStarts,
-        i => struct(element_at(col("w"), i + 1).as("w1"),
-          element_at(col("w"), i + 2).as("w2")))).as("b"))
+      .select(explode(structGrams(col("w"), Seq("w1", "w2"))).as("b"))
       .select(col("b.w1"), col("b.w2"))
       .groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
     // bigram total = Σ (len − 1): closed form over doc lengths, not a
@@ -2165,13 +2103,6 @@ object TextOps {
           .as("lift"))
   }
 
-  /** HTML-to-text extraction: drop script/style/nav/footer blocks
-    * (boilerplate), strip remaining tags, collapse whitespace — the
-    * first transform every web-crawl pipeline applies before any quality
-    * gate sees the text. Map-only column expression (no UDF, stays in
-    * codegen); patterns avoid backreferences so the identical regexes
-    * run under both Java regex and RE2-based engines.
-    */
   /** N-gram novelty / memorization-risk gate (the per-document view of
     * Lee 2022's duplication analysis): per document, how many of its
     * DISTINCT word n-grams appear in at least one OTHER document, and
@@ -2192,6 +2123,13 @@ object TextOps {
           / col("n_grams").cast("double"), 6))
   }
 
+  /** HTML-to-text extraction: drop script/style/nav/footer blocks
+    * (boilerplate), strip remaining tags, collapse whitespace — the
+    * first transform every web-crawl pipeline applies before any quality
+    * gate sees the text. Map-only column expression (no UDF, stays in
+    * codegen); patterns avoid backreferences so the identical regexes
+    * run under both Java regex and RE2-based engines.
+    */
   def htmlExtract(c: Column): Column = {
     val noBlocks = Seq("script", "style", "nav", "footer").foldLeft(c) {
       (acc, tag) => regexp_replace(acc, s"(?s)<$tag[^>]*>.*?</$tag>", " ")
@@ -2222,12 +2160,8 @@ object TextOps {
     // (1-based) — never a single-partition window, and gap-robust.
     val ord = graft.ops.Windows.globalOrdinal(
       docs.select("doc_id"), Seq(col("doc_id")), "pos")
-    val tok = docs
-      .select(col("doc_id"), split(col("text"), "\\s+").as("w"))
-      .filter(size(col("w")) >= gramN)
-      .select(col("doc_id"), explode(expr(
-        s"transform(sequence(1, size(w) - ${gramN - 1}), " +
-          s"i -> concat_ws(' ', slice(w, i, $gramN)))")).as("tok"))
+    val tok = docs.select(col("doc_id"), tokensCol.as("w"))
+      .select(col("doc_id"), explode(stringGrams(col("w"), gramN)).as("tok"))
       .join(ord, Seq("doc_id"))
       .localCheckpoint()
     val firstPos = tok.groupBy("tok").agg(min(col("pos")).as("first_pos"))
